@@ -24,6 +24,7 @@ from .functions import validate as V
 from .functions.rounding import rnd
 from .operators.extract import enrich_extracted, extract_pages
 from .operators.routing import ESCALATION_THRESHOLD, two_pass_escalation
+from .session import per_gateway
 from .sinks import Warehouse
 from .sources.pages import read_pages
 
@@ -53,21 +54,13 @@ def _source_conf_col() -> Column:
     return F.when(F.col("ok") & (F.length("text_out") > 0), base).otherwise(0.0)
 
 
-def score_extracted(extracted: DataFrame, run_date: str | None = None) -> DataFrame:
-    """normalize → score → validate → route, all native columns.
-
-    Input: the extraction schema (operators/extract.EXTRACT_DDL). Adds
-    enrichment (lang_guess, quality, token counts, content_key), the
-    validation error array + is_valid, the composite confidence
-    (completeness 0.4 / source 0.4 / validation 0.2 —
-    src/processors/confidence_scorer.py:41-150), the HIGH/MEDIUM/LOW
-    bucket, and the APPROVE/REVIEW/MANUAL_REVIEW action
-    (confidence_scorer.py:117-150). ``run_date`` is the run-level literal
-    that replaces the reference's datetime.now() fallback (F7) — it lands
-    in a ``run_date`` column for lineage, never in any computed value."""
-    enriched = enrich_extracted(extracted)
-    validated = V.with_validation(
-        enriched,
+@per_gateway
+def _scoring_columns() -> tuple[
+    Column, Column, tuple[Column, ...], tuple[Column, ...]
+]:
+    """(errors, is_valid, (completeness, source_conf, confidence),
+    (bucket, action)) — each tuple one projection of ``score_extracted``."""
+    errors = V.collect_errors(
         V.rule(F.col("ok"), "extract_failed"),
         V.rule(
             ~F.col("ok") | (F.length("text_out") > 0), "empty_extraction"
@@ -75,6 +68,7 @@ def score_extracted(extracted: DataFrame, run_date: str | None = None) -> DataFr
         V.rule(~F.coalesce(F.col("truncated"), F.lit(False)), "truncated_payload"),
         V.rule(F.col("warc_ts").isNotNull(), "missing_timestamp"),
     )
+    is_valid = F.size(F.col("errors")) == 0
     completeness = C.completeness_score(
         [
             F.col("ok"),
@@ -91,20 +85,43 @@ def score_extracted(extracted: DataFrame, run_date: str | None = None) -> DataFr
         _source_conf_col(),
         C.validation_penalty(F.size("errors")),
     )
-    scored = validated.select(
-        "*",
+    scored = (
         rnd(completeness, 4).alias("completeness"),
         _source_conf_col().alias("source_conf"),
         conf.alias("confidence"),
     )
     bucket = C.confidence_bucket(F.col("confidence"))
-    out = scored.select(
-        "*",
+    routed = (
         bucket.alias("bucket"),
         F.when(bucket == "HIGH", "APPROVE")
         .when(bucket == "MEDIUM", "REVIEW")
         .otherwise("MANUAL_REVIEW")
         .alias("action"),
+    )
+    return errors, is_valid, scored, routed
+
+
+def score_extracted(extracted: DataFrame, run_date: str | None = None) -> DataFrame:
+    """normalize → score → validate → route, all native columns.
+
+    Input: the extraction schema (operators/extract.EXTRACT_DDL). Adds
+    enrichment (lang_guess, quality, token counts, content_key), the
+    validation error array + is_valid, the composite confidence
+    (completeness 0.4 / source 0.4 / validation 0.2 —
+    src/processors/confidence_scorer.py:41-150), the HIGH/MEDIUM/LOW
+    bucket, and the APPROVE/REVIEW/MANUAL_REVIEW action
+    (confidence_scorer.py:117-150). ``run_date`` is the run-level literal
+    that replaces the reference's datetime.now() fallback (F7) — it lands
+    in a ``run_date`` column for lineage, never in any computed value.
+    The Column trees are built once per JVM gateway
+    (``session.per_gateway``), not per call."""
+    errors, is_valid, scored, routed = _scoring_columns()
+    out = (
+        enrich_extracted(extracted)
+        .withColumn("errors", errors)
+        .withColumn("is_valid", is_valid)
+        .select("*", *scored)
+        .select("*", *routed)
     )
     if run_date is not None:
         out = out.withColumn("run_date", F.lit(run_date))

@@ -1,10 +1,22 @@
-"""Text-analysis columns for large-scale training-data pipelines:
+r"""Text-analysis columns for large-scale training-data pipelines:
 language ID, quality scoring, token counting, fingerprinting.
 
-All native Catalyst expressions (rational arithmetic + md5 hashing only) so
-every one is DuckDB-oracle-checkable. These extend the reference's text
-heuristics (first-lines scans, keyword predicates — SURVEY.md §2.5 W5,
-§2.2 P6) to corpus scale.
+All native Catalyst expressions (regex scans, rational arithmetic, md5
+hashing, and the higher-order ``filter``/``transform`` that count marker
+words) so every one is DuckDB-oracle-checkable. These extend the
+reference's text heuristics (first-lines scans, keyword predicates —
+SURVEY.md §2.5 W5, §2.2 P6) to corpus scale.
+
+Marker counting scans each text ONCE: ``marker_words`` extracts every
+whole-word occurrence of any ``LANG_MARKERS``/``STOPWORDS`` word with one
+prefix-factored regex, and each list's count is the number of those words
+that fall in the list. That equals ``marker_hits`` per list exactly.
+Java's ``(?i)`` without UNICODE_CASE folds ASCII only, so a match is ASCII
+letters, which ``lower()`` maps exactly; and a match of ``\b(w1|…)\b``
+has a ``\b`` at each end and only letters between, so it is a whole word
+run — the union's matches are those of every list at once. (Lowering the
+text first would not be equal: Unicode lowering maps e.g. U+212A KELVIN
+SIGN to ``k``.)
 """
 
 from __future__ import annotations
@@ -57,29 +69,84 @@ def token_count_bpe(col: Column) -> Column:
 
 
 def marker_hits(col: Column, markers: tuple[str, ...]) -> Column:
-    """Count of whole-word marker occurrences (case-insensitive)."""
+    """Count of whole-word marker occurrences (case-insensitive) — the
+    definition ``marker_count`` over ``marker_words`` reproduces."""
     pat = r"(?i)\b(" + "|".join(markers) + r")\b"
     return F.regexp_count(col, F.lit(pat))
+
+
+def _prefix_factored(words: set[str]) -> str:
+    """Alternation of ``words`` factored by shared prefix (a regex trie),
+    so the matcher tests each leading letter once, not once per word."""
+    trie: dict = {}
+    for w in words:
+        node = trie
+        for ch in w:
+            node = node.setdefault(ch, {})
+        node[""] = {}
+
+    def emit(node: dict) -> str:
+        alts = [ch + emit(sub) for ch, sub in sorted(node.items()) if ch]
+        if not alts:
+            return ""
+        if len(alts) == 1 and "" not in node:
+            return alts[0]
+        return "(?:" + "|".join(alts) + ")" + ("?" if "" in node else "")
+
+    return emit(trie)
+
+
+MARKER_WORDS_RE = r"(?i)\b" + _prefix_factored(
+    {w for mk in (*LANG_MARKERS.values(), STOPWORDS) for w in mk}
+) + r"\b"
+
+
+def marker_words(col: Column) -> Column:
+    """Lowercased whole-word occurrences of every LANG_MARKERS/STOPWORDS
+    word, in text order — one regex scan (null for null text)."""
+    found = F.regexp_extract_all(col, F.lit(MARKER_WORDS_RE), 0)
+    return F.transform(found, F.lower)
+
+
+def marker_count(marker_words_col: Column, markers: tuple[str, ...]) -> Column:
+    """``marker_hits(col, markers)`` from ``marker_words(col)``: the number
+    of extracted words that are in ``markers``."""
+    return F.array_size(F.filter(marker_words_col, lambda w: w.isin(*markers)))
+
+
+def lang_of_marker_words(marker_words_col: Column) -> Column:
+    """``lang_id`` from ``marker_words(col)``: the max of one
+    (count, reverse code rank, code) struct per language plus
+    (0, top rank, 'und'), so the highest count wins, ties go to the lowest
+    code, and 'und' wins only when every count is 0 (or null)."""
+    codes = sorted(LANG_MARKERS)
+    top = len(codes)
+
+    def entry(n: Column, rank: int, code: str) -> Column:
+        return F.struct(
+            n.alias("n"), F.lit(rank).alias("rank"), F.lit(code).alias("code")
+        )
+
+    ranked = [
+        entry(marker_count(marker_words_col, LANG_MARKERS[c]), top - i, c)
+        for i, c in enumerate(codes)
+    ]
+    return F.array_max(F.array(*ranked, entry(F.lit(0), top + 1, "und")))["code"]
 
 
 def lang_id(col: Column) -> Column:
     """Heuristic language ID: argmax of marker-word hits with a
     deterministic tiebreak (language code ascending); 'und' when no
-    marker of any language appears."""
-    scored = [(code, marker_hits(col, mk)) for code, mk in sorted(LANG_MARKERS.items())]
-    best = scored[0][1]
-    for _, s in scored[1:]:
-        best = F.greatest(best, s)
-    pick = F.lit("und")
-    # first language (in sorted code order) achieving the max
-    for code, s in reversed(scored):
-        pick = F.when((s == best) & (best > 0), F.lit(code)).otherwise(pick)
-    return pick
+    marker of any language appears. ``filter`` is not looked into by
+    subexpression elimination, so the marker words are bound once as a
+    lambda argument rather than rescanned by every language's count."""
+    return F.transform(F.array(marker_words(col)), lang_of_marker_words)[0]
 
 
-def stopword_ratio(col: Column) -> Column:
+def stopword_ratio(col: Column, hits: Column | None = None) -> Column:
     n = token_count_ws(col)
-    hits = marker_hits(col, STOPWORDS)
+    if hits is None:
+        hits = marker_hits(col, STOPWORDS)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
@@ -97,12 +164,14 @@ def punct_ratio(col: Column) -> Column:
     )
 
 
-def quality_score(col: Column) -> Column:
+def quality_score(col: Column, stop_hits: Column | None = None) -> Column:
     """Composite document-quality heuristic in [0,1]: length saturation,
     stopword presence, word-length sanity, low punctuation noise.
-    Weights sum to 1; every term is rational arithmetic."""
+    Weights sum to 1; every term is rational arithmetic. ``stop_hits``
+    is the stopword count when the caller already has it
+    (``marker_count(words, STOPWORDS)``); by default ``col`` is scanned."""
     length_term = F.least(F.length(col).cast("double") / 1000.0, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(col) * 4.0, F.lit(1.0))
+    stop_term = F.least(stopword_ratio(col, stop_hits) * 4.0, F.lit(1.0))
     mwl = mean_word_len(col)
     wordlen_term = F.when((mwl >= 3.0) & (mwl <= 10.0), 1.0).otherwise(0.0)
     punct_term = F.greatest(F.lit(0.0), 1.0 - punct_ratio(col) * 4.0)

@@ -8,7 +8,7 @@ so one bad row never kills a 100 TB job.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ITEM_TOTAL_TOL = 0.10  # schema_validator.py:106-115
@@ -52,12 +52,4 @@ def needs_enhancement(
     fields are missing or source confidence is low."""
     return (
         order_id.isNull() | client.isNull() | (n_items == 0) | (source_conf < 0.7)
-    )
-
-
-def with_validation(df: DataFrame, *rules: Column) -> DataFrame:
-    """Attach errors + is_valid columns for a rule set."""
-    errs = collect_errors(*rules)
-    return df.withColumn("errors", errs).withColumn(
-        "is_valid", F.size(F.col("errors")) == 0
     )

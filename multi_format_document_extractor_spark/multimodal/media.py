@@ -921,7 +921,7 @@ def _meta_of(p: bytes | None) -> tuple[int, int, int]:
 
 
 def _meta_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    # per-partition decoder pool slot (mirrors operators/extract.ParserPool)
+    # one pass per Arrow batch, like the extraction UDF (operators/extract.py)
     for pdf in batches:
         payloads = list(pdf["payload"])
         metas = [_meta_of(p) for p in payloads]

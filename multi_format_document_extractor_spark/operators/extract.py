@@ -8,9 +8,6 @@ and runs the same extraction functions as the single-node oracle
 verified per-url by tests/test_extraction.py.
 
 Scale design (north rule):
-- **Per-partition parser pool**: the pool is constructed once per partition
-  iterator, not per row/batch — the Spark equivalent of the reference's lazy
-  model loading (src/hybrid_pipeline.py:118-129).
 - **No per-row Python dispatch**: one UDF invocation per Arrow batch; the
   per-document loop lives inside the vectorized batch.
 - **Two balancing strategies**, chosen by shuffle economics:
@@ -51,7 +48,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..oracle import Extracted, extract
+from ..oracle import extract
+from ..session import per_gateway
 from ..sources.pages import format_col
 
 if TYPE_CHECKING:
@@ -66,31 +64,10 @@ EXTRACT_DDL = (
 DEFAULT_SALT_BUCKETS = 4096  # >> max executor count; cheap modulo key
 
 
-class ParserPool:
-    """Per-partition reusable extraction state.
-
-    The stdlib extractors are cheap to construct, but the pool is the
-    architectural slot where heavyweight parsers (pdfium handles, ML models)
-    would live on a real cluster: built once per partition, reused across
-    every Arrow batch of that partition.
-    """
-
-    def __init__(self, profile: str = "default") -> None:
-        self.docs = 0
-        self.bytes_in = 0
-        self.profile = profile
-
-    def extract_one(self, payload: bytes | None) -> Extracted:
-        self.docs += 1
-        self.bytes_in += len(payload) if payload is not None else 0
-        return extract(payload, self.profile)
-
-
 def _make_extract_batches(max_bytes: int | None, profile: str = "default"):
     def _extract_batches(
         batches: Iterator["pd.DataFrame"],
     ) -> Iterator["pd.DataFrame"]:
-        pool = ParserPool(profile)  # once per partition iterator
         for pdf in batches:
             payloads, truncated = [], []
             for p in pdf["html"]:
@@ -100,7 +77,7 @@ def _make_extract_batches(max_bytes: int | None, profile: str = "default"):
                 else:
                     payloads.append(p)
                     truncated.append(False)
-            results = [pool.extract_one(p) for p in payloads]
+            results = [extract(p, profile) for p in payloads]
             out = pdf[["url", "warc_ts", "lang"]].copy()
             out["format"] = [r.format for r in results]
             out["text_out"] = [r.text for r in results]
@@ -171,9 +148,9 @@ def extract_spans(pages: DataFrame, profile: str = "default") -> DataFrame:
     audits, highlighting, and raw-page diffing). Html only by
     definition: span coordinates are DOM extents of the decoded page;
     other formats have no such geometry. Separate opt-in stage so the
-    byte-identity extraction path stays untouched; same pool/batch
-    shape, zero shuffle, and the native html pre-filter pushes into the
-    scan exactly like ``only_formats``. Kept-span counts are pinned
+    byte-identity extraction path stays untouched; same batch shape,
+    zero shuffle, and the native html pre-filter pushes into the scan
+    exactly like ``only_formats``. Kept-span counts are pinned
     equal to ``extract_pages``'s ``n_blocks`` per url in
     tests/test_spans.py."""
     from ..oracle import html_block_spans
@@ -263,6 +240,24 @@ def extract_pdf_boxes(pages: DataFrame) -> DataFrame:
     return df.mapInPandas(_batches, BOXES_DDL)
 
 
+_MARKER_WORDS = "_marker_words"
+
+
+@per_gateway
+def _enrich_columns() -> tuple[Column, tuple[Column, ...]]:
+    from ..functions import textstats as T
+
+    t = F.col("text_out")
+    words = F.col(_MARKER_WORDS)
+    return T.marker_words(t).alias(_MARKER_WORDS), (
+        T.lang_of_marker_words(words).alias("lang_guess"),
+        T.quality_score(t, T.marker_count(words, T.STOPWORDS)).alias("quality"),
+        T.token_count_ws(t).alias("n_tokens_ws"),
+        T.token_count_bpe(t).alias("n_tokens_bpe"),
+        T.fingerprint64(t).alias("content_key"),
+    )
+
+
 def enrich_extracted(extracted: DataFrame) -> DataFrame:
     """Training-pipeline enrichment over ``text_out`` — language guess,
     quality score, token counts, content fingerprint — as PURE NATIVE
@@ -271,31 +266,30 @@ def enrich_extracted(extracted: DataFrame) -> DataFrame:
     additional Python, zero additional shuffles (asserted in
     tests/test_plans.py). This is the designed layering: pay the Arrow
     boundary once, then stay JVM-side for everything derivable from the
-    extracted text."""
-    from ..functions import textstats as T
+    extracted text.
 
-    t = F.col("text_out")
-    return extracted.select(
-        "*",
-        T.lang_id(t).alias("lang_guess"),
-        T.quality_score(t).alias("quality"),
-        T.token_count_ws(t).alias("n_tokens_ws"),
-        T.token_count_bpe(t).alias("n_tokens_bpe"),
-        T.fingerprint64(t).alias("content_key"),
-    )
+    The marker words (one regex scan) get their own projection, which the
+    language and stopword counts read and which is dropped afterwards:
+    their ``filter``s are opaque to subexpression elimination, so inlined
+    they would rescan the text once per count. The Column trees are built
+    once per JVM gateway (``session.per_gateway``)."""
+    words, cols = _enrich_columns()
+    return extracted.select("*", words).select("*", *cols).drop(_MARKER_WORDS)
 
 
 # Formats whose measured per-byte extraction cost exceeds ~20x the html
 # baseline (ms/MB on corpus v21, single thread: html 18, text 69, csv 128,
 # zip 142, pbm 402, pdf 455, image 958 — table in BENCH.md §"Per-format
-# compute cost"). Re-derived from that table each corpus revision
-# (round-4 VERDICT #3): the original v5 list also shuffled csv and zip,
-# drawn at a ~115x spread where they measured ~8x — but at ≤8x a solid
-# csv/zip scan split is a tolerable straggler while an Exchange is a
-# guaranteed cost, so only the ≥20x formats ride the salted branch. They
-# are a tiny byte fraction (~2.8% of corpus bytes — pdf 2.5%, image
-# 0.25%, pbm 0.03%), so shuffling only them is cheap while the
-# html/text/csv/zip bulk keeps the zero-shuffle scan-split balance.
+# compute cost"; current figures are the ``oracle.<format>.ms_per_mb``
+# rows of ``python3 perfbench/run.py --trace 1``). Re-derived from those
+# figures each corpus revision (round-4 VERDICT #3): the original v5 list
+# also shuffled csv and zip, drawn at a ~115x spread where they measured
+# ~8x — but at ≤8x a solid csv/zip scan split is a tolerable straggler
+# while an Exchange is a guaranteed cost, so only the ≥20x formats ride
+# the salted branch. They are a tiny byte fraction (~2.8% of corpus
+# bytes — pdf 2.5%, image 0.25%, pbm 0.03%), so shuffling only them is
+# cheap while the html/text/csv/zip bulk keeps the zero-shuffle
+# scan-split balance.
 HEAVY_FORMATS = ("pdf", "image", "pbm")
 
 
@@ -323,11 +317,11 @@ def extract_pages_routed(
       full-payload-shuffle objection to salting everything does not
       apply.
 
-    Output rows are byte-identical to ``extract_pages`` (same UDF, same
-    pool) — only the physical routing differs; the union's two
-    MapInPandas branches and single heavy-side Exchange are pinned in
-    tests/test_plans.py. Costs one extra pass of the format sniff on the
-    scan (pure codegen) and one union."""
+    Output rows are byte-identical to ``extract_pages`` (same UDF) — only
+    the physical routing differs; the union's two MapInPandas branches
+    and single heavy-side Exchange are pinned in tests/test_plans.py.
+    Costs one extra pass of the format sniff on the scan (pure codegen)
+    and one union."""
     fmt = format_col(F.col("html"))
     light = extract_pages(
         pages.where(~fmt.isin(list(heavy_formats))),

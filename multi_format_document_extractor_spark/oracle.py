@@ -875,7 +875,9 @@ def detect_encoding(payload: bytes) -> tuple[str, str] | None:
     latin_mixed = int((high & (_left(in_word) | _right(in_word))).sum())
     if latin_mixed / n_high > 0.3:
         return None
-    n_ascii_alpha = int(alpha.sum())
+    # ASCII letters right after a high byte are multibyte trail bytes
+    # (big5 `\xbby`), not Latin text: they must not dilute the floor.
+    n_ascii_alpha = int((alpha & ~_left(high)).sum())
     if n_high / (n_high + n_ascii_alpha) < 0.25:
         return None
 

@@ -12,11 +12,17 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import zipfile
+from collections.abc import Callable
+from typing import TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # Arrow batches are bounded BOTH ways: 512 records (≈+12% extraction
 # throughput vs 128 — fewer per-batch Python/Arrow round-trips) AND 32 MB
@@ -116,3 +122,26 @@ def get_spark(
     # the local-mode equivalent of spark-submit --py-files.
     spark.sparkContext.addPyFile(make_pyfiles_zip())
     return spark
+
+
+def per_gateway(build: Callable[[], T]) -> Callable[[], T]:
+    """Memoize a zero-argument Column builder per live JVM gateway.
+
+    Every ``F.*`` call is a py4j round trip, so rebuilding a large Column
+    tree per query costs driver time on every call. Columns are unresolved
+    expressions that any session on the same JVM can reuse (a session
+    restart keeps the gateway); a new gateway means a new JVM, whose
+    objects the old py4j handles do not reach, so it rebuilds.
+    """
+    # [gateway, value]; two threads racing on a miss both build, and
+    # either result is equivalent, so no lock.
+    cache: list = [None, None]
+
+    @functools.wraps(build)
+    def get() -> T:
+        gw = SparkContext._gateway
+        if cache[1] is None or cache[0] is not gw:
+            cache[:] = [gw, build()]
+        return cache[1]
+
+    return get

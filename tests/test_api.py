@@ -148,3 +148,25 @@ def test_process_incremental_reuses_and_reextracts(spark, corpus_dir, tmp_path):
             assert bytes(r["text_out"]) != b"PREV", u  # re-extracted
         else:
             assert bytes(r["text_out"]) == b"PREV", u  # reused verbatim
+
+
+def test_per_gateway_memo_rebuilds_only_for_a_new_gateway(monkeypatch):
+    """The scoring Column trees are reused while the JVM gateway lives
+    (a session restart keeps it) and rebuilt for a new one, whose JVM the
+    old py4j handles do not reach."""
+    from pyspark import SparkContext
+
+    from multi_format_document_extractor_spark.session import per_gateway
+
+    builds: list[object] = []
+
+    @per_gateway
+    def build() -> object:
+        builds.append(SparkContext._gateway)
+        return len(builds)
+
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build() == build() == 1
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert build() == build() == 2
+    assert builds[0] is not builds[1]

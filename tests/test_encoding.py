@@ -327,6 +327,28 @@ def test_detect_encoding_per_script():
         assert words.split()[0] in text, name
 
 
+def test_detect_encoding_big5_trail_letters_not_counted_as_ascii():
+    # Undeclared single-paragraph Big5 page whose han chars often have an
+    # ASCII-letter trail byte (台 = \xa5x). Counted as ASCII letters,
+    # those trail bytes put it under the 0.25 dominance floor and the
+    # page decoded as latin-1.
+    import numpy as np
+
+    words = "台灣 時間 世界 技術 資訊 文件 文章 內容 搜尋 使用 需要 系統"
+    p = _undeclared_page("big5hkscs", words, reps=2)
+    arr = np.frombuffer(p, dtype=np.uint8)
+    n_high = int((arr > 127).sum())
+    n_alpha = int(
+        (((arr >= 0x41) & (arr <= 0x5A)) | ((arr >= 0x61) & (arr <= 0x7A))).sum()
+    )
+    assert n_high / (n_high + n_alpha) < 0.25  # under the floor as counted before
+    assert detect_encoding(p) == ("big5", "big5hkscs")
+    text, enc = decode_web(p)
+    assert enc == "big5+detected" and words in text
+    got = extract(p)
+    assert got.ok and got.encoding == "big5+detected" and words.encode() in got.text
+
+
 def test_detect_encoding_latin_negatives():
     # accented-Latin text must NEVER be claimed, even artificially dense —
     # the chain's latin-1 pick is correct for it and fixtures rely on it

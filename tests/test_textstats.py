@@ -182,3 +182,146 @@ def test_date_contract_every_listed_shape_parses(spark):
     ]
     assert got[: len(samples)] == ["2024-03-27"] * len(samples), got
     assert got[len(samples):] == [None, None]
+
+
+# ---------------------------------------------------------------------------
+# One-scan marker counting: marker_count(marker_words(t), L) == marker_hits(t, L)
+# ---------------------------------------------------------------------------
+
+from hypothesis import example, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+_LISTS = {f"lang_{c}": mk for c, mk in TS.LANG_MARKERS.items()}
+_LISTS["stop"] = TS.STOPWORDS
+_MARKERS = sorted({w for mk in _LISTS.values() for w in mk})
+
+
+@st.composite
+def _cased_marker(draw):
+    w = draw(st.sampled_from(_MARKERS))
+    flips = draw(st.lists(st.booleans(), min_size=len(w), max_size=len(w)))
+    return "".join(c.upper() if f else c for c, f in zip(w, flips))
+
+
+_PIECES = st.one_of(
+    _cased_marker(),
+    _cased_marker(),
+    st.sampled_from(
+        [
+            " ", " ", "\t", "\n", "-", ".", "'", "_", "7", "42",
+            # non-ASCII letters: dotted/dotless i, KELVIN SIGN, ligature ff
+            "\u0130", "\u0131", "\u212a", "\ufb00", "é", "ß", "ж",
+            "\uff54\uff48\uff45", "\uff21\uff4e\uff44",  # fullwidth the/And
+            "\u0301", "\u0308",  # combining acute / diaeresis
+            "x", "thee", "ands",
+            "\u212aung", "\u212aadar",  # lower() would make markers kung/kadar
+        ]
+    ),
+)
+_TEXT = st.one_of(st.none(), st.lists(_PIECES, max_size=24).map("".join))
+
+
+def _argmax_lang(counts: dict[str, int | None]) -> str:
+    """lang_id's contract: highest count, lowest code on ties, 'und' when
+    no marker of any language appears."""
+    best = max((n or 0) for n in counts.values())
+    if best <= 0:
+        return "und"
+    return min(c for c, n in counts.items() if n == best)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_TEXT, min_size=1, max_size=30))
+@example(
+    [
+        "The AND tHe \u212aung \u212aadar \u0130n \u0131s",
+        "\uff54\uff48\uff45 the\u0301 und\u0308 the_ 1the and7 _a_",
+    ]
+)
+def test_one_scan_counts_equal_marker_hits(spark, texts):
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts + ["", None])], "i int, t string"
+    )
+    t = F.col("t")
+    words = TS.marker_words(t)
+    cols = [TS.lang_id(t).alias("lang")]
+    for name, mk in _LISTS.items():
+        cols += [
+            TS.marker_hits(t, mk).alias(f"{name}_hits"),
+            TS.marker_count(words, mk).alias(f"{name}_count"),
+        ]
+    for r in df.select("i", "t", *cols).collect():
+        for name in _LISTS:
+            assert r[f"{name}_count"] == r[f"{name}_hits"], (r["t"], name)
+        counts = {c: r[f"lang_{c}_hits"] for c in TS.LANG_MARKERS}
+        assert r["lang"] == _argmax_lang(counts), (r["t"], counts)
+
+
+def test_lang_id_tie_break_and_und_fallback(spark):
+    cases = [
+        ("tie", "der the", "de"),  # de 1 / en 1: lowest code wins
+        ("tie_rev", "the der", "de"),
+        ("shared", "que", "es"),  # es and fr both list "que"
+        ("shared_upper", "PARA", "es"),  # es and pt both list "para"
+        ("wins", "the the der", "en"),
+        ("null", None, "und"),
+        ("empty", "", "und"),
+        ("fullwidth", "\uff54\uff48\uff45 \uff44\uff45\uff52", "und"),
+        ("kelvin", "\u212aung", "und"),  # KELVIN SIGN is not ASCII k
+        ("joined", "the_ 1der and2", "und"),
+        ("combining", "the\u0301", "und"),
+    ]
+    df = spark.createDataFrame(
+        [(k, t) for k, t, _ in cases], "k string, t string"
+    )
+    got = dict(df.select("k", TS.lang_id(F.col("t"))).collect())
+    assert got == {k: want for k, _, want in cases}
+
+
+def test_enrichment_matches_oracle_sql_on_extracted_pages(spark, corpus_dir):
+    r"""lang_guess / quality of enrich_extracted over real extracted pages
+    (corpus slice incl. the oversized html pages) against the registry's
+    own lang_id / quality_score DuckDB oracles, row by row.
+
+    lang_guess matches on every page. quality matches on every ASCII
+    page; on non-ASCII pages the engines disagree in two known ways:
+    Spark's ``length()`` of the BINARY ``text_out`` counts bytes where the
+    oracle counts characters, and Java's ``\b`` treats non-ASCII letters
+    as word characters where DuckDB's does not (``año`` holds the
+    stopword ``a`` for DuckDB only)."""
+    import duckdb
+    import pyarrow as pa
+
+    import __spark_entry__ as entry_mod
+    from multi_format_document_extractor_spark.operators.extract import (
+        enrich_extracted,
+        extract_pages,
+    )
+    from multi_format_document_extractor_spark.sources.pages import read_pages
+
+    pages = read_pages(spark, corpus_dir + "/pages.parquet")
+    got = (
+        enrich_extracted(extract_pages(pages))
+        .select("url", "text_out", "lang_guess", "quality")
+        .toArrow()
+        .to_pylist()
+    )
+    assert max(len(r["text_out"]) for r in got) > 500_000  # oversized pages in
+    documents = pa.table(  # noqa: F841 — scanned by name in the SQL below
+        {
+            "doc_id": [r["url"] for r in got],
+            "text": [r["text_out"].decode("utf-8") for r in got],
+        }
+    )
+    con = duckdb.connect()
+    oracle = entry_mod.oracle_sql()
+    want_lang = dict(con.execute(oracle["lang_id"]).fetchall())
+    want_quality = dict(con.execute(oracle["quality_score"]).fetchall())
+    non_ascii = {r["url"] for r in got if not r["text_out"].isascii()}
+    assert 0 < len(non_ascii) < len(got) / 2
+    assert [r["url"] for r in got if r["lang_guess"] != want_lang[r["url"]]] == []
+    assert [
+        r["url"]
+        for r in got
+        if r["quality"] != want_quality[r["url"]] and r["url"] not in non_ascii
+    ] == []
