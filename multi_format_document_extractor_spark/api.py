@@ -9,12 +9,17 @@ store. Here that chain is ``process_table`` (in-session) and
 Layering at scale: extraction is the one Arrow/Python stage; everything
 this module adds on top — enrichment, confidence, validation, routing —
 is pure native Column arithmetic that folds into the post-UDF codegen
-span. ``run_pipeline`` persists only the extraction output (the expensive
-part) through the Warehouse snapshot protocol; scores are re-derived on
+span. Hybrid escalation is decided inside that one stage, by a set lookup
+whose set the native confidence expression computes (``escalation_table``).
+``run_pipeline`` persists only the extraction output (the expensive part)
+through the Warehouse snapshot protocol; scores are re-derived on
 read because recomputing codegen columns is cheaper than storing them.
 """
 
 from __future__ import annotations
+
+import datetime
+import itertools
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,8 +27,8 @@ from pyspark.sql import functions as F
 from .functions import confidence as C
 from .functions import validate as V
 from .functions.rounding import rnd
-from .operators.extract import enrich_extracted, extract_pages
-from .operators.routing import ESCALATION_THRESHOLD, two_pass_escalation
+from .operators.extract import enrich_extracted, escalation_key, extract_pages
+from .operators.routing import ESCALATION_THRESHOLD
 from .session import per_gateway
 from .sinks import Warehouse
 from .sources.pages import read_pages
@@ -128,6 +133,58 @@ def score_extracted(extracted: DataFrame, run_date: str | None = None) -> DataFr
     return out
 
 
+@per_gateway
+def _escalation_tables() -> dict[float, frozenset]:
+    """threshold → ``escalation_table`` result, per JVM gateway."""
+    return {}
+
+
+def escalation_table(
+    spark: SparkSession, threshold: float = ESCALATION_THRESHOLD
+) -> frozenset:
+    """Every ``extract.escalation_key`` whose rows score ``confidence <
+    threshold``. ``confidence`` reads only the key's inputs, so one literal
+    row per key (at most 2⁷ × 8) run through the native scoring projection
+    decides escalation for every row that key covers — from the one
+    definition in ``_scoring_columns``, with no Python copy of its
+    arithmetic. Built on the first call per (gateway, threshold)."""
+    tables = _escalation_tables()
+    if threshold not in tables:
+        rows = itertools.product(
+            SOURCE_CONFIDENCE,
+            (False, True),
+            (b"", b"x"),
+            (0, 1, 2),
+            (None, "und"),
+            (None, datetime.datetime(1970, 1, 1)),
+            (False, True),
+        )
+        keys = spark.createDataFrame(
+            list(rows),
+            "format string, ok boolean, text_out binary, n_blocks int, "
+            "lang string, warc_ts timestamp, truncated boolean",
+        )
+        errors, _, scored, _ = _scoring_columns()
+        low = (
+            keys.withColumn("errors", errors)
+            .select("*", *scored)
+            .where(F.col("confidence") < threshold)
+        )
+        tables[threshold] = frozenset(
+            escalation_key(
+                r.format,
+                r.ok,
+                r.text_out,
+                r.n_blocks,
+                r.lang is not None,
+                r.warc_ts is not None,
+                r.truncated,
+            )
+            for r in low.collect()
+        )
+    return tables[threshold]
+
+
 def process_table(
     pages: DataFrame,
     mode: str = "rule_based",
@@ -142,45 +199,38 @@ def process_table(
     src/hybrid_pipeline.py:308-360):
 
     - ``"rule_based"``: one deterministic pass over everything.
-    - ``"hybrid"``: ``routing.two_pass_escalation`` (the one two-pass
-      protocol in the engine — materialization boundary included) with
-      documents scoring below ``threshold`` RE-EXTRACTED with the
-      "relaxed" recovery profile (oracle.PROFILES) — a real second
-      extractor, not just a score bump — and rescored; winners keep
-      ``mode='escalated'``. The escalated scan re-reads only the
-      low-confidence slice's payloads (semi-join on url ahead of the
-      second UDF pass), so the expensive pass's input is filtered at the
-      scan like SURVEY §3.2 prescribes.
+    - ``"hybrid"``: documents that would score below ``threshold`` are
+      RE-EXTRACTED with the "relaxed" recovery profile (oracle.PROFILES) —
+      a real second extractor, not just a score bump — and scored on that
+      result; they carry ``mode='escalated'``. The decision is made per
+      row inside the one extraction UDF, by looking the row's
+      ``escalation_key`` up in ``escalation_table``, so the relaxed pass
+      reads the payload already in hand and costs Python time only on the
+      rows that escalate: one scan, one MapInPandas, one scoring
+      projection, no shuffle, join or union (pinned in
+      tests/test_plans.py). Rows sharing a url are decided independently.
 
-    Returns the scored table; ``mode`` column records the path per row.
+    Returns the scored table; the last column, ``mode``, records the path
+    per row.
     """
-
-    def cheap(df: DataFrame) -> DataFrame:
-        return score_extracted(
-            extract_pages(df, salt_partitions=salt_partitions, max_bytes=max_bytes),
-            run_date=run_date,
-        )
-
     if mode == "rule_based":
-        return cheap(pages).withColumn("mode", F.lit("rule_based"))
-    if mode != "hybrid":
+        escalate = None
+    elif mode == "hybrid":
+        escalate = escalation_table(pages.sparkSession, threshold)
+    else:
         raise ValueError(f"unknown mode: {mode!r}")
-
-    def expensive(low: DataFrame) -> DataFrame:
-        retry_pages = pages.join(low.select("url"), "url", "left_semi")
-        return score_extracted(
-            extract_pages(
-                retry_pages,
-                salt_partitions=salt_partitions,
-                max_bytes=max_bytes,
-                profile="relaxed",
-            ),
-            run_date=run_date,
-        )
-
-    return two_pass_escalation(
-        pages, cheap, expensive, conf_col="confidence", threshold=threshold
+    out = score_extracted(
+        extract_pages(
+            pages,
+            salt_partitions=salt_partitions,
+            max_bytes=max_bytes,
+            escalate=escalate,
+        ),
+        run_date=run_date,
     )
+    if escalate is None:
+        return out.withColumn("mode", F.lit("rule_based"))
+    return out.select(*(c for c in out.columns if c != "mode"), "mode")
 
 
 def process_incremental(

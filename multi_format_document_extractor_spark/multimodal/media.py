@@ -685,8 +685,9 @@ def id3_tags(payload: bytes) -> dict[str, str]:
     """Text frames from a leading ID3v2.3/2.4 tag: {frame_id: text} for
     T*** frames (TIT2 title, TPE1 artist, TALB album, …). v3 frame sizes
     are plain big-endian, v4 syncsafe; text encodings 0 (latin-1) and
-    3 (utf-8) decode, trailing NULs strip. {} when no tag/frames
-    parse."""
+    3 (utf-8) decode, trailing NULs strip. An extended header (flag 0x40)
+    is skipped: its v4 size is syncsafe and counts itself, its v3 size is
+    plain and does not. {} when no tag/frames parse."""
     if payload[:3] != b"ID3" or len(payload) < 10:
         return {}
     major = payload[3]
@@ -695,6 +696,9 @@ def id3_tags(payload: bytes) -> dict[str, str]:
     end = _id3v2_size(payload)
     out: dict[str, str] = {}
     pos = 10
+    if payload[5] & 0x40 and len(payload) >= 14:
+        b = payload[10:14]
+        pos += _syncsafe(b) if major == 4 else 4 + int.from_bytes(b, "big")
     while pos + 10 <= min(end, len(payload)):
         fid = payload[pos : pos + 4]
         if not fid.isalnum() or not fid.isupper():
@@ -1331,8 +1335,10 @@ def render_ogg(
 
 def ogg_metadata(payload: bytes) -> tuple[str, int, int, int]:
     """(codec, sample_rate, channels, duration_ms) from an Ogg page walk:
-    the BOS page's identification header names the codec and geometry,
-    the highest non-negative granule position counts PCM samples. Opus
+    the first BOS page that carries a known identification header names
+    the codec and geometry, and the highest non-negative granule position of that
+    page's logical stream (serial number) counts PCM samples, so a
+    multiplexed or chained stream cannot lend it another's granules. Opus
     granules tick at 48 kHz regardless of the input rate and lead with a
     pre-skip (RFC 7845 §4-5); duration subtracts it. Raises when no
     valid page / known ident header parses."""
@@ -1341,10 +1347,13 @@ def ogg_metadata(payload: bytes) -> tuple[str, int, int, int]:
     codec = ""
     rate = channels = 0
     pre_skip = 0
-    last_granule = 0
+    serial = b""
+    last_granule: dict[bytes, int] = {}
     pos = 0
     while pos + 27 <= len(payload) and payload[pos : pos + 4] == b"OggS":
+        bos = payload[pos + 5] & 0x02
         granule = int.from_bytes(payload[pos + 6 : pos + 14], "little", signed=True)
+        page_serial = payload[pos + 14 : pos + 18]
         nsegs = payload[pos + 26]
         lacing = payload[pos + 27 : pos + 27 + nsegs]
         if len(lacing) < nsegs:
@@ -1354,7 +1363,7 @@ def ogg_metadata(payload: bytes) -> tuple[str, int, int, int]:
         body = payload[body_start : body_start + body_len]
         if len(body) < body_len:
             break
-        if not codec:
+        if bos and not codec:
             if body[:7] == b"\x01vorbis" and len(body) >= 16:
                 codec = "vorbis"
                 channels = body[11]
@@ -1364,17 +1373,21 @@ def ogg_metadata(payload: bytes) -> tuple[str, int, int, int]:
                 channels = body[9]
                 pre_skip = int.from_bytes(body[10:12], "little")
                 rate = int.from_bytes(body[12:16], "little")
+            serial = page_serial
         if granule >= 0:
-            last_granule = max(last_granule, granule)
+            last_granule[page_serial] = max(
+                last_granule.get(page_serial, 0), granule
+            )
         pos = body_start + body_len
     if not codec or not rate:
         raise ValueError("no known Ogg identification header")
     if rate > _RATE_CAP:  # hostile 4-byte rate would overflow the int32 column
         raise ValueError("implausible sample rate")
+    samples = last_granule.get(serial, 0)
     if codec == "opus":
-        dur_ms = max(0, last_granule - pre_skip) * 1000 // 48000
+        dur_ms = max(0, samples - pre_skip) * 1000 // 48000
     else:
-        dur_ms = last_granule * 1000 // rate
+        dur_ms = samples * 1000 // rate
     # a 63-bit granule with a rate of 1 exceeds int64 ms — cap
     return codec, rate, channels, min(dur_ms, _MS_CAP)
 

@@ -64,7 +64,23 @@ EXTRACT_DDL = (
 DEFAULT_SALT_BUCKETS = 4096  # >> max executor count; cheap modulo key
 
 
-def _make_extract_batches(max_bytes: int | None, profile: str = "default"):
+def escalation_key(
+    fmt: str,
+    ok: bool,
+    text: bytes,
+    n_blocks: int,
+    has_lang: bool,
+    has_ts: bool,
+    truncated: bool,
+) -> tuple:
+    """The inputs ``api._scoring_columns`` reads from one extracted row,
+    with ``text_out`` reduced to non-emptiness and ``n_blocks`` clamped to
+    0 / 1 / ≥2 — all that ``confidence`` can see of it. ``api`` keys its
+    escalation table with this same function."""
+    return (fmt, ok, len(text) > 0, min(n_blocks, 2), has_lang, has_ts, truncated)
+
+
+def _make_extract_batches(max_bytes: int | None, escalate: frozenset | None):
     def _extract_batches(
         batches: Iterator["pd.DataFrame"],
     ) -> Iterator["pd.DataFrame"]:
@@ -77,8 +93,23 @@ def _make_extract_batches(max_bytes: int | None, profile: str = "default"):
                 else:
                     payloads.append(p)
                     truncated.append(False)
-            results = [extract(p, profile) for p in payloads]
+            results = [extract(p) for p in payloads]
             out = pdf[["url", "warc_ts", "lang"]].copy()
+            if escalate is not None:
+                up = [
+                    escalation_key(r.format, r.ok, r.text, r.n_blocks, lg, ts, t)
+                    in escalate
+                    for r, lg, ts, t in zip(
+                        results,
+                        out["lang"].notna().tolist(),
+                        out["warc_ts"].notna().tolist(),
+                        truncated,
+                    )
+                ]
+                results = [
+                    extract(p, "relaxed") if u else r
+                    for p, r, u in zip(payloads, results, up)
+                ]
             out["format"] = [r.format for r in results]
             out["text_out"] = [r.text for r in results]
             out["n_blocks"] = [r.n_blocks for r in results]
@@ -90,6 +121,8 @@ def _make_extract_batches(max_bytes: int | None, profile: str = "default"):
             out["checksum"] = [zlib.crc32(r.text) for r in results]
             out["truncated"] = truncated
             out["encoding"] = [r.encoding for r in results]
+            if escalate is not None:
+                out["mode"] = ["escalated" if u else "rule_based" for u in up]
             yield out
 
     return _extract_batches
@@ -105,7 +138,7 @@ def extract_pages(
     salt_partitions: int | None = None,
     only_formats: list[str] | None = None,
     max_bytes: int | None = None,
-    profile: str = "default",
+    escalate: frozenset | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted table.
 
@@ -120,17 +153,20 @@ def extract_pages(
     ``truncated`` column (and thus in warehouse lineage), never silent;
     default None = byte-identity contract intact.
 
-    ``profile``: oracle.PROFILES key — "default" (byte-identity contract)
-    or "relaxed" (the hybrid pipeline's recovery pass).
+    ``escalate``: the hybrid pipeline's escalation table
+    (``api.escalation_table``). A row whose ``escalation_key`` is in it is
+    re-extracted in the same batch with the "relaxed" recovery profile
+    (oracle.PROFILES) from the payload already in hand, and the output
+    gains a ``mode`` column ('escalated' | 'rule_based'). Default None:
+    every row under the "default" profile, the byte-identity contract.
     """
     df = pages.select("url", "warc_ts", "html", "lang")
     if only_formats is not None:
         df = df.where(format_col(F.col("html")).isin(only_formats))
     if salt_partitions:
         df = df.repartition(salt_partitions, salt_key(F.col("url")))
-    return df.mapInPandas(
-        _make_extract_batches(max_bytes, profile), schema=EXTRACT_DDL
-    )
+    schema = EXTRACT_DDL if escalate is None else EXTRACT_DDL + ", mode string"
+    return df.mapInPandas(_make_extract_batches(max_bytes, escalate), schema=schema)
 
 
 SPANS_DDL = (
@@ -298,7 +334,6 @@ def extract_pages_routed(
     heavy_formats: tuple[str, ...] = HEAVY_FORMATS,
     salt_partitions: int = 64,
     max_bytes: int | None = None,
-    profile: str = "default",
 ) -> DataFrame:
     """Format-routed extraction (round-3 VERDICT "Next round" #7): the
     scan-split plan hands every task equal input BYTES, which balances
@@ -326,12 +361,10 @@ def extract_pages_routed(
     light = extract_pages(
         pages.where(~fmt.isin(list(heavy_formats))),
         max_bytes=max_bytes,
-        profile=profile,
     )
     heavy = extract_pages(
         pages.where(fmt.isin(list(heavy_formats))),
         salt_partitions=salt_partitions,
         max_bytes=max_bytes,
-        profile=profile,
     )
     return light.unionByName(heavy)

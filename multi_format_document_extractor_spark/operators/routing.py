@@ -1,12 +1,21 @@
-"""Hybrid routing as a two-pass job strategy (SURVEY.md §3.2).
+"""Hybrid routing: the escalation threshold and the two-pass job strategy
+(SURVEY.md §3.2).
 
 The reference routes per document: rule-based first, escalate to the AI
-path when confidence < 0.7 (src/hybrid_pipeline.py:308-360). Row-level
-branching would put the expensive code inside the hot UDF for every row;
-instead the engine runs the cheap pass over everything, then re-processes
-only the low-confidence slice with the expensive pass and unions — the
-expensive stage's input is already filtered at the scan (job-level
-cost-based routing, which Catalyst cannot infer on its own).
+path when confidence < 0.7 (src/hybrid_pipeline.py:308-360). The engine's
+own hybrid mode (``api.process_table(mode="hybrid")``) branches per row
+inside the one extraction UDF: ``confidence`` reads only a handful of
+extraction outputs, so the set of their values that escalate is computed
+once natively (``api.escalation_table``) and the branch in the hot loop is
+one set lookup per row. The relaxed pass then re-reads a payload the UDF
+already holds, costs Python time only on the rows that escalate, and needs
+no second scan, join or union.
+
+``two_pass_escalation`` remains for expensive passes that cannot run inside
+that UDF (a different stage, model or service): the cheap pass runs over
+everything, then only the low-confidence slice goes through the expensive
+pass, and the two are unioned (job-level cost-based routing, which Catalyst
+cannot infer on its own). The ``routing_two_pass`` registry query uses it.
 """
 
 from __future__ import annotations

@@ -4,9 +4,18 @@ validate → route (→ warehouse)."""
 
 from __future__ import annotations
 
+import datetime
+import itertools
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from multi_format_document_extractor_spark import api
+from multi_format_document_extractor_spark.operators.extract import (
+    EXTRACT_DDL,
+    escalation_key,
+)
 from multi_format_document_extractor_spark.sources.pages import read_pages
 
 
@@ -61,8 +70,6 @@ def test_hybrid_mode_recovers_low_confidence_docs(spark):
     """A page whose content blocks are short (below the default
     MIN_CONTENT_CHARS) extracts empty under the default profile but is
     recovered by the relaxed escalation pass."""
-    import datetime
-
     short = "<html><body>" + "".join(
         f"<p>short block {i} here</p>" for i in range(6)
     ) + "</body></html>"
@@ -81,6 +88,91 @@ def test_hybrid_mode_recovers_low_confidence_docs(spark):
     assert out["u-short"]["mode"] == "escalated"
     assert b"short block" in bytes(out["u-short"]["text_out"])
     spark.catalog.clearCache()
+
+
+def test_hybrid_mode_decides_per_row_on_duplicate_urls(spark):
+    """Two rows on one url, one escalating and one not: each row is decided
+    on its own, so exactly two rows come out, one per path."""
+    short = "<html><body>" + "".join(
+        f"<p>short block {i} here</p>" for i in range(6)
+    ) + "</body></html>"
+    rich = "<html><body><p>" + "solid content word " * 40 + "</p></body></html>"
+    ts = datetime.datetime(2026, 7, 1)
+    pages = spark.createDataFrame(
+        [("u-dup", ts, short.encode(), None, "en"),
+         ("u-dup", ts, rich.encode(), None, "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    out = api.process_table(pages, mode="hybrid").collect()
+    assert sorted(r["mode"] for r in out) == ["escalated", "rule_based"]
+
+
+# Every escalation key, with n_blocks beyond the clamp and a few non-empty
+# texts, so a row's membership in the table can be checked against its
+# own native confidence.
+_KEY_COLS = ("format", "ok", "text_out", "n_blocks", "lang", "warc_ts", "truncated")
+_TEXTS = (b"x", b"the plain words of a page", "caf\u00e9 \u4e2d\u6587".encode())
+
+
+def _every_key_row(spark):
+    rows = [
+        (f"u{i}", ts, lang, fmt, text, n, ok, None, 0, 0, trunc, None)
+        for i, (fmt, ok, text, n, lang, ts, trunc) in enumerate(
+            itertools.product(
+                api.SOURCE_CONFIDENCE,
+                (False, True),
+                (b"", *_TEXTS),
+                (0, 1, 2, 5),
+                (None, "en"),
+                (None, datetime.datetime(2026, 7, 1)),
+                (False, True),
+            )
+        )
+    ]
+    return spark.createDataFrame(rows, EXTRACT_DDL)
+
+
+@pytest.mark.parametrize("threshold", [0.7, 0.5, 0.9])
+def test_escalation_table_matches_native_confidence(spark, threshold):
+    table = api.escalation_table(spark, threshold)
+    rows = api.score_extracted(_every_key_row(spark)).collect()
+    low = 0
+    for r in rows:
+        key = escalation_key(
+            r.format, r.ok, r.text_out, r.n_blocks,
+            r.lang is not None, r.warc_ts is not None, r.truncated,
+        )
+        assert (key in table) == (r.confidence < threshold), (key, r.confidence)
+        low += r.confidence < threshold
+    assert 0 < low < len(rows)  # the table splits the domain
+    assert api.escalation_table(spark, threshold) is table  # built once
+
+
+def test_escalation_table_domain_covers_every_extracted_format(corpus_rows):
+    """``escalation_table`` keys only the SOURCE_CONFIDENCE formats; a
+    format ``oracle.extract`` could return outside them would never
+    escalate."""
+    from multi_format_document_extractor_spark import oracle
+
+    formats = {v for k, v in vars(oracle).items() if k.startswith("FORMAT_")}
+    assert formats == set(api.SOURCE_CONFIDENCE)
+    assert {oracle.extract(r.html).format for r in corpus_rows} <= formats
+
+
+def test_confidence_reads_exactly_the_escalation_key_columns(spark):
+    """The scoring projection resolves over the key's columns alone, and
+    fails without any one of them: a new input to ``confidence`` fails
+    here instead of silently mis-escalating."""
+    errors, _, scored, _ = api._scoring_columns()
+    keys = _every_key_row(spark).select(*_KEY_COLS)
+
+    def resolve(df):
+        return df.withColumn("errors", errors).select("*", *scored).schema
+
+    resolve(keys)
+    for c in _KEY_COLS:
+        with pytest.raises(AnalysisException):
+            resolve(keys.drop(c))
 
 
 def test_run_pipeline_is_resumable(spark, corpus_dir, tmp_path):

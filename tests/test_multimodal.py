@@ -915,6 +915,53 @@ def test_exif_and_id3_tag_walks():
         render_id3v2({}, version=2)
 
 
+def test_id3_tags_skip_extended_header():
+    """Flag 0x40 puts an extended header before the first frame: its v2.4
+    size is syncsafe and counts itself, its v2.3 size is plain and does
+    not. The frame walk must start after it."""
+    from multi_format_document_extractor_spark.multimodal.media import (
+        _syncsafe_bytes,
+        id3_tags,
+        render_id3v2,
+    )
+
+    frames = {"TIT2": "Title", "TPE1": "Artist"}
+    exts = {
+        4: _syncsafe_bytes(6) + b"\x01\x00",  # size, 1 flag byte, flags
+        3: (6).to_bytes(4, "big") + b"\x00\x00" + bytes(4),  # + padding size
+    }
+    for ver, ext in exts.items():
+        body = ext + render_id3v2(frames, version=ver)[10:]
+        tag = b"ID3" + bytes([ver, 0, 0x40]) + _syncsafe_bytes(len(body)) + body
+        assert id3_tags(tag) == frames, ver
+        assert id3_tags(tag[:12]) == {}  # flag set, extended header cut off
+
+
+def test_ogg_ident_from_bos_page_and_granule_per_serial():
+    """A multiplexed Ogg file: the audio geometry comes from the BOS page
+    that carries an identification header, never from a later page whose
+    body merely looks like one, and the duration counts only that logical
+    stream's granules."""
+    from multi_format_document_extractor_spark.multimodal.media import (
+        _ogg_page,
+        ogg_metadata,
+    )
+
+    fake_ident = b"\x01vorbis" + bytes(4) + b"\x01" + (8000).to_bytes(4, "little")
+    vorbis = (
+        b"\x01vorbis" + bytes(4) + b"\x02" + (44100).to_bytes(4, "little")
+        + bytes(12) + b"\xb8\x01"
+    )
+    p = (
+        _ogg_page(9, 0, 0, b"\x80theora" + bytes(34), bos=True)
+        + _ogg_page(9, 1, 0, fake_ident)
+        + _ogg_page(5, 0, 0, vorbis, bos=True)
+        + _ogg_page(9, 2, 10**9, b"\x00", eos=True)
+        + _ogg_page(5, 1, 88200, b"\x00", eos=True)
+    )
+    assert ogg_metadata(p) == ("vorbis", 44100, 2, 2000)
+
+
 def test_media_tags_spark(spark):
     from multi_format_document_extractor_spark.multimodal import media_tags
     from multi_format_document_extractor_spark.multimodal.media import (

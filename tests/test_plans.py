@@ -186,6 +186,18 @@ def test_two_pass_runs_cheap_pass_exactly_once(spark, pages):
         spark.catalog.clearCache()
 
 
+def test_hybrid_plan_is_one_udf_stage(pages):
+    """Hybrid mode escalates inside the one extraction UDF: one
+    MapInPandas, and no shuffle, join, union or checkpoint rescan of a
+    first pass."""
+    from multi_format_document_extractor_spark import api
+
+    p = plan(api.process_table(pages, mode="hybrid"))
+    assert p.count("MapInPandas") == 1
+    for op in ("Exchange", "Join", "Union", "ExistingRDD"):
+        assert op not in p, op
+
+
 def test_pack_sequences_single_bucket_exchange(spark):
     """Packing must shuffle ONCE on the hash bucket (parallel windows) —
     a global-order window would show Exchange SinglePartition."""
