@@ -150,21 +150,6 @@ def main() -> None:
     times["extract_pages_salted"] = round(
         _timed(lambda: extract_pages(pages, salt_partitions=int(CPUS) * 4)), 3
     )
-    from multi_format_document_extractor_spark.operators.extract import (
-        extract_pages_routed,
-    )
-
-    # format-routed plan: heavy-per-byte formats (~3% of bytes) salted,
-    # html/text on the zero-shuffle split (BENCH.md "Per-format compute
-    # cost"); expected ≈ the split headline since the shuffle slice is tiny
-    times["extract_pages_routed"] = round(
-        _timed(
-            lambda: extract_pages_routed(
-                pages, salt_partitions=int(CPUS) * 4
-            )
-        ),
-        3,
-    )
 
     # -- registry queries at the driver's sf dir -----------------------------
     from multi_format_document_extractor_spark.plans.queries import QUERIES

@@ -31,7 +31,6 @@ from .operators.extract import enrich_extracted, escalation_key, extract_pages
 from .operators.routing import ESCALATION_THRESHOLD
 from .session import per_gateway
 from .sinks import Warehouse
-from .sources.pages import read_pages
 
 # Per-format source confidence — the analog of the reference's per-parser
 # base confidence (src/parsers/*: each parser reports how trustworthy its
@@ -298,12 +297,3 @@ def run_pipeline(
     record = wh.run(spark, pages, run_id=run_id, salt_partitions=salt_partitions)
     return record, score_extracted(wh.read_extracted(spark), run_date=run_date)
 
-
-def process_path(
-    spark: SparkSession,
-    path: str,
-    mode: str = "rule_based",
-    **kwargs,
-) -> DataFrame:
-    """Convenience: ``process_table`` over a pages parquet path."""
-    return process_table(read_pages(spark, path), mode=mode, **kwargs)

@@ -30,7 +30,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 # Bump when generator output changes for a given (n, seed): cache dirs
-# (bench.py, scaling_bench) embed this so a stale corpus is never reused.
+# (bench.py, perfbench, the corpus-backed queries) embed this so a stale
+# corpus is never reused.
 CORPUS_VERSION = 21  # v21: ~22% of PDFs are SCANNED documents — page
 # content is a raster image XObject (gray/1-bit/RGB Flate ± PNG
 # predictor ± /Decode inversion, or /DCTDecode JPEG) whose text exists

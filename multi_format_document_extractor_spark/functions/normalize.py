@@ -60,28 +60,10 @@ def iso_date(col: Column) -> Column:
     return F.date_format(col, "yyyy-MM-dd")
 
 
-def default_delivery_date(order_date: Column, delivery_date: Column) -> Column:
-    """F6: missing delivery date defaults to order date + 7 days
-    (src/processors/data_transformer.py:146-155)."""
-    return F.coalesce(delivery_date, F.date_add(order_date, 7))
-
-
 def parse_number(col: Column) -> Column:
     """F8/F9: currency/thousands strip → double, null-safe
     (src/parsers/pdf_parser.py:333-346)."""
     return F.regexp_replace(col, r"[^0-9.\-]", "").try_cast("double")
-
-
-def parse_quantity(col: Column) -> Column:
-    """F8 int variant with the reference's ``max(1, int(v))`` floor
-    (src/processors/data_transformer.py:206)."""
-    return F.greatest(F.lit(1), F.coalesce(parse_number(col).cast("int"), F.lit(1)))
-
-
-def clean_string(col: Column) -> Column:
-    """F10: trim, collapse whitespace, empty→null
-    (src/processors/data_transformer.py:157-169)."""
-    return F.nullif(F.regexp_replace(F.trim(col), r"\s+", " "), F.lit(""))
 
 
 _CURRENCY_MAP = {"$": "USD", "€": "EUR", "£": "GBP", "USD": "USD", "EUR": "EUR", "GBP": "GBP"}
@@ -153,8 +135,3 @@ def strip_md_fence(col: Column) -> Column:
         F.regexp_replace(col, r"^```(json)?\s*", ""), r"\s*```$", ""
     )
 
-
-def embedded_json(col: Column, schema: str) -> Column:
-    """F19: salvage the outermost {...} and parse; null on bad JSON mirrors
-    the reference's try/except salvage (src/parsers/ocr_parser.py:164-172)."""
-    return F.from_json(F.regexp_extract(col, r"\{[\s\S]*\}", 0), schema)

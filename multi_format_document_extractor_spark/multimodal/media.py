@@ -65,8 +65,8 @@ _RATE_CAP = 8_000_000  # Hz — no real container exceeds 768 kHz; int32-safe
 
 
 def _is_bmff(payload: bytes) -> bool:
-    """ISO-BMFF magic (mp4/mov/m4a) — the ONE definition sniff_media,
-    _meta_of, and mp4_metadata all dispatch on."""
+    """ISO-BMFF magic (mp4/mov/m4a) — the ONE definition sniff_media
+    and mp4_metadata dispatch on."""
     return len(payload) >= 12 and payload[4:8] == b"ftyp"
 
 
@@ -858,70 +858,47 @@ def decode_image_stub(payload: bytes) -> tuple[int, int]:
     return 64 + h[0] % 192, 64 + h[1] % 192
 
 
+def _still(dims: tuple[int, int] | None) -> tuple[int, int, int]:
+    return (*dims, 0) if dims is not None else (0, 0, 0)
+
+
+# (width, height, duration_ms) reader per ``sniff_media`` verdict. A reader
+# may raise on a malformed container (→ zeros). Types with no reader —
+# audio/wav, application/octet-stream (including "BM" payloads whose DIB
+# header does not parse) and unknown — take the digest stub.
+_META_READERS = {
+    "image/png": lambda p: _still(decode_image(p)),
+    "image/gif": lambda p: _still(decode_image(p)),
+    "image/jpeg": lambda p: _still(decode_image(p)),
+    "image/webp": lambda p: _still(webp_dims(p)),
+    "image/tiff": lambda p: _still(tiff_dims(p)),
+    "image/bmp": lambda p: _still(bmp_dims(p)),
+    "video/mp4": lambda p: mp4_metadata(p) or (0, 0, 0),
+    "video/webm": webm_metadata,
+    "video/avi": lambda p: avi_metadata(p) or (0, 0, 0),
+    "audio/flac": lambda p: (0, 0, flac_metadata(p)[4]),
+    "audio/ogg": lambda p: (0, 0, ogg_metadata(p)[3]),
+    "audio/mpeg": lambda p: (0, 0, mp3_metadata(p)[4]),
+}
+
+
 def _meta_of(p: bytes | None) -> tuple[int, int, int]:
-    """(width, height, duration_ms): real dims for decodable
-    PNGs/GIFs/JPEGs (duration 0 — stills), real header-walk geometry for
-    WebP/TIFF stills, real container metadata for ISO-BMFF video and
-    mp3/Ogg audio (dims 0 — no picture), digest-stub dims for unknown
-    containers, zeros for null/corrupt payloads — never an exception
-    (the error-as-data rule)."""
+    """(width, height, duration_ms) for the container ``sniff_media``
+    names: real dims for PNG/GIF/JPEG/WebP/TIFF/BMP stills (duration 0),
+    real container metadata for mp4/WebM/AVI video and FLAC/Ogg/mp3 audio
+    (dims 0 — no picture), digest-stub dims for containers no reader
+    claims, zeros for null/corrupt payloads — never an exception (the
+    error-as-data rule). Dispatching on the sniff verdict keeps the
+    metadata consistent with the ``media_type`` column by construction."""
     if p is None:
         return 0, 0, 0
-    if (
-        p[:8] == b"\x89PNG\r\n\x1a\n"
-        or p[:4] == b"GIF8"
-        or p[:3] == b"\xff\xd8\xff"
-    ):
-        try:
-            w, h = decode_image(p)
-            return w, h, 0
-        except Exception:  # noqa: BLE001 — corrupt container, dims unknown
-            return 0, 0, 0
-    if p[:4] == b"RIFF" and p[8:12] == b"WEBP":
-        dims = webp_dims(p)
-        return (*dims, 0) if dims is not None else (0, 0, 0)
-    if p[:4] in (b"II*\x00", b"MM\x00*"):
-        dims = tiff_dims(p)
-        return (*dims, 0) if dims is not None else (0, 0, 0)
-    if p[:2] == b"BM":
-        dims = bmp_dims(p)
-        if dims is not None:
-            return *dims, 0
-        # 2-byte magic too weak to condemn the payload: fall through to
-        # the digest stub like any other unrecognized container
-        w, h = decode_image_stub(p)
-        return w, h, 0
-    if p[:4] == b"fLaC":
-        try:
-            return 0, 0, flac_metadata(p)[4]
-        except Exception:  # noqa: BLE001 — truncated STREAMINFO
-            return 0, 0, 0
-    if _is_bmff(p):
-        try:
-            meta = mp4_metadata(p)
-        except Exception:  # noqa: BLE001 — malformed box tree
-            meta = None
-        return meta if meta is not None else (0, 0, 0)
-    if p[:4] == b"\x1a\x45\xdf\xa3":
-        try:
-            return webm_metadata(p)
-        except Exception:  # noqa: BLE001 — malformed EBML tree
-            return 0, 0, 0
-    if p[:4] == b"RIFF" and p[8:12] == b"AVI ":
-        meta = avi_metadata(p)
-        return meta if meta is not None else (0, 0, 0)
-    if p[:4] == b"OggS":
-        try:
-            return 0, 0, ogg_metadata(p)[3]
-        except Exception:  # noqa: BLE001 — corrupt page chain
-            return 0, 0, 0
-    if p[:3] == b"ID3" or _mp3_frame_header(p, 0) is not None:
-        try:
-            return 0, 0, mp3_metadata(p)[4]
-        except Exception:  # noqa: BLE001 — tag with no audio frames
-            return 0, 0, 0
-    w, h = decode_image_stub(p)
-    return w, h, 0
+    reader = _META_READERS.get(sniff_media(p))
+    if reader is None:
+        return (*decode_image_stub(p), 0)
+    try:
+        return reader(p)
+    except Exception:  # noqa: BLE001 — malformed container, fields unknown
+        return 0, 0, 0
 
 
 def _meta_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -16,7 +16,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import rnd
@@ -36,16 +36,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.min(id_col).alias("keeper_id"),
         )
-    )
-
-
-def drop_exact_dups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the lowest-id document per identical content (one shuffle)."""
-    w = Window.partitionBy(fingerprint(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -315,17 +305,6 @@ def simhash16(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 N_SIMHASH_SEGMENTS = 4  # 4 × 16-bit segments = 64-bit fingerprint
 
-# Hex digits with md5-nibble bit (8|4|2|1) set — single-char set membership
-# is cheap codegen; one md5 per token yields all 64 bit-planes.
-_NIBBLE_BIT_DIGITS = ("89abcdef", "4567cdef", "2367abef", "13579bdf")
-
-
-def _simhash64_sign(w_hash: Column, j: int) -> Column:
-    """±1 for global bit j (0..63): bit (j%4) of hex digit (j//4 + 1)."""
-    digit = F.substring(w_hash, j // 4 + 1, 1)
-    return F.when(digit.isin(*_NIBBLE_BIT_DIGITS[j % 4]), 1).otherwise(-1)
-
-
 # Counter width for the packed sign-accumulators: 31 bits × 2 per long.
 # A counter overflows only for docs with ≥2^31 single-char tokens, i.e.
 # ≥4 GiB of text in ONE row — beyond Spark's 2 GiB binary/row limit, so
@@ -368,8 +347,9 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ]
 
     def bit(j: int):
-        # global bit j = bit (3 - j%4) of nibble j//4 — the same plane
-        # order as _NIBBLE_BIT_DIGITS (high bit first)
+        # global bit j = bit (3 - j%4) of nibble j//4, high bit first —
+        # the plane order of the oracle's digit IN-lists (plans/queries.py
+        # _NIBBLE_SQL)
         return F.shiftright(nib[j // 4], 3 - (j % 4)).bitwiseAND(F.lit(1))
 
     packed = []

@@ -10,27 +10,29 @@ verified per-url by tests/test_extraction.py.
 Scale design (north rule):
 - **No per-row Python dispatch**: one UDF invocation per Arrow batch; the
   per-document loop lives inside the vectorized batch.
-- **Two balancing strategies**, chosen by shuffle economics:
-  (a) *Split-based balance* (default, ``salt_partitions=None``): the scan's
-  byte-ranged file splits (``spark.sql.files.maxPartitionBytes``) already
-  hand every task ~equal input bytes regardless of which host's pages land
-  where — zero shuffle. At 100 TB, shuffling raw payloads for balance means
-  moving the whole corpus through the network; the scan split does it for
-  free. Residual risk: single rows larger than a split are atomic (route
-  ``length(html) > cap`` to a truncating path), and *compute* skew (bytes ≠
-  cost) — the real decoders measure a ~52× per-byte spread across formats
-  (corpus v21, BENCH.md §"Per-format compute cost"), which is why
-  ``extract_pages_routed`` below routes the ≥20× heavy-format byte slice
-  (~2.8% of bytes) through the salted path while the html/text/csv/zip
-  bulk keeps the zero-shuffle split.
+- **One balancing option**, ``salt_partitions``:
+  (a) *Split-based balance* (the default, ``salt_partitions=None``): the
+  scan's byte-ranged file splits (``spark.sql.files.maxPartitionBytes``)
+  already hand every task ~equal input bytes regardless of which host's
+  pages land where — zero shuffle. At 100 TB, shuffling raw payloads for
+  balance means moving the whole corpus through the network; the scan
+  split does it for free. Residual risks: single rows larger than a split
+  are atomic (``max_bytes`` caps what one row costs inside the UDF), and
+  compute skew — bytes are not cost; the decoders measure a ~52× per-byte
+  spread across formats (BENCH.md §"Per-format compute cost"), which
+  matters only where a layout packs the costly formats into whole splits.
   (b) **Salted repartition** on ``pmod(xxhash64(url), S)``
-  (``salt_partitions=S``): breaks host/layout skew *by construction* before
-  the UDF — AQE only sees skew after a stage has straggled, and it cannot
-  split a UDF stage's input rows. Worth its full-payload shuffle only when
-  per-doc extraction cost dwarfs per-byte shuffle cost (heavy parsers, ML
-  models — the reference's AI path) or the input layout is adversarially
-  clustered (host-sorted table). The skew-bounding property is tested
-  either way (tests/test_warehouse.py::test_salt_bounds_partition_bytes).
+  (``salt_partitions=S``) is for input clustered by host or by format: it
+  breaks that layout *by construction* before the UDF — AQE only sees
+  skew after a stage has straggled, and it cannot split a UDF stage's
+  input rows. It costs a full-payload shuffle, so it pays only when the
+  layout is adversarially clustered or per-doc cost dwarfs per-byte
+  shuffle cost (heavy parsers, ML models). The evidence for keeping the
+  split plan as the default is perfbench's ``extract.clustered_*`` rows
+  (perfbench/METRICS.md): they time it on the same rows sorted by format,
+  and its straggler ratio there stays near 1.1-1.2 on a 4-CPU box. The
+  salted bucket bound is tested in
+  tests/test_warehouse.py::test_salt_bounds_partition_bytes.
 - **Column pruning**: only (url, warc_ts, html, lang) enter the UDF; the
   noisy ``text`` column is never shipped through Arrow.
 - **Small Arrow batches** (session.py) bound batch bytes when rows carry
@@ -312,59 +314,3 @@ def enrich_extracted(extracted: DataFrame) -> DataFrame:
     words, cols = _enrich_columns()
     return extracted.select("*", words).select("*", *cols).drop(_MARKER_WORDS)
 
-
-# Formats whose measured per-byte extraction cost exceeds ~20x the html
-# baseline (ms/MB on corpus v21, single thread: html 18, text 69, csv 128,
-# zip 142, pbm 402, pdf 455, image 958 — table in BENCH.md §"Per-format
-# compute cost"; current figures are the ``oracle.<format>.ms_per_mb``
-# rows of ``python3 perfbench/run.py --trace 1``). Re-derived from those
-# figures each corpus revision (round-4 VERDICT #3): the original v5 list
-# also shuffled csv and zip, drawn at a ~115x spread where they measured
-# ~8x — but at ≤8x a solid csv/zip scan split is a tolerable straggler
-# while an Exchange is a guaranteed cost, so only the ≥20x formats ride
-# the salted branch. They are a tiny byte fraction (~2.8% of corpus
-# bytes — pdf 2.5%, image 0.25%, pbm 0.03%), so shuffling only them is
-# cheap while the html/text/csv/zip bulk keeps the zero-shuffle
-# scan-split balance.
-HEAVY_FORMATS = ("pdf", "image", "pbm")
-
-
-def extract_pages_routed(
-    pages: DataFrame,
-    heavy_formats: tuple[str, ...] = HEAVY_FORMATS,
-    salt_partitions: int = 64,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Format-routed extraction (round-3 VERDICT "Next round" #7): the
-    scan-split plan hands every task equal input BYTES, which balances
-    COMPUTE only while per-byte cost is roughly format-uniform. The real
-    decoders broke that (~52x spread at corpus v21, table above), so
-    this variant routes by the native format sniff:
-
-    - LIGHT formats (html/text/csv/zip — ~97% of corpus bytes, per-byte
-      cost within ~8x of html): the zero-shuffle split path, exactly as
-      ``extract_pages``.
-    - HEAVY formats (pdf/image/pbm — ~2.8% of bytes, 20-52x per-byte
-      cost): salted repartition before the UDF, so a format-clustered
-      input layout (e.g. a table sorted by format, where whole scan
-      splits would be solid PBM/PDF) cannot produce 50x-cost straggler
-      tasks. The shuffle moves only the heavy slice — the
-      full-payload-shuffle objection to salting everything does not
-      apply.
-
-    Output rows are byte-identical to ``extract_pages`` (same UDF) — only
-    the physical routing differs; the union's two MapInPandas branches
-    and single heavy-side Exchange are pinned in tests/test_plans.py.
-    Costs one extra pass of the format sniff on the scan (pure codegen)
-    and one union."""
-    fmt = format_col(F.col("html"))
-    light = extract_pages(
-        pages.where(~fmt.isin(list(heavy_formats))),
-        max_bytes=max_bytes,
-    )
-    heavy = extract_pages(
-        pages.where(fmt.isin(list(heavy_formats))),
-        salt_partitions=salt_partitions,
-        max_bytes=max_bytes,
-    )
-    return light.unionByName(heavy)

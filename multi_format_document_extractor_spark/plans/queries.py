@@ -1397,8 +1397,8 @@ def simhash_q(spark, sf_dir):
     )
 
 
-# one md5 per token; bit j = bit (j%4) of hex digit (j//4 + 1), via the
-# same digit IN-lists as dedup._NIBBLE_BIT_DIGITS
+# one md5 per token; bit j = bit (j%4) of hex digit (j//4 + 1), high bit
+# first — the plane order dedup.simhash64 reads with integer shifts
 _NIBBLE_SQL = [
     "('8','9','a','b','c','d','e','f')",
     "('4','5','6','7','c','d','e','f')",

@@ -107,11 +107,9 @@ def get_spark(
         # Partition dir values (day=yyyy-MM-dd) stay strings on read-back;
         # inference would retype them DATE and break fixed-schema reads.
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # Binary-payload scans: smaller splits give the extraction stage its
-        # parallelism without a shuffle (split-based balance; see
-        # operators/extract.py) and smooth the straggler tail — measured
-        # N→4N efficiency 0.75 @ 32m vs 0.84 @ 16m, with ~20% higher
-        # absolute throughput (scripts/scaling_bench.py).
+        # Binary-payload scans: smaller splits give the extraction UDF stage
+        # its parallelism without a shuffle (split-based balance; see
+        # operators/extract.py).
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -144,44 +144,3 @@ def test_format_filter_pushes_down_before_udf(spark, corpus_dir):
     assert plan.index("MapInPandas") < plan.index("Filter")
     assert out.select(F.countDistinct("format")).first()[0] == 1
 
-
-def test_routed_extraction_byte_identical_and_skew_bounded(
-    spark, corpus_dir, corpus_rows
-):
-    """extract_pages_routed must (a) produce byte-identical rows to the
-    plain path — routing is physical only — and (b) bound the heavy
-    branch's per-partition bytes even on a format-CLUSTERED layout (the
-    adversarial case the split plan cannot balance: a solid run of
-    100x-per-byte PBM/PDF bytes in one scan split)."""
-    from multi_format_document_extractor_spark.operators.extract import (
-        HEAVY_FORMATS,
-        extract_pages_routed,
-        salt_key,
-    )
-    from multi_format_document_extractor_spark.sources.pages import (
-        format_col,
-    )
-
-    pages = read_pages(spark, corpus_dir + "/pages.parquet")
-    # format-sorted layout: the worst case for byte-range splits
-    clustered = pages.orderBy(format_col(F.col("html")), "url")
-    out = {
-        r["url"]: (r["format"], bytes(r["text_out"] or b""), r["ok"])
-        for r in extract_pages_routed(clustered, salt_partitions=8).collect()
-    }
-    assert len(out) == len(corpus_rows)
-    for row in corpus_rows:
-        fmt, text, _ok = out[row.url]
-        assert fmt == row.format and text == row.text_expected, row.url
-    # heavy-branch skew bound: no salt bucket may hold a dominant share
-    heavy = pages.where(format_col(F.col("html")).isin(list(HEAVY_FORMATS)))
-    sizes = [
-        r["b"]
-        for r in heavy.groupBy(
-            F.pmod(salt_key(F.col("url")), F.lit(8)).alias("p")
-        )
-        .agg(F.sum(F.length("html")).alias("b"))
-        .collect()
-    ]
-    assert len(sizes) == 8
-    assert max(sizes) <= 3 * (sum(sizes) / len(sizes)), sizes

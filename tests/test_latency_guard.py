@@ -19,7 +19,7 @@ on 4 cores) AND its bench budget is measured over a different input (the
 synthetic 60k-doc corpus, not the registry face), so those names are
 excluded rather than guarded with a meaningless budget; the extraction
 path has its own regression surfaces (plan pins in test_plans.py, the
-per-round driver bench, scripts/scaling_bench.py).
+per-round driver bench, the perfbench workloads in perfbench/run.py).
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def test_registry_latency_budgets(spark):
     queries = entry_mod.queries()
     # extraction family: CPU-saturated UDF stages whose bench budgets come
     # from a different session shape AND input corpus — see module docstring
-    skip = {"extract_pages", "extract_pages_salted", "extract_pages_routed"}
+    skip = {"extract_pages", "extract_pages_salted"}
     run = [(n, b) for n, b in budgets.items() if n in queries and n not in skip]
     assert run, "no overlapping query names between budgets and registry"
     over: list[str] = []

@@ -740,6 +740,27 @@ def test_bmp_dims_and_weak_magic():
     assert bmp_dims(core) is None
 
 
+def test_meta_follows_sniff_verdict():
+    """media_metadata's dims come from the reader for the type sniff_media
+    reports: an ISO-BMFF payload whose first box size happens to spell
+    "BM" sniffs as video/mp4 and must get BMFF metadata (zeros here: the
+    size now overruns the payload), never the digest stub of the weak
+    BMP magic."""
+    from multi_format_document_extractor_spark.multimodal.media import (
+        decode_image_stub,
+        mp4_metadata,
+        render_mp4,
+        sniff_media,
+        _meta_of,
+    )
+
+    p = b"BM" + render_mp4(320, 240, 5000)[2:]
+    assert sniff_media(p) == "video/mp4"
+    assert mp4_metadata(p) is None
+    assert _meta_of(p) == (0, 0, 0)
+    assert _meta_of(p)[:2] != decode_image_stub(p)
+
+
 def test_flac_streaminfo_walk():
     import pytest
 

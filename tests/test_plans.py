@@ -407,23 +407,6 @@ def test_histogram_windows_run_over_aggregated_rows(spark):
         assert "Python" not in p and "MapInPandas" not in p, (name, p)
 
 
-def test_routed_extraction_plan_shape(pages):
-    """Format-routed extraction: the light branch must stay shuffle-free
-    while ONLY the heavy branch (a ~3% byte slice) pays a salted
-    Exchange — two MapInPandas branches, exactly one Exchange, and the
-    noisy `text` column pruned from both scans."""
-    from multi_format_document_extractor_spark.operators.extract import (
-        extract_pages_routed,
-    )
-
-    p = plan(extract_pages_routed(pages))
-    assert p.count("MapInPandas") == 2, p
-    assert p.count("Exchange") == 1, p
-    for line in p.splitlines():
-        if "ReadSchema" in line:
-            assert "text" not in line.replace("text_out", ""), line
-
-
 def test_charset_census_no_join_two_distinct_exchanges(spark):
     """The WHATWG label lookup must stay a plan-time literal map — a
     refactor that joins a label table would add a per-row join at 100 TB.
