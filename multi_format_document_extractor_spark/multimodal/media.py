@@ -882,17 +882,18 @@ _META_READERS = {
 }
 
 
-def _meta_of(p: bytes | None) -> tuple[int, int, int]:
-    """(width, height, duration_ms) for the container ``sniff_media``
-    names: real dims for PNG/GIF/JPEG/WebP/TIFF/BMP stills (duration 0),
-    real container metadata for mp4/WebM/AVI video and FLAC/Ogg/mp3 audio
-    (dims 0 — no picture), digest-stub dims for containers no reader
-    claims, zeros for null/corrupt payloads — never an exception (the
-    error-as-data rule). Dispatching on the sniff verdict keeps the
-    metadata consistent with the ``media_type`` column by construction."""
+def _meta_of(p: bytes | None, media_type: str) -> tuple[int, int, int]:
+    """(width, height, duration_ms) for the container ``media_type``
+    (``sniff_media``'s verdict on ``p``) names: real dims for
+    PNG/GIF/JPEG/WebP/TIFF/BMP stills (duration 0), real container
+    metadata for mp4/WebM/AVI video and FLAC/Ogg/mp3 audio (dims 0 — no
+    picture), digest-stub dims for containers no reader claims, zeros for
+    null/corrupt payloads — never an exception (the error-as-data rule).
+    Dispatching on the sniff verdict keeps the metadata consistent with
+    the ``media_type`` column by construction."""
     if p is None:
         return 0, 0, 0
-    reader = _META_READERS.get(sniff_media(p))
+    reader = _META_READERS.get(media_type)
     if reader is None:
         return (*decode_image_stub(p), 0)
     try:
@@ -905,9 +906,10 @@ def _meta_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]
     # one pass per Arrow batch, like the extraction UDF (operators/extract.py)
     for pdf in batches:
         payloads = list(pdf["payload"])
-        metas = [_meta_of(p) for p in payloads]
+        types = [sniff_media(p) for p in payloads]
+        metas = [_meta_of(p, t) for p, t in zip(payloads, types)]
         out = pdf[["doc_id"]].copy()
-        out["media_type"] = [sniff_media(p) for p in payloads]
+        out["media_type"] = types
         out["n_bytes"] = [len(p) if p is not None else 0 for p in payloads]
         out["digest"] = [
             hashlib.sha256(p).hexdigest()[:16] if p is not None else ""

@@ -10,18 +10,26 @@ idempotent restart, which is genuinely new here (SURVEY.md §2.3 J4, §2.9).
 Design — an Iceberg-snapshot protocol over plain parquet (the sandbox has no
 iceberg-spark-runtime jar; on a real cluster swap ``Warehouse`` for
 ``df.writeTo("cat.db.extracted").append()`` with hidden partitioning
-``days(warc_ts), format`` and this module's semantics map 1:1):
+``days(warc_ts)``, write order ``format``, and this module's semantics map
+1:1):
 
-    <root>/runs/run_id=<id>/day=<yyyy-MM-dd>/format=<f>/*.parquet   data
-    <root>/lineage/run_id=<id>/*.parquet                            metrics
-    <root>/commits/<seq>-<id>.json                                  snapshot
+    <root>/runs/run_id=<id>/day=<yyyy-MM-dd>/*.parquet   data, sorted by format
+    <root>/lineage/run_id=<id>/lineage.parquet           metrics
+    <root>/commits/<seq>-<id>.json                       snapshot
+
+Each task writes one file per day it holds, its rows sorted (day, format):
+``format`` is an in-file column stored in runs, so parquet RLE-encodes it
+and a ``format = 'pdf'`` filter is pushed to the scan and skips row groups
+by their min/max stats. A ``format=`` directory level would instead split
+every task's output into one small file per (day, format).
 
 A run is VISIBLE iff its commit marker exists; the marker is written last via
 atomic rename, so a killed run leaves invisible orphan files and the next run
 reprocesses its rows (exactly-once append, Iceberg's snapshot commit in
 miniature). Lineage is computed by reading BACK the durably written files —
 doc/byte counts and checksums describe what is actually on disk, not what the
-job intended to write.
+job intended to write. That read-back is one Spark job whose days × formats
+result rows the driver writes with pyarrow (hidden temp name, then rename).
 
 Scale notes (10^12 docs, 1000 executors):
 - The resume anti-join's build side (committed urls) is far too big to
@@ -30,8 +38,10 @@ Scale notes (10^12 docs, 1000 executors):
   frontier-day urls enter the shuffled anti-join — the parquet analog of
   pruning by Iceberg snapshot high-watermark (SURVEY.md §4.4). Day pruning is
   a partition-pruning filter Catalyst pushes into the scan.
-- Output partitioning ``day/format`` gives downstream readers partition
-  pruning on exactly the two predicates every report uses (S9/A11).
+- Downstream readers prune on the two predicates every report uses
+  (S9/A11): ``day`` by directory, ``format`` by row-group statistics of the
+  sorted in-file column. The file count grows with tasks × days, not
+  tasks × days × formats.
 - Single writer assumed (the driver's restart semantics); concurrent commits
   would need Iceberg's optimistic snapshot CAS, not this module.
 """
@@ -43,8 +53,12 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from .operators.extract import extract_pages
 
@@ -60,9 +74,26 @@ LINEAGE_DDL = (
     "byte_count long, checksum long, committed_at double"
 )
 
+# read_extracted's column order: run_id, day and format come last, so
+# scored outputs and registry hashes do not depend on which of them the
+# layout keeps in the files and which in directory names.
+_READ_COLUMNS = (
+    "url", "warc_ts", "lang", "text_out", "n_blocks", "ok", "error",
+    "in_bytes", "checksum", "truncated", "encoding", "run_id", "day",
+    "format",
+)
+
 
 def _day(col):
     return F.date_format(col, "yyyy-MM-dd")
+
+
+def _day_sorted(df: DataFrame) -> DataFrame:
+    """The write layout: each task's rows sorted (day, format). The
+    ``partitionBy("day")`` writer needs its input ordered by day, which
+    this sort already gives, so it adds no sort of its own and writes one
+    file per day per task with ``format`` in runs."""
+    return df.sortWithinPartitions("day", "format")
 
 
 class Warehouse:
@@ -173,14 +204,14 @@ class Warehouse:
             self.commits() if _commits is None else _commits
         )
         if not ids:
-            return spark.createDataFrame([], RESULT_DDL).withColumn(
-                "run_id", F.lit(None).cast("string")
-            )
+            empty = spark.createDataFrame([], RESULT_DDL + ", run_id string")
+            return empty.select(*_READ_COLUMNS)
         paths = [os.path.join(self.runs_dir, f"run_id={i}") for i in ids]
         return (
             spark.read.option("basePath", self.runs_dir)
             .schema(RESULT_DDL + ", run_id string")
             .parquet(*paths)
+            .select(*_READ_COLUMNS)
         )
 
     def read_at(self, spark: SparkSession, seq: int) -> DataFrame:
@@ -299,7 +330,17 @@ class Warehouse:
 
     # -- commit protocol (shared by run / compact / seal) --------------------
 
-    def _write_lineage(self, spark: SparkSession, run_id: str) -> list:
+    def _append(
+        self, spark: SparkSession, df: DataFrame, run_id: str
+    ) -> list[dict]:
+        """The one write path of ``run`` and ``compact``: ``df`` (laid out
+        by ``_day_sorted``) goes to the run's day directories, then its
+        lineage is derived from the files."""
+        data_path = os.path.join(self.runs_dir, f"run_id={run_id}")
+        df.write.partitionBy("day").mode("errorifexists").parquet(data_path)
+        return self._write_lineage(spark, run_id)
+
+    def _write_lineage(self, spark: SparkSession, run_id: str) -> list[dict]:
         """Read BACK the durably written run files and derive + persist the
         per-(day, format) lineage rows — counts and checksums describe what
         is actually on disk, not what the job intended to write. ONE
@@ -307,17 +348,21 @@ class Warehouse:
         invariant (compacted lineage checksums EQUAL summed pre-compaction
         checksums) holds only while both paths use identical arithmetic.
         Explicit schema: a zero-pending run writes no files and inference
-        would fail on the empty directory."""
+        would fail on the empty directory.
+
+        One Spark job aggregates and collects the days × formats rows; the
+        driver sorts them by (day, format), nulls first, and writes them
+        with pyarrow under a hidden name (Spark lists no file starting with
+        ``.``) before renaming it into place. The lineage directory must
+        not exist yet."""
         data_path = os.path.join(self.runs_dir, f"run_id={run_id}")
         written = (
             spark.read.option("basePath", data_path)
             .schema(RESULT_DDL)
             .parquet(data_path)
         )
-        lineage = (
-            written.withColumn("day", F.col("day").cast("string"))
-            .withColumn("format", F.col("format").cast("string"))
-            .groupBy("day", "format")
+        groups = (
+            written.groupBy("day", "format")
             .agg(
                 F.count("*").alias("doc_count"),
                 F.sum("in_bytes").alias("byte_count"),
@@ -333,19 +378,30 @@ class Warehouse:
                 .cast("long")
                 .alias("checksum"),
             )
-            .select(
-                F.lit(run_id).alias("run_id"),
-                "day",
-                "format",
-                "doc_count",
-                "byte_count",
-                "checksum",
-                F.lit(time.time()).alias("committed_at"),
+            .collect()
+        )
+        committed_at = time.time()
+        rows = [
+            {"run_id": run_id, **g.asDict(), "committed_at": committed_at}
+            for g in sorted(
+                groups,
+                key=lambda g: (
+                    g["day"] is not None,
+                    g["day"] or "",
+                    g["format"] is not None,
+                    g["format"] or "",
+                ),
             )
+        ]
+        table = pa.Table.from_pylist(
+            rows, schema=to_arrow_schema(DataType.fromDDL(LINEAGE_DDL))
         )
         lineage_path = os.path.join(self.lineage_dir, f"run_id={run_id}")
-        lineage.write.mode("errorifexists").parquet(lineage_path)
-        return spark.read.schema(LINEAGE_DDL).parquet(lineage_path).collect()
+        os.makedirs(lineage_path)
+        tmp = os.path.join(lineage_path, ".lineage.parquet")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(lineage_path, "lineage.parquet"))
+        return rows
 
     def _commit_marker(self, record: dict) -> dict:
         """Write the snapshot marker LAST via atomic rename — the run
@@ -370,8 +426,8 @@ class Warehouse:
     ) -> dict | None:
         """Small-file compaction (Iceberg ``rewrite_data_files`` in
         miniature): rewrite every visible data run into ONE compacted run —
-        repartitioned on (day, format) so each output partition collapses
-        to a file-per-partition layout — and commit a ``kind='compact'``
+        repartitioned on day and sorted by format, so each day collapses to
+        one file — and commit a ``kind='compact'``
         snapshot whose ``replaces`` list supersedes the rewritten runs.
         Readers resolve visibility from the commit log alone, so the swap
         is atomic at the marker rename, exactly like an append; a crash
@@ -381,7 +437,7 @@ class Warehouse:
         Operationally necessary at 10¹² docs: every restart/micro-batch
         adds a run directory, and the resume union's file listing (plus
         downstream scan planning) degrades linearly with run count;
-        compaction restores O(days×formats) files. Content-preserving by
+        compaction restores O(days) files. Content-preserving by
         construction — the rewrite is a pure re-layout, and the lineage
         read-back re-derives per-(day, format) doc/byte/checksum rows that
         must EQUAL the pre-compaction aggregates (Σ crc32 mod 2³² is
@@ -395,14 +451,7 @@ class Warehouse:
             return None
         run_id = run_id or f"compact_{uuid.uuid4().hex[:12]}"
         df = self.read_extracted(spark, _commits=commits).drop("run_id")
-        data_path = os.path.join(self.runs_dir, f"run_id={run_id}")
-        (
-            df.repartition("day", "format")
-            .write.partitionBy("day", "format")
-            .mode("errorifexists")
-            .parquet(data_path)
-        )
-        lrows = self._write_lineage(spark, run_id)
+        lrows = self._append(spark, _day_sorted(df.repartition("day")), run_id)
         record = {
             "run_id": run_id,
             "kind": "compact",
@@ -511,6 +560,15 @@ class Warehouse:
 
     # -- the job -----------------------------------------------------------
 
+    @staticmethod
+    def _to_write(
+        todo: DataFrame, salt_partitions: int | None = None
+    ) -> DataFrame:
+        """The frame ``run`` hands to the writer: the pending rows
+        extracted, with their ``day``, in the ``_day_sorted`` layout."""
+        extracted = extract_pages(todo, salt_partitions=salt_partitions)
+        return _day_sorted(extracted.withColumn("day", _day(F.col("warc_ts"))))
+
     def run(
         self,
         spark: SparkSession,
@@ -549,17 +607,9 @@ class Warehouse:
             prune_scope=prune_scope,
             _commits=commits,
         )
-        extracted = extract_pages(todo, salt_partitions=salt_partitions)
-        result = extracted.withColumn("day", _day(F.col("warc_ts")))
-
-        data_path = os.path.join(self.runs_dir, f"run_id={run_id}")
-        (
-            result.write.partitionBy("day", "format")
-            .mode("errorifexists")
-            .parquet(data_path)
+        lrows = self._append(
+            spark, self._to_write(todo, salt_partitions), run_id
         )
-
-        lrows = self._write_lineage(spark, run_id)
         # Every day this run touched was fully drained (run processes ALL
         # pending rows), so all of them seal — plus days sealed previously.
         record = {

@@ -734,7 +734,7 @@ def test_bmp_dims_and_weak_magic():
     txt = b"BM plain text that happens to start with BM, a sentence."
     assert bmp_dims(txt) is None
     assert sniff_media(txt) == "application/octet-stream"
-    assert _meta_of(txt) == (*decode_image_stub(txt), 0)
+    assert _meta_of(txt, sniff_media(txt)) == (*decode_image_stub(txt), 0)
     # BITMAPCOREHEADER (12-byte DIB) is declined by design
     core = b"BM" + bytes(12) + (12).to_bytes(4, "little") + bytes(8)
     assert bmp_dims(core) is None
@@ -757,8 +757,37 @@ def test_meta_follows_sniff_verdict():
     p = b"BM" + render_mp4(320, 240, 5000)[2:]
     assert sniff_media(p) == "video/mp4"
     assert mp4_metadata(p) is None
-    assert _meta_of(p) == (0, 0, 0)
-    assert _meta_of(p)[:2] != decode_image_stub(p)
+    assert _meta_of(p, sniff_media(p)) == (0, 0, 0)
+    assert _meta_of(p, sniff_media(p))[:2] != decode_image_stub(p)
+
+
+def test_meta_batches_sniff_each_payload_once(monkeypatch):
+    """media_metadata's batch loop classifies each payload once: the one
+    verdict fills ``media_type`` and picks the metadata reader."""
+    import pandas as pd
+
+    from multi_format_document_extractor_spark.multimodal import media
+
+    payloads = [
+        media.render_bmp(12, 5),
+        media.render_mp4(320, 240, 5000),
+        media.render_flac(44100, 44100, 2, 16),
+        b"BM plain text that happens to start with BM, a sentence.",
+        b"",
+        None,
+    ]
+    calls = []
+    sniff = media.sniff_media
+    monkeypatch.setattr(
+        media, "sniff_media", lambda p: calls.append(p) or sniff(p)
+    )
+    pdf = pd.DataFrame({"doc_id": range(len(payloads)), "payload": payloads})
+    (out,) = media._meta_batches(iter([pdf]))
+    assert calls == payloads
+    assert list(out["media_type"]) == [sniff(p) for p in payloads]
+    assert list(zip(out["width"], out["height"], out["duration_ms"])) == [
+        media._meta_of(p, sniff(p)) for p in payloads
+    ]
 
 
 def test_flac_streaminfo_walk():
@@ -776,7 +805,9 @@ def test_flac_streaminfo_walk():
     assert flac_metadata(p) == (
         44100, 2, 16, 44100 * 3 + 7, (44100 * 3 + 7) * 1000 // 44100,
     )
-    assert _meta_of(p) == (0, 0, (44100 * 3 + 7) * 1000 // 44100)
+    assert _meta_of(p, sniff_media(p)) == (
+        0, 0, (44100 * 3 + 7) * 1000 // 44100,
+    )
     # 96k/24-bit exercises the full 20/5-bit field widths
     assert flac_metadata(render_flac(192000, 96000, 1, 24)) == (
         96000, 1, 24, 192000, 2000,
@@ -800,7 +831,7 @@ def test_webm_ebml_walk():
     p = render_webm(1280, 720, 5400)
     assert sniff_media(p) == "video/webm"
     assert webm_metadata(p) == (1280, 720, 5400)
-    assert _meta_of(p) == (1280, 720, 5400)
+    assert _meta_of(p, sniff_media(p)) == (1280, 720, 5400)
     # float64 Duration is integer-exact well past day-scale timelines
     assert webm_metadata(render_webm(100, 100, 86_400_000))[2] == 86_400_000
     # truncated EBML tree degrades to walked-so-far, never raises
@@ -821,10 +852,11 @@ def test_avi_hdrl_walk():
     p = render_avi(640, 480, 250, 40_000)  # 25 fps x 10 s
     assert sniff_media(p) == "video/avi"
     assert avi_metadata(p) == (640, 480, 10_000)
-    assert _meta_of(p) == (640, 480, 10_000)
+    assert _meta_of(p, sniff_media(p)) == (640, 480, 10_000)
     # AVI form with no avih: None at the parser, zeros at the metadata op
-    assert avi_metadata(b"RIFF\x04\x00\x00\x00AVI ") is None
-    assert _meta_of(b"RIFF\x04\x00\x00\x00AVI ") == (0, 0, 0)
+    no_avih = b"RIFF\x04\x00\x00\x00AVI "
+    assert avi_metadata(no_avih) is None
+    assert _meta_of(no_avih, sniff_media(no_avih)) == (0, 0, 0)
     assert avi_metadata(b"RIFF\x00\x00\x00\x00WAVE") is None
 
 
@@ -881,7 +913,7 @@ def test_container_walks_are_total(payload):
         except ValueError:
             pass  # the documented reject
     assert isinstance(sniff_media(payload), str)
-    meta = _meta_of(payload)  # the Spark-facing entry: NEVER raises
+    meta = _meta_of(payload, sniff_media(payload))  # the Spark-facing entry: NEVER raises
     assert isinstance(meta, tuple) and len(meta) == 3
 
 

@@ -150,6 +150,43 @@ def test_resume_day_prune_reaches_scan(spark, pages, tmp_path):
     assert "date_format" in o  # the day filter survived into the plan
 
 
+def test_warehouse_write_frame_sorts_once(spark, pages, tmp_path):
+    """The frame Warehouse.run hands to the writer: scan → UDF → one Sort
+    on (day, format) within each task, no shuffle. That order satisfies
+    the partitionBy("day") writer, so the executed write adds no second
+    sort. The salted frame keeps its one shuffle."""
+    import re
+
+    from multi_format_document_extractor_spark.sinks import Warehouse
+
+    p = plan(Warehouse._to_write(pages))
+    assert "Exchange" not in p
+    assert p.count("MapInPandas") == 1
+    sorts = re.findall(r"Sort \[([^\]]*)\], false", p)
+    assert len(sorts) == p.count("Sort [") == 1
+    assert re.fullmatch(
+        r"day#\d+ ASC NULLS FIRST, format#\d+ ASC NULLS FIRST", sorts[0]
+    )
+    salted = plan(Warehouse._to_write(pages, salt_partitions=8))
+    assert salted.count("Exchange") == 1
+    assert salted.count("Sort [") == 1
+
+    # the executed write, as Spark's SQL status store recorded it
+    Warehouse(str(tmp_path / "wh")).run(spark, pages, run_id="sort_pin")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    descs = (
+        execs.apply(i).physicalPlanDescription()
+        for i in reversed(range(execs.size()))
+    )
+    write = next(
+        d
+        for d in descs
+        if "InsertIntoHadoopFsRelationCommand" in d and "run_id=sort_pin" in d
+    )
+    assert len(re.findall(r"^\(\d+\) Sort ", write, re.M)) == 1
+
+
 def test_two_pass_runs_cheap_pass_exactly_once(spark, pages):
     """Both branches of two_pass_escalation reference pass 1; the persist
     boundary must stop Spark re-executing the cheap lineage per branch

@@ -249,8 +249,8 @@ def test_compaction_preserves_content_and_lineage(spark, pages, tmp_path):
         n0, b0, c0 = agg.get((d, f), (0, 0, 0))
         agg[(d, f)] = (n0 + n, b0 + b, (c0 + c) % 4294967296)
     assert after_lineage == agg
-    # layout actually compacted: one file per (day, format)
-    assert n_files(["c1"]) == len(after_lineage) <= files_before
+    # layout actually compacted: one file per day
+    assert n_files(["c1"]) == len({d for d, _ in after_lineage}) <= files_before
     # sealing and resume survive the rewrite
     assert wh.complete_days() == sealed_before
     assert wh.pending(pages).count() == 0
@@ -429,3 +429,110 @@ def test_expire_crash_before_gc_is_invisible_and_rerunnable(
     ]
     assert not leftover2
     assert _collect_texts(wh.read_extracted(spark)) == head
+
+
+def test_run_files_hold_one_day_sorted_by_format(spark, pages, tmp_path):
+    """Layout: each data file sits in one day directory, and its in-file
+    ``format`` column never decreases (the sorted run parquet RLE-encodes
+    and row-group stats prune on)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.run(spark, pages, run_id="r1")
+    base = os.path.join(wh.runs_dir, "run_id=r1")
+    files = [
+        os.path.relpath(os.path.join(d, f), base)
+        for d, _dirs, fs in os.walk(base)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert files
+    days = set()
+    for rel in files:
+        parts = rel.split(os.sep)
+        assert len(parts) == 2 and parts[0].startswith("day="), rel
+        days.add(parts[0])
+        t = pq.read_table(os.path.join(base, rel))
+        assert "day" not in t.column_names
+        fmts = t.column("format").to_pylist()
+        assert None not in fmts and fmts == sorted(fmts), rel
+    assert len(days) >= 2
+    # at most one file per day per write task
+    tasks = {(p.split(os.sep)[0], os.path.basename(p).split("-")[1])
+             for p in files}
+    assert len(files) == len(tasks)
+
+
+def test_read_extracted_column_order(spark, pages, tmp_path):
+    order = [
+        "url", "warc_ts", "lang", "text_out", "n_blocks", "ok", "error",
+        "in_bytes", "checksum", "truncated", "encoding", "run_id", "day",
+        "format",
+    ]
+    wh = Warehouse(str(tmp_path / "wh"))
+    assert wh.read_extracted(spark).columns == order  # empty warehouse
+    wh.run(spark, pages.limit(50), run_id="r1", seal_days=False)
+    assert wh.read_extracted(spark).columns == order
+
+
+def test_lineage_file_is_sorted_typed_and_ignores_hidden_temps(
+    spark, pages, tmp_path, monkeypatch
+):
+    """Lineage is one pyarrow file per run: rows sorted by (day, format),
+    typed as LINEAGE_DDL even when the run wrote nothing, and a hidden
+    temp file left beside it (a crash between write and rename) is never
+    read."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DataType
+
+    from multi_format_document_extractor_spark.sinks import LINEAGE_DDL
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.run(spark, pages, run_id="r1")
+    rec = wh.run(spark, pages, run_id="r2")  # nothing pending
+    assert rec["n_docs"] == 0
+
+    ddl = DataType.fromDDL(LINEAGE_DDL)
+    want_types = [(f.name, f.dataType) for f in ddl.fields]
+    d1 = os.path.join(wh.lineage_dir, "run_id=r1")
+    d2 = os.path.join(wh.lineage_dir, "run_id=r2")
+    assert os.listdir(d1) == ["lineage.parquet"]
+    empty = spark.read.parquet(d2)
+    assert empty.count() == 0
+    assert [(f.name, f.dataType) for f in empty.schema.fields] == want_types
+    typed = spark.read.parquet(d1)
+    assert [(f.name, f.dataType) for f in typed.schema.fields] == want_types
+
+    keys = [(r["day"], r["format"]) for r in typed.collect()]
+    assert len(keys) >= 2
+    assert keys == sorted(keys, key=lambda k: (k[0] is not None, k))
+
+    before = sorted(map(tuple, wh.read_lineage(spark).collect()))
+    assert len(before) == len(keys)
+    # the lineage directory of a run id is written once, never merged into
+    with pytest.raises(FileExistsError):
+        wh._write_lineage(spark, "r1")
+
+    # a crash between the write and the rename leaves a hidden temp with
+    # every row in it, and readers see none of them
+    shutil.move(d1, str(tmp_path / "r1-lineage"))
+
+    def crash(src, dst):
+        raise OSError("killed before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="killed"):
+            wh._write_lineage(spark, "r1")
+    (temp,) = os.listdir(d1)
+    assert temp.startswith(".")
+    assert pq.read_table(os.path.join(d1, temp)).num_rows == len(keys)
+    assert wh.read_lineage(spark).count() == 0
+    shutil.rmtree(d1)
+    shutil.move(str(tmp_path / "r1-lineage"), d1)
+    assert sorted(map(tuple, wh.read_lineage(spark).collect())) == before
