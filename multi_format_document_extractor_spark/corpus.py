@@ -1887,8 +1887,6 @@ def write_corpus(out_dir: str, n: int, seed: int = 42) -> list[PageRow]:
 
 # -- WARC container serialization (Common-Crawl ingestion format) ----------
 
-_WARC_SOFTWARE = "mfde-corpus/1.0"
-
 
 def _warc_record(row: PageRow) -> bytes:
     """One WARC/1.0 response record for a crawled page. Deterministic:

@@ -31,6 +31,22 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
+from ..oracle import (
+    _DIM_CAP,
+    _MP3_BITRATES,
+    MAGIC_MEDIA,
+    _is_bmff,
+    _mp3_frame_header,
+    bmp_dims,
+    first_magic,
+    gif_decode_frames,
+    gif_decode_gray,
+    jpeg_decode_gray8,
+    jpeg_dims,
+    png_decode_gray8,
+    png_encode_gray8,
+)
+
 if TYPE_CHECKING:
     import pandas as pd
 
@@ -39,58 +55,23 @@ MEDIA_META_DDL = (
     "width int, height int, duration_ms long"
 )
 
-_MAGIC = {
-    b"\x89PNG": "image/png",
-    b"\xff\xd8\xff": "image/jpeg",
-    b"GIF8": "image/gif",
-    b"II*\x00": "image/tiff",
-    b"MM\x00*": "image/tiff",
-    b"OggS": "audio/ogg",
-    b"ID3": "audio/mpeg",
-    b"fLaC": "audio/flac",
-    b"\x1a\x45\xdf\xa3": "video/webm",
-}
-
-# RIFF is a container family — the form type at offset 8 picks the member
-_RIFF_FORMS = {b"WAVE": "audio/wav", b"AVI ": "video/avi", b"WEBP": "image/webp"}
-
 # Hostile-input bounds shared by every container walk: geometry above
 # _DIM_CAP or durations above _MS_CAP are treated as malformed (zeros /
 # field skipped) — a crafted header must DEGRADE per the error-as-data
 # rule, not ride through Python unbounded and then overflow the int32 /
 # int64 Arrow columns, which would fail the whole mapInPandas batch.
-_DIM_CAP = 1 << 20
 _MS_CAP = 1 << 53
 _RATE_CAP = 8_000_000  # Hz — no real container exceeds 768 kHz; int32-safe
 
 
-def _is_bmff(payload: bytes) -> bool:
-    """ISO-BMFF magic (mp4/mov/m4a) — the ONE definition sniff_media
-    and mp4_metadata dispatch on."""
-    return len(payload) >= 12 and payload[4:8] == b"ftyp"
-
-
 def sniff_media(payload: bytes | None) -> str:
+    """The media type of the first ``oracle.MAGIC_MEDIA`` row ``payload``
+    matches; "application/octet-stream" when none does, "unknown" for a
+    null or empty payload."""
     if not payload:
         return "unknown"
-    for magic, mt in _MAGIC.items():
-        if payload[: len(magic)] == magic:
-            return mt
-    if _is_bmff(payload):
-        return "video/mp4"  # ISO-BMFF family (mp4/mov/m4a share it)
-    if payload[:4] == b"RIFF":
-        return _RIFF_FORMS.get(payload[8:12], "application/octet-stream")
-    # bare MPEG-audio sync (no ID3 tag): a strictly VALID first frame
-    # header only — version/layer/bitrate/samplerate index sanity keeps
-    # random binaries from being claimed (JPEG's FF D8 fails the
-    # second-byte sync mask, so order vs _MAGIC is immaterial)
-    if len(payload) >= 4 and _mp3_frame_header(payload, 0) is not None:
-        return "audio/mpeg"
-    # "BM" alone is a 2-byte magic weak enough to hit real text; claim
-    # BMP only when the DIB header actually parses
-    if payload[:2] == b"BM" and bmp_dims(payload) is not None:
-        return "image/bmp"
-    return "application/octet-stream"
+    magic = first_magic(payload, MAGIC_MEDIA)
+    return magic.media if magic is not None else "application/octet-stream"
 
 
 # ---------------------------------------------------------------------------
@@ -493,24 +474,6 @@ def render_bmp(w: int, h: int, top_down: bool = False) -> bytes:
     return hdr + info + px
 
 
-def bmp_dims(payload: bytes) -> tuple[int, int] | None:
-    """(width, |height|) from a BITMAPINFOHEADER (or newer — all start
-    with the same 4 fields), or None when the payload is not BMP / the
-    header is truncated / the old 12-byte BITMAPCOREHEADER shows up
-    (16-bit fields, different layout — rare enough to decline)."""
-    if payload[:2] != b"BM" or len(payload) < 26:
-        return None
-    # known BITMAPINFOHEADER-family sizes only — the 2-byte "BM" magic
-    # is weak, so the DIB size field carries the discrimination load
-    if int.from_bytes(payload[14:18], "little") not in (40, 52, 56, 108, 124):
-        return None
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    if not (0 < w <= _DIM_CAP and h != 0 and abs(h) <= _DIM_CAP):
-        return None
-    return w, abs(h)
-
-
 def render_tiff(w: int, h: int, big_endian: bool = False) -> bytes:
     """A REAL minimal TIFF: uncompressed gray8, one strip, the eight
     baseline-required IFD entries, deterministic (x+y)-gradient pixels.
@@ -790,17 +753,15 @@ def media_tags(df: DataFrame) -> DataFrame:
     null (error-as-data — a malformed tag block yields nulls, never an
     exception)."""
 
-    def one(p: bytes | None):
-        if p is None:
-            return (None,) * 6
+    def one(p: bytes | None, media_type: str):
         try:
-            if p[:3] == b"ID3":
+            if media_type == "audio/mpeg":
                 t = id3_tags(p)
                 return t.get("TIT2"), t.get("TPE1"), t.get("TALB"), None, None, None
-            if p[:2] == b"\xff\xd8":
+            if media_type == "image/jpeg":
                 e = exif_meta(p)
                 return None, None, None, e.get("make"), e.get("model"), e.get("shot_at")
-            if p[:8] == b"\x89PNG\r\n\x1a\n":
+            if media_type == "image/png":
                 t = png_text_chunks(p)
                 return t.get("Title"), t.get("Author"), None, None, None, None
         except Exception:  # noqa: BLE001 — hostile tag block
@@ -810,9 +771,10 @@ def media_tags(df: DataFrame) -> DataFrame:
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             payloads = list(pdf["payload"])
-            rows = [one(p) for p in payloads]
+            types = [sniff_media(p) for p in payloads]
+            rows = [one(p, t) for p, t in zip(payloads, types)]
             out = pdf[["doc_id"]].copy()
-            out["media_type"] = [sniff_media(p) for p in payloads]
+            out["media_type"] = types
             for i, col in enumerate(
                 ("title", "artist", "album", "make", "model", "shot_at")
             ):
@@ -824,29 +786,35 @@ def media_tags(df: DataFrame) -> DataFrame:
     )
 
 
+# Per ``sniff_media`` verdict, the (w, h) reader and the full gray8 decoder
+# of the three REAL stdlib image codecs in oracle.py. jpeg_dims reads any
+# SOFn header, so JPEGs the pixel decoder refuses still report dims.
+_IMAGE_DIMS = {
+    "image/png": lambda p: png_decode_gray8(p)[:2],
+    "image/gif": lambda p: gif_decode_gray(p)[:2],
+    "image/jpeg": jpeg_dims,
+}
+_IMAGE_GRAY = {
+    "image/png": png_decode_gray8,
+    "image/gif": gif_decode_gray,
+    "image/jpeg": jpeg_decode_gray8,
+}
+
+
+def _image_codec(codecs: dict, payload: bytes):
+    codec = codecs.get(sniff_media(payload))
+    if codec is None:
+        raise NotImplementedError(
+            "image codec for this container not available in this environment"
+        )
+    return codec
+
+
 def decode_image(payload: bytes) -> tuple[int, int]:
-    """Decode and return (w, h). PNG, GIF, and JPEG all decode FOR REAL
-    via the stdlib codecs in oracle.py (v4 retired the S8 stub for PNG,
-    v5 for GIF, v6 for JPEG — jpeg_dims reads geometry from any SOFn
-    header, so color/progressive JPEGs the full pixel decoder refuses
-    still report real dimensions here)."""
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from ..oracle import png_decode_gray8
-
-        w, h, _ = png_decode_gray8(payload)
-        return w, h
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from ..oracle import gif_decode_gray
-
-        w, h, _ = gif_decode_gray(payload)
-        return w, h
-    if payload[:3] == b"\xff\xd8\xff":
-        from ..oracle import jpeg_dims
-
-        return jpeg_dims(payload)
-    raise NotImplementedError(
-        "image codec for this container not available in this environment"
-    )
+    """(w, h) of a PNG, GIF or JPEG, decoded FOR REAL by the codec its
+    ``sniff_media`` verdict names; NotImplementedError for any other
+    container."""
+    return _image_codec(_IMAGE_DIMS, payload)(payload)
 
 
 def decode_image_stub(payload: bytes) -> tuple[int, int]:
@@ -867,9 +835,7 @@ def _still(dims: tuple[int, int] | None) -> tuple[int, int, int]:
 # audio/wav, application/octet-stream (including "BM" payloads whose DIB
 # header does not parse) and unknown — take the digest stub.
 _META_READERS = {
-    "image/png": lambda p: _still(decode_image(p)),
-    "image/gif": lambda p: _still(decode_image(p)),
-    "image/jpeg": lambda p: _still(decode_image(p)),
+    **{mt: lambda p, dims=dims: _still(dims(p)) for mt, dims in _IMAGE_DIMS.items()},
     "image/webp": lambda p: _still(webp_dims(p)),
     "image/tiff": lambda p: _still(tiff_dims(p)),
     "image/bmp": lambda p: _still(bmp_dims(p)),
@@ -942,24 +908,10 @@ FEATURES_DDL = "doc_id long, embedding array<float>"
 
 
 def decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
-    """Full-pixel decode dispatch: (w, h, row-major gray8 buffer) for the
-    three REAL stdlib codecs (PNG/GIF/JPEG); raises for anything else —
-    callers on the error-as-data path catch."""
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        from ..oracle import png_decode_gray8
-
-        return png_decode_gray8(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from ..oracle import gif_decode_gray
-
-        return gif_decode_gray(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        from ..oracle import jpeg_decode_gray8
-
-        return jpeg_decode_gray8(payload)
-    raise NotImplementedError(
-        "image codec for this container not available in this environment"
-    )
+    """Full-pixel decode: (w, h, row-major gray8 buffer) from the REAL
+    stdlib codec (PNG/GIF/JPEG) the ``sniff_media`` verdict names; raises
+    for anything else — callers on the error-as-data path catch."""
+    return _image_codec(_IMAGE_GRAY, payload)(payload)
 
 
 def resample_gray8(px, w: int, h: int, ow: int, oh: int) -> bytearray:
@@ -997,8 +949,6 @@ def resize_image(payload: bytes, w: int, h: int) -> bytes:
     re-encode (the canonical resized-output container, lossless whatever
     the input was). Raises for containers with no stdlib codec — the
     DataFrame op below catches and falls back per the error-as-data rule."""
-    from ..oracle import png_encode_gray8
-
     sw, sh, px = decode_gray(payload)
     return png_encode_gray8(resample_gray8(px, sw, sh, w, h), w, h)
 
@@ -1112,56 +1062,6 @@ def wav_features(payload: bytes) -> tuple[int, int, int, int, int, int, int]:
 # Sample rate / channels / frame count / duration therefore report for
 # real; writer halves share the layout so roundtrips are oracle-checkable.
 # ---------------------------------------------------------------------------
-
-# bitrate (kbps) tables by (mpeg1?, layer); index 0 = "free" and 15 =
-# invalid are rejected in the header check
-_MP3_BITRATES = {
-    (True, 1): (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
-    (True, 2): (0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
-    (True, 3): (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
-    (False, 1): (0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),
-    (False, 2): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-    (False, 3): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
-}
-# sample rates by version bits (00=MPEG2.5, 10=MPEG2, 11=MPEG1)
-_MP3_RATES = {
-    3: (44100, 48000, 32000),
-    2: (22050, 24000, 16000),
-    0: (11025, 12000, 8000),
-}
-
-
-def _mp3_frame_header(
-    payload: bytes, pos: int
-) -> tuple[int, int, int, int] | None:
-    """Parse a strictly VALID MPEG-audio frame header at ``pos`` →
-    (frame_len, samples_per_frame, sample_rate, channels) or None. All
-    reserved index values (version 01, layer 00, bitrate 0/15,
-    samplerate 11) reject, so random binaries are never claimed."""
-    if pos + 4 > len(payload):
-        return None
-    h0, h1, h2, h3 = payload[pos : pos + 4]
-    if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
-        return None
-    ver_bits = (h1 >> 3) & 3
-    layer = 4 - ((h1 >> 1) & 3)  # bits 11/10/01 → layer 1/2/3
-    br_idx = h2 >> 4
-    sr_idx = (h2 >> 2) & 3
-    if ver_bits == 1 or layer == 4 or br_idx in (0, 15) or sr_idx == 3:
-        return None
-    mpeg1 = ver_bits == 3
-    rate = _MP3_RATES[ver_bits][sr_idx]
-    bps = _MP3_BITRATES[(mpeg1, layer)][br_idx] * 1000
-    pad = (h2 >> 1) & 1
-    if layer == 1:
-        spf = 384
-        frame_len = (12 * bps // rate + pad) * 4
-    else:
-        spf = 1152 if (layer == 2 or mpeg1) else 576
-        frame_len = spf // 8 * bps // rate + pad
-    channels = 1 if (h3 >> 6) == 3 else 2
-    return frame_len, spf, rate, channels
-
 
 def _syncsafe(b: bytes) -> int:
     """Decode a 28-bit ID3v2 syncsafe integer (4 bytes, 7 bits each)."""
@@ -1429,31 +1329,30 @@ def audio_metadata(df: DataFrame) -> DataFrame:
     anything else carries null feature columns with the sniffed
     media_type preserved."""
 
-    def feats(p: bytes | None):
-        if p is None:
-            return (None,) * 7
+    def feats(p: bytes | None, media_type: str):
         try:
-            return wav_features(p)
-        except Exception:  # noqa: BLE001 — non-WAV: try the other containers
-            pass
-        try:
-            if p[:4] == b"OggS":
+            if media_type == "audio/wav":
+                return wav_features(p)
+            if media_type == "audio/ogg":
                 _codec, rate, ch, dur = ogg_metadata(p)
                 return rate, ch, None, None, dur, None, None
-            if p[:4] == b"fLaC":
+            if media_type == "audio/flac":
                 rate, ch, bps, total, dur = flac_metadata(p)
                 return rate, ch, bps // 8, total, dur, None, None
-            rate, ch, n_frames, samples, dur = mp3_metadata(p)
-            return rate, ch, None, samples, dur, None, None
-        except Exception:  # noqa: BLE001 — unknown or corrupt container
-            return (None,) * 7
+            if media_type == "audio/mpeg":
+                rate, ch, _n, samples, dur = mp3_metadata(p)
+                return rate, ch, None, samples, dur, None, None
+        except Exception:  # noqa: BLE001 — corrupt container
+            pass
+        return (None,) * 7
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             payloads = list(pdf["payload"])
-            rows = [feats(p) for p in payloads]
+            types = [sniff_media(p) for p in payloads]
+            rows = [feats(p, t) for p, t in zip(payloads, types)]
             out = pdf[["doc_id"]].copy()
-            out["media_type"] = [sniff_media(p) for p in payloads]
+            out["media_type"] = types
             out["n_bytes"] = [len(p) if p is not None else 0 for p in payloads]
             for i, col in enumerate(
                 (
@@ -1527,12 +1426,10 @@ def sample_frames_real(payload: bytes, every_ms: int, max_frames: int = 8):
     capped at max_frames — the fps-sampling semantics ffmpeg's fps filter
     uses. Returns [(ts_ms, png_gray8_payload), ...]. Raises for non-GIF
     containers (ffmpeg/pyav would own mp4/webm on a real cluster)."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+    if sniff_media(payload) != "image/gif":
         raise NotImplementedError(
             "video codec for this container not available in this environment"
         )
-    from ..oracle import gif_decode_frames, png_encode_gray8
-
     w, h, frames = gif_decode_frames(payload, max_frames=max_frames * 4)
     # timeline: frame k is visible from start_k = Σ delays before it
     starts = []

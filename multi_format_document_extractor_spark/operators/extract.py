@@ -43,7 +43,6 @@ Scale design (north rule):
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -120,7 +119,7 @@ def _make_extract_batches(max_bytes: int | None, escalate: frozenset | None):
             out["in_bytes"] = [
                 len(p) if p is not None else 0 for p in pdf["html"]
             ]
-            out["checksum"] = [zlib.crc32(r.text) for r in results]
+            out["checksum"] = [r.checksum for r in results]
             out["truncated"] = truncated
             out["encoding"] = [r.encoding for r in results]
             if escalate is not None:

@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 from functools import lru_cache
 from html import unescape as _unescape
 from html.parser import HTMLParser
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 from xml.etree import ElementTree as ET
 
 import numpy as np
@@ -52,8 +52,152 @@ FORMAT_IMAGE = "image"  # png/jpeg/gif: routed to the multimodal media path
 FORMAT_PBM = "pbm"  # P4 bitmap: deterministic pixel→text decode (demo OCR)
 FORMAT_UNKNOWN = "unknown"
 
-_ZIP_MAGIC = b"PK\x03\x04"
-_IMAGE_MAGICS = (b"\x89PNG", b"\xff\xd8\xff", b"GIF8")  # GIF8 covers 87a/89a
+# Hostile-input geometry bound shared by every container walk (here and
+# in multimodal/media.py): dims above it are malformed, not data.
+_DIM_CAP = 1 << 20
+
+# bitrate (kbps) tables by (mpeg1?, layer); index 0 = "free" and 15 =
+# invalid are rejected in the header check
+_MP3_BITRATES = {
+    (True, 1): (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448),
+    (True, 2): (0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384),
+    (True, 3): (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320),
+    (False, 1): (0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256),
+    (False, 2): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
+    (False, 3): (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160),
+}
+# sample rates by version bits (00=MPEG2.5, 10=MPEG2, 11=MPEG1)
+_MP3_RATES = {
+    3: (44100, 48000, 32000),
+    2: (22050, 24000, 16000),
+    0: (11025, 12000, 8000),
+}
+
+
+def _mp3_frame_header(
+    payload: bytes, pos: int
+) -> tuple[int, int, int, int] | None:
+    """Parse a strictly VALID MPEG-audio frame header at ``pos`` →
+    (frame_len, samples_per_frame, sample_rate, channels) or None. All
+    reserved index values (version 01, layer 00, bitrate 0/15,
+    samplerate 11) reject."""
+    if pos + 4 > len(payload):
+        return None
+    h0, h1, h2, h3 = payload[pos : pos + 4]
+    if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
+        return None
+    ver_bits = (h1 >> 3) & 3
+    layer = 4 - ((h1 >> 1) & 3)  # bits 11/10/01 → layer 1/2/3
+    br_idx = h2 >> 4
+    sr_idx = (h2 >> 2) & 3
+    if ver_bits == 1 or layer == 4 or br_idx in (0, 15) or sr_idx == 3:
+        return None
+    mpeg1 = ver_bits == 3
+    rate = _MP3_RATES[ver_bits][sr_idx]
+    bps = _MP3_BITRATES[(mpeg1, layer)][br_idx] * 1000
+    pad = (h2 >> 1) & 1
+    if layer == 1:
+        spf = 384
+        frame_len = (12 * bps // rate + pad) * 4
+    else:
+        spf = 1152 if (layer == 2 or mpeg1) else 576
+        frame_len = spf // 8 * bps // rate + pad
+    channels = 1 if (h3 >> 6) == 3 else 2
+    return frame_len, spf, rate, channels
+
+
+def bmp_dims(payload: bytes) -> tuple[int, int] | None:
+    """(width, |height|) from a BITMAPINFOHEADER (or newer — all start
+    with the same 4 fields), or None when the payload is not BMP / the
+    header is truncated / the old 12-byte BITMAPCOREHEADER shows up
+    (16-bit fields, different layout — rare enough to decline)."""
+    if payload[:2] != b"BM" or len(payload) < 26:
+        return None
+    # known BITMAPINFOHEADER-family sizes only — the 2-byte "BM" magic
+    # is weak, so the DIB size field carries the discrimination load
+    if int.from_bytes(payload[14:18], "little") not in (40, 52, 56, 108, 124):
+        return None
+    w = int.from_bytes(payload[18:22], "little", signed=True)
+    h = int.from_bytes(payload[22:26], "little", signed=True)
+    if not (0 < w <= _DIM_CAP and h != 0 and abs(h) <= _DIM_CAP):
+        return None
+    return w, abs(h)
+
+
+# Guards: the table rows whose prefix alone is too weak or sits past
+# offset 0. Each is the one definition of its check.
+def _is_bmff(payload: bytes) -> bool:
+    """ISO-BMFF (mp4/mov/m4a): an ``ftyp`` box type at offset 4."""
+    return len(payload) >= 12 and payload[4:8] == b"ftyp"
+
+
+def _riff_form(form: bytes) -> Callable[[bytes], bool]:
+    """RIFF is a container family: the form type at offset 8 picks the
+    member."""
+    return lambda payload: payload[8:12] == form
+
+
+def _mpeg_sync(payload: bytes) -> bool:
+    """Bare MPEG-audio sync (no ID3 tag): a strictly valid first frame
+    header is not enough evidence on its own, so the chain must hold — a
+    second valid header at the first one's ``frame_len`` (the step
+    ``mp3_metadata``'s walk takes), or a single frame that is the whole
+    payload."""
+    hdr = _mp3_frame_header(payload, 0)
+    return hdr is not None and (
+        len(payload) == hdr[0] or _mp3_frame_header(payload, hdr[0]) is not None
+    )
+
+
+def _bmp_dib(payload: bytes) -> bool:
+    """"BM" alone is weak enough to hit real text: claim BMP only when
+    the DIB header parses."""
+    return bmp_dims(payload) is not None
+
+
+class Magic(NamedTuple):
+    prefix: bytes
+    format: str | None  # sniff_format verdict; None → not a format row
+    media: str | None  # sniff_media verdict; None → not a media row
+    guard: Callable[[bytes], bool] | None = None
+
+
+# The one magic-byte table. sniff_format reads the rows with a format,
+# sniff_media the rows with a media type; within each, the first row whose
+# prefix (and guard) matches wins. Format rows carry no guard, so
+# sources/pages.py folds them into native `when`s unchanged (the P4
+# whitespace byte is part of its four prefixes).
+MAGIC = (
+    Magic(b"%PDF-", FORMAT_PDF, None),
+    Magic(b"PK\x03\x04", FORMAT_ZIP, None),
+    Magic(b"\x89PNG", FORMAT_IMAGE, "image/png"),
+    Magic(b"\xff\xd8\xff", FORMAT_IMAGE, "image/jpeg"),
+    Magic(b"GIF8", FORMAT_IMAGE, "image/gif"),  # GIF87a and GIF89a
+    *(Magic(b"P4" + ws, FORMAT_PBM, None) for ws in (b" ", b"\t", b"\r", b"\n")),
+    Magic(b"II*\x00", None, "image/tiff"),
+    Magic(b"MM\x00*", None, "image/tiff"),
+    Magic(b"OggS", None, "audio/ogg"),
+    Magic(b"ID3", None, "audio/mpeg"),
+    Magic(b"fLaC", None, "audio/flac"),
+    Magic(b"\x1a\x45\xdf\xa3", None, "video/webm"),
+    Magic(b"", None, "video/mp4", _is_bmff),
+    Magic(b"RIFF", None, "audio/wav", _riff_form(b"WAVE")),
+    Magic(b"RIFF", None, "video/avi", _riff_form(b"AVI ")),
+    Magic(b"RIFF", None, "image/webp", _riff_form(b"WEBP")),
+    Magic(b"\xff", None, "audio/mpeg", _mpeg_sync),
+    Magic(b"BM", None, "image/bmp", _bmp_dib),
+)
+MAGIC_FORMATS = tuple(m for m in MAGIC if m.format)
+MAGIC_MEDIA = tuple(m for m in MAGIC if m.media)
+
+
+def first_magic(payload: bytes, rows: tuple[Magic, ...]) -> Magic | None:
+    """The first of ``rows`` that ``payload`` matches, or None."""
+    for m in rows:
+        if payload.startswith(m.prefix) and (m.guard is None or m.guard(payload)):
+            return m
+    return None
+
 
 CSV_PROBE_BYTES = 4096  # structural probe window (lockstep with pages.py)
 
@@ -88,20 +232,16 @@ def _csv_sniff(payload: bytes) -> bool:
 
 
 def sniff_format(payload: bytes | None) -> str:
-    """Classify a payload by magic bytes (plus the structural CSV probe).
-    Mirrors the native Spark column in sources/pages.py — keep the two in
-    lockstep (magic list, probe length 16, the exact ``" \\t\\r\\n"``
+    """Classify a payload by the format rows of ``MAGIC``, then by the
+    BOM, markup and CSV probes. The native Spark column in
+    sources/pages.py folds the same rows and mirrors the probes — keep
+    the probes in lockstep (length 16, the exact ``" \\t\\r\\n"``
     leading-whitespace set, and the CSV probe)."""
     if payload is None or len(payload) == 0:
         return FORMAT_UNKNOWN
-    if payload[:5] == b"%PDF-":
-        return FORMAT_PDF
-    if payload[:4] == _ZIP_MAGIC:
-        return FORMAT_ZIP
-    if payload.startswith(_IMAGE_MAGICS):
-        return FORMAT_IMAGE
-    if payload[:2] == b"P4" and payload[2:3] in (b" ", b"\t", b"\r", b"\n"):
-        return FORMAT_PBM
+    magic = first_magic(payload, MAGIC_FORMATS)
+    if magic is not None:
+        return magic.format  # type: ignore[return-value]
     # A Unicode BOM marks the text family (no binary container starts with
     # one): probe the head BYTES for markup in that encoding — html if the
     # first non-whitespace character is '<', else text. The probe is a
@@ -452,9 +592,6 @@ def classify_block(
         and link_density <= link_density_max
         and text_density >= text_density_min
     )
-
-
-USE_FAST_SCANNER = True  # _scan_blocks (production) vs _BlockParser (reference)
 
 
 def _blocks_ref(data: str) -> list[_Block]:
@@ -1034,7 +1171,7 @@ def extract_html(
     """Main-content bytes + number of kept blocks + encoding used."""
     ld_max, min_chars, td_min = PROFILES[profile]
     data, enc = decode_web(payload)
-    blocks = _scan_blocks(data) if USE_FAST_SCANNER else _blocks_ref(data)
+    blocks = _scan_blocks(data)
     kept: list[str] = []
     for b in blocks:
         # Whitespace collapse never lengthens a string, so the raw part-length
@@ -1128,13 +1265,6 @@ _PDF_TOK_RE = re.compile(
     rb"|T\*|Tj|TJ|Td|TD|Tm|TL|Tf|Tc|Tw|Tz|Ts|Tr|BT|ET|'|\""
     rb"|/[^\s/\[\]()<>]+"  # name
 )
-
-_PDF_NUM_OPS = {
-    b"Tm": 6,
-    b"Td": 2,
-    b"TD": 2,
-    b"TL": 1,
-}
 
 # A TJ adjustment at or beyond this many thousandths of text space reads
 # as an inter-word gap and inserts one space — the word-break heuristic
@@ -1818,9 +1948,9 @@ def _unpredict(
     """Undo a /Predictor on decompressed stream bytes (ISO 32000
     §7.4.4.4): 2 = TIFF horizontal differencing (8-bit components only),
     10-15 = PNG row filters — each row carries its own filter-type byte,
-    so all five PNG filters share one path regardless of the declared
-    predictor number. Real writers put Predictor 12 (PNG Up) on xref
-    streams; this is what makes those files readable."""
+    so every predictor number runs the PNG codec's ``_png_unfilter`` with
+    ``colors`` bytes per pixel. Real writers put Predictor 12 (PNG Up) on
+    xref streams; this is what makes those files readable."""
     if predictor <= 1:
         return data
     if bpc != 8:
@@ -1834,33 +1964,13 @@ def _unpredict(
                 out[r + x] = (out[r + x] + out[r + x - bpp]) & 0xFF
         return bytes(out)
     if 10 <= predictor <= 15:
+        if stride <= 0:
+            raise ValueError(
+                f"empty PNG predictor row: /Colors {colors} /Columns {columns}"
+            )
         if len(data) % (stride + 1):
             raise ValueError("PNG-predicted data not a whole row count")
-        h = len(data) // (stride + 1)
-        out = bytearray(stride * h)
-        for y in range(h):
-            ftype = data[y * (stride + 1)]
-            row = data[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-            o = y * stride
-            po = o - stride
-            for x in range(stride):
-                a = out[o + x - bpp] if x >= bpp else 0
-                b = out[po + x] if y else 0
-                c = out[po + x - bpp] if (x >= bpp and y) else 0
-                if ftype == 0:
-                    v = row[x]
-                elif ftype == 1:
-                    v = row[x] + a
-                elif ftype == 2:
-                    v = row[x] + b
-                elif ftype == 3:
-                    v = row[x] + (a + b) // 2
-                elif ftype == 4:
-                    v = row[x] + _paeth(a, b, c)
-                else:
-                    raise ValueError(f"PNG predictor filter {ftype} invalid")
-                out[o + x] = v & 0xFF
-        return bytes(out)
+        return bytes(_png_unfilter(data, columns, len(data) // (stride + 1), bpp))
     raise ValueError(f"unsupported /Predictor {predictor}")
 
 
@@ -3191,9 +3301,6 @@ def extract_png(payload: bytes) -> tuple[bytes, int]:
     6×8 glyph classification as P4 bitmaps."""
     w, h, recon = png_decode_gray8(payload)
     return _classify_glyph_grid(_ink_from_gray(recon, w, h), w, h)
-
-
-_PNG_FILTERS = (0, 1, 2, 3, 4)
 
 
 def render_png(
@@ -5427,11 +5534,15 @@ def extract_zip(payload: bytes) -> tuple[bytes, int] | None:
 
 
 def image_subtype(payload: bytes) -> str:
-    if payload[:4] == b"\x89PNG":
-        return "png"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    return "gif"
+    """"png" | "jpeg" | "gif": the subtype of the ``MAGIC`` image row
+    ``payload`` matches ("gif" when none does)."""
+    magic = first_magic(payload, MAGIC_FORMATS)
+    if magic is None or magic.format != FORMAT_IMAGE:
+        return "gif"
+    return magic.media.split("/")[1]  # type: ignore[union-attr]
+
+
+_IMAGE_EXTRACTORS = {"png": extract_png, "jpeg": extract_jpeg, "gif": extract_gif}
 
 
 # ---------------------------------------------------------------------------
@@ -5467,22 +5578,10 @@ def extract(payload: bytes | None, profile: str = "default") -> Extracted:
     if fmt == FORMAT_UNKNOWN:
         return Extracted(fmt, b"", 0, False, "empty or missing payload")
     if fmt == FORMAT_IMAGE:
-        sub = image_subtype(payload)
-        if sub == "png":
-            # REAL decode path (S8 stub retired for PNG): chunk walk +
-            # inflate + unfilter + glyph classify; unsupported color
-            # modes / corrupt files surface as error rows.
-            try:
-                text, n_blocks = extract_png(payload)  # type: ignore[arg-type]
-                return Extracted(fmt, text, n_blocks, True)
-            except Exception as exc:  # noqa: BLE001 — error path is data
-                return Extracted(
-                    fmt, b"", 0, False, f"{type(exc).__name__}: {exc}"
-                )
-        # gif/jpeg: REAL decode paths too (S8 image stub fully retired —
-        # GIF via LZW + palette→luminance, JPEG via Huffman + IDCT); color/
-        # progressive/animated/corrupt files surface as error rows.
-        decoder = extract_gif if sub == "gif" else extract_jpeg
+        # REAL decode paths: PNG chunk walk + inflate + unfilter, GIF LZW +
+        # palette→luminance, JPEG Huffman + IDCT, each feeding the glyph
+        # classifier; unsupported modes / corrupt files are error rows.
+        decoder = _IMAGE_EXTRACTORS[image_subtype(payload)]  # type: ignore[arg-type]
         try:
             text, n_blocks = decoder(payload)  # type: ignore[arg-type]
             return Extracted(fmt, text, n_blocks, True)

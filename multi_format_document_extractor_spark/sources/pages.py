@@ -5,7 +5,9 @@ Here the sniff is a pure Catalyst expression over the first bytes of the
 ``html BINARY`` column — no UDF, so it folds into whole-stage codegen and
 filters on ``format`` push down ahead of the expensive extraction UDF.
 
-Must stay in lockstep with ``oracle.sniff_format``.
+The magic part is folded from ``oracle.MAGIC_FORMATS``, the rows
+``oracle.sniff_format`` reads; the BOM, markup and CSV probes mirror the
+oracle's and must stay in lockstep with it.
 """
 
 from __future__ import annotations
@@ -17,7 +19,9 @@ PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang strin
 
 
 def format_col(html: Column) -> Column:
-    """Magic-byte format classification as a native expression.
+    """Magic-byte format classification as a native expression: one
+    ``when`` per ``oracle.MAGIC_FORMATS`` row, in table order, then the
+    probes.
 
     latin-1 decode never fails, so the head probe is total. The leading-
     whitespace set is EXACTLY the oracle's ``lstrip(" \\t\\r\\n")``
@@ -38,7 +42,7 @@ def format_col(html: Column) -> Column:
     # strict charset decode, which Spark 4 aborts on malformed bytes):
     # same window sizes (16 bytes after a utf-8 BOM, 32 after a utf-16
     # one), same pattern strings — imported, not copied.
-    from ..oracle import U8_HEAD_PAT, U16BE_HEAD_PAT, U16LE_HEAD_PAT
+    from ..oracle import MAGIC_FORMATS, U8_HEAD_PAT, U16BE_HEAD_PAT, U16LE_HEAD_PAT
 
     head_u8bom = F.decode(F.substring(html, 4, 16), "ISO-8859-1")
     head_u16 = F.decode(F.substring(html, 3, 32), "ISO-8859-1")
@@ -53,22 +57,13 @@ def format_col(html: Column) -> Column:
     c1 = F.size(F.split(l1, ",")) - F.lit(1)
     c2 = F.size(F.split(l2, ",")) - F.lit(1)
     is_csv = (c1 >= 2) & (l2 != "") & (c2 == c1)
+    verdict = F.when(html.isNull() | (F.length(html) == 0), F.lit("unknown"))
+    for m in MAGIC_FORMATS:  # format rows carry no guard: prefix only
+        verdict = verdict.when(
+            F.substring(html, 1, len(m.prefix)) == F.lit(m.prefix), F.lit(m.format)
+        )
     return (
-        F.when(html.isNull() | (F.length(html) == 0), F.lit("unknown"))
-        .when(F.substring(html, 1, 5) == F.lit(b"%PDF-"), F.lit("pdf"))
-        .when(F.substring(html, 1, 4) == F.lit(b"PK\x03\x04"), F.lit("zip"))
-        .when(
-            (F.substring(html, 1, 4) == F.lit(b"\x89PNG"))
-            | (F.substring(html, 1, 3) == F.lit(b"\xff\xd8\xff"))
-            | (F.substring(html, 1, 4) == F.lit(b"GIF8")),
-            F.lit("image"),
-        )
-        .when(
-            (F.substring(html, 1, 2) == F.lit(b"P4"))
-            & F.substring(html, 3, 1).isin(b" ", b"\t", b"\r", b"\n"),
-            F.lit("pbm"),
-        )
-        .when(
+        verdict.when(
             F.substring(html, 1, 3) == F.lit(b"\xef\xbb\xbf"),
             F.when(head_u8bom.rlike(U8_HEAD_PAT), F.lit("html")).otherwise(
                 F.lit("text")

@@ -1,7 +1,8 @@
 """Doc-path guard: every ``scripts/``, ``tests/`` or ``perfbench/`` module
 that the living docs or the package's docstrings and comments name must
 exist, so deleting or renaming a file fails here instead of leaving the
-docs pointing at nothing.
+docs pointing at nothing. Likewise every ``oracle.<name>`` /
+``media.<name>`` the living docs name must be an attribute of that module.
 
 The historical records (VERDICT.md, PLANS.md, CHANGES.md, ROADMAP.md,
 ``BENCH_r*.json``) describe the repository as it was and are not checked.
@@ -27,6 +28,9 @@ DOCS = (
 # not preceded by a path or word character, so "src/tests/x.py" in a
 # reference citation is not read as this repository's tests/x.py
 PATH_RE = re.compile(r"(?<![\w/.])((?:scripts|tests|perfbench)/\w+\.py)\b")
+# ``oracle.x`` / ``media.x``, but not the file names ``oracle.py`` /
+# ``media.py`` nor dotted ledger rows such as ``oracle.pdf.ms_per_mb``
+ATTR_RE = re.compile(r"(?<![\w/.])(oracle|media)\.(?!py\b)(\w+)(?!\.\w)")
 
 
 def _py_prose(path: Path) -> str:
@@ -62,4 +66,23 @@ def test_named_module_paths_exist():
     named = _named_paths()
     assert named, "the pattern matched nothing; the guard checks nothing"
     missing = {p: sorted(w) for p, w in named.items() if not (REPO / p).is_file()}
+    assert not missing, missing
+
+
+def test_named_module_attributes_exist():
+    from multi_format_document_extractor_spark import oracle
+    from multi_format_document_extractor_spark.multimodal import media
+
+    modules = {"oracle": oracle, "media": media}
+    named = {
+        (m.group(1), m.group(2), name)
+        for name in DOCS
+        for m in ATTR_RE.finditer((REPO / name).read_text(encoding="utf-8"))
+    }
+    assert named, "the pattern matched nothing; the guard checks nothing"
+    missing = sorted(
+        (f"{mod}.{attr}", where)
+        for mod, attr, where in named
+        if not hasattr(modules[mod], attr)
+    )
     assert not missing, missing

@@ -631,6 +631,32 @@ def test_mp3_frame_walk():
     assert sniff_media(b"\xff\xeb\x90\x00") == "application/octet-stream"  # ver=01
 
 
+def test_bare_mpeg_sync_needs_a_frame_chain():
+    """A bare sync claims audio/mpeg only when the frame chain holds: a
+    second valid header at the first one's frame_len, or one frame that
+    is the whole payload. A lone valid header ahead of junk does not."""
+    from multi_format_document_extractor_spark.multimodal.media import (
+        render_mp3,
+        sniff_media,
+    )
+
+    lone = render_mp3(1)  # 417-byte frame: header + zeroed body
+    assert sniff_media(lone) == "audio/mpeg"
+    assert sniff_media(lone[:4] + b"\x11" * 600) == "application/octet-stream"
+    assert sniff_media(lone + b"junk") == "application/octet-stream"
+    assert sniff_media(lone[:-1]) == "application/octet-stream"
+    for n in (1, 2, 3, 5):
+        for br in (32, 128, 320):
+            for sr in (44100, 48000, 32000):
+                for ch in (1, 2):
+                    for id3 in (False, True):
+                        p = render_mp3(n, br, sr, ch, id3=id3)
+                        assert sniff_media(p) == "audio/mpeg", (n, br, sr, ch, id3)
+                        # a truncated tail frame keeps the chain's head
+                        if n > 1:
+                            assert sniff_media(p[:-1]) == "audio/mpeg"
+
+
 def test_ogg_page_walk():
     from multi_format_document_extractor_spark.multimodal.media import (
         _ogg_crc,

@@ -116,17 +116,17 @@ def test_runlength_vectors_and_roundtrip():
 # --------------------------------------------------------------------------
 
 
-def _png_predict(rows: list[bytes], ftype: int) -> bytes:
-    """Forward-apply one PNG filter type to every row (test-side encoder,
-    bpp=1)."""
+def _png_predict(rows: list[bytes], ftype: int, bpp: int = 1) -> bytes:
+    """Forward-apply one PNG filter type to every row (test-side encoder;
+    the left taps sit ``bpp`` bytes back)."""
     out = bytearray()
     prev = bytes(len(rows[0]))
     for r in rows:
         out.append(ftype)
         for x in range(len(r)):
-            a = r[x - 1] if x else 0
+            a = r[x - bpp] if x >= bpp else 0
             b = prev[x]
-            c = prev[x - 1] if x else 0
+            c = prev[x - bpp] if x >= bpp else 0
             if ftype == 0:
                 v = r[x]
             elif ftype == 1:
@@ -149,10 +149,20 @@ def test_png_predictor_all_filters():
         enc = _png_predict(rows, ftype)
         # any predictor number 10-15 takes the per-row-tag path
         assert oracle._unpredict(enc, 12, 1, 8, 4) == want
+    # three colors: the a/c taps sit one pixel (3 bytes) back
+    rgb = [bytes(range(k, k + 60, 5)) for k in (3, 200, 17)]
+    for ftype in range(5):
+        enc = _png_predict(rgb, ftype, bpp=3)
+        assert oracle._unpredict(enc, 15, 3, 8, 4) == b"".join(rgb)
+        # decoding the same rows at one byte per pixel reads other taps
+        if ftype in (1, 3, 4):
+            assert oracle._unpredict(enc, 15, 1, 8, 12) != b"".join(rgb)
     with pytest.raises(ValueError):
         oracle._unpredict(b"\x09\x00\x00\x00\x00", 12, 1, 8, 4)  # bad tag
     with pytest.raises(ValueError):
         oracle._unpredict(b"\x00\x00", 12, 1, 8, 4)  # not whole rows
+    with pytest.raises(ValueError):
+        oracle._unpredict(b"\x00\x00", 12, 0, 8, 4)  # zero-byte rows
 
 
 def test_tiff_predictor():

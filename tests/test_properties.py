@@ -286,3 +286,43 @@ def test_spark_sniff_agrees_with_oracle_on_random_payloads(spark):
     }
     for url, p in payloads:
         assert got[url] == sniff_format(p), (url, p)
+
+
+def test_magic_table_parity(spark):
+    """Every ``oracle.MAGIC`` row gives three payloads — the prefix alone,
+    the prefix plus junk, the prefix minus its last byte — and one Spark
+    job runs them all through the native ``format_col``, which must agree
+    with ``sniff_format``. The image rows' verdicts must agree across
+    ``sniff_format``, ``sniff_media`` and ``image_subtype``."""
+    import pyspark.sql.functions as F
+
+    from multi_format_document_extractor_spark import oracle
+    from multi_format_document_extractor_spark.multimodal.media import sniff_media
+    from multi_format_document_extractor_spark.sources.pages import format_col
+
+    junk = b"\x00junk\xff\x85" * 6
+    rows = [
+        (f"u{i}_{j}", p)
+        for i, m in enumerate(oracle.MAGIC)
+        for j, p in enumerate((m.prefix, m.prefix + junk, m.prefix[:-1]))
+    ]
+    df = spark.createDataFrame(rows, "url string, html binary")
+    got = {
+        r["url"]: r["fmt"]
+        for r in df.select("url", format_col(F.col("html")).alias("fmt")).collect()
+    }
+    for url, p in rows:
+        assert got[url] == sniff_format(p), (url, p)
+    for m in oracle.MAGIC_FORMATS:
+        assert m.guard is None, m  # format_col folds prefixes only
+        assert sniff_format(m.prefix) == sniff_format(m.prefix + junk) == m.format
+    for m in oracle.MAGIC_MEDIA:
+        if m.guard is None:
+            assert sniff_media(m.prefix) == sniff_media(m.prefix + junk) == m.media
+    images = [m for m in oracle.MAGIC if m.format == FORMAT_IMAGE]
+    assert sorted(m.media for m in images) == ["image/gif", "image/jpeg", "image/png"]
+    for m in images:
+        for p in (m.prefix, m.prefix + junk):
+            assert sniff_format(p) == FORMAT_IMAGE
+            assert sniff_media(p) == m.media
+            assert oracle.image_subtype(p) == m.media.removeprefix("image/")
