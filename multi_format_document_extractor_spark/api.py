@@ -188,9 +188,6 @@ def process_table(
     pages: DataFrame,
     mode: str = "rule_based",
     run_date: str | None = None,
-    salt_partitions: int | None = None,
-    max_bytes: int | None = None,
-    threshold: float = ESCALATION_THRESHOLD,
 ) -> DataFrame:
     """One call: sniff → extract → enrich → score → validate → route.
 
@@ -198,9 +195,10 @@ def process_table(
     src/hybrid_pipeline.py:308-360):
 
     - ``"rule_based"``: one deterministic pass over everything.
-    - ``"hybrid"``: documents that would score below ``threshold`` are
-      RE-EXTRACTED with the "relaxed" recovery profile (oracle.PROFILES) —
-      a real second extractor, not just a score bump — and scored on that
+    - ``"hybrid"``: documents that would score below
+      ``routing.ESCALATION_THRESHOLD`` (0.7) are RE-EXTRACTED with the
+      "relaxed" recovery profile (oracle.PROFILES) — a real second
+      extractor, not just a score bump — and scored on that
       result; they carry ``mode='escalated'``. The decision is made per
       row inside the one extraction UDF, by looking the row's
       ``escalation_key`` up in ``escalation_table``, so the relaxed pass
@@ -215,16 +213,11 @@ def process_table(
     if mode == "rule_based":
         escalate = None
     elif mode == "hybrid":
-        escalate = escalation_table(pages.sparkSession, threshold)
+        escalate = escalation_table(pages.sparkSession)
     else:
         raise ValueError(f"unknown mode: {mode!r}")
     out = score_extracted(
-        extract_pages(
-            pages,
-            salt_partitions=salt_partitions,
-            max_bytes=max_bytes,
-            escalate=escalate,
-        ),
+        extract_pages(pages, escalate=escalate),
         run_date=run_date,
     )
     if escalate is None:
@@ -235,8 +228,6 @@ def process_table(
 def process_incremental(
     pages: DataFrame,
     prev_extracted: DataFrame,
-    salt_partitions: int | None = None,
-    max_bytes: int | None = None,
 ) -> DataFrame:
     """Incremental re-extraction across crawl snapshots (the warehouse
     day-resume of SURVEY §2 J4 generalized to row-level drift): run the
@@ -267,9 +258,7 @@ def process_incremental(
     todo = annotated.where(
         F.col("_prev_ts").isNull() | (F.col("warc_ts") > F.col("_prev_ts"))
     ).select(*pages.columns)
-    fresh = extract_pages(
-        todo, salt_partitions=salt_partitions, max_bytes=max_bytes
-    )
+    fresh = extract_pages(todo)
     still = pages.select("url", F.col("warc_ts").alias("_new_ts"))
     reused = (
         prev_extracted.join(still, "url")
@@ -285,7 +274,6 @@ def run_pipeline(
     warehouse_root: str,
     run_id: str | None = None,
     run_date: str | None = None,
-    salt_partitions: int | None = None,
 ) -> tuple[dict, DataFrame]:
     """The resumable deployment shape: extraction runs (once) through the
     Warehouse snapshot protocol — pending → extract → partitioned append →
@@ -294,6 +282,6 @@ def run_pipeline(
     Killed and rerun, extraction resumes from the last commit; the scored
     view is always consistent with exactly the committed snapshots."""
     wh = Warehouse(warehouse_root)
-    record = wh.run(spark, pages, run_id=run_id, salt_partitions=salt_partitions)
+    record = wh.run(spark, pages, run_id=run_id)
     return record, score_extracted(wh.read_extracted(spark), run_date=run_date)
 

@@ -40,11 +40,11 @@ DATE_FORMATS = (
 )
 
 
-def multi_pattern_extract(col: Column, patterns: Sequence[str], group: int = 1) -> Column:
+def multi_pattern_extract(col: Column, patterns: Sequence[str]) -> Column:
     """F1: first non-empty match across a regex pattern list
-    (reference: src/parsers/pdf_parser.py:114-120)."""
+    (reference: src/parsers/pdf_parser.py:114-120); group 1 of each."""
     return F.coalesce(
-        *[F.nullif(F.regexp_extract(col, p, group), F.lit("")) for p in patterns]
+        *[F.nullif(F.regexp_extract(col, p, 1), F.lit("")) for p in patterns]
     )
 
 

@@ -9,14 +9,14 @@ zero at execution time and the resolved plan stays fully native."""
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Target field → accepted header synonyms (reference's dictionaries,
 # csv_parser.py:92-159, lowercased).
-DEFAULT_SYNONYMS: dict[str, tuple[str, ...]] = {
+SYNONYMS: dict[str, tuple[str, ...]] = {
     "order_id": ("order_id", "order id", "po number", "po #", "order no"),
     "client_name": ("client", "client name", "customer", "customer name"),
     "order_date": ("order_date", "order date", "date", "po date"),
@@ -28,16 +28,13 @@ DEFAULT_SYNONYMS: dict[str, tuple[str, ...]] = {
 }
 
 
-def resolve_columns(
-    columns: Sequence[str],
-    synonyms: Mapping[str, Sequence[str]] = DEFAULT_SYNONYMS,
-) -> dict[str, str]:
+def resolve_columns(columns: Sequence[str]) -> dict[str, str]:
     """Map target field → actual column name. Exact (case-insensitive) match
     wins over substring match; first synonym hit wins (reference order
     semantics). Unresolved targets are absent from the result."""
     lowered = {c.lower(): c for c in columns}
     out: dict[str, str] = {}
-    for target, names in synonyms.items():
+    for target, names in SYNONYMS.items():
         hit = None
         for syn in names:  # pass 1: exact
             if syn in lowered:
@@ -56,20 +53,17 @@ def resolve_columns(
     return out
 
 
-def normalize_schema(
-    df: DataFrame,
-    synonyms: Mapping[str, Sequence[str]] = DEFAULT_SYNONYMS,
-) -> DataFrame:
+def normalize_schema(df: DataFrame) -> DataFrame:
     """Select + rename every resolvable column to its canonical field name;
     unresolved targets come back as typed nulls so downstream plans see a
     stable schema (the lenient RawExtraction contract, src/schemas.py:78-98)."""
-    mapping = resolve_columns(df.columns, synonyms)
+    mapping = resolve_columns(df.columns)
     cols = [
         (
             F.col(mapping[t]).alias(t)
             if t in mapping
             else F.lit(None).cast("string").alias(t)
         )
-        for t in synonyms
+        for t in SYNONYMS
     ]
     return df.select(*cols)

@@ -255,30 +255,20 @@ def canonical_url_sql(expr: str) -> str:
 # --- Block classification (relational form of the extractor's rule) --------
 
 
-def classify_block_col(
-    text_chars: Column,
-    link_chars: Column,
-    n_tags: Column,
-    link_density_max: float = 0.33,
-    min_content_chars: int = 25,
-    text_density_min: float = 8.0,
-) -> Column:
-    """Native mirror of ``oracle.classify_block`` (the extraction
-    contract's per-block rule, oracle.py — keep the two in lockstep;
-    defaults are the 'default' profile): a block is main content iff it
-    has ≥ ``min_content_chars`` text chars, link density ≤
-    ``link_density_max`` and text density (chars per tag) ≥
-    ``text_density_min``. Pure codegen over integer block stats, so the
+def classify_block_col(text_chars: Column, link_chars: Column, n_tags: Column) -> Column:
+    """Native mirror of ``oracle.classify_block`` under the 'default'
+    profile (the extraction contract's per-block rule, oracle.py — keep
+    the two in lockstep): a block is main content iff it has ≥ 25 text
+    chars (``MIN_CONTENT_CHARS``), link density ≤ 0.33
+    (``LINK_DENSITY_MAX``) and text density (chars per tag) ≥ 8.0
+    (``TEXT_DENSITY_MIN``). Pure codegen over integer block stats, so the
     same rule the mapInPandas extractor applies per block is available
     declaratively over block-feature tables."""
     return (
         (text_chars > 0)
-        & (text_chars >= min_content_chars)
-        & (
-            link_chars / (F.lit(1.0) * text_chars)
-            <= link_density_max
-        )
-        & (text_chars / (F.lit(1.0) + n_tags) >= text_density_min)
+        & (text_chars >= 25)
+        & (link_chars / (F.lit(1.0) * text_chars) <= 0.33)
+        & (text_chars / (F.lit(1.0) + n_tags) >= 8.0)
     )
 
 
@@ -479,7 +469,7 @@ def feed_date(entry: Column) -> Column:
     ).otherwise(_first_nonempty(body, (RSS_DATE_RE, ATOM_DATE_RE)))
 
 
-def parse_feeds(feeds, host_col: str = "host", xml_col: str = "xml"):
+def parse_feeds(feeds):
     """(host, xml) feed rows → one (host, loc, pub, channel) row per
     entry that carries a recognizable link. Entries with no link parse
     to loc='' and are DROPPED here — an empty-URL key would poison every
@@ -491,8 +481,8 @@ def parse_feeds(feeds, host_col: str = "host", xml_col: str = "xml"):
     entry = F.col("_entry")
     return (
         feeds.select(
-            F.col(host_col).alias("host"),
-            F.explode(feed_entries(F.col(xml_col))).alias("_entry"),
+            "host",
+            F.explode(feed_entries(F.col("xml"))).alias("_entry"),
         )
         .select(
             "host",

@@ -43,6 +43,7 @@ from ..oracle import (
     gif_decode_gray,
     jpeg_decode_gray8,
     jpeg_dims,
+    jpeg_segments,
     png_decode_gray8,
     png_encode_gray8,
 )
@@ -587,25 +588,19 @@ def _tiff_ascii_tags(tiff: bytes, wanted: dict[int, str]) -> dict[str, str]:
 
 def exif_meta(payload: bytes) -> dict[str, str]:
     """{make, model, shot_at} from a JPEG's APP1 Exif segment (present
-    keys only, {} when the payload is not JPEG / carries no Exif). The
-    segment scan walks marker-length pairs and stops at SOS — it never
-    touches entropy-coded data."""
-    if payload[:2] != b"\xff\xd8":
+    keys only, {} when the payload is not JPEG / carries no Exif, or its
+    segment walk breaks before the Exif segment). The walk is
+    ``jpeg_segments``', which stops at SOS — it never touches
+    entropy-coded data."""
+    try:
+        for marker, body in jpeg_segments(payload):
+            if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
+                break
+        else:
+            return {}
+    except ValueError:  # not a JPEG, or a truncated / unsynced segment
         return {}
-    pos = 2
-    while pos + 4 <= len(payload) and payload[pos] == 0xFF:
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xDA:  # SOS: entropy data follows
-            break
-        seg_len = int.from_bytes(payload[pos + 2 : pos + 4], "big")
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
-            return _tiff_ascii_tags(body[6:], _EXIF_TAGS)
-        pos += 2 + seg_len
-    return {}
+    return _tiff_ascii_tags(body[6:], _EXIF_TAGS)
 
 
 def render_exif_jpeg(make: str, model: str, shot_at: str) -> bytes:
@@ -801,22 +796,6 @@ _IMAGE_GRAY = {
 }
 
 
-def _image_codec(codecs: dict, payload: bytes):
-    codec = codecs.get(sniff_media(payload))
-    if codec is None:
-        raise NotImplementedError(
-            "image codec for this container not available in this environment"
-        )
-    return codec
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """(w, h) of a PNG, GIF or JPEG, decoded FOR REAL by the codec its
-    ``sniff_media`` verdict names; NotImplementedError for any other
-    container."""
-    return _image_codec(_IMAGE_DIMS, payload)(payload)
-
-
 def decode_image_stub(payload: bytes) -> tuple[int, int]:
     """Deterministic fake decode for containers no walk above claims
     (unrecognized magic carried as octet-stream): dimensions derived from
@@ -911,7 +890,12 @@ def decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
     """Full-pixel decode: (w, h, row-major gray8 buffer) from the REAL
     stdlib codec (PNG/GIF/JPEG) the ``sniff_media`` verdict names; raises
     for anything else — callers on the error-as-data path catch."""
-    return _image_codec(_IMAGE_GRAY, payload)(payload)
+    codec = _IMAGE_GRAY.get(sniff_media(payload))
+    if codec is None:
+        raise NotImplementedError(
+            "image codec for this container not available in this environment"
+        )
+    return codec(payload)
 
 
 def resample_gray8(px, w: int, h: int, ow: int, oh: int) -> bytearray:

@@ -72,6 +72,8 @@ def doc_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 MINHASH_PRIME = 4294967291  # largest prime < 2^32
+MINHASH_BANDS = 8
+MINHASH_ROWS_PER_BAND = 4
 
 
 def minhash_perm(h: Column, i: int) -> Column:
@@ -85,53 +87,51 @@ def minhash_bands(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n_bands: int = 8,
-    rows_per_band: int = 4,
 ) -> DataFrame:
-    """Per-document banded MinHash signature (b bands × r rows).
+    """Per-document banded MinHash signature (b = ``MINHASH_BANDS`` bands
+    × r = ``MINHASH_ROWS_PER_BAND`` rows).
 
     Each shingle is hashed ONCE (first 8 md5 hex chars → 32-bit int,
     engine-portable) and the b·r permutations are cheap codegen arithmetic
     over that hash (``minhash_perm``) — the standard one-hash+linear-
     permutation minhash, ~b·r× cheaper than salted re-hashing. Band b's
     key concatenates its r row minima, so a candidate needs ALL r rows of
-    some band to agree: P(candidate) = 1 − (1 − s^r)^b — at the 8×4
-    default, ~2% for Jaccard s=0.5 but ~99% for s=0.9, versus ~94% at
-    s=0.5 for the degenerate r=1 banding (the round-1 scale hazard).
+    some band to agree: P(candidate) = 1 − (1 − s^r)^b — at 8×4, ~2% for
+    Jaccard s=0.5 but ~99% for s=0.9, versus ~94% at s=0.5 for the
+    degenerate r=1 banding (the round-1 scale hazard).
     Returns (doc, band, band_min). One shuffle (groupBy doc)."""
     sh = doc_shingles(df, text_col, id_col)
     h = F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("bigint")
     hashed = sh.select("doc", h.alias("h"))
-    n_rows = n_bands * rows_per_band
+    n_rows = MINHASH_BANDS * MINHASH_ROWS_PER_BAND
     per_row = [
         F.min(minhash_perm(F.col("h"), i)).alias(f"h{i}") for i in range(n_rows)
     ]
     sig = hashed.groupBy("doc").agg(*per_row)
 
     def band_key(b: int):
-        cols = [F.col(f"h{b * rows_per_band + i}") for i in range(rows_per_band)]
+        cols = [
+            F.col(f"h{b * MINHASH_ROWS_PER_BAND + i}")
+            for i in range(MINHASH_ROWS_PER_BAND)
+        ]
         return F.concat_ws("_", *cols)
 
     bands = F.explode(
         F.array(
             *[
                 F.struct(F.lit(b).alias("band"), band_key(b).alias("band_min"))
-                for b in range(n_bands)
+                for b in range(MINHASH_BANDS)
             ]
         )
     ).alias("x")
     return sig.select("doc", bands).select("doc", "x.band", "x.band_min")
 
 
-def lsh_buckets(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
-    """Candidate buckets: (band, band_min) cells holding >1 document.
-    ``max_bucket`` caps pathological cells (boilerplate-identical corpora)."""
-    out = bands.groupBy("band", "band_min").agg(
+def lsh_buckets(bands: DataFrame) -> DataFrame:
+    """Candidate buckets: (band, band_min) cells holding >1 document."""
+    return bands.groupBy("band", "band_min").agg(
         F.count("*").alias("n_docs"), F.sort_array(F.collect_list("doc")).alias("docs")
     ).where(F.col("n_docs") > 1)
-    if max_bucket is not None:
-        out = out.where(F.col("n_docs") <= max_bucket)
-    return out
 
 
 def candidate_pairs(bands: DataFrame, max_bucket: int | None = None) -> DataFrame:
@@ -385,9 +385,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return agg.select("doc", *segs)
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 25, strict: bool = True
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Near-dup pair graph → (doc, component): component = smallest doc id
     reachable through the pair edges (the canonical keeper id).
 
@@ -403,8 +401,8 @@ def connected_components(
     planner itself (on a real cluster use reliable checkpoint() so a lost
     executor cannot orphan the truncated lineage).
 
-    ``strict``: if the graph has not converged after ``max_iter`` rounds
-    (pathological chain-shaped graphs have diameter ≈ length), raise
+    If the graph has not converged after ``max_iter`` rounds (pathological
+    chain-shaped graphs have diameter ≈ length), it raises ``ValueError``
     instead of returning silently wrong components.
 
     Docs with no pair edge do not appear (singletons are their own
@@ -422,7 +420,6 @@ def connected_components(
         .localCheckpoint()
     )
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
-    converged = False
     for _ in range(max_iter):
         nbr_min = bidir.join(labels, bidir["b"] == labels["doc"]).groupBy(
             "a"
@@ -440,22 +437,18 @@ def connected_components(
         cur_sum = new_labels.agg(F.sum("comp")).collect()[0][0]
         labels = new_labels
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur_sum
-    if strict and not converged:
-        raise ValueError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(chain-shaped graph? raise max_iter)"
-        )
-    return labels
+    raise ValueError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(chain-shaped graph? raise max_iter)"
+    )
 
 
 def drop_near_dups(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    max_iter: int = 25,
 ) -> DataFrame:
     """End-to-end near-dup removal: keep one document per connected
     component of the verified-pair graph (the component id, i.e. the
@@ -469,7 +462,7 @@ def drop_near_dups(
     genuinely under the threshold, and falls back to a shuffled anti-join
     on the id — the correct shape either way. Absence of the forced hint
     is pinned in tests/test_dedup.py."""
-    comp = connected_components(pairs, max_iter=max_iter)
+    comp = connected_components(pairs)
     losers = comp.where(F.col("doc") != F.col("comp")).select(
         F.col("doc").alias(id_col)
     )
@@ -758,13 +751,11 @@ def strip_template_lines(
     host_col: str,
     id_col: str,
     width: int = 8,
-    min_frac: float = 0.5,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Site-level boilerplate removal (RefinedWeb-style template
     stripping): a pseudo-line is a TEMPLATE for a host when it appears in
-    ≥ ``min_frac`` of that host's documents (hosts with < ``min_docs``
-    docs are never stripped — one page is not a template sample). Every
+    ≥ half of that host's documents (hosts with < 2 docs are never
+    stripped — one page is not a template sample). Every
     occurrence of a template line is removed from every doc of that host;
     per-doc output rejoins the surviving lines in order:
     (id, host, n_lines, n_template, text_clean).
@@ -812,11 +803,11 @@ def strip_template_lines(
     templates = (
         line_docs.join(host_docs, host_col)
         .where(
-            (F.col("_n_host_docs") >= min_docs)
+            (F.col("_n_host_docs") >= 2)
             & (
                 F.col("_n_docs_with").cast("double")
                 / F.col("_n_host_docs").cast("double")
-                >= min_frac
+                >= 0.5
             )
         )
         .select(F.col(host_col), "line", F.lit(True).alias("_is_template"))

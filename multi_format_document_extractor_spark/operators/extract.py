@@ -62,7 +62,7 @@ EXTRACT_DDL = (
     "in_bytes long, checksum long, truncated boolean, encoding string"
 )
 
-DEFAULT_SALT_BUCKETS = 4096  # >> max executor count; cheap modulo key
+SALT_BUCKETS = 4096  # >> max executor count; cheap modulo key
 
 
 def escalation_key(
@@ -129,9 +129,9 @@ def _make_extract_batches(max_bytes: int | None, escalate: frozenset | None):
     return _extract_batches
 
 
-def salt_key(url_col: Column, buckets: int = DEFAULT_SALT_BUCKETS) -> Column:
+def salt_key(url_col: Column) -> Column:
     """Skew-breaking shuffle key: uniform over url hash, independent of host."""
-    return F.pmod(F.xxhash64(url_col), F.lit(buckets))
+    return F.pmod(F.xxhash64(url_col), F.lit(SALT_BUCKETS))
 
 
 def extract_pages(
@@ -176,7 +176,7 @@ SPANS_DDL = (
 )
 
 
-def extract_spans(pages: DataFrame, profile: str = "default") -> DataFrame:
+def extract_spans(pages: DataFrame) -> DataFrame:
     """Per-block PROVENANCE spans for html pages: one row per scanner
     block with its [src_start, src_end) extent in the decoded document
     and the ``kept`` verdict of the same ``classify_block`` rule
@@ -213,7 +213,7 @@ def extract_spans(pages: DataFrame, profile: str = "default") -> DataFrame:
         for pdf in batches:
             rows = []
             for url, payload in zip(pdf["url"], pdf["html"]):
-                spans, enc = html_block_spans(bytes(payload), profile)
+                spans, enc = html_block_spans(bytes(payload))
                 for i, s, e, kept, n in spans:
                     rows.append(
                         {

@@ -25,39 +25,39 @@ def _pick_first(scored: DataFrame, key_cols: list[str], order) -> DataFrame:
     )
 
 
-def majority_vote(preds: DataFrame, key: str = "key", field: str = "field") -> DataFrame:
+def majority_vote(preds: DataFrame, key: str = "key") -> DataFrame:
     """A7 (ensemble.py:296-343): winner = most votes; confidence = votes/N;
     ties broken by value ascending."""
-    votes = preds.groupBy(key, field, "value").agg(F.count("*").alias("votes"))
-    totals = preds.groupBy(key, field).agg(F.count("*").alias("n_preds"))
+    votes = preds.groupBy(key, "field", "value").agg(F.count("*").alias("votes"))
+    totals = preds.groupBy(key, "field").agg(F.count("*").alias("n_preds"))
     winner = _pick_first(
-        votes, [key, field], [F.col("votes").desc(), F.col("value").asc()]
+        votes, [key, "field"], [F.col("votes").desc(), F.col("value").asc()]
     )
-    return winner.join(totals, [key, field]).select(
+    return winner.join(totals, [key, "field"]).select(
         key,
-        field,
+        "field",
         "value",
         "votes",
         rnd(F.col("votes") / F.col("n_preds"), 4).alias("vote_conf"),
     )
 
 
-def max_confidence(preds: DataFrame, key: str = "key", field: str = "field") -> DataFrame:
+def max_confidence(preds: DataFrame, key: str = "key") -> DataFrame:
     """A8 (ensemble.py:249-294): value from the most-confident model."""
     return _pick_first(
-        preds.select(key, field, "value", "conf"),
-        [key, field],
+        preds.select(key, "field", "value", "conf"),
+        [key, "field"],
         [F.col("conf").desc(), F.col("value").asc()],
     )
 
 
-def weighted_vote(preds: DataFrame, key: str = "key", field: str = "field") -> DataFrame:
+def weighted_vote(preds: DataFrame, key: str = "key") -> DataFrame:
     """A9 (ensemble.py:191-247): per value Σ weight·conf, argmax."""
-    scored = preds.groupBy(key, field, "value").agg(
+    scored = preds.groupBy(key, "field", "value").agg(
         rnd(F.sum(F.col("weight") * F.col("conf")), 6).alias("score")
     )
     return _pick_first(
-        scored, [key, field], [F.col("score").desc(), F.col("value").asc()]
+        scored, [key, "field"], [F.col("score").desc(), F.col("value").asc()]
     )
 
 
@@ -65,7 +65,6 @@ def apply_corrections(
     review: DataFrame,
     corrections: DataFrame,
     key: str = "key",
-    field: str = "field",
 ) -> DataFrame:
     """J3: MERGE-INTO semantics over the review table.
 
@@ -88,17 +87,17 @@ def apply_corrections(
     """
     c = F.broadcast(
         _pick_first(
-            corrections.select(key, field, "corrected_value", "annotator_id"),
-            [key, field],
+            corrections.select(key, "field", "corrected_value", "annotator_id"),
+            [key, "field"],
             [F.col("corrected_value").asc(), F.col("annotator_id").asc()],
         )
     )
     matched = F.col("corrected_value").isNotNull()
     return (
-        review.join(c, [key, field], "left")
+        review.join(c, [key, "field"], "left")
         .select(
             key,
-            field,
+            "field",
             F.coalesce("corrected_value", "value").alias("value"),
             F.when(matched, F.lit(1.0)).otherwise(F.col("conf")).alias("conf"),
             matched.cast("int").alias("corrected"),

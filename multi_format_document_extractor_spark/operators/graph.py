@@ -48,14 +48,12 @@ def _q20(c: Column) -> Column:
 
 def host_pagerank(
     edges: DataFrame,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-    weight_col: str = "n_links",
     n_iter: int = 3,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Weighted PageRank over a host edge list, ``n_iter`` fixed Jacobi
-    iterations from the uniform start: r₀ = 1/N,
+    """Weighted PageRank over a (src_host, dst_host, n_links) host edge
+    list, ``n_iter`` fixed Jacobi iterations from the uniform start:
+    r₀ = 1/N,
     rₖ₊₁(h) = (1−d)/N + d·Σ_{s→h} q₂₀(rₖ(s)·w(s,h)/out(s)).
 
     Returns (host, rank) with rank rounded to 6 dp (the rounding
@@ -63,9 +61,9 @@ def host_pagerank(
     the edge checkpoint) — legitimate for an iterative operator, same
     class as connected_components' convergence scalars."""
     e = edges.select(
-        F.col(src_col).alias("_src"),
-        F.col(dst_col).alias("_dst"),
-        F.col(weight_col).cast("bigint").alias("_w"),
+        F.col("src_host").alias("_src"),
+        F.col("dst_host").alias("_dst"),
+        F.col("n_links").cast("bigint").alias("_w"),
     ).localCheckpoint(eager=True)
     hosts = (
         e.select(F.col("_src").alias("host"))

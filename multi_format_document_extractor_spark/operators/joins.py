@@ -45,13 +45,12 @@ def asof_join(
     ts_col: str = "ts",
     by_cols: Sequence[str] = ("user_id",),
     value_cols: Sequence[str] = ("state_value",),
-    state_ts_col: str = "state_ts",
 ) -> DataFrame:
     """For each ``left`` row, the latest ``right`` row with
     ``right.ts <= left.ts`` on the same ``by_cols`` key (inclusive ties).
 
     Returns all ``left`` columns plus ``value_cols`` (NULL when no state
-    precedes the row) and ``state_ts_col`` (the matched state's
+    precedes the row) and ``state_ts`` (the matched state's
     timestamp, NULL likewise). ``right`` must be unique per
     (by, ts) — pre-aggregate if it is not.
 
@@ -116,7 +115,7 @@ def asof_join(
         .select(
             *[F.col(c) for c in left.columns],
             *[F.col("_carried")[v].alias(v) for v in vals],
-            F.col("_carried")[_STS].alias(state_ts_col),
+            F.col("_carried")[_STS].alias("state_ts"),
         )
     )
 

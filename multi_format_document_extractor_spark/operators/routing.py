@@ -34,16 +34,15 @@ def two_pass_escalation(
     expensive: Callable[[DataFrame], DataFrame],
     conf_col: str = "confidence",
     threshold: float = ESCALATION_THRESHOLD,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pass 1: ``cheap`` over everything → confidence. Pass 2: ``expensive``
     re-processes only rows with confidence < threshold. Adds a ``mode``
     column ('rule_based' | 'escalated') mirroring the reference's
     ExtractionMetrics.mode (src/hybrid_pipeline.py:40-51).
 
-    ``materialize`` localCheckpoints pass 1 before the two branches read
-    it: both the kept and the escalated branch reference pass1, and
-    without a materialization boundary Spark re-executes the full cheap
+    Pass 1 is localCheckpointed before the two branches read it: both
+    the kept and the escalated branch reference pass1, and without a
+    materialization boundary Spark re-executes the full cheap
     lineage — at corpus scale, the whole scan + Arrow + Python extraction
     — once per branch (round-1 VERDICT #4). localCheckpoint (rather than
     persist) both truncates the plan AND leaves cleanup to the
@@ -51,11 +50,8 @@ def two_pass_escalation(
     handle to leak. The in-session boundary stands in for SURVEY §3.2's
     job-level strategy; a multi-job deployment would write pass 1 to the
     warehouse and read it back (sinks.Warehouse), which also survives
-    executor loss. Set ``materialize=False`` only when ``cheap`` is known
-    to be a trivial native projection."""
-    pass1 = cheap(df)
-    if materialize:
-        pass1 = pass1.localCheckpoint()
+    executor loss."""
+    pass1 = cheap(df).localCheckpoint()
     kept = pass1.where(F.col(conf_col) >= threshold).withColumn(
         "mode", F.lit("rule_based")
     )

@@ -105,7 +105,6 @@ def exact_value_quantiles(
     df: DataFrame,
     by_col: str,
     value_col: str,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """EXACT per-group quantiles of an integer-domain column via the
     value-histogram cumsum — the skew-proof exact alternative to
@@ -117,7 +116,7 @@ def exact_value_quantiles(
     cumulative count reaches ceil(q·n) (type-1 / lower inclusive-rank —
     deterministic under ties by construction). A naive per-group rank
     window would sort corpus-cardinality rows on |groups| tasks.
-    Output: (by_col, n_docs, p<q·100>...). NULL values are excluded up
+    Output: (by_col, n_docs, p50, p90, p99). NULL values are excluded up
     front — quantiles are defined over present values only (an ascending
     Spark window sorts NULLS FIRST while DuckDB defaults NULLS LAST, so
     letting NULLs in would both inflate low quantiles and diverge from
@@ -153,5 +152,5 @@ def exact_value_quantiles(
 
     return cum.groupBy(by_col).agg(
         F.max("n").cast("bigint").alias("n_docs"),
-        *[pick(q) for q in qs],
+        *[pick(q) for q in (0.5, 0.9, 0.99)],
     )

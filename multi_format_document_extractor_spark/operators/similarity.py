@@ -43,22 +43,19 @@ def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Exact cosine top-k per query: broadcast the (small) query set against
+    """Exact cosine top-k per query over (vec_id, embedding) vectors and
+    (query_id, query_vec) queries: broadcast the (small) query set against
     the corpus — a single scan with no shuffle of the big side; the top-k is
     a per-query window (TakeOrdered under AQE). Deterministic tiebreak on id."""
     joined = vectors.crossJoin(F.broadcast(queries))
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        rnd(cosine(F.col(vec_col), F.col(query_vec_col)), 4).alias("score"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        rnd(cosine(F.col("embedding"), F.col("query_vec")), 4).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -102,13 +99,12 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str = "cell",
-    centroid_vec_col: str = "cv",
     n_best: int = 1,
 ) -> DataFrame:
     """Assign each vector to its ``n_best`` nearest centroids by
     dot-product rank (IVF coarse quantizer; n_best=1 is the storage
-    assignment, n_best=nprobe is the query-side probe set).
+    assignment, n_best=nprobe is the query-side probe set). ``centroids``
+    is (cell, cv).
 
     Map-side only, by construction: the K centroids are collected to the
     driver (a K-row action — the literal-inlining analog of a broadcast,
@@ -126,18 +122,16 @@ def ivf_assign(
     vectors + ``cell`` (one row per kept cell; nprobe>1 explodes the
     probe slice map-side — a Generate node, still no Exchange)."""
     cents = sorted(
-        centroids.select(cell_col, centroid_vec_col).collect(),
-        key=lambda r: r[cell_col],
+        centroids.select("cell", "cv").collect(),
+        key=lambda r: r["cell"],
     )
     if not cents:
         raise ValueError("ivf_assign: empty centroid set")
     lit_cents = F.array(
         *[
             F.struct(
-                F.lit(int(r[cell_col])).alias("cell"),
-                F.array(*[F.lit(float(x)) for x in r[centroid_vec_col]]).alias(
-                    "cv"
-                ),
+                F.lit(int(r["cell"])).alias("cell"),
+                F.array(*[F.lit(float(x)) for x in r["cv"]]).alias("cv"),
             )
             for r in cents
         ]
@@ -159,33 +153,30 @@ def ivf_assign(
     return vectors.select(
         F.col(id_col),
         F.col(vec_col),
-        F.explode(probe).alias(cell_col),
+        F.explode(probe).alias("cell"),
     )
 
 
-def quantize_vec(vec: Column, scale: int = 1024) -> Column:
-    """Snap every coordinate to a multiple of 1/scale (scale a power of
-    two). This is what makes distributed k-means EXACTLY reproducible:
-    sums of doubles are order-dependent in general (each add can round),
-    but sums of fixed-point values k/1024 with |k| bounded stay exactly
+def quantize_vec(vec: Column) -> Column:
+    """Snap every coordinate to a multiple of 1/1024. This is what makes
+    distributed k-means EXACTLY reproducible: sums of doubles are
+    order-dependent in general (each add can round), but sums of
+    fixed-point values k/1024 with |k| bounded stay exactly
     representable, so ANY summation order — Spark's partial aggregation
     tree, DuckDB's serial loop — yields the bit-identical total, and
     avg = exact_sum / n is then a single deterministic IEEE division.
     The quantization error (≤ 2⁻¹¹ per coordinate) is far below any
     embedding model's noise floor. Uses the repo's portable rounding
-    contract (floor(x·s + 0.5)/s — functions/rounding.py) with a
-    power-of-two s, because ONLY a binary scale makes the quantized
+    contract (floor(x·s + 0.5)/s — functions/rounding.py) with the
+    power-of-two s = 1024, because ONLY a binary scale makes the quantized
     values exactly representable (k/1000 is not a binary fraction)."""
-    s = float(scale)
-    return F.transform(vec, lambda x: F.floor(x * s + 0.5) / F.lit(s))
+    return F.transform(vec, lambda x: F.floor(x * 1024.0 + 0.5) / F.lit(1024.0))
 
 
 def kmeans_centroids(
     vectors: DataFrame,
     init_centroids: DataFrame,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Lloyd's k-means refinement of an IVF coarse quantizer, Spark-shaped:
@@ -212,12 +203,10 @@ def kmeans_centroids(
         F.col("cell"), quantize_vec(F.col("cv")).alias("cv")
     )
     for _ in range(n_iter):
-        assigned = ivf_assign(
-            vectors, cents, id_col=id_col, vec_col=vec_col, n_best=1
-        )
+        assigned = ivf_assign(vectors, cents, n_best=1)
         means = assigned.groupBy("cell").agg(
             *[
-                F.avg(F.element_at(F.col(vec_col), d)).alias(f"m{d}")
+                F.avg(F.element_at(F.col("embedding"), d)).alias(f"m{d}")
                 for d in range(1, dim + 1)
             ]
         )
@@ -241,10 +230,6 @@ def ivf_topk(
     queries: DataFrame,
     centroids: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF approximate top-k: score cosine only inside the query's
@@ -255,29 +240,25 @@ def ivf_topk(
     because every corpus vector lives in exactly one cell). Candidate
     cost scales as nprobe/K of the corpus — the standard IVF
     recall-vs-cost dial."""
-    cand = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    cand = ivf_assign(vectors, centroids)
     qcells = ivf_assign(
         queries,
         centroids,
-        id_col=query_id_col,
-        vec_col=query_vec_col,
+        id_col="query_id",
+        vec_col="query_vec",
         n_best=nprobe,
     )
     joined = cand.join(
-        F.broadcast(
-            qcells.select(
-                query_id_col, "cell", F.col(query_vec_col)
-            )
-        ),
+        F.broadcast(qcells.select("query_id", "cell", F.col("query_vec"))),
         "cell",
     )
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        rnd(cosine(F.col(vec_col), F.col(query_vec_col)), 4).alias("score"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        rnd(cosine(F.col("embedding"), F.col("query_vec")), 4).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -289,8 +270,6 @@ def semdedup(
     vectors: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell: int | None = None,
 ) -> DataFrame:
     """Semantic deduplication over embeddings (SemDeDup, Abbas et al.
@@ -332,19 +311,19 @@ def semdedup(
     Single-corpus-Exchange shape pinned in
     tests/test_plans.py. Returns (id, cell, c_sim, kept) for the full
     input — the kept flag is the dedup verdict."""
-    a = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    a = ivf_assign(vectors, centroids)
     withsim = (
         a.join(F.broadcast(centroids.select("cell", "cv")), "cell")
         .select(
-            F.col(id_col),
-            F.col(vec_col),
+            F.col("vec_id"),
+            F.col("embedding"),
             F.col("cell"),
-            rnd(cosine(F.col(vec_col), F.col("cv")), 4).alias("c_sim"),
+            rnd(cosine(F.col("embedding"), F.col("cv")), 4).alias("c_sim"),
             # row norm computed ONCE and carried through the self-join:
             # the pair cosine then costs one dot fold instead of three
             # (norm(x) per pair is the identical IEEE value, so rounding
             # and the oracle are unaffected)
-            norm(F.col(vec_col)).alias("_nrm"),
+            norm(F.col("embedding")).alias("_nrm"),
         )
         # the ONE corpus shuffle; every consumer below reuses it
         .repartition(F.col("cell"))
@@ -359,7 +338,7 @@ def semdedup(
                 "left_semi",
             )
             .select(
-                F.col(id_col), "cell", "c_sim", F.lit(True).alias("kept")
+                F.col("vec_id"), "cell", "c_sim", F.lit(True).alias("kept")
             )
         )
         withsim = withsim.join(
@@ -369,15 +348,15 @@ def semdedup(
         )
     l = withsim.select(
         F.col("cell"),
-        F.col(id_col).alias("_xa"),
-        F.col(vec_col).alias("_va"),
+        F.col("vec_id").alias("_xa"),
+        F.col("embedding").alias("_va"),
         F.col("c_sim").alias("_ca"),
         F.col("_nrm").alias("_na"),
     )
     r = withsim.select(
         F.col("cell"),
-        F.col(id_col).alias("_xb"),
-        F.col(vec_col).alias("_vb"),
+        F.col("vec_id").alias("_xb"),
+        F.col("embedding").alias("_vb"),
         F.col("c_sim").alias("_cb"),
         F.col("_nrm").alias("_nb"),
     )
@@ -402,14 +381,14 @@ def semdedup(
         l.join(r, "cell")
         .groupBy(
             F.col("cell"),
-            F.col("_xa").alias(id_col),
+            F.col("_xa").alias("vec_id"),
             F.col("_ca").alias("c_sim"),
         )
         .agg((~F.max(dropping)).alias("kept"))
-        .select(F.col(id_col), "cell", "c_sim", "kept")
+        .select(F.col("vec_id"), "cell", "c_sim", "kept")
     )
     if skipped is not None:
-        out = out.unionByName(skipped.select(id_col, "cell", "c_sim", "kept"))
+        out = out.unionByName(skipped.select("vec_id", "cell", "c_sim", "kept"))
     return out
 
 
@@ -431,26 +410,18 @@ def pq_codebook_val(i: int, j: int, p: int) -> float:
     return (((j * (p + 2) + i) % 17) - 8) / 32.0
 
 
-def pq_codebooks(
-    m: int = PQ_M, ksub: int = PQ_KSUB, dsub: int = PQ_DSUB
-) -> list[list[list[float]]]:
+def pq_codebooks() -> list[list[list[float]]]:
     return [
-        [[pq_codebook_val(i, j, p) for p in range(dsub)] for j in range(ksub)]
-        for i in range(m)
+        [[pq_codebook_val(i, j, p) for p in range(PQ_DSUB)] for j in range(PQ_KSUB)]
+        for i in range(PQ_M)
     ]
 
 
 def pq_code_table(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    dsub: int = PQ_DSUB,
     codebooks: list[list[list[float]]] | None = None,
-    id_type: str = "bigint",
 ) -> DataFrame:
-    """(id, code_key, recon, recon_err) via ONE Arrow-vectorized
+    """(vec_id, code_key, recon, recon_err) via ONE Arrow-vectorized
     ``mapInPandas`` stage — the PQ encode/decode kernel.
 
     Why not native expressions: the M×ksub×dsub distance grid is ~10⁴
@@ -475,9 +446,7 @@ def pq_code_table(
     import numpy as np
     import pandas as pd
 
-    cbn = np.asarray(
-        codebooks or pq_codebooks(m, ksub, dsub), dtype=np.float64
-    )
+    cbn = np.asarray(codebooks or pq_codebooks(), dtype=np.float64)
 
     def gen(batches):
         for pdf in batches:
@@ -485,7 +454,7 @@ def pq_code_table(
             if n == 0:
                 yield pd.DataFrame(
                     {
-                        id_col: pd.Series([], dtype="int64"),
+                        "vec_id": pd.Series([], dtype="int64"),
                         "code_key": pd.Series([], dtype="object"),
                         "recon": pd.Series([], dtype="object"),
                         "recon_err": pd.Series([], dtype="float64"),
@@ -493,30 +462,30 @@ def pq_code_table(
                 )
                 continue
             x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
-            codes = np.empty((n, m), dtype=np.int64)
-            recon = np.empty((n, m * dsub), dtype=np.float64)
+            codes = np.empty((n, PQ_M), dtype=np.int64)
+            recon = np.empty((n, PQ_M * PQ_DSUB), dtype=np.float64)
             err = None
             rows = np.arange(n)
-            for i in range(m):
-                xs = x[:, i * dsub : (i + 1) * dsub]
+            for i in range(PQ_M):
+                xs = x[:, i * PQ_DSUB : (i + 1) * PQ_DSUB]
                 diff = xs[:, None, :] - cbn[i][None, :, :]
                 sq = diff * diff
                 # explicit left-associated accumulation — the oracle's
                 # `(a1-b1)*(a1-b1) + (a2-b2)*(a2-b2) + ...` chain
                 d = sq[:, :, 0]
-                for p in range(1, dsub):
+                for p in range(1, PQ_DSUB):
                     d = d + sq[:, :, p]
                 j = d.argmin(axis=1)  # first min == (dist, j) tiebreak
                 codes[:, i] = j
-                recon[:, i * dsub : (i + 1) * dsub] = cbn[i][j]
+                recon[:, i * PQ_DSUB : (i + 1) * PQ_DSUB] = cbn[i][j]
                 best = d[rows, j]
                 err = best if err is None else err + best
             rerr = np.floor(np.sqrt(err) * 10000.0 + 0.5) / 10000.0
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "code_key": [
                         "-".join(str(int(c)) for c in row) for row in codes
                     ],
@@ -525,10 +494,10 @@ def pq_code_table(
                 }
             )
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select("vec_id", "embedding").mapInPandas(
         gen,
         schema=(
-            f"{id_col} {id_type}, code_key string, "
+            "vec_id bigint, code_key string, "
             "recon array<double>, recon_err double"
         ),
     )
@@ -536,38 +505,26 @@ def pq_code_table(
 
 def pq_encode(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    dsub: int = PQ_DSUB,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Product-quantization encode: each vector compresses to M codes
     (here 16×5 bits vs 64×4-byte floats — a 25.6× storage cut;
     production m=8-16 / ksub=256 is the same shape at 8-16
     bytes/vector). Output:
-    (id, code_key, recon_err) where recon_err = ‖vec − decode(codes)‖ —
+    (vec_id, code_key, recon_err) where recon_err = ‖vec − decode(codes)‖ —
     the quantization-quality column a corpus owner monitors. Map-side
     only: one scan → one Arrow-vectorized stage (``pq_code_table``), no
     Exchange (plan-pinned). ``codebooks`` (M × ksub × dsub) injects a
     data-derived or trained codebook; default is the formula grid."""
-    return pq_code_table(
-        vectors, id_col, vec_col, m, ksub, dsub, codebooks
-    ).select(id_col, "code_key", "recon_err")
+    return pq_code_table(vectors, codebooks).select(
+        "vec_id", "code_key", "recon_err"
+    )
 
 
 def pq_adc_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    dsub: int = PQ_DSUB,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: the corpus side is
@@ -580,22 +537,20 @@ def pq_adc_topk(
     ``brute_force_topk``: no corpus shuffle, one slim
     (query_id, vec_id, score) exchange into the per-query
     WindowGroupLimit."""
-    coded = pq_code_table(
-        vectors, id_col, vec_col, m, ksub, dsub, codebooks
-    ).select(id_col, "recon")
+    coded = pq_code_table(vectors, codebooks).select("vec_id", "recon")
     joined = coded.crossJoin(F.broadcast(queries))
-    qv = F.col(query_vec_col)
+    qv = F.col("query_vec")
     # the fold's left-associated g=1..dim chain matches the oracle SQL's
     # spelled-out `recon[g]*qv[g] + ...` chains term for term (same
     # contract as ann_topk's cosine)
     score = cosine(F.col("recon"), qv)
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
+        F.col("query_id"),
+        F.col("vec_id"),
         rnd(score, 4).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k
@@ -604,14 +559,13 @@ def pq_adc_topk(
 
 def lsh_ann_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     dims: tuple[int, ...] = lsh_dims(8),
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Approximate near-neighbor pairs: bucket by sign-LSH, score cosine
-    only within buckets. One shuffle on the bucket key.
+    """Approximate near-neighbor (a, b, score) pairs of (vec_id,
+    embedding) vectors: bucket by sign-LSH, score cosine only within
+    buckets. One shuffle on the bucket key.
 
     Two scale dials (both required at corpus scale — the round-2 fixed
     8-bit/256-bucket version was O(n²/256) within buckets, ~10¹⁶ candidate
@@ -626,9 +580,9 @@ def lsh_ann_pairs(
       vectors inside them are still caught by exact dedup on the vector
       hash. Mirrors ``dedup.candidate_pairs(max_bucket=...)``."""
     b = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_lsh_bucket(F.col(vec_col), dims=dims).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        sign_lsh_bucket(F.col("embedding"), dims=dims).alias("bucket"),
     )
     if max_bucket is not None:
         ok = (
@@ -639,10 +593,10 @@ def lsh_ann_pairs(
         )
         b = b.join(ok, "bucket", "left_semi")
     l = b.select(
-        F.col("bucket"), F.col(id_col).alias("a"), F.col(vec_col).alias("va")
+        F.col("bucket"), F.col("vec_id").alias("a"), F.col("embedding").alias("va")
     )
     r = b.select(
-        F.col("bucket"), F.col(id_col).alias("b"), F.col(vec_col).alias("vb")
+        F.col("bucket"), F.col("vec_id").alias("b"), F.col("embedding").alias("vb")
     )
     return (
         l.join(r, "bucket")
@@ -661,13 +615,6 @@ def pq_rerank_topk(
     queries: DataFrame,
     k: int = 10,
     shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    dsub: int = PQ_DSUB,
     codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Two-stage ANN: ADC over PQ codes produces a ``shortlist`` of
@@ -682,30 +629,20 @@ def pq_rerank_topk(
     (equi-join on id, no corpus shuffle); the only hash Exchanges are
     the two per-query windows — both over slim score rows."""
     cand = pq_adc_topk(
-        vectors,
-        queries,
-        k=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        m=m,
-        ksub=ksub,
-        dsub=dsub,
-        codebooks=codebooks,
-    ).select(query_id_col, id_col)
-    exact_in = vectors.join(F.broadcast(cand), id_col)
+        vectors, queries, k=shortlist, codebooks=codebooks
+    ).select("query_id", "vec_id")
+    exact_in = vectors.join(F.broadcast(cand), "vec_id")
     joined = exact_in.join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)),
-        query_id_col,
+        F.broadcast(queries.select("query_id", "query_vec")),
+        "query_id",
     )
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        rnd(cosine(F.col(vec_col), F.col(query_vec_col)), 4).alias("score"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        rnd(cosine(F.col("embedding"), F.col("query_vec")), 4).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k

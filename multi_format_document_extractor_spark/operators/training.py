@@ -62,8 +62,6 @@ def leakage_free_split(
     df: DataFrame,
     components: DataFrame,
     id_col: str = "doc_id",
-    comp_doc_col: str = "doc",
-    comp_col: str = "comp",
     val_pct: int = 1,
     test_pct: int = 1,
 ) -> DataFrame:
@@ -80,6 +78,8 @@ def leakage_free_split(
     back to their own id, so the assignment degrades exactly to
     ``hash_split`` when the corpus is dup-free.
 
+    ``components`` is ``dedup.connected_components``' (doc, comp).
+
     Scale shape: ONE left equi-join corpus × component table on the id
     (bucket-co-located at scale; the component side is near-dup-subset-
     sized, which on web corpora can be corpus-scale — never hint-
@@ -87,7 +87,7 @@ def leakage_free_split(
     only when genuinely small), then the split itself is a map-side md5
     CASE. Adds ``rep`` (split key) and ``split`` columns."""
     comp = components.select(
-        F.col(comp_doc_col).alias(id_col), F.col(comp_col).alias("_comp")
+        F.col("doc").alias(id_col), F.col("comp").alias("_comp")
     )
     out = (
         df.join(comp, id_col, "left")
@@ -103,26 +103,22 @@ def quality_gate(
     df: DataFrame,
     text_col: str,
     min_quality: float = 0.5,
-    langs: list[str] | None = None,
     min_tokens: int = 10,
     max_tokens: int = 1_000_000,
 ) -> DataFrame:
-    """Pretraining quality gate: composite quality floor, language allow-
-    list (heuristic lang_id), and token-count band. Adds the enrichment
-    columns (quality, lang_pred, n_tokens) and filters — all inside one
-    codegen span, evaluated at the scan when the source is columnar."""
+    """Pretraining quality gate: composite quality floor and token-count
+    band. Adds the enrichment columns (quality, lang_pred, n_tokens) and
+    filters — all inside one codegen span, evaluated at the scan when the
+    source is columnar."""
     t = F.col(text_col)
     out = df.withColumn("quality", TS.quality_score(t)).withColumn(
         "lang_pred", TS.lang_id(t)
     ).withColumn("n_tokens", TS.token_count_ws(t))
-    out = out.where(
+    return out.where(
         (F.col("quality") >= min_quality)
         & (F.col("n_tokens") >= min_tokens)
         & (F.col("n_tokens") <= max_tokens)
     )
-    if langs is not None:
-        out = out.where(F.col("lang_pred").isin(langs))
-    return out
 
 
 def dedup_keepers(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -297,7 +293,6 @@ def token_budget_sample(
     id_col: str,
     token_col: str,
     budget: int,
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Per-group TOKEN-budget quota (the corpus-mixing primitive: hit a
     target token mixture across sources/languages, DoReMi/Pile-style
@@ -316,15 +311,14 @@ def token_budget_sample(
     partitioned by the group alone would run each group's cumsum on ONE
     task — a skew bomb when one language owns half the corpus. Instead
     the cumsum is two-level: (1) a window per (group, md5-bucket) —
-    n_buckets-way parallel within every group; (2) per-bucket token
-    totals (a map-side-combined agg, ≤ |groups|·n_buckets rows) turned
+    16-way parallel within every group; (2) per-bucket token
+    totals (a map-side-combined agg, ≤ |groups|·16 rows) turned
     into exclusive bucket offsets by a trivially small window and
     broadcast-joined back. ``cum_before = bucket_offset + within-bucket
     cumsum − own tokens`` reproduces the exact global (bucket, md5, id)
     order — any fixed deterministic order is an equally valid sample, so
-    bucket-major order costs nothing. Scale n_buckets to the cluster
-    (cores per group's data share)."""
-    df2 = df.withColumn("_b", hash_bucket(F.col(id_col), n_buckets))
+    bucket-major order costs nothing."""
+    df2 = df.withColumn("_b", hash_bucket(F.col(id_col), 16))
     w_in = (
         Window.partitionBy(group_col, "_b")
         .orderBy(
@@ -619,28 +613,25 @@ def lm_quality_score(
 
 def assemble_training_corpus(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_quality: float = 0.5,
-    langs: list[str] | None = None,
     min_tokens: int = 10,
     max_tokens: int = 1_000_000,
     pack_budget: int | None = None,
 ) -> DataFrame:
-    """The composed corpus-assembly chain: quality gate → exact-dedup
-    keepers → deterministic split (→ optional sequence packing)."""
+    """The composed corpus-assembly chain over (doc_id, text) documents:
+    quality gate → exact-dedup keepers → deterministic split (→ optional
+    sequence packing)."""
     out = quality_gate(
         docs,
-        text_col,
+        "text",
         min_quality=min_quality,
-        langs=langs,
         min_tokens=min_tokens,
         max_tokens=max_tokens,
     )
-    out = dedup_keepers(out, text_col, id_col)
-    out = hash_split(out, id_col)
+    out = dedup_keepers(out, "text", "doc_id")
+    out = hash_split(out, "doc_id")
     if pack_budget is not None:
-        out = pack_sequences(out, id_col, "n_tokens", pack_budget)
+        out = pack_sequences(out, "doc_id", "n_tokens", pack_budget)
     return out
 
 

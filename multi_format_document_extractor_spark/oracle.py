@@ -1188,28 +1188,26 @@ def extract_html(
 
 
 def html_block_spans(
-    payload: bytes, profile: str = "default"
+    payload: bytes,
 ) -> tuple[list[tuple[int, int, int, bool, int]], str]:
     """Per-block PROVENANCE spans for an HTML page: for every block the
     scanner segments, its (idx, src_start, src_end, kept, n_chars) where
     [src_start, src_end) is the block's extent in the DECODED document
     (first contributing source segment to last) and ``kept`` applies the
-    same ``classify_block`` rule as extraction. This is the answer to
-    "where in the page did this extracted text come from" — the span
+    same ``classify_block`` rule as extraction under the "default"
+    profile. This is the answer to "where in the page did this
+    extracted text come from" — the span
     side of the north rule's text/spans contract, and what makes audits,
     highlighting, and diffing against the raw page possible downstream.
     Separate opt-in path: ``extract_html`` itself is untouched (its
     byte-identity contract does not admit extra per-block work like
     computing text for blocks the short-skip elides)."""
-    ld_max, min_chars, td_min = PROFILES[profile]
     data, enc = decode_web(payload)
     blocks = _scan_blocks(data)
     out = []
     for i, b in enumerate(blocks):
         t = b.text()
-        kept = classify_block(
-            len(t), b.link_chars, b.n_tags, ld_max, min_chars, td_min
-        )
+        kept = classify_block(len(t), b.link_chars, b.n_tags)
         out.append((i, b.src_start, b.src_end, kept, len(t)))
     return out, enc
 
@@ -3519,14 +3517,12 @@ def _png_encode(
     return out + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
 
 
-def png_encode_gray8(
-    px, w: int, h: int, filter_types: list[int] | None = None
-) -> bytes:
+def png_encode_gray8(px, w: int, h: int) -> bytes:
     """Row-major 8-bit grayscale pixels → a REAL PNG any standard reader
     decodes (the pixel-level encoder half; render_png layers text on top).
     Also the canonical output container for resized rasters
     (multimodal/media.resize_image re-encodes through here)."""
-    return _png_encode(px, w, h, 0, None, filter_types)
+    return _png_encode(px, w, h, 0)
 
 
 # ---------------------------------------------------------------------------

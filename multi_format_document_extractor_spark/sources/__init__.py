@@ -1,2 +1,1 @@
 from .pages import read_pages, with_format  # noqa: F401
-from .testdata import load_table, register_views  # noqa: F401

@@ -164,14 +164,12 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_dedup_events(
-    spark: SparkSession, sf_dir: str, lateness: str = "30 minutes"
-) -> DataFrame:
+def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: collapse repeated (user, event_type) events
     inside a 5-minute bucket to their first occurrence — the streaming form
     of exact dedup (operators/dedup.exact_dedup_groups is the batch corpus
     form). ``dropDuplicates`` under a watermark bounds the dedup state at
-    unbounded scale: keys older than ``lateness`` behind the max event time
+    unbounded scale: keys older than 30 minutes behind the max event time
     are evicted, so state is O(keys-per-lateness-window), never O(stream).
     A duplicate arriving later than the watermark would re-emit (the
     standard streaming-dedup contract — the warehouse anti-join is the
@@ -181,7 +179,7 @@ def streaming_dedup_events(
     name = f"dedup_{uuid.uuid4().hex[:8]}"
     stream = spark.readStream.schema(EVENTS_DDL).parquet(_stage_dir(sf_dir))
     dd = (
-        stream.withWatermark("ts", lateness)
+        stream.withWatermark("ts", "30 minutes")
         .select(
             "user_id",
             "event_type",

@@ -154,7 +154,15 @@ def test_escalation_table_domain_covers_every_extracted_format(corpus_rows):
     escalate."""
     from multi_format_document_extractor_spark import oracle
 
-    formats = {v for k, v in vars(oracle).items() if k.startswith("FORMAT_")}
+    # the magic table's formats plus the verdicts of sniff_format's probes
+    # (markup, CSV shape, text) and its fallback
+    probes = {
+        oracle.FORMAT_HTML,
+        oracle.FORMAT_CSV,
+        oracle.FORMAT_TEXT,
+        oracle.FORMAT_UNKNOWN,
+    }
+    formats = {m.format for m in oracle.MAGIC_FORMATS} | probes
     assert formats == set(api.SOURCE_CONFIDENCE)
     assert {oracle.extract(r.html).format for r in corpus_rows} <= formats
 

@@ -293,6 +293,12 @@ def test_sniff_media_riff_forms():
     assert sniff_media(b"RIFF\x00\x00\x00\x00WEBPVP8 ") == "image/webp"
     assert sniff_media(b"RIFF\x00\x00\x00\x00????") == "application/octet-stream"
     assert sniff_media(b"RIFF") == "application/octet-stream"
+    # a size field that spells "ftyp" makes the BMFF guard match too; the
+    # BMFF row sits above the RIFF rows in oracle.MAGIC, so it wins
+    wav = bytearray(render_wav([0, 1], 8000))
+    wav[4:8] = b"ftyp"
+    assert wav[8:12] == b"WAVE"
+    assert sniff_media(bytes(wav)) == "video/mp4"
 
 
 # ---------------------------------------------------------------------------
@@ -773,8 +779,10 @@ def test_meta_follows_sniff_verdict():
     size now overruns the payload), never the digest stub of the weak
     BMP magic."""
     from multi_format_document_extractor_spark.multimodal.media import (
+        bmp_dims,
         decode_image_stub,
         mp4_metadata,
+        render_bmp,
         render_mp4,
         sniff_media,
         _meta_of,
@@ -785,6 +793,13 @@ def test_meta_follows_sniff_verdict():
     assert mp4_metadata(p) is None
     assert _meta_of(p, sniff_media(p)) == (0, 0, 0)
     assert _meta_of(p, sniff_media(p))[:2] != decode_image_stub(p)
+    # a real BMP with "ftyp" at offset 4 (file size and reserved bytes)
+    # satisfies both the BMFF and the BMP guard; the BMFF row, above the
+    # BM row in oracle.MAGIC, wins
+    bmp = bytearray(render_bmp(4, 3))
+    bmp[4:8] = b"ftyp"
+    assert bmp_dims(bytes(bmp)) == (4, 3)
+    assert sniff_media(bytes(bmp)) == "video/mp4"
 
 
 def test_meta_batches_sniff_each_payload_once(monkeypatch):
