@@ -635,6 +635,71 @@ def assemble_training_corpus(
     return out
 
 
+def _bpe_symbol_vocab(docs: DataFrame, text_col: str) -> DataFrame:
+    """The (symbolized word, freq) vocab table every BPE stage runs over:
+    corpus aggregated ONCE to word grain, each word rendered as the
+    portable double-space-joined symbol string ``' a  b  c '`` (the
+    representation whose ``' a  b '``→``' ab '`` replace has identical
+    left-to-right semantics in Python, Spark, and DuckDB)."""
+    w = docs.select(
+        F.explode(
+            F.split(F.trim(F.col(text_col)), r"\s+")
+        ).alias("word")
+    ).where(F.col("word") != "")
+    sym_str = F.concat(
+        F.lit(" "),
+        F.array_join(
+            F.transform(
+                F.sequence(F.lit(1), F.length("word")),
+                lambda i: F.col("word").substr(i, F.lit(1)),
+            ),
+            "  ",
+        ),
+        F.lit(" "),
+    )
+    return (
+        w.groupBy("word")
+        .agg(F.count("*").alias("freq"))
+        .select(sym_str.alias("s"), "freq")
+    )
+
+
+def _bpe_pair_counts(vocab: DataFrame) -> DataFrame:
+    """(pair, n) over a symbolized vocab: a narrow explode of each
+    word's adjacent symbol pairs (``"a b"``), summed by word freq."""
+    syms = F.split(F.trim(F.col("s")), "  ")
+    return (
+        vocab.select(
+            F.explode(
+                F.when(
+                    F.size(syms) >= 2,
+                    F.zip_with(
+                        F.slice(syms, 1, F.size(syms) - 1),
+                        F.slice(syms, 2, F.size(syms) - 1),
+                        lambda a, b: F.concat(a, F.lit(" "), b),
+                    ),
+                ).otherwise(F.array().cast("array<string>"))
+            ).alias("pair"),
+            "freq",
+        )
+        .groupBy("pair")
+        .agg(F.sum("freq").cast("bigint").alias("n"))
+    )
+
+
+def _bpe_apply_merges(col, merges: list[str]):
+    """Fold a merge list (rank order) over a symbolized-word column as
+    chained codegen ``replace``es — one projection, no Python in the
+    hot path. ``F.replace`` with Column literals, never ``F.expr``
+    interpolation: a symbol containing a quote or backslash would
+    otherwise hit Spark's SQL-literal escape rules (where '\\' escapes)
+    and diverge from DuckDB's standard-SQL literals."""
+    for pair in merges:
+        a, b = pair.split(" ")
+        col = F.replace(col, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
+    return col
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str,
@@ -675,51 +740,12 @@ def bpe_train(
     ``bpe_train_batched`` below is the scale path: one round-trip per
     ROUND of symbol-disjoint merges (measured ≥5× fewer driver rounds on
     the fixture corpus at equal merge count)."""
-    w = docs.select(
-        F.explode(
-            F.split(F.trim(F.col(text_col)), r"\s+")
-        ).alias("word")
-    ).where(F.col("word") != "")
-    # ' c1  c2  ...  ck ' — chars double-space-joined, single-space padded
-    sym_str = F.concat(
-        F.lit(" "),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.col("word").substr(i, F.lit(1)),
-            ),
-            "  ",
-        ),
-        F.lit(" "),
-    )
-    vocab = (
-        w.groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .select(sym_str.alias("s"), "freq")
-        .localCheckpoint()
-    )
+    vocab = _bpe_symbol_vocab(docs, text_col).localCheckpoint()
     merges: list[tuple[int, str, int]] = []
     for r in range(1, n_merges + 1):
-        syms = F.split(F.trim(F.col("s")), "  ")
-        pairs = (
-            vocab.select(
-                F.explode(
-                    F.when(
-                        F.size(syms) >= 2,
-                        F.zip_with(
-                            F.slice(syms, 1, F.size(syms) - 1),
-                            F.slice(syms, 2, F.size(syms) - 1),
-                            lambda a, b: F.concat(a, F.lit(" "), b),
-                        ),
-                    ).otherwise(F.array().cast("array<string>"))
-                ).alias("pair"),
-                "freq",
-            )
-            .groupBy("pair")
-            .agg(F.sum("freq").cast("bigint").alias("n"))
-        )
         best = (
-            pairs.orderBy(F.col("n").desc(), F.col("pair").asc())
+            _bpe_pair_counts(vocab)
+            .orderBy(F.col("n").desc(), F.col("pair").asc())
             .limit(1)
             .collect()
         )
@@ -727,57 +753,10 @@ def bpe_train(
             break
         pair, n = best[0]["pair"], int(best[0]["n"])
         merges.append((r, pair, n))
-        a, b = pair.split(" ")
-        # F.replace with Column literals, never F.expr interpolation: a
-        # symbol containing a quote or backslash would otherwise hit
-        # Spark's SQL-literal escape rules (where '\' escapes) and
-        # diverge from DuckDB's standard-SQL literals
         vocab = vocab.select(
-            F.replace(
-                F.col("s"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
-            ).alias("s"),
-            "freq",
+            _bpe_apply_merges(F.col("s"), [pair]).alias("s"), "freq"
         ).localCheckpoint()
     return merges
-
-
-def _bpe_symbol_vocab(docs: DataFrame, text_col: str) -> DataFrame:
-    """The (symbolized word, freq) vocab table every BPE stage runs over:
-    corpus aggregated ONCE to word grain, each word rendered as the
-    portable double-space-joined symbol string ``' a  b  c '`` (the
-    representation whose ``' a  b '``→``' ab '`` replace has identical
-    left-to-right semantics in Python, Spark, and DuckDB)."""
-    w = docs.select(
-        F.explode(
-            F.split(F.trim(F.col(text_col)), r"\s+")
-        ).alias("word")
-    ).where(F.col("word") != "")
-    sym_str = F.concat(
-        F.lit(" "),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.col("word").substr(i, F.lit(1)),
-            ),
-            "  ",
-        ),
-        F.lit(" "),
-    )
-    return (
-        w.groupBy("word")
-        .agg(F.count("*").alias("freq"))
-        .select(sym_str.alias("s"), "freq")
-    )
-
-
-def _bpe_apply_merges(col, merges: list[str]):
-    """Fold a merge list (rank order) over a symbolized-word column as
-    chained codegen ``replace``es — one projection, no Python in the
-    hot path."""
-    for pair in merges:
-        a, b = pair.split(" ")
-        col = F.replace(col, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
-    return col
 
 
 def bpe_encode_counts(
@@ -844,26 +823,9 @@ def bpe_train_batched(
     for _ in range(max_rounds):
         if len(merges) >= n_merges:
             break
-        syms = F.split(F.trim(F.col("s")), "  ")
-        pairs = (
-            vocab.select(
-                F.explode(
-                    F.when(
-                        F.size(syms) >= 2,
-                        F.zip_with(
-                            F.slice(syms, 1, F.size(syms) - 1),
-                            F.slice(syms, 2, F.size(syms) - 1),
-                            lambda a, b: F.concat(a, F.lit(" "), b),
-                        ),
-                    ).otherwise(F.array().cast("array<string>"))
-                ).alias("pair"),
-                "freq",
-            )
-            .groupBy("pair")
-            .agg(F.sum("freq").cast("bigint").alias("n"))
-        )
         top = (
-            pairs.orderBy(F.col("n").desc(), F.col("pair").asc())
+            _bpe_pair_counts(vocab)
+            .orderBy(F.col("n").desc(), F.col("pair").asc())
             .limit(rank_cap)
             .collect()
         )

@@ -1672,12 +1672,6 @@ class _LazyIntObjs:
         return self._map.get(num)
 
 
-def _pdf_int_objs(payload: bytes) -> _LazyIntObjs:
-    """Indirect-/Length resolver over the simple integer objects;
-    lazily built (see _LazyIntObjs)."""
-    return _LazyIntObjs(payload)
-
-
 def _pdf_xref_objects(
     payload: bytes,
 ) -> dict[int, tuple[bytes, bytes | None]] | None:
@@ -1722,7 +1716,7 @@ def _pdf_xref_objects(
             pos = em.end()
     if not offsets:
         return None
-    int_objs = _pdf_int_objs(payload)
+    int_objs = _LazyIntObjs(payload)
     objs: dict[int, tuple[bytes, bytes | None]] = {}
     for num, off in offsets.items():
         hm = _OBJ_HEAD_RE.match(payload, off)
@@ -1746,7 +1740,7 @@ def _pdf_xref_stream_objects(
     hm = _OBJ_HEAD_RE.match(payload, pos)
     if hm is None:
         return None
-    int_objs = _pdf_int_objs(payload)
+    int_objs = _LazyIntObjs(payload)
     head, stream, _ = _pdf_parse_obj_at(payload, hm, int_objs)
     if b"/XRef" not in head or stream is None:
         return None
@@ -1841,7 +1835,7 @@ def _pdf_scan_objects(
     headers inside compressed stream bytes are never visited. Object
     streams found by the walk are expanded, so a 1.5 file with no (or a
     damaged) cross-reference still resolves its page tree."""
-    int_objs = _pdf_int_objs(payload)
+    int_objs = _LazyIntObjs(payload)
     objs: dict[int, tuple[bytes, bytes | None]] = {}
     pos = 0
     n = len(payload)
@@ -2977,9 +2971,10 @@ def render_pbm(lines: list[str]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# PNG: a REAL stdlib-only codec for 8-bit grayscale, non-interlaced images —
-# chunk walk, concatenated-IDAT zlib inflate, and all five scanline filters
-# (None/Sub/Up/Average/Paeth) unfiltered per the PNG spec. Retires the PNG
+# PNG: a REAL stdlib-only codec for every legal color type and depth, plain
+# or Adam7 — chunk walk, concatenated-IDAT zlib inflate, all five scanline
+# filters (None/Sub/Up/Average/Paeth) unfiltered per the PNG spec, one
+# seven-pass reassembly for every depth, luma reduction. Retires the PNG
 # half of the S8 stub (round-3 VERDICT "Next round" #2; reference extracts
 # image content via EasyOCR/TrOCR, src/parsers/ocr_parser.py:59-217): decoded
 # pixels feed the same _classify_glyph_grid tail as P4 bitmaps. GIF and
@@ -3104,62 +3099,55 @@ def _png_unpack_bits(rows: bytes, w: int, h: int, depth: int) -> bytearray:
     )
 
 
-def _png_deinterlace_packed(raw: bytes, w: int, h: int, depth: int) -> bytearray:
-    """Adam7 reassembly for sub-byte depths: each pass's scanlines are
-    packed and filtered at their own byte stride (bpp=1 taps, per spec),
-    unpacked per pass, then scattered per PIXEL."""
-    out = bytearray(w * h)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue
-        stride = (wp * depth + 7) // 8
-        need = (stride + 1) * hp
-        sub = _png_unpack_bits(
-            _png_unfilter(raw[pos : pos + need], stride, hp, 1), wp, hp, depth
+def _png_reconstruct(
+    raw: bytes, w: int, h: int, bpp: int, depth: int
+) -> bytearray:
+    """Unfilter one w×h (sub-)image into one sample group per pixel.
+    Below depth 8 the scanlines are packed and filtered at their own
+    byte stride with bpp=1 taps (per spec), then unpacked."""
+    if depth < 8:
+        return _png_unpack_bits(
+            _png_unfilter(raw, (w * depth + 7) // 8, h, 1), w, h, depth
         )
-        pos += need
-        o2 = np.frombuffer(out, dtype=np.uint8).reshape(h, w)
-        o2[y0::dy, x0::dx] = np.frombuffer(bytes(sub), dtype=np.uint8).reshape(
-            hp, wp
-        )
-    return out
+    return _png_unfilter(raw, w, h, bpp)
 
 
-def _png_deinterlace(raw: bytes, w: int, h: int, bpp: int) -> bytearray:
+def _png_deinterlace(
+    raw: bytes, w: int, h: int, bpp: int, depth: int
+) -> bytearray:
     """Reassemble an Adam7-interlaced pixel stream: each of the seven
     passes is an independently filtered sub-image (its own per-scanline
     filter bytes); empty passes contribute no scanlines at all (PNG
     §8.2). Returns the full-size sample buffer in row-major order."""
-    out = bytearray(w * h * bpp)
+    out = np.zeros((h, w, bpp), dtype=np.uint8)
     pos = 0
     for x0, y0, dx, dy in _ADAM7:
         wp = (w - x0 + dx - 1) // dx
         hp = (h - y0 + dy - 1) // dy
         if wp <= 0 or hp <= 0:
             continue
-        need = (wp * bpp + 1) * hp
-        sub = _png_unfilter(raw[pos : pos + need], wp, hp, bpp)
+        stride = (wp * depth + 7) // 8 if depth < 8 else wp * bpp
+        need = (stride + 1) * hp
+        sub = _png_reconstruct(raw[pos : pos + need], wp, hp, bpp, depth)
         pos += need
-        o3 = np.frombuffer(out, dtype=np.uint8).reshape(h, w, bpp)
-        o3[y0::dy, x0::dx] = np.frombuffer(bytes(sub), dtype=np.uint8).reshape(
+        out[y0::dy, x0::dx] = np.frombuffer(bytes(sub), dtype=np.uint8).reshape(
             hp, wp, bpp
         )
-    return out
+    return bytearray(out.tobytes())
 
 
 def png_decode_gray8(payload: bytes) -> tuple[int, int, bytearray]:
-    """(w, h, LUMA bytes row-major) for an 8- or 16-bit PNG, plain or
+    """(w, h, LUMA bytes row-major) for a 1- to 16-bit PNG, plain or
     Adam7-interlaced: grayscale (color type 0), truecolor (2), palette
     (3, PLTE required — 8-bit only per spec), gray+alpha (4) and RGBA
     (6). Color reduces to BT.601 integer luma; alpha composites over
     white first (the paper background the OCR contract assumes — a
     transparent pixel IS paper); 16-bit samples reduce to their
-    high-order byte (the spec's sample-depth scaling to 8 bits).
-    Sub-byte depths (1/2/4) raise with the unsupported parameter named
-    (error-as-data upstream, same contract as the other parsers)."""
+    high-order byte (the spec's sample-depth scaling to 8 bits), and
+    sub-byte gray/palette samples (depths 1/2/4) unpack to one value
+    per pixel. Combinations outside the spec raise with the unsupported
+    parameter named (error-as-data upstream, same contract as the other
+    parsers)."""
     if payload[:8] != _PNG_MAGIC:
         raise ValueError("not a PNG")
     ihdr = None
@@ -3199,39 +3187,24 @@ def png_decode_gray8(payload: bytes) -> tuple[int, int, bytearray]:
     if not idat:
         raise ValueError("PNG missing IDAT")
     raw = zlib.decompress(b"".join(idat))
-    if depth < 8:
-        # sub-byte gray/palette: filters tap packed bytes (bpp=1)
-        if interlace:
-            recon = _png_deinterlace_packed(raw, w, h, depth)
-        else:
-            stride = (w * depth + 7) // 8
-            recon = _png_unpack_bits(
-                _png_unfilter(raw, stride, h, 1), w, h, depth
-            )
-        if ctype_i == 0:
-            # spec sample scaling: v * 255/(2^d - 1), exact integers;
-            # a tRNS-keyed gray level is fully transparent → paper
-            tkey = (
-                int.from_bytes(trns[0:2], "big")
-                if trns and len(trns) >= 2
-                else None
-            )
-            lut = bytes(v * 255 // ((1 << depth) - 1) for v in range(1 << depth))
-            return w, h, bytearray(
-                255 if v == tkey else lut[v] for v in recon
-            )
-        full = recon
+    # sub-byte depths are gray/palette only: one sample per pixel
+    bpp = _PNG_BPP[ctype_i] * (depth // 8) if depth >= 8 else 1
+    if interlace:
+        full = _png_deinterlace(raw, w, h, bpp, depth)
     else:
-        bpp = _PNG_BPP[ctype_i] * (depth // 8)
-        if interlace:
-            full = _png_deinterlace(raw, w, h, bpp)
-        else:
-            full = _png_unfilter(raw, w, h, bpp)
-        if depth == 16:
-            # high-order byte per sample == the spec's 16→8 scaling
-            recon = full[0::2]
-        else:
-            recon = full
+        full = _png_reconstruct(raw, w, h, bpp, depth)
+    # high-order byte per sample == the spec's 16→8 scaling
+    recon = full[0::2] if depth == 16 else full
+    if depth < 8 and ctype_i == 0:
+        # spec sample scaling: v * 255/(2^d - 1), exact integers;
+        # a tRNS-keyed gray level is fully transparent → paper
+        tkey = (
+            int.from_bytes(trns[0:2], "big")
+            if trns and len(trns) >= 2
+            else None
+        )
+        lut = bytes(v * 255 // ((1 << depth) - 1) for v in range(1 << depth))
+        return w, h, bytearray(255 if v == tkey else lut[v] for v in recon)
     # channel reduction runs as exact-integer numpy (the >>8 luma and
     # //255 composites are bit-identical to the scalar forms)
     n = w * h
@@ -3526,13 +3499,15 @@ def png_encode_gray8(px, w: int, h: int) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# GIF: a REAL stdlib-only codec for GIF87a/89a — header + logical-screen
-# parse, extension-block skip, variable-width LSB-first LZW decode (clear/EOI,
-# code widths min+1..12, 4096-entry table cap), optional interlace pass
-# reorder, palette→luminance. Retires the GIF half of the S8 stub (the PNG
-# half fell in v4; reference extracts image content via EasyOCR/TrOCR,
-# src/parsers/ocr_parser.py:59-217): decoded pixels feed the same
-# _classify_glyph_grid tail as P4 bitmaps and PNGs.
+# GIF: a REAL stdlib-only codec for GIF87a/89a — ONE block walk
+# (_gif_blocks: header + logical-screen parse, color tables, extension-block
+# skip, variable-width LSB-first LZW decode with clear/EOI, code widths
+# min+1..12 and a 4096-entry table cap, interlace pass reorder,
+# palette→luminance) read two ways: gif_decode_gray takes the first
+# full-screen image, gif_decode_frames composites every frame. Retires the
+# GIF half of the S8 stub (the PNG half fell in v4; reference extracts image
+# content via EasyOCR/TrOCR, src/parsers/ocr_parser.py:59-217): decoded
+# pixels feed the same _classify_glyph_grid tail as P4 bitmaps and PNGs.
 # ---------------------------------------------------------------------------
 
 
@@ -3602,13 +3577,25 @@ def _gif_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def gif_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
-    """(w, h, luminance bytes row-major) for the FIRST image of a
-    GIF87a/89a file whose frame covers the full logical screen; extension
-    blocks are skipped, interlaced frames are de-interlaced, palette
-    entries map to integer luminance (299/587/114 per mille). Anything
-    else — animation offsets, missing palette, bad LZW — raises with the
-    reason named (error-as-data upstream, same contract as PNG/PDF)."""
+def _gif_luma(ct: bytes) -> "np.ndarray":
+    """Integer luminance (299/587/114 per mille) of each color-table
+    entry."""
+    rgb = np.frombuffer(ct, dtype=np.uint8).reshape(-1, 3).astype(np.int32)
+    lum = (rgb[:, 0] * 299 + rgb[:, 1] * 587 + rgb[:, 2] * 114) // 1000
+    return lum.astype(np.uint8)
+
+
+def _gif_blocks(payload: bytes):
+    """The one GIF87a/89a block walk behind both decoders. Yields, in
+    stream order: ``("screen", (w, h, bg_index, global_ct))`` once the
+    header and global color table parse; ``("gce", data)`` for each
+    Graphic Control Extension (other extensions are skipped);
+    ``("rect", (left, top, iw, ih))`` at each image descriptor, before
+    its color table is read; then ``("image", (lum, idx))`` once its
+    LZW data decodes — ``idx`` the (ih, iw) palette indices in display
+    row order (interlaced frames reordered), ``lum`` the color table's
+    luminances, every index checked against it. Ends at the trailer or
+    the end of the data."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     if len(payload) < 13:
@@ -3626,17 +3613,20 @@ def gif_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
         if len(global_ct) < 3 * n_colors:
             raise ValueError("truncated GIF global color table")
         pos += 3 * n_colors
+    yield "screen", (w, h, payload[11], global_ct)
     n = len(payload)
     while pos < n:
         block = payload[pos]
         pos += 1
-        if block == 0x3B:  # trailer before any image
-            break
+        if block == 0x3B:
+            return
         if block == 0x21:  # extension: label + sub-block chain
             if pos >= n:
                 raise ValueError("truncated GIF extension")
-            pos += 1
-            _, pos = _gif_subblocks(payload, pos)
+            label = payload[pos]
+            data, pos = _gif_subblocks(payload, pos + 1)
+            if label == 0xF9 and len(data) >= 4:
+                yield "gce", data
             continue
         if block != 0x2C:
             raise ValueError(f"unknown GIF block 0x{block:02x}")
@@ -3648,11 +3638,7 @@ def gif_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
         ih = int.from_bytes(payload[pos + 6 : pos + 8], "little")
         ipacked = payload[pos + 8]
         pos += 9
-        if (left, top, iw, ih) != (0, 0, w, h):
-            raise ValueError(
-                "unsupported GIF (partial/offset frame); decoder covers "
-                "single full-screen images"
-            )
+        yield "rect", (left, top, iw, ih)
         ct = global_ct
         if ipacked & 0x80:
             n_colors = 2 << (ipacked & 0x07)
@@ -3667,30 +3653,42 @@ def gif_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
         min_code = payload[pos]
         if not 2 <= min_code <= 8:
             raise ValueError(f"GIF LZW min code size {min_code} invalid")
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
-        idx = _gif_lzw_decode(data, min_code, w * h)
-        n_colors = len(ct) // 3
-        lum = bytes(
-            (ct[3 * i] * 299 + ct[3 * i + 1] * 587 + ct[3 * i + 2] * 114)
-            // 1000
-            for i in range(n_colors)
-        )
-        out = bytearray(w * h)
-        rows: list[int]
-        if ipacked & 0x40:  # interlaced: 4-pass row order
-            rows = []
+        data, pos = _gif_subblocks(payload, pos + 1)
+        idx = np.frombuffer(
+            bytes(_gif_lzw_decode(data, min_code, iw * ih)), dtype=np.uint8
+        ).reshape(ih, iw)
+        lum = _gif_luma(ct)
+        if int(idx.max(initial=0)) >= len(lum):
+            raise ValueError("GIF pixel index outside color table")
+        if ipacked & 0x40:  # interlaced: source rows arrive in 4 passes
+            rows: list[int] = []
             for start, step in _GIF_INTERLACE_PASSES:
-                rows.extend(range(start, h, step))
-        else:
-            rows = list(range(h))
-        for src_y, dst_y in enumerate(rows):
-            for x in range(w):
-                i = idx[src_y * w + x]
-                if i >= n_colors:
-                    raise ValueError("GIF pixel index outside color table")
-                out[dst_y * w + x] = lum[i]
-        return w, h, out
+                rows.extend(range(start, ih, step))
+            disp = np.empty_like(idx)
+            disp[rows] = idx
+            idx = disp
+        yield "image", (lum, idx)
+
+
+def gif_decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
+    """(w, h, luminance bytes row-major) for the FIRST image of a
+    GIF87a/89a file whose frame covers the full logical screen; extension
+    blocks (Graphic Control ones included) are skipped, interlaced
+    frames are de-interlaced, palette entries map to integer luminance
+    (299/587/114 per mille). Anything else — animation offsets, missing
+    palette, bad LZW — raises with the reason named (error-as-data
+    upstream, same contract as PNG/PDF)."""
+    for kind, v in _gif_blocks(payload):
+        if kind == "screen":
+            w, h = v[0], v[1]
+        elif kind == "rect" and v != (0, 0, w, h):
+            raise ValueError(
+                "unsupported GIF (partial/offset frame); decoder covers "
+                "single full-screen images"
+            )
+        elif kind == "image":
+            lum, idx = v
+            return w, h, bytearray(lum[idx].tobytes())
     raise ValueError("GIF contains no image data")
 
 
@@ -3698,120 +3696,50 @@ def gif_decode_frames(
     payload: bytes, max_frames: int = 64
 ) -> tuple[int, int, list[tuple[int, bytearray]]]:
     """(w, h, [(delay_ms, composited luminance frame), ...]) for an
-    animated (or single-frame) GIF87a/89a — the REAL multi-frame codec
-    behind the video-ish frame-sampling path. Handles Graphic Control
-    Extension delays + transparency, partial-rect frames composited onto
-    the logical screen, and disposal methods 0/1 (leave) and 2 (restore
-    to background); disposal 3 (restore-previous) raises by name.
-    Decoding stops after ``max_frames`` (bounded work per payload).
-    The single-image extraction contract (gif_decode_gray) is separate
-    and unchanged — this decoder serves the media path."""
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    w = int.from_bytes(payload[6:8], "little")
-    h = int.from_bytes(payload[8:10], "little")
-    packed = payload[10]
-    bg_index = payload[11]
-    if w <= 0 or h <= 0 or w * h > 64_000_000:
-        raise ValueError("GIF geometry invalid or over the decode bound")
-    pos = 13
-    global_ct: bytes | None = None
-    if packed & 0x80:
-        n_colors = 2 << (packed & 0x07)
-        global_ct = payload[pos : pos + 3 * n_colors]
-        if len(global_ct) < 3 * n_colors:
-            raise ValueError("truncated GIF global color table")
-        pos += 3 * n_colors
-
-    def lum_of(ct: bytes, i: int) -> int:
-        return (ct[3 * i] * 299 + ct[3 * i + 1] * 587 + ct[3 * i + 2] * 114) // 1000
-
-    bg_lum = 255
-    if global_ct is not None and bg_index < len(global_ct) // 3:
-        bg_lum = lum_of(global_ct, bg_index)
-    canvas = bytearray([bg_lum]) * (w * h)
+    animated (or single-frame) GIF87a/89a — the multi-frame reading of
+    the same block walk ``gif_decode_gray`` uses, behind the video-ish
+    frame-sampling path. Handles Graphic Control Extension delays +
+    transparency, partial-rect frames composited onto the logical
+    screen, and disposal methods 0/1 (leave) and 2 (restore to
+    background); disposal 3 (restore-previous) raises by name.
+    Decoding stops after ``max_frames`` (bounded work per payload)."""
     frames: list[tuple[int, bytearray]] = []
     delay_ms = 0
     transparent: int | None = None
     disposal = 0
-    n = len(payload)
-    while pos < n:
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            if pos >= n:
-                raise ValueError("truncated GIF extension")
-            label = payload[pos]
-            pos += 1
-            data, pos = _gif_subblocks(payload, pos)
-            if label == 0xF9 and len(data) >= 4:  # Graphic Control Ext
-                disposal = (data[0] >> 2) & 0x07
-                if disposal == 3:
-                    raise ValueError(
-                        "unsupported GIF disposal 3 (restore-previous)"
-                    )
-                delay_ms = int.from_bytes(data[1:3], "little") * 10
-                transparent = data[3] if data[0] & 0x01 else None
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        if pos + 9 > n:
-            raise ValueError("truncated GIF image descriptor")
-        left = int.from_bytes(payload[pos : pos + 2], "little")
-        top = int.from_bytes(payload[pos + 2 : pos + 4], "little")
-        iw = int.from_bytes(payload[pos + 4 : pos + 6], "little")
-        ih = int.from_bytes(payload[pos + 6 : pos + 8], "little")
-        ipacked = payload[pos + 8]
-        pos += 9
-        if iw <= 0 or ih <= 0 or left + iw > w or top + ih > h:
-            raise ValueError("GIF frame rect outside the logical screen")
-        ct = global_ct
-        if ipacked & 0x80:
-            n_colors = 2 << (ipacked & 0x07)
-            ct = payload[pos : pos + 3 * n_colors]
-            if len(ct) < 3 * n_colors:
-                raise ValueError("truncated GIF local color table")
-            pos += 3 * n_colors
-        if ct is None:
-            raise ValueError("GIF image has no color table")
-        if pos >= n:
-            raise ValueError("truncated GIF before LZW data")
-        min_code = payload[pos]
-        if not 2 <= min_code <= 8:
-            raise ValueError(f"GIF LZW min code size {min_code} invalid")
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
-        idx = _gif_lzw_decode(data, min_code, iw * ih)
-        n_ct = len(ct) // 3
-        rows: list[int]
-        if ipacked & 0x40:
-            rows = []
-            for start, step in _GIF_INTERLACE_PASSES:
-                rows.extend(range(start, ih, step))
+    for kind, v in _gif_blocks(payload):
+        if kind == "screen":
+            w, h, bg_index, global_ct = v
+            bg_lum = 255
+            if global_ct is not None and bg_index < len(global_ct) // 3:
+                bg_lum = int(_gif_luma(global_ct)[bg_index])
+            canvas = np.full((h, w), bg_lum, dtype=np.uint8)
+        elif kind == "gce":
+            disposal = (v[0] >> 2) & 0x07
+            if disposal == 3:
+                raise ValueError(
+                    "unsupported GIF disposal 3 (restore-previous)"
+                )
+            delay_ms = int.from_bytes(v[1:3], "little") * 10
+            transparent = v[3] if v[0] & 0x01 else None
+        elif kind == "rect":
+            left, top, iw, ih = v
+            if iw <= 0 or ih <= 0 or left + iw > w or top + ih > h:
+                raise ValueError("GIF frame rect outside the logical screen")
         else:
-            rows = list(range(ih))
-        for src_y, dst_y in enumerate(rows):
-            base = (top + dst_y) * w + left
-            srow = src_y * iw
-            for x in range(iw):
-                i = idx[srow + x]
-                if i >= n_ct:
-                    raise ValueError("GIF pixel index outside color table")
-                if i != transparent:
-                    canvas[base + x] = lum_of(ct, i)
-        frames.append((delay_ms, bytearray(canvas)))
-        if len(frames) >= max_frames:
-            break
-        if disposal == 2:  # restore the frame's rect to background
-            for dy in range(ih):
-                base = (top + dy) * w + left
-                for x in range(iw):
-                    canvas[base + x] = bg_lum
-        delay_ms, transparent, disposal = 0, None, 0
+            lum, idx = v
+            rect = canvas[top : top + ih, left : left + iw]
+            if transparent is None:
+                rect[:] = lum[idx]
+            else:
+                opaque = idx != transparent
+                rect[opaque] = lum[idx[opaque]]
+            frames.append((delay_ms, bytearray(canvas.tobytes())))
+            if len(frames) >= max_frames:
+                break
+            if disposal == 2:  # restore the frame's rect to background
+                rect[:] = bg_lum
+            delay_ms, transparent, disposal = 0, None, 0
     if not frames:
         raise ValueError("GIF contains no image data")
     return w, h, frames
@@ -3967,16 +3895,20 @@ def render_gif_animated(
 
 
 # ---------------------------------------------------------------------------
-# JPEG: a REAL stdlib-only baseline-sequential grayscale codec — segment
-# walk, DQT/DHT/SOF0/SOS parse, canonical Huffman decode with FF-stuffing,
-# dequantize, zigzag, separable 8x8 IDCT. Retires the LAST image half of the
-# S8 stub (PBM fell in r3, PNG/GIF in r4; reference extracts image content
-# via EasyOCR/TrOCR, src/parsers/ocr_parser.py:59-217): decoded pixels feed
-# the same _classify_glyph_grid tail as the other rasters. The encoder
-# (render half of the contract) writes near-lossless quant=1 files any
-# standard JPEG reader also decodes; color/progressive/subsampled files
-# raise with the unsupported parameter named (error-as-data upstream), and
-# jpeg_dims still reads geometry from any SOFn header for the media path.
+# JPEG: a REAL stdlib-only codec — ONE decoder (jpeg_decode_gray8) for
+# baseline sequential (SOF0) and progressive (SOF2) frames, gray or YCbCr:
+# one marker walk per payload, DQT/DHT/SOF/SOS parse, canonical Huffman
+# decode with FF-stuffing and restart markers, then one dequantize →
+# de-zigzag → separable 8x8 IDCT → crop tail over the luma plane. Retires
+# the LAST image half of the S8 stub (PBM fell in r3, PNG/GIF in r4;
+# reference extracts image content via EasyOCR/TrOCR,
+# src/parsers/ocr_parser.py:59-217): decoded pixels feed the same
+# _classify_glyph_grid tail as the other rasters. The encoders (render half
+# of the contract) write near-lossless quant=1 baseline, color and
+# progressive files any standard JPEG reader also decodes; other SOF types,
+# 12-bit and >2 sampling factors raise with the unsupported parameter named
+# (error-as-data upstream), and jpeg_dims reads geometry from any SOFn
+# header for the media path.
 # ---------------------------------------------------------------------------
 
 _JPEG_ZIGZAG = (
@@ -4780,55 +4712,67 @@ def jpeg_decode_gray8(payload: bytes) -> tuple[int, int, bytearray]:
     ink-vs-paper, which IS Y by definition (JFIF stores luma as the
     first component). 12-bit, arithmetic-coded, hierarchical and
     >2-sampling-factor files raise with the unsupported parameter named
-    (error-as-data upstream, same contract as PNG/GIF)."""
-    for marker, body in jpeg_segments(payload):
-        if marker == "scan_start":
-            break
-        if isinstance(marker, int) and marker in _JPEG_SOF_MARKERS:
-            if marker == 0xC0:
-                return _jpeg_decode_baseline(payload)
-            if marker == 0xC2:
-                return _jpeg_decode_progressive(payload)
-            raise ValueError(
-                f"unsupported JPEG (SOF 0x{marker:02X}); decoder covers "
-                "baseline sequential (SOF0) and progressive (SOF2)"
-            )
-    raise ValueError("JPEG has no SOF header")
+    (error-as-data upstream, same contract as PNG/GIF).
 
-
-def _jpeg_decode_baseline(payload: bytes) -> tuple[int, int, bytearray]:
-    """Baseline-sequential half of ``jpeg_decode_gray8`` (one scan,
-    interleaved MCUs when 3-component)."""
+    One marker walk serves both frame types: tables update as their
+    segments arrive, the SOF parse fixes the luma block grid, and each
+    SOS runs the frame's scan routine. A SOF0 frame decodes after its
+    one scan (EOI optional); a SOF2 frame accumulates luma coefficients
+    over its scans (Annex G: DC-first/refine, AC-first/refine, tables
+    redefinable between scans, chroma-only AC scans skipped) and
+    decodes at EOI."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG")
     qt: dict[int, list[int]] = {}
     huff_dc: dict[int, list[int]] = {}
     huff_ac: dict[int, list[int]] = {}
-    w = h = 0
+    frame = 0  # 0xC0 / 0xC2 once the SOF header is read
+    w = h = gw = gh = mcux = mcuy = 0
+    hmax = vmax = 1
     comps: list[tuple[int, int, int, int]] = []  # (cid, hs, vs, tq)
-    scan_ids: dict[int, tuple[int, int]] = {}  # cid -> (dc_id, ac_id)
-    scan_order: list[int] = []  # cids in SOS order
+    by_cid: dict[int, tuple[int, int, int, int]] = {}
+    luma_cid = 0
     restart_interval = 0
-    scan_at = None
-    for marker, body in jpeg_segments(payload):
-        if marker == "scan_start":
-            scan_at = body
+    y_coef: list[list[int]] = []  # progressive luma coefficients
+    zz = None  # luma zigzag coefficients, one row per block
+    extend = _jpeg_extend
+    pos = 2
+    n = len(payload)
+    saw_eoi = False
+    while pos + 2 <= n:
+        if payload[pos] != 0xFF:
+            raise ValueError("JPEG marker sync lost")
+        marker = payload[pos + 1]
+        pos += 2
+        if marker == 0xD8:
+            continue
+        if marker == 0xD9:
+            saw_eoi = True
             break
+        if pos + 2 > n:
+            raise ValueError("truncated JPEG segment header")
+        ln = int.from_bytes(payload[pos : pos + 2], "big")
+        if ln < 2 or pos + ln > n:
+            raise ValueError("truncated JPEG segment")
+        body = payload[pos + 2 : pos + ln]
+        pos += ln
         if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0x0F
-                if pq != 0:
-                    raise ValueError("unsupported JPEG (16-bit quant table)")
-                tab = list(body[i + 1 : i + 65])
-                if len(tab) != 64:
-                    raise ValueError("truncated JPEG quant table")
-                qt[tq] = tab
-                i += 65
-        elif marker in _JPEG_SOF_MARKERS and marker != 0xC0:
-            raise ValueError(
-                f"unsupported JPEG (SOF 0x{marker:02X}); decoder covers "
-                "baseline sequential (SOF0)"
-            )
-        elif marker == 0xC0:
+            _jpeg_parse_dqt(body, qt)
+        elif marker == 0xC4:
+            _jpeg_parse_dht(body, huff_dc, huff_ac)
+        elif marker == 0xDD:
+            if len(body) < 2:
+                raise ValueError("truncated JPEG DRI segment")
+            restart_interval = int.from_bytes(body[0:2], "big")
+        elif marker in _JPEG_SOF_MARKERS:
+            if marker not in (0xC0, 0xC2):
+                raise ValueError(
+                    f"unsupported JPEG (SOF 0x{marker:02X}); decoder covers "
+                    "baseline sequential (SOF0) and progressive (SOF2)"
+                )
+            if frame:
+                raise ValueError("unsupported JPEG (multiple frames)")
+            frame = marker
             if body[0] != 8:
                 raise ValueError("unsupported JPEG (precision != 8)")
             h = int.from_bytes(body[1:3], "big")
@@ -4855,75 +4799,149 @@ def _jpeg_decode_baseline(payload: bytes) -> tuple[int, int, bytearray]:
                 raise ValueError(
                     "JPEG geometry invalid or over the decode bound"
                 )
-        elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1 : i + 17])
-                nv = sum(bits)
-                vals = list(body[i + 17 : i + 17 + nv])
-                if len(vals) != nv or len(bits) != 16:
-                    raise ValueError("truncated JPEG Huffman table")
-                fast = _jpeg_fast_table(tuple(bits), tuple(vals))
-                (huff_dc if tc == 0 else huff_ac)[th] = fast
-                i += 17 + nv
-        elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            restart_interval = int.from_bytes(body[0:2], "big")
-        elif marker == 0xDA:
-            ns = body[0]
-            if ns != len(comps) or not comps:
+            by_cid = {c[0]: c for c in comps}
+            hmax = max(c[1] for c in comps)
+            vmax = max(c[2] for c in comps)
+            luma_cid, ly_hs, ly_vs, _tq = comps[0]
+            if nc == 3 and (ly_hs, ly_vs) != (hmax, vmax):
                 raise ValueError(
-                    "unsupported JPEG (scan components != frame components;"
-                    " decoder covers single-scan baseline)"
+                    "unsupported JPEG (luma is not the max-sampled "
+                    "component)"
                 )
-            if len(body) < 1 + 2 * ns + 3:
-                raise ValueError("truncated JPEG SOS")
+            mcux = (w + 8 * hmax - 1) // (8 * hmax)
+            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
+            if nc == 1:
+                gw, gh = (w + 7) // 8, (h + 7) // 8
+            else:
+                gw, gh = mcux * ly_hs, mcuy * ly_vs
+            if frame == 0xC2:
+                y_coef = [[0] * 64 for _ in range(gw * gh)]
+        elif marker == 0xDA:
+            if not frame:
+                raise ValueError("JPEG has no SOF header")
+            if frame == 0xC0:
+                zz = _jpeg_seq_scan(
+                    payload, pos, body, comps, by_cid, luma_cid, qt,
+                    huff_dc, huff_ac, gw, gh, mcux, mcuy, restart_interval,
+                )
+                break
+            ns = body[0]
+            if ns < 1 or ns > len(comps) or len(body) < 1 + 2 * ns + 3:
+                raise ValueError("malformed JPEG SOS header")
+            scan: list[tuple[int, int, int]] = []  # (cid, td, ta)
             for c in range(ns):
                 cid = body[1 + 2 * c]
+                if cid not in by_cid:
+                    raise ValueError("JPEG scan names an unknown component")
                 tt = body[2 + 2 * c]
-                scan_ids[cid] = (tt >> 4, tt & 0x0F)
-                scan_order.append(cid)
-    by_cid = {c[0]: c for c in comps}
+                scan.append((cid, tt >> 4, tt & 0x0F))
+            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
+            ahal = body[3 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 0x0F
+            data_at = pos
+            pos = _jpeg_scan_end(payload, pos)
+            if ss == 0 and se != 0:
+                raise ValueError(
+                    "invalid progressive scan (DC scan must have Se=0)"
+                )
+            if ss > se or se > 63:
+                raise ValueError("invalid progressive spectral band")
+            if ss > 0 and ns != 1:
+                raise ValueError(
+                    "invalid progressive scan (AC scans are single-"
+                    "component)"
+                )
+            if ss == 0:
+                _jpeg_prog_dc_scan(
+                    payload, data_at, scan, by_cid, huff_dc, y_coef,
+                    luma_cid, w, h, hmax, vmax, gw, mcux, mcuy, ah, al,
+                    restart_interval, extend,
+                )
+            else:
+                cid, _td, ta = scan[0]
+                if cid != luma_cid:
+                    continue  # chroma detail never reaches the luma plane
+                if ta not in huff_ac:
+                    raise ValueError("JPEG AC scan before its DHT")
+                _jpeg_prog_ac_scan(
+                    payload, data_at, huff_ac[ta], y_coef, by_cid[cid],
+                    w, h, hmax, vmax, len(comps), gw, ss, se, ah, al,
+                    restart_interval, extend,
+                )
+        # APPn / COM and other markers are skipped
+    if frame == 0xC2:
+        if not saw_eoi:
+            raise ValueError("truncated progressive JPEG (no EOI)")
+        zz = np.asarray(y_coef, dtype=np.float64)
+    elif zz is None:
+        raise ValueError(
+            "JPEG ended before scan data" if saw_eoi
+            else "truncated JPEG (no SOS)"
+        )
+    tq = by_cid[luma_cid][3]
+    if tq not in qt:
+        raise ValueError("JPEG luma quant table missing")
+    nblk = gw * gh
+    zz *= np.asarray(qt[tq], dtype=np.float64)  # quant table is zigzag-ordered
+    nat = np.zeros_like(zz)
+    nat[:, list(_JPEG_ZIGZAG)] = zz  # natural-order coefficients
+    blocks = _DCT_AT_NP @ nat.reshape(nblk, 8, 8) @ _DCT_A_NP
+    px = np.floor(blocks + 128.5)  # == int(v + 128.5) inside the clamp
+    np.clip(px, 0.0, 255.0, out=px)
+    img = (
+        px.astype(np.uint8)
+        .reshape(gh, gw, 8, 8)
+        .transpose(0, 2, 1, 3)
+        .reshape(gh * 8, gw * 8)
+    )
+    return w, h, bytearray(np.ascontiguousarray(img[:h, :w]).tobytes())
+
+
+def _jpeg_seq_scan(
+    payload, scan_at, sos, comps, by_cid, luma_cid, qt, huff_dc, huff_ac,
+    gw, gh, mcux, mcuy, restart_interval,
+) -> "np.ndarray":
+    """The one scan of a baseline sequential frame (T.81 F.2): every
+    frame component in a single scan, interleaved MCUs when
+    3-component. Returns the luma plane's zigzag coefficients, one row
+    per block."""
+    ns = sos[0]
+    if ns != len(comps):
+        raise ValueError(
+            "unsupported JPEG (scan components != frame components;"
+            " decoder covers single-scan baseline)"
+        )
+    if len(sos) < 1 + 2 * ns + 3:
+        raise ValueError("truncated JPEG SOS")
+    scan_ids: dict[int, tuple[int, int]] = {}  # cid -> (dc_id, ac_id)
+    scan_order: list[int] = []  # cids in SOS order
+    for c in range(ns):
+        cid = sos[1 + 2 * c]
+        tt = sos[2 + 2 * c]
+        scan_ids[cid] = (tt >> 4, tt & 0x0F)
+        scan_order.append(cid)
     if (
-        scan_at is None
-        or not w
-        or not scan_order
-        or any(cid not in by_cid for cid in scan_order)
+        any(cid not in by_cid for cid in scan_order)
         or any(by_cid[cid][3] not in qt for cid in scan_order)
         or any(scan_ids[cid][0] not in huff_dc for cid in scan_order)
         or any(scan_ids[cid][1] not in huff_ac for cid in scan_order)
     ):
         raise ValueError("JPEG scan started before SOF/DQT/DHT")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    luma_cid = scan_order[0]
-    ly_hs, ly_vs = by_cid[luma_cid][1], by_cid[luma_cid][2]
-    if len(comps) == 3 and (ly_hs, ly_vs) != (hmax, vmax):
-        raise ValueError("unsupported JPEG (luma is not the max-sampled "
-                         "component)")
     if len(comps) == 1:
         # non-interleaved single-component scan: MCU = one block
-        mcux, mcuy = (w + 7) // 8, (h + 7) // 8
+        mcux, mcuy = gw, gh
         plan = [(luma_cid, 1, 1, True)]
-        gw, gh = mcux, mcuy
     else:
-        mcux = (w + 8 * hmax - 1) // (8 * hmax)
-        mcuy = (h + 8 * vmax - 1) // (8 * vmax)
         plan = [
             (cid, by_cid[cid][1], by_cid[cid][2], cid == luma_cid)
             for cid in scan_order
         ]
-        gw, gh = mcux * ly_hs, mcuy * ly_vs
-    q = qt[by_cid[luma_cid][3]]
     br = _JpegBits(payload, scan_at)
     tables = {
         cid: (huff_dc[scan_ids[cid][0]], huff_ac[scan_ids[cid][1]])
         for cid in scan_order
     }
     prev_dc = {cid: 0 for cid in scan_order}
-    nblk = gw * gh
     # entropy decode is inherently sequential: collect the (rare) nonzero
     # zigzag coefficients as sparse triples, then dequantize + de-zigzag +
     # IDCT every block in one batched numpy pass instead of per-pixel loops
@@ -4973,22 +4991,10 @@ def _jpeg_decode_baseline(payload: bytes) -> tuple[int, int, bytearray]:
                                 coef_idx.append(i)
                                 coef_val.append(v)
                             i += 1
-    zz = np.zeros((nblk, 64), dtype=np.float64)
+    zz = np.zeros((gw * gh, 64), dtype=np.float64)
     if blk_idx:
         zz[blk_idx, coef_idx] = coef_val
-    zz *= np.asarray(q, dtype=np.float64)  # quant table is zigzag-ordered
-    nat = np.zeros_like(zz)
-    nat[:, list(_JPEG_ZIGZAG)] = zz  # natural-order coefficients
-    blocks = _DCT_AT_NP @ nat.reshape(nblk, 8, 8) @ _DCT_A_NP
-    px = np.floor(blocks + 128.5)  # == int(v + 128.5) inside the clamp
-    np.clip(px, 0.0, 255.0, out=px)
-    img = (
-        px.astype(np.uint8)
-        .reshape(gh, gw, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(gh * 8, gw * 8)
-    )
-    return w, h, bytearray(np.ascontiguousarray(img[:h, :w]).tobytes())
+    return zz
 
 
 def _jpeg_scan_end(data: bytes, pos: int) -> int:
@@ -5031,178 +5037,6 @@ def _jpeg_parse_dht(body: bytes, huff_dc: dict, huff_ac: dict) -> None:
         fast = _jpeg_fast_table(tuple(bits), tuple(vals))
         (huff_dc if tc == 0 else huff_ac)[th] = fast
         i += 17 + nv
-
-
-def _jpeg_decode_progressive(payload: bytes) -> tuple[int, int, bytearray]:
-    """Progressive (SOF2) half of ``jpeg_decode_gray8``: multi-scan
-    successive approximation per ITU T.81 Annex G — DC-first scans
-    (point-transformed diffs, interleaved or single-component),
-    DC-refinement (one raw bit per block), AC-first scans (spectral
-    bands with EOB runs) and AC-refinement (correction bits + newly
-    nonzero ±2^Al), with tables redefinable between scans and restart
-    intervals resetting predictors AND the EOB run. Luma coefficients
-    accumulate across scans; chroma-only scans are skipped wholesale
-    (their data is never needed to locate the next marker)."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    qt: dict[int, list[int]] = {}
-    huff_dc: dict[int, list[int]] = {}
-    huff_ac: dict[int, list[int]] = {}
-    w = h = 0
-    comps: list[tuple[int, int, int, int]] = []
-    by_cid: dict[int, tuple[int, int, int, int]] = {}
-    restart_interval = 0
-    luma_cid = None
-    y_coef: list[list[int]] | None = None
-    gw = gh = mcux = mcuy = 0
-    hmax = vmax = 1
-    extend = _jpeg_extend
-    pos = 2
-    n = len(payload)
-    saw_eoi = False
-    while pos + 2 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD8:
-            continue
-        if marker == 0xD9:
-            saw_eoi = True
-            break
-        if pos + 2 > n:
-            raise ValueError("truncated JPEG segment header")
-        ln = int.from_bytes(payload[pos : pos + 2], "big")
-        if ln < 2 or pos + ln > n:
-            raise ValueError("truncated JPEG segment")
-        body = payload[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xDB:
-            _jpeg_parse_dqt(body, qt)
-        elif marker == 0xC4:
-            _jpeg_parse_dht(body, huff_dc, huff_ac)
-        elif marker == 0xDD:
-            if len(body) < 2:
-                raise ValueError("truncated JPEG DRI segment")
-            restart_interval = int.from_bytes(body[0:2], "big")
-        elif marker == 0xC2:
-            if comps:
-                raise ValueError("unsupported JPEG (multiple frames)")
-            if body[0] != 8:
-                raise ValueError("unsupported JPEG (precision != 8)")
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if nc not in (1, 3):
-                raise ValueError(
-                    f"unsupported JPEG ({nc} components); decoder covers "
-                    "grayscale and YCbCr"
-                )
-            if len(body) < 6 + 3 * nc:
-                raise ValueError("truncated JPEG SOF")
-            for c in range(nc):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                hs, vs = hv >> 4, hv & 0x0F
-                if hs not in (1, 2) or vs not in (1, 2):
-                    raise ValueError(
-                        f"unsupported JPEG (sampling factor {hs}x{vs}); "
-                        "decoder covers factors 1-2"
-                    )
-                comps.append((cid, hs, vs, body[8 + 3 * c]))
-            if w <= 0 or h <= 0 or w * h > 64_000_000:
-                raise ValueError(
-                    "JPEG geometry invalid or over the decode bound"
-                )
-            by_cid = {c[0]: c for c in comps}
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            luma_cid = comps[0][0]
-            ly_hs, ly_vs = comps[0][1], comps[0][2]
-            if nc == 3 and (ly_hs, ly_vs) != (hmax, vmax):
-                raise ValueError(
-                    "unsupported JPEG (luma is not the max-sampled "
-                    "component)"
-                )
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            if nc == 1:
-                gw, gh = (w + 7) // 8, (h + 7) // 8
-            else:
-                gw, gh = mcux * ly_hs, mcuy * ly_vs
-            y_coef = [[0] * 64 for _ in range(gw * gh)]
-        elif marker in _JPEG_SOF_MARKERS:
-            raise ValueError(
-                f"unsupported JPEG (SOF 0x{marker:02X}); decoder covers "
-                "baseline sequential (SOF0) and progressive (SOF2)"
-            )
-        elif marker == 0xDA:
-            if y_coef is None:
-                raise ValueError("JPEG scan started before SOF")
-            ns = body[0]
-            if ns < 1 or ns > len(comps) or len(body) < 1 + 2 * ns + 3:
-                raise ValueError("malformed JPEG SOS header")
-            scan: list[tuple[int, int, int]] = []  # (cid, td, ta)
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                if cid not in by_cid:
-                    raise ValueError("JPEG scan names an unknown component")
-                tt = body[2 + 2 * c]
-                scan.append((cid, tt >> 4, tt & 0x0F))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            data_at = pos
-            pos = _jpeg_scan_end(payload, pos)
-            if ss == 0 and se != 0:
-                raise ValueError(
-                    "invalid progressive scan (DC scan must have Se=0)"
-                )
-            if ss > se or se > 63:
-                raise ValueError("invalid progressive spectral band")
-            if ss > 0 and ns != 1:
-                raise ValueError(
-                    "invalid progressive scan (AC scans are single-"
-                    "component)"
-                )
-            if ss == 0:
-                _jpeg_prog_dc_scan(
-                    payload, data_at, scan, by_cid, huff_dc, y_coef,
-                    luma_cid, w, h, hmax, vmax, gw, mcux, mcuy, ah, al,
-                    restart_interval, extend,
-                )
-            else:
-                cid, _td, ta = scan[0]
-                if cid != luma_cid:
-                    continue  # chroma detail never reaches the luma plane
-                if ta not in huff_ac:
-                    raise ValueError("JPEG AC scan before its DHT")
-                _jpeg_prog_ac_scan(
-                    payload, data_at, huff_ac[ta], y_coef, by_cid[cid],
-                    w, h, hmax, vmax, len(comps), gw, ss, se, ah, al,
-                    restart_interval, extend,
-                )
-        # APPn / COM and other markers are skipped
-    if y_coef is None or not saw_eoi:
-        raise ValueError("truncated progressive JPEG (no EOI)")
-    tq = by_cid[luma_cid][3]
-    if tq not in qt:
-        raise ValueError("JPEG luma quant table missing")
-    nblk = gw * gh
-    zz = np.asarray(y_coef, dtype=np.float64)
-    zz *= np.asarray(qt[tq], dtype=np.float64)
-    nat = np.zeros_like(zz)
-    nat[:, list(_JPEG_ZIGZAG)] = zz
-    blocks = _DCT_AT_NP @ nat.reshape(nblk, 8, 8) @ _DCT_A_NP
-    px = np.floor(blocks + 128.5)
-    np.clip(px, 0.0, 255.0, out=px)
-    img = (
-        px.astype(np.uint8)
-        .reshape(gh, gw, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(gh * 8, gw * 8)
-    )
-    return w, h, bytearray(np.ascontiguousarray(img[:h, :w]).tobytes())
 
 
 def _jpeg_prog_dc_scan(

@@ -254,49 +254,36 @@ class Warehouse:
 
     # -- resume ------------------------------------------------------------
 
-    def pending(
-        self,
-        pages: DataFrame,
-        prune_days: bool = True,
-        prune_scope: str = "all",
-        _commits: list[dict] | None = None,
-    ) -> DataFrame:
-        """Input rows not yet in any committed run.
-
-        ``prune_days`` drops sealed days with a pushdown-able filter before
-        the url anti-join, so the join's build side is only the frontier
-        (SURVEY.md §4.4). The anti-join itself is the always-correct path —
-        pass ``prune_days=False`` when the input may contain LATE rows for
-        days already sealed (day pruning would silently drop them).
-
-        ``prune_scope``: which seals count — "all" (batch restarts: every
-        sealed day) or "markers" (watermarking streams: ONLY days sealed by
-        watermark policy; days sealed by batch data commits are still
-        anti-joined, so a within-horizon late row for a batch-sealed day is
-        extracted, not silently dropped).
-
-        ``_commits``: pre-listed snapshot state, so one job re-reads the
-        commit markers once instead of per helper call.
+    def pending(self, pages: DataFrame) -> DataFrame:
+        """Input rows not yet in any committed run, as a whole-table
+        restart sees them: sealed days drop with a pushdown-able filter
+        before the url anti-join, so the join's build side is only the
+        frontier (SURVEY.md §4.4). The anti-join itself is the
+        always-correct path — ``run(prune_days=False)`` keeps it alone
+        when the input may contain LATE rows for days already sealed (day
+        pruning would silently drop them).
         """
-        spark = pages.sparkSession
-        commits = self.commits() if _commits is None else _commits
+        commits = self.commits()
+        return self._pending(pages, commits, self._complete_days(commits))
+
+    def _pending(
+        self, pages: DataFrame, commits: list[dict], prune: set[str]
+    ) -> DataFrame:
+        """``pending`` over pre-listed snapshot state (one job reads the
+        commit markers once), skipping the ``prune`` days."""
         if not commits:
             return pages
-        if prune_days:
-            day_set = (
-                self._marker_days(commits)
-                if prune_scope == "markers"
-                else self._complete_days(commits)
+        sealed = sorted(d for d in prune if d is not None)
+        if sealed:
+            pages = pages.where(
+                F.col("warc_ts").isNull()
+                | ~_day(F.col("warc_ts")).isin(sealed)
             )
-            sealed = sorted(d for d in day_set if d is not None)
-            if sealed:
-                pages = pages.where(
-                    F.col("warc_ts").isNull()
-                    | ~_day(F.col("warc_ts")).isin(sealed)
-                )
         if not self._data_run_ids(commits):
             return pages  # only seal markers: nothing to anti-join against
-        committed = self.read_extracted(spark, _commits=commits).select("url")
+        committed = self.read_extracted(
+            pages.sparkSession, _commits=commits
+        ).select("url")
         return pages.join(committed, "url", "left_anti")
 
     def seal_watermark(self, days: set[str]) -> dict | None:
@@ -308,9 +295,9 @@ class Warehouse:
         seal-marker commit; returns its record (None if nothing new)."""
         commits = self.commits()
         # Diff against MARKER days, not all sealed days: a day sealed only
-        # by a batch data commit still needs its watermark marker, or
-        # prune_scope="markers" readers would anti-join it forever (and
-        # never apply the beyond-horizon drop contract to it).
+        # by a batch data commit still needs its watermark marker, or runs
+        # that do not seal (which prune marker days only) would anti-join
+        # it forever (and never apply the beyond-horizon drop contract).
         new = {d for d in days if d is not None} - self._marker_days(commits)
         if not new:
             return None
@@ -321,8 +308,8 @@ class Warehouse:
             "n_docs": 0,
             "n_bytes": 0,
             # Markers accumulate WATERMARK-sealed days only (not days sealed
-            # by batch data commits) so prune_scope="markers" readers see
-            # exactly the beyond-horizon set.
+            # by batch data commits) so runs that do not seal see exactly
+            # the beyond-horizon set.
             "complete_days": sorted(new | self._marker_days(commits)),
             "committed_at": time.time(),
         }
@@ -578,7 +565,6 @@ class Warehouse:
         fail_before_commit: bool = False,
         seal_days: bool = True,
         prune_days: bool | None = None,
-        prune_scope: str = "all",
     ) -> dict:
         """One resumable extraction job: pending → extract → append → commit.
 
@@ -590,10 +576,14 @@ class Warehouse:
         the anti-join then remains the sole — always correct — dedup
         mechanism.
 
-        ``prune_days`` (default: follows ``seal_days``): whether pending()
-        may skip sealed days. A caller whose input can contain LATE rows
-        for sealed days (streaming) must keep this False, or those rows
-        are silently dropped; a whole-table batch restart keeps it True.
+        ``prune_days`` (default: follows ``seal_days``): whether the run
+        may skip sealed days before the anti-join. Which days follows
+        ``seal_days``: a run that seals (a whole-table batch restart)
+        skips every sealed day; one that does not (a stream's micro-batch)
+        skips only days sealed by watermark policy — a day a batch data
+        commit sealed may still be within the stream's lateness horizon,
+        so its late rows go through the anti-join. A caller whose input
+        can contain LATE rows it must not drop keeps this False.
 
         ``fail_before_commit`` aborts after the data write but before the
         snapshot marker — the crash injection used by the resume tests (T3).
@@ -601,12 +591,11 @@ class Warehouse:
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         commits = self.commits()  # one snapshot listing per job
-        todo = self.pending(
-            pages,
-            prune_days=seal_days if prune_days is None else prune_days,
-            prune_scope=prune_scope,
-            _commits=commits,
-        )
+        prune: set[str] = set()
+        if seal_days if prune_days is None else prune_days:
+            seals = self._complete_days if seal_days else self._marker_days
+            prune = seals(commits)
+        todo = self._pending(pages, commits, prune)
         lrows = self._append(
             spark, self._to_write(todo, salt_partitions), run_id
         )

@@ -281,14 +281,13 @@ def streaming_extract(
                 run_id=f"stream_{batch_id:08d}_{uuid.uuid4().hex[:6]}",
                 seal_days=False,
                 # With a watermark, WATERMARK-sealed days are beyond the
-                # horizon, so pruning them IS the lateness policy — but only
-                # kind='seal' marker days qualify (prune_scope="markers"):
-                # a day sealed by a batch data commit in a shared warehouse
-                # may still be within this stream's horizon, and its late
-                # rows must keep flowing through the anti-join, not be
-                # silently dropped. Without a watermark, never prune.
+                # horizon, so pruning them IS the lateness policy — and a
+                # run that does not seal prunes only kind='seal' marker
+                # days: a day sealed by a batch data commit in a shared
+                # warehouse may still be within this stream's horizon, and
+                # its late rows must keep flowing through the anti-join,
+                # not be silently dropped. Without a watermark, never prune.
                 prune_days=watermark_lateness_days is not None,
-                prune_scope="markers",
             )
         )
 

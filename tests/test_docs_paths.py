@@ -2,7 +2,8 @@
 that the living docs or the package's docstrings and comments name must
 exist, so deleting or renaming a file fails here instead of leaving the
 docs pointing at nothing. Likewise every ``oracle.<name>`` /
-``media.<name>`` the living docs name must be an attribute of that module.
+``media.<name>`` the living docs or the package's docstrings and comments
+name must be an attribute of that module.
 
 The historical records (VERDICT.md, PLANS.md, CHANGES.md, ROADMAP.md,
 ``BENCH_r*.json``) describe the repository as it was and are not checked.
@@ -50,13 +51,18 @@ def _py_prose(path: Path) -> str:
     return "\n".join(parts)
 
 
-def _named_paths() -> dict[str, set[str]]:
-    """Each named module path → the files that name it."""
+def _sources() -> dict[str, str]:
+    """The living docs and the package's prose, by file."""
     sources = {name: (REPO / name).read_text(encoding="utf-8") for name in DOCS}
     for path in sorted(PACKAGE.rglob("*.py")):
         sources[str(path.relative_to(REPO))] = _py_prose(path)
+    return sources
+
+
+def _named_paths() -> dict[str, set[str]]:
+    """Each named module path → the files that name it."""
     named: dict[str, set[str]] = {}
-    for where, text in sources.items():
+    for where, text in _sources().items():
         for m in PATH_RE.finditer(text):
             named.setdefault(m.group(1), set()).add(where)
     return named
@@ -75,9 +81,9 @@ def test_named_module_attributes_exist():
 
     modules = {"oracle": oracle, "media": media}
     named = {
-        (m.group(1), m.group(2), name)
-        for name in DOCS
-        for m in ATTR_RE.finditer((REPO / name).read_text(encoding="utf-8"))
+        (m.group(1), m.group(2), where)
+        for where, text in _sources().items()
+        for m in ATTR_RE.finditer(text)
     }
     assert named, "the pattern matched nothing; the guard checks nothing"
     missing = sorted(

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import zlib
 
+import pytest
+
 from multi_format_document_extractor_spark import oracle
 
 
@@ -418,6 +420,65 @@ def test_gif_spec_sample_and_truncation_fuzz():
     assert not e.ok and "partial/offset" in e.error
 
 
+def test_gif_gray_is_the_first_frame():
+    """The single-image and multi-frame GIF readers agree: the first
+    composited frame is the single-image decode, for every render_gif
+    text × interlace × extension variant."""
+    texts = (
+        ["HELLO WORLD", "SECOND LINE X", "ABC"],
+        ["A"],
+        ["THE QUICK BROWN FOX JUMPS"],
+    )
+    for lines in texts:
+        for interlace in (False, True):
+            for ext in (False, True):
+                g = oracle.render_gif(
+                    lines, interlace=interlace, with_extension=ext
+                )
+                w, h, lum = oracle.gif_decode_gray(g)
+                fw, fh, frames = oracle.gif_decode_frames(g)
+                assert (fw, fh, len(frames)) == (w, h, 1)
+                assert frames[0] == (0, lum), (lines, interlace, ext)
+
+
+def test_gif_frames_disposal_and_transparency():
+    """Graphic Control Extension semantics the writers never emit:
+    disposal 2 restores a frame's rect to the background before the next
+    frame, and a transparent index leaves the canvas underneath."""
+    gif = oracle.render_gif_animated(
+        [["WIDE FIRST"], ["X"]], partial_after_first=True
+    )
+    gce = [i for i in range(len(gif)) if gif.startswith(b"\x21\xf9\x04", i)]
+    assert len(gce) == 2
+    w, h, frames = oracle.gif_decode_frames(gif)
+    f0, f1 = (px for _delay, px in frames)
+    x_rect = {y * w + x for y in range(h) for x in range(6)}
+
+    def patched(frame: int, packed: int) -> bytes:
+        g = bytearray(gif)
+        g[gce[frame] + 3] = packed  # transparent index byte stays 0 (white)
+        return bytes(g)
+
+    def pixels(g: bytes) -> list[bytearray]:
+        return [px for _delay, px in oracle.gif_decode_frames(g)[2]]
+
+    # disposal 2 on frame 0: outside X's rect, frame 1 shows background
+    d0, d1 = pixels(patched(0, 0x08))
+    assert d0 == f0
+    assert all(d1[i] == 255 for i in range(w * h) if i not in x_rect)
+    assert all(d1[i] == f1[i] for i in x_rect)
+    # transparent white on frame 1: only its ink lands on frame 0
+    t0, t1 = pixels(patched(1, 0x01))
+    assert t0 == f0
+    assert t1 == bytearray(
+        min(f0[i], f1[i]) if i in x_rect else f0[i] for i in range(w * h)
+    )
+    # disposal 3 is refused by name; the single-image reader ignores it
+    with pytest.raises(ValueError, match="disposal 3"):
+        oracle.gif_decode_frames(patched(0, 0x0C))
+    assert oracle.gif_decode_gray(patched(0, 0x0C))[2] == f0
+
+
 def test_csv_sniff_and_extract():
     """Structural CSV probe + normalization: stripped cells joined ' | ',
     n_blocks = data rows, CRLF and latin-1 payloads handled via the
@@ -719,6 +780,55 @@ def test_jpeg_render_decode_roundtrip_and_errors():
         bad[flip_at] ^= 0x55
         e = oracle.extract(bytes(bad))
         assert isinstance(e.ok, bool)
+
+
+def _jpeg_header_spans(j: bytes) -> list[tuple[int, int, int]]:
+    """(marker, start, end) of each encoder-written header segment, up
+    to and including SOS."""
+    spans, pos = [], 2
+    while True:
+        marker = j[pos + 1]
+        end = pos + 2 + int.from_bytes(j[pos + 2 : pos + 4], "big")
+        spans.append((marker, pos, end))
+        if marker == 0xDA:
+            return spans
+        pos = end
+
+
+def test_jpeg_frame_type_contracts():
+    """Each frame type keeps its own contract inside the one decoder:
+    SOF0 needs its tables before the scan, needs every frame component
+    in its one scan, and decodes without EOI; SOF2 needs EOI."""
+    lines = ["QUICK BROWN FOX", "JUMPS OVER", "A"]
+    text = b"QUICK BROWN FOX\nJUMPS OVER\nA"
+    for color in (False, True):
+        j = oracle.render_jpeg(lines, color=color)
+        spans = _jpeg_header_spans(j)
+        no_dht = j[:2] + b"".join(j[a:b] for m, a, b in spans if m != 0xC4)
+        no_dht += j[spans[-1][2] :]
+        with pytest.raises(ValueError, match="started before SOF/DQT/DHT$"):
+            oracle.jpeg_decode_gray8(no_dht)
+        # a complete baseline scan missing only its EOI still decodes
+        assert j[-2:] == b"\xff\xd9"
+        assert oracle.extract_jpeg(j[:-2]) == (text, 3)
+        assert oracle.jpeg_decode_gray8(j[:-2]) == oracle.jpeg_decode_gray8(j)
+        prog = oracle.render_jpeg(lines, color=color, progressive=True)
+        assert oracle.extract_jpeg(prog) == (text, 3)
+        with pytest.raises(
+            ValueError, match=r"^truncated progressive JPEG \(no EOI\)$"
+        ):
+            oracle.jpeg_decode_gray8(prog[:-2])
+    # a color baseline whose SOS names only the luma component
+    c = oracle.render_jpeg(lines, color=True)
+    _m, a, b = _jpeg_header_spans(c)[-1]
+    sos = c[a + 4 : b]
+    ns = sos[0]
+    assert ns == 3
+    one = bytes([1]) + sos[1:3] + sos[1 + 2 * ns :]
+    seg = b"\xff\xda" + (len(one) + 2).to_bytes(2, "big") + one
+    bad = c[:a] + seg + c[b:]
+    with pytest.raises(ValueError, match=r"single-scan baseline\)$"):
+        oracle.jpeg_decode_gray8(bad)
 
 
 def test_pdf15_objstm_xref_stream_container():
