@@ -36,7 +36,9 @@ from ..oracle import (
     _MP3_BITRATES,
     MAGIC_MEDIA,
     _is_bmff,
+    _jpeg_seg,
     _mp3_frame_header,
+    _png_chunk,
     bmp_dims,
     first_magic,
     gif_decode_frames,
@@ -630,13 +632,7 @@ def render_exif_jpeg(make: str, model: str, shot_at: str) -> bytes:
         + bytes(4)
         + b"".join(v for v in vals if len(v) > 4)
     )
-    app1 = b"Exif\x00\x00" + tiff
-    return (
-        b"\xff\xd8\xff\xe1"
-        + (2 + len(app1)).to_bytes(2, "big")
-        + app1
-        + b"\xff\xd9"
-    )
+    return b"\xff\xd8" + _jpeg_seg(0xE1, b"Exif\x00\x00" + tiff) + b"\xff\xd9"
 
 
 def id3_tags(payload: bytes) -> dict[str, str]:
@@ -720,17 +716,10 @@ def add_png_text(png: bytes, kv: dict[str, str]) -> bytes:
     """Insert tEXt chunks (with real CRCs) after IHDR — the writer half
     of png_text_chunks, composing with any real PNG (oracle.render_png
     output stays decodable by standard readers)."""
-    import zlib
-
-    chunks = b""
-    for k, v in kv.items():
-        body = k.encode("latin-1") + b"\x00" + v.encode("latin-1")
-        chunks += (
-            len(body).to_bytes(4, "big")
-            + b"tEXt"
-            + body
-            + zlib.crc32(b"tEXt" + body).to_bytes(4, "big")
-        )
+    chunks = b"".join(
+        _png_chunk(b"tEXt", k.encode("latin-1") + b"\x00" + v.encode("latin-1"))
+        for k, v in kv.items()
+    )
     ihdr_end = 8 + 4 + 4 + int.from_bytes(png[8:12], "big") + 4
     return png[:ihdr_end] + chunks + png[ihdr_end:]
 

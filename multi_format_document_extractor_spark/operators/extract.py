@@ -170,6 +170,29 @@ def extract_pages(
     return df.mapInPandas(_make_extract_batches(max_bytes, escalate), schema=schema)
 
 
+def _provenance_stage(pages: DataFrame, fmt: str, rows_of, ddl: str) -> DataFrame:
+    """One zero-shuffle ``mapInPandas`` stage over the ``fmt`` pages (the
+    native format pre-filter pushes below the UDF): ``rows_of(payload)``
+    yields each page's rows without the url, in ``ddl`` column order."""
+    df = pages.select("url", "html").where(format_col(F.col("html")) == fmt)
+    cols = [c.split()[0] for c in ddl.split(", ")]
+
+    def _batches(
+        batches: Iterator["pd.DataFrame"],
+    ) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                (url, *row)
+                for url, payload in zip(pdf["url"], pdf["html"])
+                for row in rows_of(bytes(payload))
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(_batches, ddl)
+
+
 SPANS_DDL = (
     "url string, block_idx int, src_start int, src_end int, "
     "kept boolean, n_chars int, encoding string"
@@ -192,43 +215,11 @@ def extract_spans(pages: DataFrame) -> DataFrame:
     tests/test_spans.py."""
     from ..oracle import html_block_spans
 
-    df = pages.select("url", "html").where(
-        format_col(F.col("html")) == "html"
-    )
+    def rows_of(payload: bytes):
+        spans, enc = html_block_spans(payload)
+        return [(*span, enc) for span in spans]
 
-    def _batches(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = [
-            "url",
-            "block_idx",
-            "src_start",
-            "src_end",
-            "kept",
-            "n_chars",
-            "encoding",
-        ]
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                spans, enc = html_block_spans(bytes(payload))
-                for i, s, e, kept, n in spans:
-                    rows.append(
-                        {
-                            "url": url,
-                            "block_idx": i,
-                            "src_start": s,
-                            "src_end": e,
-                            "kept": kept,
-                            "n_chars": n,
-                            "encoding": enc,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(_batches, SPANS_DDL)
+    return _provenance_stage(pages, "html", rows_of, SPANS_DDL)
 
 
 BOXES_DDL = (
@@ -247,34 +238,7 @@ def extract_pdf_boxes(pages: DataFrame) -> DataFrame:
     pushes below the UDF; zero shuffle."""
     from ..oracle import pdf_layout_boxes
 
-    df = pages.select("url", "html").where(
-        format_col(F.col("html")) == "pdf"
-    )
-
-    def _batches(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ["url", "page_idx", "x", "y", "col", "box_order", "text"]
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                for pg, x, y, c, o, t in pdf_layout_boxes(bytes(payload)):
-                    rows.append(
-                        {
-                            "url": url,
-                            "page_idx": pg,
-                            "x": x,
-                            "y": y,
-                            "col": c,
-                            "box_order": o,
-                            "text": t,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(_batches, BOXES_DDL)
+    return _provenance_stage(pages, "pdf", pdf_layout_boxes, BOXES_DDL)
 
 
 _MARKER_WORDS = "_marker_words"

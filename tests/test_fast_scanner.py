@@ -18,12 +18,90 @@ from __future__ import annotations
 
 import random
 import time
+from html.parser import HTMLParser
 
 from multi_format_document_extractor_spark.oracle import (
-    _blocks_ref,
+    _BLOCK_TAGS,
+    _DROP_TAGS,
+    _VOID_TAGS,
+    _Block,
     _scan_blocks,
     extract,
 )
+
+
+class _BlockParser(HTMLParser):
+    """Segment an HTML document into text blocks with per-block stats."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.blocks: list[_Block] = []
+        self._cur = _Block()
+        self._drop_depth = 0
+        self._link_depth = 0
+
+    def updatepos(self, i: int, j: int) -> int:
+        # line/column tracking feeds only HTMLParser error positions, which
+        # this parser never reads; skipping it removes ~7% of parse time.
+        return j
+
+    def _flush(self) -> None:
+        if self._cur.text_parts or self._cur.n_tags:
+            self.blocks.append(self._cur)
+        self._cur = _Block()
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        if tag in _DROP_TAGS:
+            self._drop_depth += 1
+            return
+        if self._drop_depth:
+            return
+        if tag in _BLOCK_TAGS:
+            self._flush()
+        elif tag == "a":
+            self._link_depth += 1
+            self._cur.n_tags += 1
+        elif tag not in _VOID_TAGS:
+            self._cur.n_tags += 1
+
+    def handle_startendtag(self, tag: str, attrs) -> None:
+        if self._drop_depth or tag in _DROP_TAGS:
+            return
+        if tag in _BLOCK_TAGS:
+            self._flush()
+
+    def handle_endtag(self, tag: str) -> None:
+        if tag in _DROP_TAGS:
+            self._drop_depth = max(0, self._drop_depth - 1)
+            return
+        if self._drop_depth:
+            return
+        if tag in _BLOCK_TAGS:
+            self._flush()
+        elif tag == "a":
+            self._link_depth = max(0, self._link_depth - 1)
+
+    def handle_data(self, data: str) -> None:
+        if self._drop_depth or not data:
+            return
+        self._cur.text_parts.append(data)
+        if self._link_depth:
+            # same whitespace-collapsed length as _Block.text (see there for
+            # the split/join ≡ \s+-sub equivalence)
+            self._cur.link_chars += len(" ".join(data.split()))
+
+    def close(self) -> None:
+        super().close()
+        self._flush()
+
+
+def _blocks_ref(data: str) -> list[_Block]:
+    """html.parser-based reference block segmentation (the differential
+    baseline for _scan_blocks)."""
+    parser = _BlockParser()
+    parser.feed(data)
+    parser.close()
+    return parser.blocks
 
 
 def sig(blocks):

@@ -581,6 +581,10 @@ def test_png_render_decode_roundtrip_and_errors():
     # spec sample scaling: 2-bit gray 0/1/2/3 → 0/85/170/255 exactly
     p = _png_encode(bytearray([0, 1, 2, 3]), 4, 1, 0, None, [0], depth=2)
     assert list(png_decode_gray8(p)[2]) == [0, 85, 170, 255]
+    # a sub-byte depth the spec does not define is a named error
+    for d in (3, 5):
+        with pytest.raises(ValueError, match=f"^sub-byte depth {d} invalid"):
+            _png_encode(bytearray(4), 4, 1, 0, None, [0], depth=d)
     # v15 tRNS transparency: DARK paper keyed (gray/RGB) or zero-alpha
     # (palette) reads the page ONLY through the chunk
     for ct in (0, 2, 3):
@@ -694,7 +698,7 @@ def test_jpeg_render_decode_roundtrip_and_errors():
         extract_jpeg,
         jpeg_decode_gray8,
         jpeg_dims,
-        jpeg_encode_gray8,
+        jpeg_encode,
         render_jpeg,
     )
 
@@ -711,7 +715,7 @@ def test_jpeg_render_decode_roundtrip_and_errors():
     # every AC path: runs, ZRL, EOB, byte stuffing)
     w, h = 21, 13
     img = [[(x * 7 + y * 11) % 256 for x in range(w)] for y in range(h)]
-    data = jpeg_encode_gray8(img, w, h)
+    data = jpeg_encode(img, w, h, False, (1, 1), 0, False)
     w2, h2, pix = jpeg_decode_gray8(data)
     assert (w2, h2) == (w, h) == jpeg_dims(data)
     assert max(
@@ -829,6 +833,27 @@ def test_jpeg_frame_type_contracts():
     bad = c[:a] + seg + c[b:]
     with pytest.raises(ValueError, match=r"single-scan baseline\)$"):
         oracle.jpeg_decode_gray8(bad)
+
+
+def test_jpeg_short_sof_and_sos_bodies_are_named_truncations():
+    """A SOF whose length field says 3 and a SOS whose length field says
+    2 are named truncations for the geometry reader and the decoder,
+    never a (0, 0) geometry or a bare IndexError."""
+    for color in (False, True):
+        j = oracle.render_jpeg(["AB"], color=color)
+        spans = {m: (a, b) for m, a, b in _jpeg_header_spans(j)}
+        sof = spans[0xC0][0]
+        short_sof = j[: sof + 2] + b"\x00\x03" + j[sof + 4 :]
+        for fn in (oracle.jpeg_dims, oracle.jpeg_decode_gray8):
+            with pytest.raises(ValueError, match=r"^truncated JPEG SOF$"):
+                fn(short_sof)
+        sos = spans[0xDA][0]
+        short_sos = j[: sos + 2] + b"\x00\x02" + j[sos + 4 :]
+        with pytest.raises(ValueError, match=r"^truncated JPEG SOS$"):
+            oracle.jpeg_decode_gray8(short_sos)
+        for p in (short_sof, short_sos):
+            e = oracle.extract(p)
+            assert e.format == "image" and not e.ok and "truncated JPEG" in e.error
 
 
 def test_pdf15_objstm_xref_stream_container():
