@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .rounding import rnd
+from .textstats import words
 
 # F5: THE closed date-format contract — the one authoritative list
 # (round-3 VERDICT "What's missing" #3 asked for it in one place),
@@ -83,7 +84,7 @@ def product_code(desc: Column) -> Column:
     (src/parsers/pdf_parser.py:348-356)."""
     initials = F.array_join(
         F.transform(
-            F.slice(F.split(F.trim(desc), r"\s+"), 1, 3),
+            F.slice(words(desc), 1, 3),
             lambda w: F.upper(F.substring(w, 1, 1)),
         ),
         "",

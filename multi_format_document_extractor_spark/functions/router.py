@@ -46,8 +46,8 @@ REASONS = {
 def route_profile(text: Column) -> tuple[Column, Column]:
     """(route, reason) columns from the ordered rule ladder. Rule order is
     the contract (mirrors the reference's elif chain): empty → noise →
-    complex → simple → default. Mirrored in SQL by the ``doc_router``
-    registry oracle — keep the two ladders in lockstep."""
+    complex → simple → default. ``route_profile_sql`` below is the
+    DuckDB mirror that the ``doc_router`` registry oracle runs."""
     n_tokens = TS.token_count_ws(text)
     quality = TS.quality_score(text)
     route = (
@@ -64,3 +64,19 @@ def route_profile(text: Column) -> tuple[Column, Column]:
         *[x for kv in REASONS.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
     )
     return route, F.element_at(reason_map, route)
+
+
+def route_profile_sql(text: str) -> tuple[str, str]:
+    """(route, reason) SQL expressions: ``route_profile``'s ladder over
+    ``token_count_ws_sql`` and ``quality_score_sql``."""
+    route = TS.let_sql(
+        {"n": TS.token_count_ws_sql(text), "q": TS.quality_score_sql(text)},
+        f"CASE WHEN v.n = 0 THEN '{ROUTE_MANUAL}'"
+        f" WHEN v.q < {QUALITY_NOISE_MAX} THEN '{ROUTE_RELAXED}'"
+        f" WHEN v.n >= {TOKENS_COMPLEX_MIN}"
+        f" AND v.q >= {QUALITY_CLEAN_MIN} THEN '{ROUTE_LAYOUT}'"
+        f" WHEN v.n <= {TOKENS_SIMPLE_MAX} THEN '{ROUTE_FAST}'"
+        f" ELSE '{ROUTE_HYBRID}' END",
+    )
+    reason = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in REASONS.items())
+    return route, TS.let_sql({"r": route}, f"CASE v.r {reason} END")

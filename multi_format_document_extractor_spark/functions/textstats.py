@@ -1,11 +1,22 @@
 r"""Text-analysis columns for large-scale training-data pipelines:
-language ID, quality scoring, token counting, fingerprinting.
+word counts, stopword and marker hits, language ID, quality scoring,
+token counting, fingerprinting.
+
+This module is the one home of each text statistic in both engines. Each
+Spark Column definition has its DuckDB mirror right next to it: a
+``*_sql`` generator that takes a SQL expression string (the text) and
+returns the same statistic as a SQL expression, built from the same
+constants (``STOPWORDS``, ``LANG_MARKERS``, ``BPE_ISH_TOKEN_RE``,
+``PUNCT_RE``, the ``QUALITY_*`` weights). Registry oracles and operators
+call these and never restate a definition; ``tests/test_textstats.py``
+checks each pair for equal values and that no copy appears elsewhere in
+the package. Generated SQL writes ``\s``; the registry rewrites it to
+the explicit class of Java's ``\s`` before DuckDB runs it.
 
 All native Catalyst expressions (regex scans, rational arithmetic, md5
 hashing, and the higher-order ``filter``/``transform`` that count marker
-words) so every one is DuckDB-oracle-checkable. These extend the
-reference's text heuristics (first-lines scans, keyword predicates —
-SURVEY.md §2.5 W5, §2.2 P6) to corpus scale.
+words). These extend the reference's text heuristics (first-lines scans,
+keyword predicates — SURVEY.md §2.5 W5, §2.2 P6) to corpus scale.
 
 Marker counting scans each text ONCE: ``marker_words`` extracts every
 whole-word occurrence of any ``LANG_MARKERS``/``STOPWORDS`` word with one
@@ -24,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .rounding import rnd
+from .rounding import rnd, rnd_sql
 
 # Marker words per language for the n-gram-free heuristic language ID.
 # ASCII-only function words by design: \b word-boundary semantics around
@@ -50,17 +61,34 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 BPE_ISH_TOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
+PUNCT_RE = r"[^\w\s]"
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
 
+def let_sql(bindings: dict[str, str], body: str) -> str:
+    """``body`` with each name bound once to its SQL expression, read as
+    ``v.<name>``: DuckDB evaluates a repeated subexpression once per
+    occurrence, so a statistic used in several terms is bound instead."""
+    fields = ", ".join(f"'{k}': {e}" for k, e in bindings.items())
+    return f"list_transform([{{{fields}}}], v -> {body})[1]"
+
+
 def words(col: Column) -> Column:
-    """Whitespace tokens of a trimmed string (empty string → empty array)."""
+    """Whitespace tokens of a space-trimmed string (blank text → [''])."""
     return F.split(F.trim(col), r"\s+")
 
 
+def words_sql(x: str) -> str:
+    return f"string_split_regex(trim({x}), '\\s+')"
+
+
 def token_count_ws(col: Column) -> Column:
-    """Whitespace token count."""
+    """Whitespace token count (0 for blank text)."""
     return F.when(F.trim(col) == "", 0).otherwise(F.size(words(col)))
+
+
+def token_count_ws_sql(x: str) -> str:
+    return f"(CASE WHEN trim({x}) = '' THEN 0 ELSE len({words_sql(x)}) END)"
 
 
 def token_count_bpe(col: Column) -> Column:
@@ -68,11 +96,40 @@ def token_count_bpe(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_ISH_TOKEN_RE))
 
 
+def token_count_bpe_sql(x: str) -> str:
+    return f"len(regexp_extract_all({x}, '{BPE_ISH_TOKEN_RE}'))"
+
+
+def _marker_re(markers: tuple[str, ...]) -> str:
+    return r"(?i)\b(" + "|".join(markers) + r")\b"
+
+
 def marker_hits(col: Column, markers: tuple[str, ...]) -> Column:
     """Count of whole-word marker occurrences (case-insensitive) — the
     definition ``marker_count`` over ``marker_words`` reproduces."""
-    pat = r"(?i)\b(" + "|".join(markers) + r")\b"
-    return F.regexp_count(col, F.lit(pat))
+    return F.regexp_count(col, F.lit(_marker_re(markers)))
+
+
+def marker_hits_sql(x: str, markers: tuple[str, ...]) -> str:
+    return f"len(regexp_extract_all({x}, '{_marker_re(markers)}'))"
+
+
+def nonws_len(col: Column) -> Column:
+    """Characters left after removing every whitespace run."""
+    return F.length(F.regexp_replace(F.trim(col), r"\s+", ""))
+
+
+def nonws_len_sql(x: str) -> str:
+    return f"length(regexp_replace(trim({x}), '\\s+', '', 'g'))"
+
+
+def punct_count(col: Column) -> Column:
+    """Characters that are neither word characters nor whitespace."""
+    return F.regexp_count(col, F.lit(PUNCT_RE))
+
+
+def punct_count_sql(x: str) -> str:
+    return f"len(regexp_extract_all({x}, '{PUNCT_RE}'))"
 
 
 def _prefix_factored(words: set[str]) -> str:
@@ -143,6 +200,18 @@ def lang_id(col: Column) -> Column:
     return F.transform(F.array(marker_words(col)), lang_of_marker_words)[0]
 
 
+def lang_id_sql(x: str) -> str:
+    """The first maximal count in code order wins, as in ``lang_id``."""
+    codes = sorted(LANG_MARKERS)
+    hits = ", ".join(marker_hits_sql(x, LANG_MARKERS[c]) for c in codes)
+    names = ", ".join(f"'{c}'" for c in codes)
+    return let_sql(
+        {"s": f"[{hits}]"},
+        f"CASE WHEN list_max(v.s) > 0"
+        f" THEN [{names}][list_position(v.s, list_max(v.s))] ELSE 'und' END",
+    )
+
+
 def stopword_ratio(col: Column, hits: Column | None = None) -> Column:
     n = token_count_ws(col)
     if hits is None:
@@ -152,32 +221,74 @@ def stopword_ratio(col: Column, hits: Column | None = None) -> Column:
 
 def mean_word_len(col: Column) -> Column:
     n = token_count_ws(col)
-    chars = F.length(F.regexp_replace(F.trim(col), r"\s+", ""))
+    chars = nonws_len(col)
     return F.when(n > 0, chars.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def punct_ratio(col: Column) -> Column:
     total = F.length(col)
-    punct = F.regexp_count(col, F.lit(r"[^\w\s]"))
+    punct = punct_count(col)
     return F.when(total > 0, punct.cast("double") / total.cast("double")).otherwise(
         F.lit(0.0)
     )
 
 
+# quality_score's term weights (length, stopwords, word length,
+# punctuation; they sum to 1), the length in chars at which the length
+# term saturates, the gain on the stopword and punctuation ratios, and the
+# sane band of mean word length.
+QUALITY_WEIGHTS = (0.3, 0.3, 0.2, 0.2)
+QUALITY_FULL_LEN = 1000.0
+QUALITY_RATIO_GAIN = 4.0
+QUALITY_WORD_LEN = (3.0, 10.0)
+
+
 def quality_score(col: Column, stop_hits: Column | None = None) -> Column:
     """Composite document-quality heuristic in [0,1]: length saturation,
     stopword presence, word-length sanity, low punctuation noise.
-    Weights sum to 1; every term is rational arithmetic. ``stop_hits``
-    is the stopword count when the caller already has it
-    (``marker_count(words, STOPWORDS)``); by default ``col`` is scanned."""
-    length_term = F.least(F.length(col).cast("double") / 1000.0, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(col, stop_hits) * 4.0, F.lit(1.0))
+    Every term is rational arithmetic. ``stop_hits`` is the stopword count
+    when the caller already has it (``marker_count(words, STOPWORDS)``);
+    by default ``col`` is scanned."""
+    w_len, w_stop, w_wl, w_punct = QUALITY_WEIGHTS
+    lo, hi = QUALITY_WORD_LEN
+    gain = QUALITY_RATIO_GAIN
+    length_term = F.least(F.length(col).cast("double") / QUALITY_FULL_LEN, F.lit(1.0))
+    stop_term = F.least(stopword_ratio(col, stop_hits) * gain, F.lit(1.0))
     mwl = mean_word_len(col)
-    wordlen_term = F.when((mwl >= 3.0) & (mwl <= 10.0), 1.0).otherwise(0.0)
-    punct_term = F.greatest(F.lit(0.0), 1.0 - punct_ratio(col) * 4.0)
+    wordlen_term = F.when((mwl >= lo) & (mwl <= hi), 1.0).otherwise(0.0)
+    punct_term = F.greatest(F.lit(0.0), 1.0 - punct_ratio(col) * gain)
     return rnd(
-        0.3 * length_term + 0.3 * stop_term + 0.2 * wordlen_term + 0.2 * punct_term, 4
+        w_len * length_term
+        + w_stop * stop_term
+        + w_wl * wordlen_term
+        + w_punct * punct_term,
+        4,
     )
+
+
+def quality_score_sql(x: str) -> str:
+    w_len, w_stop, w_wl, w_punct = QUALITY_WEIGHTS
+    lo, hi = QUALITY_WORD_LEN
+    gain = QUALITY_RATIO_GAIN
+
+    def ratio(num: str, den: str) -> str:
+        return f"(CASE WHEN v.{den} > 0 THEN v.{num} / (1.0 * v.{den}) ELSE 0.0 END)"
+
+    mwl = ratio("nonws", "n")
+    terms = (
+        f"{w_len} * least(v.total / {QUALITY_FULL_LEN}, 1.0)",
+        f"{w_stop} * least({ratio('stop', 'n')} * {gain}, 1.0)",
+        f"{w_wl} * (CASE WHEN {mwl} >= {lo} AND {mwl} <= {hi} THEN 1.0 ELSE 0.0 END)",
+        f"{w_punct} * greatest(0.0, 1.0 - {ratio('punct', 'total')} * {gain})",
+    )
+    counts = {
+        "n": token_count_ws_sql(x),
+        "stop": marker_hits_sql(x, STOPWORDS),
+        "nonws": nonws_len_sql(x),
+        "punct": punct_count_sql(x),
+        "total": f"length({x})",
+    }
+    return let_sql(counts, rnd_sql(" + ".join(terms), 4))
 
 
 def normalized_text(col: Column) -> Column:
@@ -188,12 +299,24 @@ def normalized_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def normalized_text_sql(x: str) -> str:
+    return f"trim(regexp_replace(lower({x}), '\\s+', ' ', 'g'))"
+
+
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 hex of the normalized text (portable across
     engines, unlike xxhash64/crc32)."""
     return F.md5(normalized_text(col).cast("binary"))
 
 
+def fingerprint_sql(x: str) -> str:
+    return f"md5({normalized_text_sql(x)})"
+
+
 def fingerprint64(col: Column) -> Column:
     """First 8 md5 hex chars as a BIGINT — a compact join/bucket key."""
     return F.conv(F.substring(fingerprint(col), 1, 8), 16, 10).cast("bigint")
+
+
+def fingerprint64_sql(x: str) -> str:
+    return f"('0x' || substr({fingerprint_sql(x)}, 1, 8))::BIGINT"

@@ -21,6 +21,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .rounding import rnd
+from .textstats import words
 
 # --- PII patterns (scrub order matters: email first — its local part can
 # contain digits/dots that the looser patterns would otherwise bite into;
@@ -43,12 +44,6 @@ def scrub_pii(col: Column) -> Column:
     for _, pat, token in _PII:
         out = F.regexp_replace(out, pat, token)
     return out
-
-
-def words_of(col: Column) -> Column:
-    """Whitespace tokens (callers must guard empty/blank text — both
-    engines return [''] for the empty string)."""
-    return F.split(F.trim(col), r"\s+")
 
 
 def chunk_lines(wordarr: Column, width: int = 8) -> Column:
@@ -193,7 +188,7 @@ C4_MIN_KEPT_LINES = 3
 def c4_keep_line(line: Column) -> Column:
     """The per-line C4 keep predicate (pure codegen; usable directly or as
     an ``F.filter`` lambda over a split-lines array)."""
-    n_words = F.size(F.split(F.trim(line), r"\s+"))
+    n_words = F.size(words(line))
     return (
         (n_words >= C4_MIN_LINE_WORDS)
         & line.rlike(C4_TERMINAL_RE)
@@ -633,7 +628,6 @@ __all__ = [
     "IPV4_RE",
     "PHONE_RE",
     "scrub_pii",
-    "words_of",
     "chunk_lines",
     "dup_line_fraction",
     "dup_line_char_fraction",

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import rnd
 
-from ..functions.textstats import fingerprint, words
+from ..functions.textstats import fingerprint, normalized_text, words
 
 SHINGLE_K = 3
 
@@ -253,10 +253,7 @@ def winnow_fingerprints(
     explode output is ~2·n_tokens/(w+1) rows per doc and the index
     build's groupBy(fp) is the only Exchange any consumer pays. Docs
     shorter than k tokens have no k-gram and emit nothing."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-        " ",
-    )
+    toks = F.split(normalized_text(F.col(text_col)), " ")
     base = df.select(F.col(id_col), toks.alias("_w")).where(
         F.size("_w") >= k
     )
@@ -591,7 +588,7 @@ def paragraph_dedup(
         F.col(id_col).alias("i"), F.col("pos").alias("p")
     ).alias("_key")
     ex = (
-        df.select(F.col(id_col), _W.words_of(F.col(text_col)).alias("_w"))
+        df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
         .select(F.col(id_col), _W.chunk_lines(F.col("_w"), width).alias("_p"))
         .select(
             F.col(id_col),
@@ -657,10 +654,8 @@ def exact_substring_dedup(
     functions — no second explode of the corpus. The reference is
     per-document and has no corpus-level dedup at all
     (``src/pipeline.py:195-237``)."""
-    from ..functions import webtext as _W
-
     toks = df.select(
-        F.col(id_col), _W.words_of(F.col(text_col)).alias("_w")
+        F.col(id_col), words(F.col(text_col)).alias("_w")
     )
     n = F.size(F.col("_w"))
     win_pos = F.when(
@@ -776,7 +771,7 @@ def strip_template_lines(
         base.select(
             F.col(id_col),
             F.col(host_col),
-            _W.chunk_lines(_W.words_of(F.col("_txt")), width).alias("_p"),
+            _W.chunk_lines(words(F.col("_txt")), width).alias("_p"),
         )
         .select(
             F.col(id_col),

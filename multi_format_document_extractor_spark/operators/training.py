@@ -489,7 +489,7 @@ def chunk_documents(
             f"need 0 <= overlap < chunk_tokens, got {overlap}/{chunk_tokens}"
         )
     stride = chunk_tokens - overlap
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
+    w = TS.words(F.col(text_col))
     base = df.where(F.trim(F.col(text_col)) != "").select(
         F.col(id_col), w.alias("_w")
     )
@@ -642,9 +642,7 @@ def _bpe_symbol_vocab(docs: DataFrame, text_col: str) -> DataFrame:
     representation whose ``' a  b '``→``' ab '`` replace has identical
     left-to-right semantics in Python, Spark, and DuckDB)."""
     w = docs.select(
-        F.explode(
-            F.split(F.trim(F.col(text_col)), r"\s+")
-        ).alias("word")
+        F.explode(TS.words(F.col(text_col))).alias("word")
     ).where(F.col("word") != "")
     sym_str = F.concat(
         F.lit(" "),

@@ -3354,6 +3354,8 @@ def _png_encode(
         if depth not in (1, 2, 4):
             raise ValueError(f"sub-byte depth {depth} invalid (1, 2 or 4)")
         unit = 1
+    elif depth not in (8, 16):
+        raise ValueError(f"multi-byte depth {depth} invalid (8 or 16)")
     else:
         unit = _PNG_BPP[color_type] * (depth // 8)
     if w <= 0 or h <= 0 or len(samples) != w * h * unit:

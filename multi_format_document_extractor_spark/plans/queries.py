@@ -29,6 +29,7 @@ from ..functions.rounding import rnd
 
 from ..functions import confidence as C
 from ..functions import normalize as N
+from ..functions import router as RT
 from ..functions import textstats as TS
 from ..operators import dedup, fusion, sampling, similarity
 from ..operators.routing import two_pass_escalation
@@ -937,8 +938,6 @@ _AUG_SQL = """
     )
 """
 
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
 # b=8 bands × r=4 rows: candidate needs all 4 row-minima of some band to
 # agree — P(candidate) = 1 − (1 − s⁴)⁸ (discriminating, unlike r=1).
 _N_BANDS, _ROWS_PER_BAND = 8, 4
@@ -1002,7 +1001,8 @@ def _docs_aug(spark, sf_dir) -> DataFrame:
     "dedup_exact",
     _AUG_SQL
     + f"""
-    SELECT md5({_NORM}) AS text_hash, CAST(count(*) AS BIGINT) AS n_docs,
+    SELECT {TS.fingerprint_sql("text")} AS text_hash,
+           CAST(count(*) AS BIGINT) AS n_docs,
            min(doc_id) AS keeper_id
     FROM docs_aug GROUP BY text_hash
     """,
@@ -1234,11 +1234,9 @@ def cluster_split(spark, sf_dir):
 @q(
     "winnow_fps",
     _AUG_SQL
-    + """
+    + f"""
     , t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                          ' ') AS w
+      SELECT doc_id, string_split({TS.normalized_text_sql("text")}, ' ') AS w
       FROM docs_aug
     ), f AS (
       SELECT doc_id, w FROM t WHERE len(w) >= 5
@@ -1601,49 +1599,10 @@ def embed_neardup(spark, sf_dir):
 # =========================================================================
 
 
-def _marker_count_sql(markers: tuple[str, ...]) -> str:
-    return (
-        "len(regexp_extract_all(text, '(?i)\\b(" + "|".join(markers) + ")\\b'))"
-    )
-
-
-_LANG_CODES = sorted(TS.LANG_MARKERS)
-
-
-def _lang_ctes(from_rel: str) -> str:
-    """The hits/best CTE pair for marker lang-id over (doc_id, text)
-    rows of ``from_rel`` — ONE generator for every SQL site that mirrors
-    TS.lang_id (lang_id's oracle here, mixed_lang's per-chunk oracle in
-    queries_web), so the argmax scaffolding cannot drift per site."""
-    hits = ", ".join(
-        f"{_marker_count_sql(TS.LANG_MARKERS[c])} AS s_{c}"
-        for c in _LANG_CODES
-    )
-    cols = ", ".join(f"s_{c}" for c in _LANG_CODES)
-    return (
-        f"hits AS (SELECT doc_id, {hits} FROM {from_rel}), "
-        f"best AS (SELECT doc_id, {cols}, greatest({cols}) AS mx FROM hits)"
-    )
-
-
-def _lang_case_expr() -> str:
-    """The argmax-with-deterministic-tiebreak CASE over the best CTE."""
-    return (
-        "CASE "
-        + " ".join(
-            f"WHEN s_{c} = mx AND mx > 0 THEN '{c}'" for c in _LANG_CODES
-        )
-        + " ELSE 'und' END"
-    )
-
-
-_LANG_SQL = (
-    f"WITH {_lang_ctes('documents')} "
-    f"SELECT doc_id, {_lang_case_expr()} AS lang_pred FROM best"
+@q(
+    "lang_id",
+    f"SELECT doc_id, {TS.lang_id_sql('text')} AS lang_pred FROM documents",
 )
-
-
-@q("lang_id", _LANG_SQL)
 def lang_id_q(spark, sf_dir):
     """Heuristic marker-word language ID with deterministic tiebreak."""
     d = _t(spark, sf_dir, "documents")
@@ -1652,31 +1611,7 @@ def lang_id_q(spark, sf_dir):
 
 @q(
     "quality_score",
-    """
-    WITH t AS (
-      SELECT doc_id, text,
-        CASE WHEN trim(text) = '' THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-        len(regexp_extract_all(text, '(?i)\\b(the|a|and|of|to|in|is|it)\\b'))
-          AS stop_hits,
-        length(regexp_replace(trim(text), '\\s+', '', 'g')) AS n_nonws,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-        length(text) AS n_total
-      FROM documents
-    )
-    SELECT doc_id,
-      round(0.3 * least(n_total / 1000.0, 1.0)
-          + 0.3 * least((CASE WHEN n_words > 0 THEN stop_hits / (1.0 * n_words)
-                              ELSE 0.0 END) * 4.0, 1.0)
-          + 0.2 * (CASE WHEN n_words > 0
-                         AND n_nonws / (1.0 * n_words) >= 3.0
-                         AND n_nonws / (1.0 * n_words) <= 10.0
-                        THEN 1.0 ELSE 0.0 END)
-          + 0.2 * greatest(0.0, 1.0 - (CASE WHEN n_total > 0
-                                            THEN n_punct / (1.0 * n_total)
-                                            ELSE 0.0 END) * 4.0), 4) AS quality
-    FROM t
-    """,
+    f"SELECT doc_id, {TS.quality_score_sql('text')} AS quality FROM documents",
 )
 def quality_q(spark, sf_dir):
     """Document quality scoring: length saturation + stopword presence +
@@ -1685,73 +1620,31 @@ def quality_q(spark, sf_dir):
     return d.select("doc_id", TS.quality_score(F.col("text")).alias("quality"))
 
 
-def _router_sql() -> str:
-    from ..functions import router as RT
-
-    reason = " ".join(
-        f"WHEN route = '{k}' THEN '{v}'" for k, v in RT.REASONS.items()
-    )
-    return f"""
-    WITH t AS (
-      SELECT doc_id,
-        CASE WHEN trim(text) = '' THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-        len(regexp_extract_all(text, '(?i)\\b(the|a|and|of|to|in|is|it)\\b'))
-          AS stop_hits,
-        length(regexp_replace(trim(text), '\\s+', '', 'g')) AS n_nonws,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-        length(text) AS n_total
-      FROM documents
-    ), s AS (
-      SELECT doc_id, n_words,
-        round(0.3 * least(n_total / 1000.0, 1.0)
-            + 0.3 * least((CASE WHEN n_words > 0 THEN stop_hits / (1.0 * n_words)
-                                ELSE 0.0 END) * 4.0, 1.0)
-            + 0.2 * (CASE WHEN n_words > 0
-                           AND n_nonws / (1.0 * n_words) >= 3.0
-                           AND n_nonws / (1.0 * n_words) <= 10.0
-                          THEN 1.0 ELSE 0.0 END)
-            + 0.2 * greatest(0.0, 1.0 - (CASE WHEN n_total > 0
-                                              THEN n_punct / (1.0 * n_total)
-                                              ELSE 0.0 END) * 4.0), 4) AS quality
-      FROM t
-    ), routed AS (
-      SELECT doc_id,
-        CASE WHEN n_words = 0 THEN 'manual'
-             WHEN quality < {RT.QUALITY_NOISE_MAX} THEN 'relaxed'
-             WHEN n_words >= {RT.TOKENS_COMPLEX_MIN}
-                  AND quality >= {RT.QUALITY_CLEAN_MIN} THEN 'layout'
-             WHEN n_words <= {RT.TOKENS_SIMPLE_MAX} THEN 'fast'
-             ELSE 'hybrid' END AS route
-      FROM s
-    )
-    SELECT doc_id, route, CASE {reason} END AS reason FROM routed
-    """
+_ROUTE_SQL, _REASON_SQL = RT.route_profile_sql("text")
 
 
-@q("doc_router", _router_sql())
+@q(
+    "doc_router",
+    f"SELECT doc_id, {_ROUTE_SQL} AS route, {_REASON_SQL} AS reason "
+    "FROM documents",
+)
 def doc_router(spark, sf_dir):
     """Feature-based extraction-profile router: the reference's
     model_router rule ladder (src/ai_models/model_router.py:398-468) over
     native text features — token count as the size/complexity axis, the
     composite quality score as the density/noise axis. Pure codegen CASE:
     routing adds no stage (the reference pays a CNN forward pass per doc).
-    Rule order is the contract; the SQL mirror re-states the same ladder."""
-    from ..functions.router import route_profile
-
+    Rule order is the contract; ``route_profile_sql`` mirrors it."""
     d = _t(spark, sf_dir, "documents")
-    route, reason = route_profile(F.col("text"))
+    route, reason = RT.route_profile(F.col("text"))
     return d.select("doc_id", route.alias("route"), reason.alias("reason"))
 
 
 @q(
     "token_counts",
-    """
-    SELECT doc_id,
-           CASE WHEN trim(text) = '' THEN 0
-                ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_ws,
-           len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]'))
-             AS n_bpe
+    f"""
+    SELECT doc_id, {TS.token_count_ws_sql('text')} AS n_ws,
+           {TS.token_count_bpe_sql('text')} AS n_bpe
     FROM documents
     """,
 )
@@ -1767,11 +1660,9 @@ def token_counts(spark, sf_dir):
 
 @q(
     "fingerprint",
-    """
-    SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
-           ('0x' || substr(md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))),
-                           1, 8))::BIGINT AS fp64
+    f"""
+    SELECT doc_id, {TS.fingerprint_sql('text')} AS fp,
+           {TS.fingerprint64_sql('text')} AS fp64
     FROM documents
     """,
 )
@@ -1844,19 +1735,6 @@ def multi_pattern_extract_q(spark, sf_dir):
 # keepers → deterministic split → sequence packing
 # =========================================================================
 
-_Q_EXPRS = """
-      round(0.3 * least(length(text) / 1000.0, 1.0)
-          + 0.3 * least((CASE WHEN n_words > 0 THEN stop_hits / (1.0 * n_words)
-                              ELSE 0.0 END) * 4.0, 1.0)
-          + 0.2 * (CASE WHEN n_words > 0
-                         AND n_nonws / (1.0 * n_words) >= 3.0
-                         AND n_nonws / (1.0 * n_words) <= 10.0
-                        THEN 1.0 ELSE 0.0 END)
-          + 0.2 * greatest(0.0, 1.0 - (CASE WHEN length(text) > 0
-                                            THEN n_punct / (1.0 * length(text))
-                                            ELSE 0.0 END) * 4.0), 4)
-"""
-
 _HASH_BUCKET = (
     "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
 )
@@ -1865,24 +1743,16 @@ _HASH_BUCKET = (
 @q(
     "training_corpus",
     f"""
-    WITH raw AS (
-      SELECT doc_id, text,
-        CASE WHEN trim(text) = '' THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-        len(regexp_extract_all(text, '(?i)\\b(the|a|and|of|to|in|is|it)\\b'))
-          AS stop_hits,
-        length(regexp_replace(trim(text), '\\s+', '', 'g')) AS n_nonws,
-        len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
+    WITH scored AS (
+      SELECT doc_id, text, {TS.quality_score_sql('text')} AS quality,
+             {TS.token_count_ws_sql('text')} AS n_tokens
       FROM documents
-    ), scored AS (
-      SELECT doc_id, text, {_Q_EXPRS} AS quality, n_words AS n_tokens
-      FROM raw
     ), kept AS (
       SELECT * FROM scored
       WHERE quality >= 0.5 AND n_tokens BETWEEN 10 AND 100000
     ), dedup AS (
       SELECT *, row_number() OVER (
-        PARTITION BY md5({_NORM}) ORDER BY doc_id) AS rn
+        PARTITION BY {TS.fingerprint_sql('text')} ORDER BY doc_id) AS rn
       FROM kept
     )
     SELECT doc_id, quality, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -1911,9 +1781,7 @@ def training_corpus_q(spark, sf_dir):
     "pack_sequences",
     f"""
     WITH t AS (
-      SELECT doc_id,
-        CASE WHEN trim(text) = '' THEN 0
-             ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tokens
+      SELECT doc_id, {TS.token_count_ws_sql('text')} AS n_tokens
       FROM documents
     ), b AS (
       SELECT doc_id, n_tokens, {_HASH_BUCKET} % 16 AS bucket FROM t

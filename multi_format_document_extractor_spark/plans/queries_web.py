@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions import textstats as TS
 from ..functions import webtext as W
 from ..functions.rounding import rnd
 from .queries import _HASH_BUCKET, QUERIES, _t, q
@@ -184,7 +185,7 @@ def repetition_filter(spark, sf_dir):
     once as a column. The gate compares ROUNDED values on both engines so
     the boundary is engine-exact."""
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    w = W.words_of(F.col("text"))
+    w = TS.words(F.col("text"))
     d = d.select("doc_id", "text", w.alias("w"))
     lines = W.chunk_lines(F.col("w"), 8)
     # Materialize the run-length fold ONCE: each field reference to a
@@ -509,7 +510,7 @@ def c4_line_filter(spark, sf_dir):
     d = (
         _t(spark, sf_dir, "documents")
         .where(F.col("n_chars") > 0)
-        .select("doc_id", W.words_of(F.col("text")).alias("_w"))
+        .select("doc_id", TS.words(F.col("text")).alias("_w"))
         .select("doc_id", _c4_page_col().alias("text"))
     )
     lines = F.split(F.col("text"), r"\n")
@@ -689,16 +690,15 @@ def incremental_extract(spark, sf_dir):
 
 @q(
     "gopher_quality",
-    r"""
+    rf"""
     WITH d AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS w
+      SELECT doc_id, text, {TS.words_sql('text')} AS w
       FROM documents WHERE n_chars > 0
     ), m AS (
       SELECT doc_id,
              len(w) AS n_words,
-             length(regexp_replace(trim(text), '\s+', '', 'g')) AS n_nonws,
-             len(regexp_extract_all(text,
-                 '(?i)\b(the|a|and|of|to|in|is|it)\b')) AS stop_hits,
+             {TS.nonws_len_sql('text')} AS n_nonws,
+             {TS.marker_hits_sql('text', TS.STOPWORDS)} AS stop_hits,
              len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
                AS alpha_words,
              len(regexp_extract_all(text, '#|\.\.\.')) AS syms
@@ -735,13 +735,11 @@ def gopher_quality(spark, sf_dir):
     d = (
         _t(spark, sf_dir, "documents")
         .where(F.col("n_chars") > 0)
-        .select("doc_id", "text", W.words_of(F.col("text")).alias("w"))
+        .select("doc_id", "text", TS.words(F.col("text")).alias("w"))
     )
     n_words = F.size("w")
-    n_nonws = F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
-    stop_hits = F.regexp_count(
-        F.col("text"), F.lit(r"(?i)\b(the|a|and|of|to|in|is|it)\b")
-    )
+    n_nonws = TS.nonws_len(F.col("text"))
+    stop_hits = TS.marker_hits(F.col("text"), TS.STOPWORDS)
     alpha_words = F.size(
         F.filter(F.col("w"), lambda x: x.rlike("[A-Za-z]"))
     )
@@ -755,13 +753,7 @@ def gopher_quality(spark, sf_dir):
     r = d.select(
         "doc_id",
         n_words.cast("int").alias("n_words"),
-        rnd(
-            F.when(
-                n_words > 0,
-                n_nonws.cast("double") / n_words.cast("double"),
-            ).otherwise(F.lit(0.0)),
-            4,
-        ).alias("mean_word_len"),
+        rnd(ratio(n_nonws), 4).alias("mean_word_len"),
         stop_hits.cast("int").alias("stop_hits"),
         rnd(ratio(alpha_words), 4).alias("alpha_frac"),
         rnd(ratio(syms), 4).alias("symbol_ratio"),
@@ -917,7 +909,7 @@ def decontaminate(spark, sf_dir):
     )
     ex = (
         aug.select(
-            "doc_id", "is_eval", W.words_of(F.col("text")).alias("w")
+            "doc_id", "is_eval", TS.words(F.col("text")).alias("w")
         )
         .select(
             "doc_id",
@@ -941,7 +933,14 @@ def decontaminate(spark, sf_dir):
 
 @q(
     "lang_mismatch",
-    None,  # oracle late-bound below (reuses queries._LANG_SQL as a CTE)
+    f"""
+    WITH p AS (
+      SELECT lang, {TS.lang_id_sql('text')} AS lang_pred FROM documents
+    )
+    SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n_docs,
+           lang = lang_pred AS is_match
+    FROM p GROUP BY lang, lang_pred
+    """,
 )
 def lang_mismatch(spark, sf_dir):
     """Corpus-QA confusion matrix: the stored ``lang`` label vs the
@@ -950,8 +949,6 @@ def lang_mismatch(spark, sf_dir):
     training pipeline applies is only as good as this table says it is.
     ONE aggregation Exchange on the (lang, lang_pred) pair — 12×13 cells
     max, pure map-side combine."""
-    from ..functions import textstats as TS
-
     d = _t(spark, sf_dir, "documents")
     p = d.select(
         "lang", TS.lang_id(F.col("text")).alias("lang_pred")
@@ -963,19 +960,7 @@ def lang_mismatch(spark, sf_dir):
     )
 
 
-# Late-bind the lang_mismatch oracle: _LANG_SQL is module-level in
-# plans.queries, already imported by the time this module loads.
-from .queries import _LANG_SQL as _LANG_SQL_IMPORT  # noqa: E402
 from .queries import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["lang_mismatch"] = f"""
-    WITH pred AS ({_LANG_SQL_IMPORT})
-    SELECT d.lang, p.lang_pred,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           d.lang = p.lang_pred AS is_match
-    FROM documents d JOIN pred p USING (doc_id)
-    GROUP BY d.lang, p.lang_pred
-"""
 
 
 # =========================================================================
@@ -1096,7 +1081,7 @@ def lm_doc_score(spark, sf_dir):
         .alias("text"),
     )
     d = aug.select(
-        "doc_id", "lang", W.words_of(F.col("text")).alias("w")
+        "doc_id", "lang", TS.words(F.col("text")).alias("w")
     )
     model = unigram_model(d.where(F.col("lang") == "en"), "w", min_count=5)
     return lm_quality_score(
@@ -1896,7 +1881,7 @@ def bpe_pair_counts(spark, sf_dir):
     provably tiny set, not a global corpus sort."""
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
     t = d.select(
-        F.explode(W.words_of(F.col("text"))).alias("word")
+        F.explode(TS.words(F.col("text"))).alias("word")
     )
     wf = t.groupBy("word").agg(F.count("*").alias("freq"))
     p = wf.where(F.length("word") >= 2).select(
@@ -1968,7 +1953,7 @@ def tfidf_terms(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
     t = d.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.explode(W.words_of(F.col("text"))).alias("token"),
+        F.explode(TS.words(F.col("text"))).alias("token"),
     )
     tf = t.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     dfq = tf.groupBy("token").agg(F.count("*").alias("df"))
@@ -2052,7 +2037,7 @@ def hll_vocab(spark, sf_dir):
     point of HLL."""
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
     t = d.select(
-        "lang", F.explode(W.words_of(F.col("text"))).alias("token")
+        "lang", F.explode(TS.words(F.col("text"))).alias("token")
     )
     h = t.select("lang", "token", F.md5("token").alias("hx"))
     r = h.select(
@@ -2140,7 +2125,7 @@ def cms_heavy_hitters(spark, sf_dir):
     replaces at scale. The top-20 rank runs over the aggregated vocab
     table, not the corpus."""
     d = _t(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    t = d.select(F.explode(W.words_of(F.col("text"))).alias("token"))
+    t = d.select(F.explode(TS.words(F.col("text"))).alias("token"))
     exact = t.groupBy("token").agg(F.count("*").cast("bigint").alias("n_exact"))
 
     salts = F.array(*[F.lit(i) for i in range(4)])
@@ -3309,13 +3294,11 @@ def crawl_trap(spark, sf_dir):
 # DSIR importance resampling (hashed n-gram target-vs-raw log-ratios)
 # =========================================================================
 
-_DSIR_SQL = """
+_DSIR_SQL = f"""
     WITH base AS (
       SELECT doc_id, lower(trim(text)) AS lt,
-             len(regexp_extract_all(text,
-                 '(?i)\\b(the|a|and|of|to|in|is|it)\\b')) AS sh,
-             CASE WHEN trim(text) = '' THEN 0
-                  ELSE len(string_split_regex(trim(text), '\\s+')) END AS nw
+             {TS.marker_hits_sql('text', TS.STOPWORDS)} AS sh,
+             {TS.token_count_ws_sql('text')} AS nw
       FROM documents
     ), tg AS (
       SELECT doc_id, string_split_regex(lt, '\\s+') AS w,
@@ -3374,7 +3357,6 @@ def dsir_select(spark, sf_dir):
     ≤1-ulp libm disagreement ~9 orders of magnitude below the floor
     boundary. Scale: two corpus Exchanges ((doc,bucket) count + doc sum),
     B-row marginals broadcast, no global sort."""
-    from ..functions import textstats as TS
     from ..operators import training
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4055,7 +4037,7 @@ def inverted_index(spark, sf_dir):
         .where(F.col("n_chars") > 0)
         .select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
-            W.words_of(F.col("text")).alias("w"),
+            TS.words(F.col("text")).alias("w"),
         )
     )
     tok = d.select("doc_id", F.explode("w").alias("token"))
@@ -4124,7 +4106,7 @@ def readability(spark, sf_dir):
     c = d.select(
         "doc_id",
         W.readability_counts(
-            F.col("text"), W.words_of(F.col("text"))
+            F.col("text"), TS.words(F.col("text"))
         ).alias("rc"),
     )
     s = c.select(
@@ -4483,7 +4465,7 @@ def corpus_drift(spark, sf_dir):
             (F.substring(F.col("source"), 4, 10).cast("int") % 2).alias(
                 "b"
             ),
-            W.words_of(F.col("text")).alias("w"),
+            TS.words(F.col("text")).alias("w"),
         )
     )
     tok = d.select("b", F.explode("w").alias("token"))
@@ -4569,9 +4551,6 @@ def mutual_links(spark, sf_dir):
 # Mixed-language detection + exact length quantiles (corpus QA)
 # =========================================================================
 
-from ..functions import textstats as TS  # noqa: E402
-from .queries import _lang_case_expr, _lang_ctes  # noqa: E402
-
 # doc_chunks' SQL rebased onto an augmented corpus: every 7th doc gets a
 # German tail long enough to own at least one full 24-token chunk, so the
 # mixed=true path carries live rows at every SF (the badwords_gate
@@ -4588,22 +4567,12 @@ _MIXED_AUG_SQL = f"""
 _CHUNK_SQL_I = _chunk_sql(f"({_MIXED_AUG_SQL})")
 
 
-def _chunk_lang_case_sql() -> str:
-    """Per-chunk lang-id CTE chain — the SAME _lang_ctes/_lang_case_expr
-    generators as lang_id's oracle, pointed at the chunk rows."""
-    ctes = _lang_ctes("(SELECT doc_id, chunk_text AS text FROM ch)")
-    return f"""
-    {ctes}, cl AS (
-      SELECT doc_id, {_lang_case_expr()} AS cl FROM best
-    )"""
-
-
 @q(
     "mixed_lang",
     f"""
-    WITH ch AS ({_CHUNK_SQL_I}),
-    {_chunk_lang_case_sql()},
-    per AS (
+    WITH ch AS ({_CHUNK_SQL_I}), cl AS (
+      SELECT doc_id, {TS.lang_id_sql('chunk_text')} AS cl FROM ch
+    ), per AS (
       SELECT doc_id, cl, CAST(count(*) AS BIGINT) AS cnt
       FROM cl GROUP BY doc_id, cl
     ), ranked AS (
@@ -4764,7 +4733,7 @@ def index_merge(spark, sf_dir):
         .where(F.col("n_chars") > 0)
         .select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
-            W.words_of(F.col("text")).alias("w"),
+            TS.words(F.col("text")).alias("w"),
         )
     )
     tok = d.select("doc_id", F.explode("w").alias("token"))

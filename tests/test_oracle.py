@@ -585,6 +585,13 @@ def test_png_render_decode_roundtrip_and_errors():
     for d in (3, 5):
         with pytest.raises(ValueError, match=f"^sub-byte depth {d} invalid"):
             _png_encode(bytearray(4), 4, 1, 0, None, [0], depth=d)
+    # so is any depth above 8 other than 16: no IHDR may claim a depth
+    # the sample bytes do not have
+    with pytest.raises(ValueError, match="^multi-byte depth 12 invalid"):
+        render_png(lines, [0], depth=12)
+    for d in (9, 15, 17, 32):
+        with pytest.raises(ValueError, match=f"^multi-byte depth {d} invalid"):
+            _png_encode(bytearray(8), 4, 1, 0, None, [0], depth=d)
     # v15 tRNS transparency: DARK paper keyed (gray/RGB) or zero-alpha
     # (palette) reads the page ONLY through the chunk
     for ct in (0, 2, 3):

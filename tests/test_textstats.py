@@ -325,3 +325,141 @@ def test_enrichment_matches_oracle_sql_on_extracted_pages(spark, corpus_dir):
         for r in got
         if r["quality"] != want_quality[r["url"]] and r["url"] not in non_ascii
     ] == []
+
+
+# ---------------------------------------------------------------------------
+# Every *_sql generator equals its Column, value for value
+# ---------------------------------------------------------------------------
+
+from multi_format_document_extractor_spark.functions import router as RT  # noqa: E402
+
+_ROUTE = RT.route_profile_sql("t")
+
+# name -> (Column of the text column, SQL over the text expression ``t``)
+_GENERATED = {
+    "words": (TS.words, TS.words_sql("t")),
+    "n_ws": (TS.token_count_ws, TS.token_count_ws_sql("t")),
+    "n_bpe": (TS.token_count_bpe, TS.token_count_bpe_sql("t")),
+    "stop_hits": (
+        lambda c: TS.marker_hits(c, TS.STOPWORDS),
+        TS.marker_hits_sql("t", TS.STOPWORDS),
+    ),
+    "en_hits": (
+        lambda c: TS.marker_hits(c, TS.LANG_MARKERS["en"]),
+        TS.marker_hits_sql("t", TS.LANG_MARKERS["en"]),
+    ),
+    "nonws": (TS.nonws_len, TS.nonws_len_sql("t")),
+    "punct": (TS.punct_count, TS.punct_count_sql("t")),
+    "quality": (TS.quality_score, TS.quality_score_sql("t")),
+    "norm": (TS.normalized_text, TS.normalized_text_sql("t")),
+    "fp": (TS.fingerprint, TS.fingerprint_sql("t")),
+    "fp64": (TS.fingerprint64, TS.fingerprint64_sql("t")),
+    "lang": (TS.lang_id, TS.lang_id_sql("t")),
+    "route": (lambda c: RT.route_profile(c)[0], _ROUTE[0]),
+    "reason": (lambda c: RT.route_profile(c)[1], _ROUTE[1]),
+}
+
+# whitespace edges: Spark's and DuckDB's trim strip only spaces, so a
+# trailing newline or tab is a token boundary in both ("a b\n" is 3 tokens)
+_WS_EDGES = ["", " ", "\n", " a ", "a b\n", "\ta\tb\t", "a\t\tb", "\x0b", "a\x0bb"]
+_ASCII_PIECES = st.one_of(
+    st.sampled_from(_MARKERS),
+    st.sampled_from(
+        [" ", "  ", "\t", "\n", "\r", "\x0b", "\f", "-", ".", ",", "!", "?",
+         "'", "_", "#", "7", "42", "x", "Word", "THE", "supercalifragilistic"]
+    ),
+)
+_ASCII_TEXT = st.lists(_ASCII_PIECES, max_size=40).map("".join)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_ASCII_TEXT, max_size=20))
+def test_sql_generators_equal_their_columns(spark, texts):
+    """Each generator, run in DuckDB through the registry's ``\\s``
+    rewrite, gives the value its Column gives in Spark, on ASCII text
+    plus the whitespace edges and null."""
+    import duckdb
+
+    from multi_format_document_extractor_spark.plans.queries import _explicit_ws
+
+    rows = list(enumerate(texts + _WS_EDGES + [None]))
+    df = spark.createDataFrame(rows, "i int, t string")
+    got = df.select(
+        "i", *[col(F.col("t")).alias(n) for n, (col, _) in _GENERATED.items()]
+    ).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (i INT, t VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    sql = ", ".join(f"{s} AS {n}" for n, (_, s) in _GENERATED.items())
+    want = con.execute(_explicit_ws(f"SELECT i, {sql} FROM d")).fetchall()
+    want = {r[0]: r[1:] for r in want}
+    for r in got:
+        text = rows[r["i"]][1]
+        for k, n in enumerate(_GENERATED):
+            assert r[n] == want[r["i"]][k], (n, text, r[n], want[r["i"]][k])
+
+
+# ---------------------------------------------------------------------------
+# Guard: no copy of a textstats definition elsewhere in the package
+# ---------------------------------------------------------------------------
+
+import re  # noqa: E402
+from pathlib import Path  # noqa: E402
+
+_PACKAGE = Path(TS.__file__).resolve().parent.parent
+
+
+def _weighted_sum_re(weights) -> str:
+    term = r"(?<![\d.]){}\s*\*[\s\S]{{0,600}}?"
+    return r"\+\s*".join(term.format(re.escape(repr(w))) for w in weights)
+
+
+COPY_PATTERNS = {
+    "stopword alternation": re.escape("|".join(TS.STOPWORDS)),
+    "quality weight expression": _weighted_sum_re(TS.QUALITY_WEIGHTS),
+    "empty-guarded word count": r"trim\(\w+\)\s*=\s*''\s*THEN\s+0\b",
+    "trim-split on whitespace": r"split\(\s*(F\.)?trim\([^()]*(\([^()]*\))?[^()]*\),"
+    r"\s*r[\"']\\s\+[\"']",
+    "lower/collapse/trim normalization": r"trim\(\s*(F\.)?regexp_replace\("
+    r"\s*(F\.)?lower\(",
+}
+
+
+def _copies(sources: dict[str, str]) -> list[str]:
+    out = []
+    for rel, src in sorted(sources.items()):
+        for what, pat in COPY_PATTERNS.items():
+            for m in re.finditer(pat, src):
+                out.append(f"{rel}:{src.count(chr(10), 0, m.start()) + 1}: {what}")
+    return out
+
+
+def test_no_textstats_definition_is_copied_elsewhere():
+    """Each text statistic has one definition: a Column and its ``*_sql``
+    generator in ``functions/textstats.py``. A copy anywhere else in the
+    package would let the two engines, or two call sites, drift apart."""
+    sources = {
+        str(p.relative_to(_PACKAGE)): p.read_text(encoding="utf-8")
+        for p in sorted(_PACKAGE.rglob("*.py"))
+        if p.name != "textstats.py"
+    }
+    assert _copies(sources) == []
+
+
+def test_copy_guard_patterns_match_the_textstats_definitions():
+    """The guard's patterns catch each definition as written in
+    ``textstats`` (Spark and SQL forms), so a pasted copy cannot slip by."""
+    import inspect
+
+    src = {
+        "spark": inspect.getsource(TS),
+        "sql": " ".join(
+            [
+                TS.quality_score_sql("text"),
+                TS.token_count_ws_sql("text"),
+                TS.normalized_text_sql("text"),
+            ]
+        ),
+    }
+    found = {line.split(": ", 1)[1] for line in _copies(src)}
+    assert found == set(COPY_PATTERNS), set(COPY_PATTERNS) - found

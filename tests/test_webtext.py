@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from multi_format_document_extractor_spark.functions import textstats as TS
 from multi_format_document_extractor_spark.functions import webtext as W
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -72,7 +73,7 @@ def test_repetition_fractions_on_crafted_lines(spark):
 
 def test_top_bigram_fraction_spam_doc(spark):
     text = "buy now " * 10  # 'buy now' dominates
-    wordarr = W.words_of(F.col("text"))
+    wordarr = TS.words(F.col("text"))
     row = _one(
         spark,
         text.strip(),
@@ -716,7 +717,7 @@ def test_readability_counts_and_score(spark):
     text = "The cat sat. It was happy!? Then it ran"
     df = spark.createDataFrame([(text,)], "text string")
     r = df.select(
-        W.readability_counts(F.col("text"), W.words_of(F.col("text"))).alias(
+        W.readability_counts(F.col("text"), TS.words(F.col("text"))).alias(
             "c"
         )
     ).select("c.*").collect()[0]
@@ -728,7 +729,7 @@ def test_readability_counts_and_score(spark):
     frag = spark.createDataFrame([("no terminal marks here",)], "text string")
     rf = frag.select(
         W.readability_counts(
-            F.col("text"), W.words_of(F.col("text"))
+            F.col("text"), TS.words(F.col("text"))
         ).alias("c")
     ).select("c.*").collect()[0]
     assert rf["n_sentences"] == 1  # floored, fragments still score
@@ -757,7 +758,7 @@ def test_inverted_index_cap_binds_and_stats_stay_exact(spark):
             range(30)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     tok = df.select(
-        "doc_id", F.explode(W.words_of(F.col("text"))).alias("token")
+        "doc_id", F.explode(TS.words(F.col("text"))).alias("token")
     )
     got = {r["token"]: r for r in build_inverted_index(tok).collect()}
     assert got["common"]["df"] == 30
@@ -906,7 +907,7 @@ def test_readability_counts_match_python_reference(spark):
         for r in df.select(
             "doc_id",
             W.readability_counts(
-                F.col("text"), W.words_of(F.col("text"))
+                F.col("text"), TS.words(F.col("text"))
             ).alias("c"),
         )
         .select("doc_id", "c.*")
@@ -1013,7 +1014,7 @@ def test_index_merge_equals_global_head(spark):
     rows = [(i, "shared only%d" % i) for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     tok = df.select(
-        "doc_id", F.explode(W.words_of(F.col("text"))).alias("token")
+        "doc_id", F.explode(TS.words(F.col("text"))).alias("token")
     )
     a = build_inverted_index(tok.where(F.col("doc_id") % 2 == 0))
     b = build_inverted_index(tok.where(F.col("doc_id") % 2 == 1))
