@@ -35,6 +35,7 @@ from ..oracle import (
     _DIM_CAP,
     _MP3_BITRATES,
     MAGIC_MEDIA,
+    PNG_SIGNATURE,
     _is_bmff,
     _jpeg_seg,
     _mp3_frame_header,
@@ -695,10 +696,10 @@ def png_text_chunks(payload: bytes) -> dict[str, str]:
     """tEXt chunks from a PNG: {keyword: text} (PNG 1.2 §4.2.3 — keyword
     and latin-1 text split on the first NUL). Chunk walk stops at IEND
     or any malformed length; {} when the payload is not PNG."""
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
+    if payload[:8] != PNG_SIGNATURE:
         return {}
     out: dict[str, str] = {}
-    pos = 8
+    pos = len(PNG_SIGNATURE)
     while pos + 8 <= len(payload):
         size = int.from_bytes(payload[pos : pos + 4], "big")
         typ = payload[pos + 4 : pos + 8]

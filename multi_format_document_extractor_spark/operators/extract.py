@@ -49,9 +49,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..oracle import extract
+from ..oracle import extract, sniff_format
 from ..session import per_gateway
-from ..sources.pages import format_col
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -137,15 +136,10 @@ def salt_key(url_col: Column) -> Column:
 def extract_pages(
     pages: DataFrame,
     salt_partitions: int | None = None,
-    only_formats: list[str] | None = None,
     max_bytes: int | None = None,
     escalate: frozenset | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted table.
-
-    ``only_formats`` pre-filters on the *native* sniff column so the filter
-    pushes down ahead of the UDF (reference's early rejection,
-    src/pipeline.py:88-90, as predicate pushdown).
 
     ``max_bytes`` caps per-document payload size INSIDE the UDF: a single
     multi-GB page is atomic to any partitioning scheme (neither scan splits
@@ -162,8 +156,6 @@ def extract_pages(
     every row under the "default" profile, the byte-identity contract.
     """
     df = pages.select("url", "warc_ts", "html", "lang")
-    if only_formats is not None:
-        df = df.where(format_col(F.col("html")).isin(only_formats))
     if salt_partitions:
         df = df.repartition(salt_partitions, salt_key(F.col("url")))
     schema = EXTRACT_DDL if escalate is None else EXTRACT_DDL + ", mode string"
@@ -171,10 +163,10 @@ def extract_pages(
 
 
 def _provenance_stage(pages: DataFrame, fmt: str, rows_of, ddl: str) -> DataFrame:
-    """One zero-shuffle ``mapInPandas`` stage over the ``fmt`` pages (the
-    native format pre-filter pushes below the UDF): ``rows_of(payload)``
-    yields each page's rows without the url, in ``ddl`` column order."""
-    df = pages.select("url", "html").where(format_col(F.col("html")) == fmt)
+    """One zero-shuffle ``mapInPandas`` stage over every page: a page whose
+    ``sniff_format`` verdict is not ``fmt`` is skipped inside the batch,
+    and ``rows_of(payload)`` yields each other page's rows without the
+    url, in ``ddl`` column order."""
     cols = [c.split()[0] for c in ddl.split(", ")]
 
     def _batches(
@@ -186,11 +178,12 @@ def _provenance_stage(pages: DataFrame, fmt: str, rows_of, ddl: str) -> DataFram
             rows = [
                 (url, *row)
                 for url, payload in zip(pdf["url"], pdf["html"])
+                if sniff_format(payload) == fmt
                 for row in rows_of(bytes(payload))
             ]
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.mapInPandas(_batches, ddl)
+    return pages.select("url", "html").mapInPandas(_batches, ddl)
 
 
 SPANS_DDL = (
@@ -209,8 +202,8 @@ def extract_spans(pages: DataFrame) -> DataFrame:
     definition: span coordinates are DOM extents of the decoded page;
     other formats have no such geometry. Separate opt-in stage so the
     byte-identity extraction path stays untouched; same batch shape,
-    zero shuffle, and the native html pre-filter pushes into the scan
-    exactly like ``only_formats``. Kept-span counts are pinned
+    zero shuffle, and non-html pages are skipped inside the batch by
+    ``sniff_format``. Kept-span counts are pinned
     equal to ``extract_pages``'s ``n_blocks`` per url in
     tests/test_spans.py."""
     from ..oracle import html_block_spans
@@ -234,8 +227,8 @@ def extract_pdf_boxes(pages: DataFrame) -> DataFrame:
     pdf counterpart of ``extract_spans`` (extract_pdf is DEFINED as the
     reading-order join of these boxes, oracle.pdf_layout_boxes, so the
     geometry can never drift from the extracted text; the join identity
-    is pinned per url in tests/test_spans.py). Native pdf pre-filter
-    pushes below the UDF; zero shuffle."""
+    is pinned per url in tests/test_spans.py). Non-pdf pages are skipped
+    inside the batch by ``sniff_format``; zero shuffle."""
     from ..oracle import pdf_layout_boxes
 
     return _provenance_stage(pages, "pdf", pdf_layout_boxes, BOXES_DDL)

@@ -163,9 +163,8 @@ class Magic(NamedTuple):
 
 # The one magic-byte table. sniff_format reads the rows with a format,
 # sniff_media the rows with a media type; within each, the first row whose
-# prefix (and guard) matches wins. Format rows carry no guard, so
-# sources/pages.py folds them into native `when`s unchanged (the P4
-# whitespace byte is part of its four prefixes).
+# prefix (and guard) matches wins (the P4 whitespace byte is part of its
+# four prefixes).
 MAGIC = (
     Magic(b"%PDF-", FORMAT_PDF, None),
     Magic(b"PK\x03\x04", FORMAT_ZIP, None),
@@ -198,18 +197,13 @@ def first_magic(payload: bytes, rows: tuple[Magic, ...]) -> Magic | None:
     return None
 
 
-CSV_PROBE_BYTES = 4096  # structural probe window (lockstep with pages.py)
+CSV_PROBE_BYTES = 4096  # structural probe window
 
 # BOM-family head probes: "first non-whitespace char is '<' in this
-# encoding", expressed as byte-level patterns over a latin-1 view so the
-# native Spark mirror (sources/pages.py) runs the IDENTICAL pattern
-# strings (ASCII-only escapes; safe in both re and java.util.regex).
-U8_HEAD_PAT = r"^[ \t\r\n]*<"
-U16LE_HEAD_PAT = r"^(?:[ \t\r\n]\x00)*<\x00"
-U16BE_HEAD_PAT = r"^(?:\x00[ \t\r\n])*\x00<"
-_U8_HEAD_RE = re.compile(U8_HEAD_PAT)
-_U16LE_HEAD_RE = re.compile(U16LE_HEAD_PAT)
-_U16BE_HEAD_RE = re.compile(U16BE_HEAD_PAT)
+# encoding", as byte-level patterns over a latin-1 view.
+_U8_HEAD_RE = re.compile(r"^[ \t\r\n]*<")
+_U16LE_HEAD_RE = re.compile(r"^(?:[ \t\r\n]\x00)*<\x00")
+_U16BE_HEAD_RE = re.compile(r"^(?:\x00[ \t\r\n])*\x00<")
 
 
 def _csv_sniff(payload: bytes) -> bool:
@@ -217,9 +211,7 @@ def _csv_sniff(payload: bytes) -> bool:
     selected by file extension (src/config.py:32-67 → CSVParser); table
     rows have no filename, so the probe is structural: inside the first
     ``CSV_PROBE_BYTES`` bytes, line 1 has ≥2 commas and line 2 exists,
-    is non-empty, and has the SAME comma count. Mirrored natively in
-    sources/pages.py format_col — keep in lockstep (window size, '\\n'
-    split, trailing-'\\r' strip, latin-1 probe decode)."""
+    is non-empty, and has the SAME comma count."""
     window = payload[:CSV_PROBE_BYTES].decode("latin-1")
     parts = window.split("\n")
     if len(parts) < 2:
@@ -232,10 +224,8 @@ def _csv_sniff(payload: bytes) -> bool:
 
 def sniff_format(payload: bytes | None) -> str:
     """Classify a payload by the format rows of ``MAGIC``, then by the
-    BOM, markup and CSV probes. The native Spark column in
-    sources/pages.py folds the same rows and mirrors the probes — keep
-    the probes in lockstep (length 16, the exact ``" \\t\\r\\n"``
-    leading-whitespace set, and the CSV probe)."""
+    BOM, markup and CSV probes. This is the one definition of the format
+    sniff; Spark callers run it inside their Arrow batches."""
     if payload is None or len(payload) == 0:
         return FORMAT_UNKNOWN
     magic = first_magic(payload, MAGIC_FORMATS)
@@ -246,10 +236,8 @@ def sniff_format(payload: bytes | None) -> str:
     # first non-whitespace character is '<', else text. The probe is a
     # byte-level regex over the total latin-1 view (a utf-16le '<' is
     # 3C 00, its whitespace 20/09/0D/0A then 00), NOT a charset decode, so
-    # the native mirror in sources/pages.py runs the IDENTICAL pattern and
-    # Spark's strict decode() never sees malformed bytes. utf-16 payloads
-    # skip the CSV shape probe deliberately — it is byte-oriented and a
-    # BOM'd CSV is out of contract.
+    # malformed bytes never raise. utf-16 payloads skip the CSV shape probe
+    # deliberately — it is byte-oriented and a BOM'd CSV is out of contract.
     if payload[:3] == b"\xef\xbb\xbf":
         head = payload[3:19].decode("latin-1")
         return FORMAT_HTML if _U8_HEAD_RE.match(head) else FORMAT_TEXT
@@ -1543,8 +1531,11 @@ def _pdf_parse_obj_at(
     n = len(payload)
     body_start = head_match.end()
     endobj = payload.find(b"endobj", body_start)
-    skw = _STREAM_KW_RE.search(payload, body_start)
-    if skw is None or (0 <= endobj < skw.start()):
+    # Bounded at this object's endobj: unbounded, every object without a
+    # stream would scan the rest of the payload, and the walk would be
+    # quadratic in the object count. "stream" + EOL cannot overlap "endobj".
+    skw = _STREAM_KW_RE.search(payload, body_start, n if endobj < 0 else endobj)
+    if skw is None:
         if endobj < 0:
             return payload[body_start:], None, n
         return payload[body_start:endobj], None, endobj + 6
@@ -2910,13 +2901,13 @@ def render_pbm(lines: list[str]) -> bytes:
 # stdlib codecs below.
 # ---------------------------------------------------------------------------
 
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunks(payload: bytes):
     """Yield (type, data) for each chunk; validates lengths and each
     chunk's CRC (a bad CRC is a corrupt file — error-as-data upstream)."""
-    pos = len(_PNG_MAGIC)
+    pos = len(PNG_SIGNATURE)
     n = len(payload)
     while pos + 8 <= n:
         length = int.from_bytes(payload[pos : pos + 4], "big")
@@ -3077,7 +3068,7 @@ def png_decode_gray8(payload: bytes) -> tuple[int, int, bytearray]:
     per pixel. Combinations outside the spec raise with the unsupported
     parameter named (error-as-data upstream, same contract as the other
     parsers)."""
-    if payload[:8] != _PNG_MAGIC:
+    if payload[:8] != PNG_SIGNATURE:
         raise ValueError("not a PNG")
     ihdr = None
     plte = None
@@ -3382,7 +3373,7 @@ def _png_encode(
         + h.to_bytes(4, "big")
         + bytes([depth, color_type, 0, 0, 1 if interlace else 0])
     )
-    out = _PNG_MAGIC + _png_chunk(b"IHDR", ihdr)
+    out = PNG_SIGNATURE + _png_chunk(b"IHDR", ihdr)
     if color_type == 3:
         if not plte:
             raise ValueError("palette color type requires PLTE entries")

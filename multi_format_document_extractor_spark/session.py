@@ -13,6 +13,7 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -33,7 +34,37 @@ ARROW_MAX_RECORDS_PER_BATCH = 512
 ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024
 
 
-_PYFILES_BUILT: set[str] = set()  # zips already built by this process
+_PYFILES_BUILT: dict[str | None, str] = {}  # out_path → zip built by this process
+
+
+def _package_sources(pkg_dir: str) -> list[tuple[str, bytes]]:
+    """(archive name, bytes) of every ``.py`` file under ``pkg_dir``, sorted
+    by archive name; archive names start with the package's name."""
+    pkg_name = os.path.basename(pkg_dir)
+    sources = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                with open(full, "rb") as fh:
+                    sources.append((rel, fh.read()))
+    return sorted(sources)
+
+
+def _pyfiles_zip_path(pkg_name: str, sources: list[tuple[str, bytes]]) -> str:
+    """``<tempdir>/<pkg_name>-<digest>-pyfiles.zip``, the digest taken over
+    every source's archive name and bytes: drivers whose sources differ
+    never write the same file, and drivers whose sources agree share it."""
+    h = hashlib.sha256()
+    for name, data in sources:
+        h.update(b"%d:%s%d:" % (len(name), name.encode(), len(data)))
+        h.update(data)
+    return os.path.join(
+        tempfile.gettempdir(), f"{pkg_name}-{h.hexdigest()[:16]}-pyfiles.zip"
+    )
 
 
 def make_pyfiles_zip(out_path: str | None = None) -> str:
@@ -41,29 +72,29 @@ def make_pyfiles_zip(out_path: str | None = None) -> str:
 
     Called automatically by get_spark so Python workers can unpickle the
     extraction UDF regardless of the driver's cwd; pass the returned path to
-    ``spark-submit --py-files`` for cluster launches (north rule).
+    ``spark-submit --py-files`` for cluster launches (north rule). The
+    default path is named by a digest of the sources (see
+    ``_pyfiles_zip_path``); every entry carries a fixed timestamp, so the
+    zip's bytes depend on the sources alone. The zip is written under a
+    temporary name and renamed into place, so no reader sees a partial file.
 
     Built once per process: callers invoke this per-query (the driver's
     correctness pass runs ~70 queries), and the sources cannot change under
     a running driver.
     """
+    built = _PYFILES_BUILT.get(out_path)
+    if built is not None and os.path.exists(built):
+        return built
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    if out_path is None:
-        out_path = os.path.join(tempfile.gettempdir(), f"{pkg_name}-pyfiles.zip")
-    if out_path in _PYFILES_BUILT and os.path.exists(out_path):
-        return out_path
-    with zipfile.ZipFile(out_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    _PYFILES_BUILT.add(out_path)
-    return out_path
+    sources = _package_sources(pkg_dir)
+    path = out_path or _pyfiles_zip_path(os.path.basename(pkg_dir), sources)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for name, data in sources:
+            zf.writestr(zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0)), data)
+    os.replace(tmp, path)
+    _PYFILES_BUILT[out_path] = path
+    return path
 
 
 def get_spark(

@@ -1,1 +1,1 @@
-from .pages import read_pages, with_format  # noqa: F401
+from .pages import read_pages  # noqa: F401

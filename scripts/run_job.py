@@ -5,7 +5,9 @@ Cluster launch:
 
     python -c "from multi_format_document_extractor_spark.session import \\
                make_pyfiles_zip; print(make_pyfiles_zip())"   # build zip
-    spark-submit --py-files /tmp/multi_format_document_extractor_spark-pyfiles.zip \\
+    # prints /tmp/multi_format_document_extractor_spark-<digest>-pyfiles.zip,
+    # <digest> a hash of the package sources
+    spark-submit --py-files /tmp/multi_format_document_extractor_spark-<digest>-pyfiles.zip \\
         scripts/run_job.py --input s3://crawl/pages --warehouse s3://out/wh \\
         [--run-id RID] [--salt-partitions S] [--no-seal-days]
 

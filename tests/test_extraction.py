@@ -8,18 +8,7 @@ import zlib
 from pyspark.sql import functions as F
 
 from multi_format_document_extractor_spark.operators.extract import extract_pages
-from multi_format_document_extractor_spark.sources.pages import read_pages, with_format
-
-
-def test_native_sniff_matches_oracle(spark, corpus_dir, corpus_rows):
-    got = {
-        r["url"]: r["format"]
-        for r in with_format(read_pages(spark, corpus_dir + "/pages.parquet"))
-        .select("url", "format")
-        .collect()
-    }
-    for row in corpus_rows:
-        assert got[row.url] == row.format, row.url
+from multi_format_document_extractor_spark.sources.pages import read_pages
 
 
 def test_spark_extraction_byte_identical(spark, corpus_dir, corpus_rows):
@@ -133,14 +122,3 @@ def test_encoding_fallback_chain_byte_identity(spark):
     assert "�".encode("utf-8") not in bytes(
         got["enc://text-cp1252ish"]["text_out"]
     )
-
-
-def test_format_filter_pushes_down_before_udf(spark, corpus_dir):
-    pages = read_pages(spark, corpus_dir + "/pages.parquet")
-    out = extract_pages(pages, only_formats=["pdf"])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the filter must appear below (after in the printed tree) the UDF stage
-    assert "Filter" in plan
-    assert plan.index("MapInPandas") < plan.index("Filter")
-    assert out.select(F.countDistinct("format")).first()[0] == 1
-

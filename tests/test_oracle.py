@@ -226,6 +226,58 @@ def test_pdf_stale_xref_falls_back_to_scan():
     assert n_pages == 1 and t == b"RECOVERED"
 
 
+def _many_objects_pdf(n_objs: int, with_xref: bool) -> bytes:
+    """One text page plus ``n_objs`` small stream-less dictionaries, with a
+    valid xref table or none (the rebuild-scan path)."""
+    content = b"BT /F1 12 Tf\n50 720 Td (MANY OBJECTS) Tj\nET"
+    bodies = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font"
+        b" << /F1 << /Type /Font /Subtype /Type1 /BaseFont /Helvetica >> >>"
+        b" >> >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+        *(b"<< /Type /Annot /N %d >>" % i for i in range(n_objs)),
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(bodies, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    if with_xref:
+        xref = len(out)
+        out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(bodies) + 1)
+        out += b"".join(b"%010d 00000 n \n" % o for o in offsets)
+        out += b"trailer\n<< /Size %d /Root 1 0 R >>\n" % (len(bodies) + 1)
+        out += b"startxref\n%d\n" % xref
+    return bytes(out + b"%%EOF\n")
+
+
+@pytest.mark.parametrize("with_xref", [True, False])
+def test_pdf_object_walk_is_linear_in_object_count(with_xref):
+    """4× the objects must cost well under the 16× a quadratic walk gives
+    (an object without a stream once searched the whole rest of the
+    payload for a ``stream`` keyword); best-of-3 absorbs host noise."""
+    import time
+
+    def best_of_3(payload: bytes) -> tuple[float, bytes]:
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            r = oracle.extract(payload)
+            times.append(time.perf_counter() - t0)
+        assert r.ok and r.format == "pdf"
+        return min(times), r.text
+
+    small = _many_objects_pdf(10_000, with_xref)
+    large = _many_objects_pdf(40_000, with_xref)
+    assert (oracle._pdf_xref_objects(large) is not None) == with_xref
+    t_small, text_small = best_of_3(small)
+    t_large, text_large = best_of_3(large)
+    assert text_small == text_large == b"MANY OBJECTS"
+    assert t_large < 8 * t_small, (t_small, t_large)
+
+
 def test_pdf_escapes():
     from multi_format_document_extractor_spark.corpus import _build_pdf, _pdf_escape
 

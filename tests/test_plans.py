@@ -52,13 +52,6 @@ def test_extract_salted_plan_has_one_shuffle(pages):
     assert p.count("Exchange") == 1
 
 
-def test_format_filter_runs_before_udf(pages):
-    """only_formats must evaluate natively ahead of the UDF (predicate ahead
-    of the expensive stage), not inside Python."""
-    p = plan(extract_pages(pages, only_formats=["html"]))
-    assert p.index("Filter") > p.index("MapInPandas")  # tree prints top-down
-
-
 def test_multisheet_join_broadcasts_dimensions(spark):
     df = entry_mod.queries()["multisheet_join"](spark, SF_DIR)
     p = plan(df)

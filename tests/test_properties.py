@@ -250,11 +250,13 @@ def test_html_extraction_total_on_tag_soup(parts):
 
 
 def test_spark_sniff_agrees_with_oracle_on_random_payloads(spark):
-    """One Spark job over 400 seeded adversarial payloads: the native
-    format_col expression and the oracle's sniff must never diverge."""
-    import pyspark.sql.functions as F
-
-    from multi_format_document_extractor_spark.sources.pages import format_col
+    """One Spark job over 400 seeded adversarial payloads, null and empty
+    ones included: the ``format`` column of ``extract_pages``, sniffed
+    after the payload crossed the Arrow boundary, must equal the
+    oracle's sniff of the same bytes."""
+    from multi_format_document_extractor_spark.operators.extract import (
+        extract_pages,
+    )
 
     rng = random.Random(1234)
     payloads = []
@@ -279,42 +281,24 @@ def test_spark_sniff_agrees_with_oracle_on_random_payloads(spark):
             p = b""
         payloads.append((f"u{i}", p if p or rng.random() < 0.5 else None))
 
-    df = spark.createDataFrame(payloads, "url string, html binary")
-    got = {
-        r["url"]: r["fmt"]
-        for r in df.select("url", format_col(F.col("html")).alias("fmt")).collect()
-    }
+    df = spark.createDataFrame(
+        [(u, None, p, None, None) for u, p in payloads],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    got = {r["url"]: r["format"] for r in extract_pages(df).collect()}
     for url, p in payloads:
         assert got[url] == sniff_format(p), (url, p)
 
 
-def test_magic_table_parity(spark):
-    """Every ``oracle.MAGIC`` row gives three payloads — the prefix alone,
-    the prefix plus junk, the prefix minus its last byte — and one Spark
-    job runs them all through the native ``format_col``, which must agree
-    with ``sniff_format``. The image rows' verdicts must agree across
+def test_magic_table_parity():
+    """Every unguarded ``oracle.MAGIC`` row claims its prefix alone and
+    its prefix plus junk, and the image rows' verdicts agree across
     ``sniff_format``, ``sniff_media`` and ``image_subtype``."""
-    import pyspark.sql.functions as F
-
     from multi_format_document_extractor_spark import oracle
     from multi_format_document_extractor_spark.multimodal.media import sniff_media
-    from multi_format_document_extractor_spark.sources.pages import format_col
 
     junk = b"\x00junk\xff\x85" * 6
-    rows = [
-        (f"u{i}_{j}", p)
-        for i, m in enumerate(oracle.MAGIC)
-        for j, p in enumerate((m.prefix, m.prefix + junk, m.prefix[:-1]))
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {
-        r["url"]: r["fmt"]
-        for r in df.select("url", format_col(F.col("html")).alias("fmt")).collect()
-    }
-    for url, p in rows:
-        assert got[url] == sniff_format(p), (url, p)
     for m in oracle.MAGIC_FORMATS:
-        assert m.guard is None, m  # format_col folds prefixes only
         assert sniff_format(m.prefix) == sniff_format(m.prefix + junk) == m.format
     for m in oracle.MAGIC_MEDIA:
         if m.guard is None:
@@ -326,3 +310,39 @@ def test_magic_table_parity(spark):
             assert sniff_format(p) == FORMAT_IMAGE
             assert sniff_media(p) == m.media
             assert oracle.image_subtype(p) == m.media.removeprefix("image/")
+
+
+def _magic_literals(path) -> list[str]:
+    """``line: literal`` for each bytes literal in ``path`` that starts with
+    the prefix (3 bytes or more) of a format row of ``oracle.MAGIC``."""
+    import ast
+
+    from multi_format_document_extractor_spark import oracle
+
+    prefixes = [m.prefix for m in oracle.MAGIC_FORMATS if len(m.prefix) >= 3]
+    return [
+        f"{node.lineno}: {node.value[:12]!r}"
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, bytes)
+        and node.value.startswith(tuple(prefixes))
+    ]
+
+
+def test_no_format_magic_is_copied_outside_the_table():
+    """``oracle.py`` owns the format signatures; any other module reads its
+    constants. ``corpus.py`` is exempt: its fixture writers emit real
+    file signatures."""
+    from pathlib import Path
+
+    from multi_format_document_extractor_spark import oracle
+
+    package = Path(oracle.__file__).resolve().parent
+    assert _magic_literals(package / "oracle.py")  # the guard sees literals
+    copies = {
+        str(p.relative_to(package)): found
+        for p in sorted(package.rglob("*.py"))
+        if p.name not in ("oracle.py", "corpus.py")
+        and (found := _magic_literals(p))
+    }
+    assert copies == {}

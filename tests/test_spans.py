@@ -47,7 +47,7 @@ def test_spans_exact_on_crafted_page():
 def test_spans_agree_with_extraction_corpus_wide(spark, corpus_dir):
     pages = read_pages(spark, corpus_dir + "/pages.parquet")
     spans = extract_spans(pages)
-    ext = extract_pages(pages, only_formats=["html"]).select(
+    ext = extract_pages(pages).where(F.col("format") == "html").select(
         "url", "n_blocks"
     )
     agg = spans.groupBy("url").agg(
@@ -84,7 +84,7 @@ def test_pdf_boxes_rebuild_extraction_bytes(spark, corpus_dir):
     boxes = extract_pdf_boxes(pages).collect()
     exp = {
         r["url"]: bytes(r["text_out"])
-        for r in extract_pages(pages, only_formats=["pdf"]).collect()
+        for r in extract_pages(pages).where(F.col("format") == "pdf").collect()
         if r["ok"]
     }
     by_url: dict = {}
