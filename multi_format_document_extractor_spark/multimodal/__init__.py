@@ -1,7 +1,6 @@
 from .media import (  # noqa: F401
     audio_metadata,
     decode_image_stub,
-    extract_features,
     media_metadata,
     media_tags,
     resize_images,

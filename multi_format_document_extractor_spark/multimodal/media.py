@@ -26,11 +26,10 @@ plug in on a real cluster.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
+from ..operators.extract import map_rows
 from ..oracle import (
     _DIM_CAP,
     _MP3_BITRATES,
@@ -51,9 +50,6 @@ from ..oracle import (
     png_encode_gray8,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
-
 MEDIA_META_DDL = (
     "doc_id long, media_type string, n_bytes long, digest string, "
     "width int, height int, duration_ms long"
@@ -63,7 +59,7 @@ MEDIA_META_DDL = (
 # _DIM_CAP or durations above _MS_CAP are treated as malformed (zeros /
 # field skipped) — a crafted header must DEGRADE per the error-as-data
 # rule, not ride through Python unbounded and then overflow the int32 /
-# int64 Arrow columns, which would fail the whole mapInPandas batch.
+# int64 Arrow columns, which would fail the whole Arrow batch.
 _MS_CAP = 1 << 53
 _RATE_CAP = 8_000_000  # Hz — no real container exceeds 768 kHz; int32-safe
 
@@ -732,7 +728,7 @@ MEDIA_TAGS_DDL = (
 
 
 def media_tags(df: DataFrame) -> DataFrame:
-    """df(doc_id, payload BINARY) → provenance tags via one mapInPandas
+    """df(doc_id, payload BINARY) → provenance tags via one ``map_rows``
     stage: ID3v2 title/artist/album for MPEG audio, EXIF make/model/
     shot_at for JPEG stills, tEXt Title/Author for PNGs; absent tags are
     null (error-as-data — a malformed tag block yields nulls, never an
@@ -753,22 +749,11 @@ def media_tags(df: DataFrame) -> DataFrame:
             pass
         return (None,) * 6
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            payloads = list(pdf["payload"])
-            types = [sniff_media(p) for p in payloads]
-            rows = [one(p, t) for p, t in zip(payloads, types)]
-            out = pdf[["doc_id"]].copy()
-            out["media_type"] = types
-            for i, col in enumerate(
-                ("title", "artist", "album", "make", "model", "shot_at")
-            ):
-                out[col] = [r[i] for r in rows]
-            yield out
+    def rows_of(doc_id: int, p: bytes | None):
+        media_type = sniff_media(p)
+        return [(doc_id, media_type, *one(p, media_type))]
 
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, schema=MEDIA_TAGS_DDL
-    )
+    return map_rows(df, ["doc_id", "payload"], rows_of, MEDIA_TAGS_DDL)
 
 
 # Per ``sniff_media`` verdict, the (w, h) reader and the full gray8 decoder
@@ -837,35 +822,29 @@ def _meta_of(p: bytes | None, media_type: str) -> tuple[int, int, int]:
         return 0, 0, 0
 
 
-def _meta_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    # one pass per Arrow batch, like the extraction UDF (operators/extract.py)
-    for pdf in batches:
-        payloads = list(pdf["payload"])
-        types = [sniff_media(p) for p in payloads]
-        metas = [_meta_of(p, t) for p, t in zip(payloads, types)]
-        out = pdf[["doc_id"]].copy()
-        out["media_type"] = types
-        out["n_bytes"] = [len(p) if p is not None else 0 for p in payloads]
-        out["digest"] = [
-            hashlib.sha256(p).hexdigest()[:16] if p is not None else ""
-            for p in payloads
-        ]
-        out["width"] = [m[0] for m in metas]
-        out["height"] = [m[1] for m in metas]
-        out["duration_ms"] = [m[2] for m in metas]
-        yield out
+def _meta_row(doc_id: int, p: bytes | None) -> list[tuple]:
+    """``media_metadata``'s per-row function: one sniff per payload fills
+    ``media_type`` and picks the metadata reader."""
+    media_type = sniff_media(p)
+    return [
+        (
+            doc_id,
+            media_type,
+            len(p) if p is not None else 0,
+            hashlib.sha256(p).hexdigest()[:16] if p is not None else "",
+            *_meta_of(p, media_type),
+        )
+    ]
 
 
 def media_metadata(df: DataFrame) -> DataFrame:
     """df(doc_id, payload BINARY) → typed metadata table via one
-    mapInPandas stage (same pattern as the page extractor)."""
-    return df.select("doc_id", "payload").mapInPandas(
-        _meta_batches, schema=MEDIA_META_DDL
-    )
+    ``map_rows`` stage (same pattern as the page extractor)."""
+    return map_rows(df, ["doc_id", "payload"], _meta_row, MEDIA_META_DDL)
 
 
 # ---------------------------------------------------------------------------
-# Resize / frame-sample / feature-extract: the remaining multimodal stages.
+# Resize / frame-sample: the remaining multimodal stages.
 # Same contract as metadata: REAL plumbing (schemas, Arrow batch shape,
 # per-partition pool, exploded row counts), STUBBED codec behind a
 # deterministic fake + a NotImplementedError hook.
@@ -873,7 +852,6 @@ def media_metadata(df: DataFrame) -> DataFrame:
 
 RESIZED_DDL = "doc_id long, width int, height int, payload binary"
 FRAMES_DDL = "doc_id long, frame_idx int, ts_ms long, frame_payload binary"
-FEATURES_DDL = "doc_id long, embedding array<float>"
 
 
 def decode_gray(payload: bytes) -> tuple[int, int, bytearray]:
@@ -936,7 +914,7 @@ def _resize_stub(payload: bytes, w: int, h: int) -> bytes:
 
 
 def resize_images(df: DataFrame, w: int, h: int) -> DataFrame:
-    """df(doc_id, payload) → resized payloads, one mapInPandas stage.
+    """df(doc_id, payload) → resized payloads, one ``map_rows`` stage.
     1:1 row mapping; the binary column stays binary through Arrow (never
     coerced to str — the byte-identity hazard of SURVEY.md §7). Decodable
     containers get the REAL bilinear resample (PNG output); unknown
@@ -952,15 +930,10 @@ def resize_images(df: DataFrame, w: int, h: int) -> DataFrame:
         except Exception:  # noqa: BLE001 — corrupt container
             return None
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["width"] = w
-            out["height"] = h
-            out["payload"] = [one(p) for p in pdf["payload"]]
-            yield out
+    def rows_of(doc_id: int, p: bytes | None):
+        return [(doc_id, w, h, one(p))]
 
-    return df.select("doc_id", "payload").mapInPandas(batches, schema=RESIZED_DDL)
+    return map_rows(df, ["doc_id", "payload"], rows_of, RESIZED_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -1296,7 +1269,7 @@ def flac_metadata(payload: bytes) -> tuple[int, int, int, int, int]:
 
 def audio_metadata(df: DataFrame) -> DataFrame:
     """df(doc_id, payload BINARY) → typed audio metadata via one
-    mapInPandas stage (the audio analog of media_metadata). WAV parses
+    ``map_rows`` stage (the audio analog of media_metadata). WAV parses
     for REAL (PCM features included); mp3, Ogg, and FLAC containers
     parse for REAL at the container level (rate/channels/frames/
     duration; PCM features null — entropy decode is codec territory);
@@ -1320,31 +1293,12 @@ def audio_metadata(df: DataFrame) -> DataFrame:
             pass
         return (None,) * 7
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            payloads = list(pdf["payload"])
-            types = [sniff_media(p) for p in payloads]
-            rows = [feats(p, t) for p, t in zip(payloads, types)]
-            out = pdf[["doc_id"]].copy()
-            out["media_type"] = types
-            out["n_bytes"] = [len(p) if p is not None else 0 for p in payloads]
-            for i, col in enumerate(
-                (
-                    "sample_rate",
-                    "channels",
-                    "sample_width",
-                    "n_frames",
-                    "duration_ms",
-                    "peak",
-                    "rms",
-                )
-            ):
-                out[col] = [r[i] for r in rows]
-            yield out
+    def rows_of(doc_id: int, p: bytes | None):
+        media_type = sniff_media(p)
+        n_bytes = len(p) if p is not None else 0
+        return [(doc_id, media_type, n_bytes, *feats(p, media_type))]
 
-    return df.select("doc_id", "payload").mapInPandas(
-        batches, schema=AUDIO_META_DDL
-    )
+    return map_rows(df, ["doc_id", "payload"], rows_of, AUDIO_META_DDL)
 
 
 AUDIO_ROUNDTRIP_DDL = (
@@ -1356,41 +1310,24 @@ def synth_wav_roundtrip(df: DataFrame) -> DataFrame:
     """df(doc_id, text) → render a REAL RIFF/WAVE payload per document
     (printable-ASCII codepoints centered at 'O' → 16-bit PCM at 8 kHz,
     sample = (ord(ch) - 79) * 256) and parse it straight back with
-    wav_features — one mapInPandas stage whose integer-exact features a
+    wav_features — one ``map_rows`` stage whose integer-exact features a
     SQL oracle can recompute from the text alone, proving the WAV
     writer/parser round-trip on corpus-scale data (the audio analog of
     the image codec T1 fixtures). Documents with no printable chars
     yield no row: there is nothing to encode."""
 
-    def one(doc_id: int, text: str | None):
+    def rows_of(doc_id: int, text: str | None):
         if text is None:
-            return None
+            return []
         samples = [(ord(ch) - 79) * 256 for ch in text if 32 <= ord(ch) <= 126]
         if not samples:
-            return None
+            return []
         _rate, _ch, _w, nf, dur, peak, rms = wav_features(
             render_wav(samples, 8000)
         )
-        return (doc_id, nf, dur, peak, rms)
+        return [(doc_id, nf, dur, peak, rms)]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd_  # worker-side import
-
-        for pdf in it:
-            rows = [
-                r
-                for r in (
-                    one(d, t) for d, t in zip(pdf["doc_id"], pdf["text"])
-                )
-                if r is not None
-            ]
-            yield pd_.DataFrame(
-                rows, columns=["doc_id", "n_frames", "duration_ms", "peak", "rms"]
-            )
-
-    return df.select("doc_id", "text").mapInPandas(
-        batches, schema=AUDIO_ROUNDTRIP_DDL
-    )
+    return map_rows(df, ["doc_id", "text"], rows_of, AUDIO_ROUNDTRIP_DDL)
 
 
 def sample_frames_real(payload: bytes, every_ms: int, max_frames: int = 8):
@@ -1426,7 +1363,7 @@ def sample_frames_real(payload: bytes, every_ms: int, max_frames: int = 8):
 
 def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 8) -> DataFrame:
     """df(doc_id, payload) → one row PER SAMPLED FRAME (UDTF-shaped fan-out
-    inside mapInPandas). GIF payloads sample for REAL (timeline decode →
+    inside ``map_rows``). GIF payloads sample for REAL (timeline decode →
     PNG frame payloads); other containers keep the deterministic digest
     fake (count = 1 + digest[2] % max_frames) so tests can assert exact
     exploded row counts; corrupt GIFs contribute zero rows
@@ -1445,43 +1382,9 @@ def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 8) -> D
         except Exception:  # noqa: BLE001 — corrupt container
             return []
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd_  # worker-side import
+    def rows_of(doc_id: int, p: bytes | None):
+        if p is None:
+            return []
+        return [(doc_id, i, ts, fp) for i, (ts, fp) in enumerate(one(p))]
 
-        for pdf in it:
-            ids, idxs, tss, frames = [], [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                for i, (ts, fp) in enumerate(one(p)):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    tss.append(ts)
-                    frames.append(fp)
-            yield pd_.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "ts_ms": tss, "frame_payload": frames}
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(batches, schema=FRAMES_DDL)
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """df(doc_id, payload) → embedding array<float> (the input shape the
-    similarity/ANN operators consume). Fake featurizer: sha256 bytes scaled
-    to [-1, 1); a real model would run here via the predict_batch pattern
-    (one model per partition, batched Arrow input)."""
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            embs = []
-            for p in pdf["payload"]:
-                if p is None:
-                    embs.append(None)
-                    continue
-                h = hashlib.sha256(p).digest()
-                embs.append([(h[i % 32] - 128) / 128.0 for i in range(dim)])
-            out["embedding"] = embs
-            yield out
-
-    return df.select("doc_id", "payload").mapInPandas(batches, schema=FEATURES_DDL)
+    return map_rows(df, ["doc_id", "payload"], rows_of, FRAMES_DDL)

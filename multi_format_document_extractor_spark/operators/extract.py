@@ -2,14 +2,18 @@
 
 Reference analog: the ``BaseParser.parse()`` dispatch loop
 (src/pipeline.py:47-54,96-101), which processes one document per Python
-call. Here a single ``mapInPandas`` stage consumes Arrow batches of pages
-and runs the same extraction functions as the single-node oracle
-(oracle.py) — Spark output is byte-identical to the oracle by construction,
-verified per-url by tests/test_extraction.py.
+call. Here that call is the per-row function of ``map_rows``, the
+package's one per-row Python stage: a single ``mapInPandas`` that consumes
+Arrow batches of pages and runs the same extraction functions as the
+single-node oracle (oracle.py) — Spark output is byte-identical to the
+oracle by construction, verified per-url by tests/test_extraction.py.
+Every other per-row Python stage (WARC shard expansion, the provenance
+stages below, the multimodal walks, the registry's payload generators) is
+a ``map_rows`` call too (tests/test_plans.py).
 
 Scale design (north rule):
 - **No per-row Python dispatch**: one UDF invocation per Arrow batch; the
-  per-document loop lives inside the vectorized batch.
+  per-document loop lives inside the vectorized batch (``map_rows``).
 - **One balancing option**, ``salt_partitions``:
   (a) *Split-based balance* (the default, ``salt_partitions=None``): the
   scan's byte-ranged file splits (``spark.sql.files.maxPartitionBytes``)
@@ -48,6 +52,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..oracle import extract, sniff_format
 from ..session import per_gateway
@@ -80,52 +85,31 @@ def escalation_key(
     return (fmt, ok, len(text) > 0, min(n_blocks, 2), has_lang, has_ts, truncated)
 
 
-def _make_extract_batches(max_bytes: int | None, escalate: frozenset | None):
-    def _extract_batches(
-        batches: Iterator["pd.DataFrame"],
-    ) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads, truncated = [], []
-            for p in pdf["html"]:
-                if max_bytes is not None and p is not None and len(p) > max_bytes:
-                    payloads.append(bytes(p[:max_bytes]))
-                    truncated.append(True)
-                else:
-                    payloads.append(p)
-                    truncated.append(False)
-            results = [extract(p) for p in payloads]
-            out = pdf[["url", "warc_ts", "lang"]].copy()
-            if escalate is not None:
-                up = [
-                    escalation_key(r.format, r.ok, r.text, r.n_blocks, lg, ts, t)
-                    in escalate
-                    for r, lg, ts, t in zip(
-                        results,
-                        out["lang"].notna().tolist(),
-                        out["warc_ts"].notna().tolist(),
-                        truncated,
-                    )
-                ]
-                results = [
-                    extract(p, "relaxed") if u else r
-                    for p, r, u in zip(payloads, results, up)
-                ]
-            out["format"] = [r.format for r in results]
-            out["text_out"] = [r.text for r in results]
-            out["n_blocks"] = [r.n_blocks for r in results]
-            out["ok"] = [r.ok for r in results]
-            out["error"] = [r.error for r in results]
-            out["in_bytes"] = [
-                len(p) if p is not None else 0 for p in pdf["html"]
-            ]
-            out["checksum"] = [r.checksum for r in results]
-            out["truncated"] = truncated
-            out["encoding"] = [r.encoding for r in results]
-            if escalate is not None:
-                out["mode"] = ["escalated" if u else "rule_based" for u in up]
-            yield out
+def _extract_row(max_bytes: int | None, escalate: frozenset | None):
+    """The per-row function of ``extract_pages``'s stage: (url, warc_ts,
+    html, lang) → one ``EXTRACT_DDL`` tuple, plus ``mode`` when
+    ``escalate`` is set."""
+    import pandas as pd
 
-    return _extract_batches
+    def rows_of(url, warc_ts, html, lang):
+        in_bytes = len(html) if html is not None else 0
+        truncated = max_bytes is not None and in_bytes > max_bytes
+        payload = html[:max_bytes] if truncated else html
+        r = extract(payload)
+        mode = ()
+        if escalate is not None:
+            has_lang, has_ts = pd.notna(lang), pd.notna(warc_ts)
+            key = escalation_key(
+                r.format, r.ok, r.text, r.n_blocks, has_lang, has_ts, truncated
+            )
+            up = key in escalate
+            if up:
+                r = extract(payload, "relaxed")
+            mode = ("escalated" if up else "rule_based",)
+        out = (url, warc_ts, lang, r.format, r.text, r.n_blocks, r.ok, r.error)
+        return [(*out, in_bytes, r.checksum, truncated, r.encoding, *mode)]
+
+    return rows_of
 
 
 def salt_key(url_col: Column) -> Column:
@@ -155,19 +139,22 @@ def extract_pages(
     gains a ``mode`` column ('escalated' | 'rule_based'). Default None:
     every row under the "default" profile, the byte-identity contract.
     """
-    df = pages.select("url", "warc_ts", "html", "lang")
+    cols = ["url", "warc_ts", "html", "lang"]
+    df = pages.select(*cols)
     if salt_partitions:
         df = df.repartition(salt_partitions, salt_key(F.col("url")))
-    schema = EXTRACT_DDL if escalate is None else EXTRACT_DDL + ", mode string"
-    return df.mapInPandas(_make_extract_batches(max_bytes, escalate), schema=schema)
+    ddl = EXTRACT_DDL if escalate is None else EXTRACT_DDL + ", mode string"
+    return map_rows(df, cols, _extract_row(max_bytes, escalate), ddl)
 
 
-def _provenance_stage(pages: DataFrame, fmt: str, rows_of, ddl: str) -> DataFrame:
-    """One zero-shuffle ``mapInPandas`` stage over every page: a page whose
-    ``sniff_format`` verdict is not ``fmt`` is skipped inside the batch,
-    and ``rows_of(payload)`` yields each other page's rows without the
-    url, in ``ddl`` column order."""
-    cols = [c.split()[0] for c in ddl.split(", ")]
+def map_rows(df: DataFrame, cols: list[str], rows_of, ddl: str) -> DataFrame:
+    """The one per-row Python stage: a zero-shuffle ``mapInPandas`` over
+    ``df``'s ``cols`` that calls ``rows_of(*row)`` once per input row and
+    emits the zero or more tuples it returns, in ``ddl`` column order.
+    ``rows_of`` sees Python scalars (``Series.tolist()``), never numpy
+    ones: ``random.Random(numpy.int64(5))`` raises, for one."""
+    schema = StructType.fromDDL(ddl)  # parsed once, here, not again by Spark
+    names = schema.fieldNames()
 
     def _batches(
         batches: Iterator["pd.DataFrame"],
@@ -176,14 +163,13 @@ def _provenance_stage(pages: DataFrame, fmt: str, rows_of, ddl: str) -> DataFram
 
         for pdf in batches:
             rows = [
-                (url, *row)
-                for url, payload in zip(pdf["url"], pdf["html"])
-                if sniff_format(payload) == fmt
-                for row in rows_of(bytes(payload))
+                out
+                for row in zip(*(pdf[c].tolist() for c in cols))
+                for out in rows_of(*row)
             ]
-            yield pd.DataFrame(rows, columns=cols)
+            yield pd.DataFrame(rows, columns=names)
 
-    return pages.select("url", "html").mapInPandas(_batches, ddl)
+    return df.select(*cols).mapInPandas(_batches, schema)
 
 
 SPANS_DDL = (
@@ -208,11 +194,13 @@ def extract_spans(pages: DataFrame) -> DataFrame:
     tests/test_spans.py."""
     from ..oracle import html_block_spans
 
-    def rows_of(payload: bytes):
+    def rows_of(url, payload):
+        if sniff_format(payload) != "html":
+            return []
         spans, enc = html_block_spans(payload)
-        return [(*span, enc) for span in spans]
+        return [(url, *span, enc) for span in spans]
 
-    return _provenance_stage(pages, "html", rows_of, SPANS_DDL)
+    return map_rows(pages, ["url", "html"], rows_of, SPANS_DDL)
 
 
 BOXES_DDL = (
@@ -231,7 +219,12 @@ def extract_pdf_boxes(pages: DataFrame) -> DataFrame:
     inside the batch by ``sniff_format``; zero shuffle."""
     from ..oracle import pdf_layout_boxes
 
-    return _provenance_stage(pages, "pdf", pdf_layout_boxes, BOXES_DDL)
+    def rows_of(url, payload):
+        if sniff_format(payload) != "pdf":
+            return []
+        return [(url, *box) for box in pdf_layout_boxes(payload)]
+
+    return map_rows(pages, ["url", "html"], rows_of, BOXES_DDL)
 
 
 _MARKER_WORDS = "_marker_words"

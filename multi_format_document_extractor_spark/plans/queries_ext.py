@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions import confidence as C
 from ..functions import normalize as N
 from ..functions.rounding import rnd
+from ..operators.extract import map_rows
 from .queries import (
     _CONF_SQL,
     _PREDS_SQL,
@@ -1886,6 +1887,11 @@ def pq_rerank_topk_query(spark, sf_dir):
     )
 
 
+# the generated-payload table the multimodal registry faces feed their
+# operators: one rendered container per doc_id
+_PAYLOAD_DDL = "doc_id long, payload binary"
+
+
 @q("multimodal_frames")  # rows-only: TEXT payloads take the deterministic
 # digest-stub timeline (no-stdlib-codec containers); the REAL animated-GIF
 # codec's registry face is `gif_frames` below. Fan-out cardinality is
@@ -1925,6 +1931,7 @@ def gif_frames(spark, sf_dir):
     ceil(k·400/500) rows with ts_ms = 0, 500, … — cardinality pins the
     timeline math externally."""
     from ..multimodal import sample_frames
+    from ..oracle import render_gif_animated
 
     d = (
         _t(spark, sf_dir, "documents")
@@ -1932,31 +1939,19 @@ def gif_frames(spark, sf_dir):
         .where(F.col("doc_id") < 120)
     )
 
-    def build(it):
-        import pandas as pd
+    def build(doc_id):
+        k = 2 + doc_id % 3
+        # FONT5X7 is A-Z + space: letter-coded frame/doc labels
+        frames = [
+            [f"FRAME {'ABCDEFGH'[j]} {'KLMNOPQRST'[doc_id % 10]}"]
+            for j in range(k)
+        ]
+        payload = render_gif_animated(
+            frames, delays_ms=[400] * k, partial_after_first=doc_id % 3 == 0
+        )
+        return [(doc_id, payload)]
 
-        from ..oracle import render_gif_animated
-
-        for pdf in it:
-            ids = [int(i) for i in pdf["doc_id"]]
-            payloads = []
-            for doc_id in ids:
-                k = 2 + doc_id % 3
-                # FONT5X7 is A-Z + space: letter-coded frame/doc labels
-                frames = [
-                    [f"FRAME {'ABCDEFGH'[j]} {'KLMNOPQRST'[doc_id % 10]}"]
-                    for j in range(k)
-                ]
-                payloads.append(
-                    render_gif_animated(
-                        frames,
-                        delays_ms=[400] * k,
-                        partial_after_first=doc_id % 3 == 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    gifs = d.mapInPandas(build, "doc_id long, payload binary")
+    gifs = map_rows(d, ["doc_id"], build, _PAYLOAD_DDL)
     out = sample_frames(gifs, every_ms=500, max_frames=8)
     return out.select(
         "doc_id",
@@ -1980,50 +1975,34 @@ def pdf_scanned(spark, sf_dir):
     the reference's OCR scenario (src/parsers/ocr_parser.py:59-217)
     driven externally: `matches` is per-row byte identity of extracted
     text vs the generator's expectation."""
+    import random
+
+    from ..corpus import _make_scanned_pdf
+    from ..oracle import extract_pdf
+
     d = (
         _t(spark, sf_dir, "documents")
         .select("doc_id")
         .where(F.col("doc_id") < 150)
     )
 
-    def build(it):
-        import random
+    def build(doc_id):
+        # seeded Random is the corpus GENERATOR's interface, not the data
+        # path: _make_scanned_pdf draws from a per-row seed, CPython
+        # documents Random(seed) sequences as stable across versions, and
+        # the extraction side under test never sees the rng — only the
+        # rendered bytes. The CLAUDE.md no-`random` rule targets the
+        # query/operator path; this is the generator half riding inside
+        # the registry face.
+        payload, exp, _np = _make_scanned_pdf(random.Random(doc_id))
+        text, nb = extract_pdf(payload)
+        return [
+            (doc_id, len(payload), nb, len(text), text == exp.encode("utf-8"))
+        ]
 
-        import pandas as pd
-
-        from ..corpus import _make_scanned_pdf
-        from ..oracle import extract_pdf
-
-        for pdf in it:
-            rows = []
-            for doc_id in (int(i) for i in pdf["doc_id"]):
-                # seeded Random is the corpus GENERATOR's interface, not
-                # the data path: _make_scanned_pdf draws from a per-row
-                # seed, CPython documents Random(seed) sequences as
-                # stable across versions, and the extraction side under
-                # test never sees the rng — only the rendered bytes. The
-                # CLAUDE.md no-`random` rule targets the query/operator
-                # path; this is the generator half riding inside the
-                # registry face.
-                payload, exp, _np = _make_scanned_pdf(random.Random(doc_id))
-                text, nb = extract_pdf(payload)
-                rows.append(
-                    (
-                        doc_id,
-                        len(payload),
-                        nb,
-                        len(text),
-                        text == exp.encode("utf-8"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "pdf_bytes", "n_pages", "out_bytes", "matches",
-                ],
-            )
-
-    return d.mapInPandas(
+    return map_rows(
+        d,
+        ["doc_id"],
         build,
         "doc_id long, pdf_bytes long, n_pages int, out_bytes long, "
         "matches boolean",
@@ -2131,13 +2110,21 @@ def media_dims(spark, sf_dir):
     TIFF in both byte orders, ISO-BMFF mp4, BMP in both row orders
     (negative-height top-down files must report magnitude), Matroska
     webm (EBML varint walk, float64 Duration × TimestampScale), and AVI
-    (LIST hdrl → avih) — and ``media_metadata`` (ONE mapInPandas stage)
+    (LIST hdrl → avih) — and ``media_metadata`` (ONE ``map_rows`` stage)
     walks the headers back out. The DuckDB oracle recomputes geometry
     from doc_id alone, so a hash match proves writer AND parser for
     every container form externally (reference media path:
     src/parsers/ocr_parser.py:59-62 treats media as opaque payload +
     typed metadata)."""
     from ..multimodal import media_metadata
+    from ..multimodal.media import (
+        render_avi,
+        render_bmp,
+        render_mp4,
+        render_tiff,
+        render_webm,
+        render_webp,
+    )
 
     d = (
         _t(spark, sf_dir, "documents")
@@ -2145,48 +2132,32 @@ def media_dims(spark, sf_dir):
         .where(F.col("doc_id") < 250)
     )
 
-    def build(it):
-        import pandas as pd
+    def build(doc_id):
+        w = 16 + (doc_id * 7) % 300
+        h = 16 + (doc_id * 13) % 200
+        v = doc_id % 8
+        if v == 0:
+            p = render_webp(w, h, "vp8l")
+        elif v == 1:
+            p = render_webp(w, h, "vp8x")
+        elif v == 2:
+            p = render_webp(w, h, "vp8")
+        elif v == 3:
+            # key the variant off doc_id // 8: doc_id % 2 is constant
+            # within a %8 residue class, which would silently drop one
+            # byte order from the oracle sweep
+            p = render_tiff(w, h, big_endian=(doc_id // 8) % 2 == 1)
+        elif v == 4:
+            p = render_mp4(w, h, (doc_id % 7 + 1) * 1000)
+        elif v == 5:
+            p = render_bmp(w, h, top_down=(doc_id // 8) % 2 == 1)
+        elif v == 6:
+            p = render_webm(w, h, (doc_id % 9 + 1) * 500)
+        else:
+            p = render_avi(w, h, 25 * (doc_id % 6 + 1), 40_000)
+        return [(doc_id, p)]
 
-        from ..multimodal.media import (
-            render_avi,
-            render_bmp,
-            render_mp4,
-            render_tiff,
-            render_webm,
-            render_webp,
-        )
-
-        for pdf in it:
-            ids = [int(i) for i in pdf["doc_id"]]
-            payloads = []
-            for doc_id in ids:
-                w = 16 + (doc_id * 7) % 300
-                h = 16 + (doc_id * 13) % 200
-                v = doc_id % 8
-                if v == 0:
-                    p = render_webp(w, h, "vp8l")
-                elif v == 1:
-                    p = render_webp(w, h, "vp8x")
-                elif v == 2:
-                    p = render_webp(w, h, "vp8")
-                elif v == 3:
-                    # key the variant off doc_id // 8: doc_id % 2 is
-                    # constant within a %8 residue class, which would
-                    # silently drop one byte order from the oracle sweep
-                    p = render_tiff(w, h, big_endian=(doc_id // 8) % 2 == 1)
-                elif v == 4:
-                    p = render_mp4(w, h, (doc_id % 7 + 1) * 1000)
-                elif v == 5:
-                    p = render_bmp(w, h, top_down=(doc_id // 8) % 2 == 1)
-                elif v == 6:
-                    p = render_webm(w, h, (doc_id % 9 + 1) * 500)
-                else:
-                    p = render_avi(w, h, 25 * (doc_id % 6 + 1), 40_000)
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    gen = d.mapInPandas(build, "doc_id long, payload binary")
+    gen = map_rows(d, ["doc_id"], build, _PAYLOAD_DDL)
     return media_metadata(gen).select(
         "doc_id", "media_type", "width", "height", "duration_ms"
     )
@@ -2225,64 +2196,52 @@ def media_tags_query(spark, sf_dir):
     big-endian/latin-1 otherwise — both frame-size dialects must parse),
     a REAL JPEG APP1 Exif segment (TIFF IFD ASCII tags, inline and
     out-of-line values), and a REAL decodable PNG with tEXt chunks
-    (CRC-correct, inserted after IHDR); ``media_tags`` (ONE mapInPandas
+    (CRC-correct, inserted after IHDR); ``media_tags`` (ONE ``map_rows``
     stage) harvests title/artist/album and make/model/shot_at back. The
     oracle recomputes every string from doc_id — the attribution
     metadata a media crawl keeps alongside payload bytes."""
     from ..multimodal import media_tags
+    from ..multimodal.media import (
+        add_png_text,
+        render_exif_jpeg,
+        render_id3v2,
+        render_mp3,
+    )
+    from ..oracle import render_png
 
     d = (
         _t(spark, sf_dir, "documents")
         .select("doc_id")
         .where(F.col("doc_id") < 250)
     )
+    base_png = render_png(["A"])
 
-    def build(it):
-        import pandas as pd
+    def build(doc_id):
+        v = doc_id % 3
+        if v == 0:
+            tag = render_id3v2(
+                {
+                    "TIT2": f"TITLE {doc_id}",
+                    "TPE1": f"ARTIST {doc_id % 7}",
+                    "TALB": f"ALBUM {doc_id % 13}",
+                },
+                version=4 if doc_id % 2 == 0 else 3,
+            )
+            p = tag + render_mp3(3)
+        elif v == 1:
+            p = render_exif_jpeg(
+                f"CAM{doc_id % 5}",
+                f"MODEL {doc_id % 11}",
+                f"2026:01:{1 + doc_id % 28:02d} 12:{doc_id % 60:02d}:00",
+            )
+        else:
+            p = add_png_text(
+                base_png,
+                {"Title": f"PNG TITLE {doc_id}", "Author": f"AUTHOR {doc_id % 9}"},
+            )
+        return [(doc_id, p)]
 
-        from ..multimodal.media import (
-            add_png_text,
-            render_exif_jpeg,
-            render_id3v2,
-            render_mp3,
-        )
-        from ..oracle import render_png
-
-        base_png = render_png(["A"])
-        for pdf in it:
-            ids = [int(i) for i in pdf["doc_id"]]
-            payloads = []
-            for doc_id in ids:
-                v = doc_id % 3
-                if v == 0:
-                    tag = render_id3v2(
-                        {
-                            "TIT2": f"TITLE {doc_id}",
-                            "TPE1": f"ARTIST {doc_id % 7}",
-                            "TALB": f"ALBUM {doc_id % 13}",
-                        },
-                        version=4 if doc_id % 2 == 0 else 3,
-                    )
-                    p = tag + render_mp3(3)
-                elif v == 1:
-                    p = render_exif_jpeg(
-                        f"CAM{doc_id % 5}",
-                        f"MODEL {doc_id % 11}",
-                        f"2026:01:{1 + doc_id % 28:02d} 12:{doc_id % 60:02d}:00",
-                    )
-                else:
-                    p = add_png_text(
-                        base_png,
-                        {
-                            "Title": f"PNG TITLE {doc_id}",
-                            "Author": f"AUTHOR {doc_id % 9}",
-                        },
-                    )
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    gen = d.mapInPandas(build, "doc_id long, payload binary")
-    return media_tags(gen)
+    return media_tags(map_rows(d, ["doc_id"], build, _PAYLOAD_DDL))
 
 
 _AUDIO_META_SQL = """
@@ -2330,11 +2289,12 @@ def audio_container_meta(spark, sf_dir):
     it), odd docs a REAL Ogg stream (Vorbis ident + granule pages, or
     OpusHead with its 48 kHz granule clock and pre-skip) or a REAL FLAC
     head (fLaC marker + STREAMINFO bit fields), and ``audio_metadata``
-    (ONE mapInPandas stage) walks rate/channels/frames/duration back
+    (ONE ``map_rows`` stage) walks rate/channels/frames/duration back
     out. The oracle recomputes every field from doc_id, proving all
     three writers and container walks externally — the compressed-audio
     analog of ``audio_roundtrip``."""
     from ..multimodal import audio_metadata
+    from ..multimodal.media import render_flac, render_mp3, render_ogg
 
     d = (
         _t(spark, sf_dir, "documents")
@@ -2342,37 +2302,26 @@ def audio_container_meta(spark, sf_dir):
         .where(F.col("doc_id") < 250)
     )
 
-    def build(it):
-        import pandas as pd
+    def build(doc_id):
+        ch = 1 + (doc_id // 2) % 2
+        if doc_id % 2 == 0:
+            sr = (44100, 48000, 32000)[doc_id % 3]
+            p = render_mp3(5 + doc_id % 20, 128, sr, ch, id3=doc_id % 4 == 0)
+        elif doc_id % 6 == 1:
+            samples = 8000 * (1 + doc_id % 5) + doc_id % 997
+            p = render_ogg(samples, 44100, ch, "vorbis")
+        elif doc_id % 6 == 3:
+            granule = 48000 * (1 + doc_id % 3) + 312 + doc_id % 500
+            p = render_ogg(granule, 48000, ch, "opus")
+        else:
+            # (doc_id // 2) % 3 is constant 2 on the %6==5 class; doc_id // 6
+            # actually cycles all three rates
+            sr = (44100, 48000, 96000)[(doc_id // 6) % 3]
+            total = 44100 * (1 + doc_id % 4) + doc_id % 777
+            p = render_flac(total, sr, ch)
+        return [(doc_id, p)]
 
-        from ..multimodal.media import render_flac, render_mp3, render_ogg
-
-        for pdf in it:
-            ids = [int(i) for i in pdf["doc_id"]]
-            payloads = []
-            for doc_id in ids:
-                ch = 1 + (doc_id // 2) % 2
-                if doc_id % 2 == 0:
-                    sr = (44100, 48000, 32000)[doc_id % 3]
-                    p = render_mp3(
-                        5 + doc_id % 20, 128, sr, ch, id3=doc_id % 4 == 0
-                    )
-                elif doc_id % 6 == 1:
-                    samples = 8000 * (1 + doc_id % 5) + doc_id % 997
-                    p = render_ogg(samples, 44100, ch, "vorbis")
-                elif doc_id % 6 == 3:
-                    granule = 48000 * (1 + doc_id % 3) + 312 + doc_id % 500
-                    p = render_ogg(granule, 48000, ch, "opus")
-                else:
-                    # (doc_id // 2) % 3 is constant 2 on the %6==5 class;
-                    # doc_id // 6 actually cycles all three rates
-                    sr = (44100, 48000, 96000)[(doc_id // 6) % 3]
-                    total = 44100 * (1 + doc_id % 4) + doc_id % 777
-                    p = render_flac(total, sr, ch)
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    gen = d.mapInPandas(build, "doc_id long, payload binary")
+    gen = map_rows(d, ["doc_id"], build, _PAYLOAD_DDL)
     return audio_metadata(gen).select(
         "doc_id",
         "media_type",

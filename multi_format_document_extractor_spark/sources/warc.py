@@ -12,8 +12,9 @@ Scale shape: the FILE is the parallelism unit — Spark's ``binaryFile``
 source gives one row per shard, and record splitting is sequential within
 a shard by necessity (gzip members must be walked in order; this is how
 every WARC toolchain parallelizes, including Common Crawl's own). No
-shuffle anywhere: shard → records is a ``mapInPandas`` flat-map, and the
-output flows straight into the extraction UDF's scan. The one-mapInPandas
+shuffle anywhere: shard → records is a ``map_rows`` flat-map (the package's
+one per-row Python stage, operators/extract.py), and the output flows
+straight into the extraction UDF's scan. The one-mapInPandas
 invariant of PLANS.md §1 applies to the EXTRACTION path — a container
 source necessarily adds its own decode stage upstream, exactly as a
 parquet scan adds its (JVM-side) decode; at 100 TB you run read_warc →
@@ -33,10 +34,10 @@ from __future__ import annotations
 
 import zlib
 from datetime import datetime, timezone
-from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.extract import map_rows
 from .pages import PAGES_DDL  # one schema contract shared with read_pages
 
 _GZ_MAGIC = b"\x1f\x8b"
@@ -138,29 +139,13 @@ def parse_warc(blob: bytes) -> list[tuple[str, datetime, bytes, str]]:
     return out
 
 
-def _expand_shards(
-    batches: Iterable["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
-    """Flat-map: WARC shard blobs → pages rows (shared by the batch and
+def _shard_rows(blob: bytes) -> list[tuple]:
+    """One WARC shard blob → its pages rows (shared by the batch and
     streaming readers)."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for blob in pdf["content"]:
-            for url, ts, payload, lang in parse_warc(bytes(blob)):
-                rows.append(
-                    {
-                        "url": url,
-                        "warc_ts": ts,
-                        "html": payload,
-                        "text": "",
-                        "lang": lang,
-                    }
-                )
-        yield pd.DataFrame(
-            rows, columns=["url", "warc_ts", "html", "text", "lang"]
-        )
+    return [
+        (url, ts, payload, "", lang)
+        for url, ts, payload, lang in parse_warc(bytes(blob))
+    ]
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -172,9 +157,8 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")
         .load(path)
-        .select("content")
     )
-    return files.mapInPandas(_expand_shards, PAGES_DDL)
+    return map_rows(files, ["content"], _shard_rows, PAGES_DDL)
 
 
 _BINARYFILE_DDL = (
@@ -197,6 +181,5 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
         .schema(_BINARYFILE_DDL)
         .option("pathGlobFilter", "*.warc*")
         .load(path)
-        .select("content")
     )
-    return files.mapInPandas(_expand_shards, PAGES_DDL)
+    return map_rows(files, ["content"], _shard_rows, PAGES_DDL)

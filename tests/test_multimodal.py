@@ -11,7 +11,6 @@ import hashlib
 from pyspark.sql import functions as F
 
 from multi_format_document_extractor_spark.multimodal import (
-    extract_features,
     media_metadata,
     resize_images,
     sample_frames,
@@ -86,26 +85,6 @@ def test_registry_frames_query_cardinality(spark):
         if r.payload is not None
     )
     assert out.count() == expected
-
-
-def test_features_feed_similarity_ops(spark):
-    """The fake featurizer's output is directly consumable by the ANN
-    operators — same array<float> shape as the embeddings table."""
-    from multi_format_document_extractor_spark.operators import similarity
-
-    feats = extract_features(_payloads(spark, 20), dim=8).where(
-        F.col("embedding").isNotNull()
-    )
-    vecs = feats.select(
-        F.col("doc_id").alias("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    q = vecs.where(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    top = similarity.brute_force_topk(vecs, q, k=5).collect()
-    assert len(top) == 5
-    assert top[0].vec_id == 0 and abs(top[0].score - 1.0) < 1e-6
 
 
 def test_stub_matches_plain_python(spark):
@@ -803,10 +782,8 @@ def test_meta_follows_sniff_verdict():
 
 
 def test_meta_batches_sniff_each_payload_once(monkeypatch):
-    """media_metadata's batch loop classifies each payload once: the one
-    verdict fills ``media_type`` and picks the metadata reader."""
-    import pandas as pd
-
+    """media_metadata's per-row function classifies each payload once:
+    the one verdict fills ``media_type`` and picks the metadata reader."""
     from multi_format_document_extractor_spark.multimodal import media
 
     payloads = [
@@ -822,13 +799,10 @@ def test_meta_batches_sniff_each_payload_once(monkeypatch):
     monkeypatch.setattr(
         media, "sniff_media", lambda p: calls.append(p) or sniff(p)
     )
-    pdf = pd.DataFrame({"doc_id": range(len(payloads)), "payload": payloads})
-    (out,) = media._meta_batches(iter([pdf]))
+    out = [row for i, p in enumerate(payloads) for row in media._meta_row(i, p)]
     assert calls == payloads
-    assert list(out["media_type"]) == [sniff(p) for p in payloads]
-    assert list(zip(out["width"], out["height"], out["duration_ms"])) == [
-        media._meta_of(p, sniff(p)) for p in payloads
-    ]
+    assert [r[1] for r in out] == [sniff(p) for p in payloads]
+    assert [r[4:] for r in out] == [media._meta_of(p, sniff(p)) for p in payloads]
 
 
 def test_flac_streaminfo_walk():

@@ -278,6 +278,143 @@ def test_pdf_object_walk_is_linear_in_object_count(with_xref):
     assert t_large < 8 * t_small, (t_small, t_large)
 
 
+# ---------------------------------------------------------------------------
+# Linear cost per format family: no row may hold a worker for minutes
+# ---------------------------------------------------------------------------
+
+_SENT = "the river keeps moving past the old mill while people walk along its bank"
+_CAPS = " ".join(["HELLO WORLD"] * 6)  # FONT5X7 covers A-Z and space
+
+
+def _html_tags(n: int) -> bytes:
+    words = _SENT.split()
+    para = " ".join(f"<b>{w}</b>" if i % 3 == 0 else w for i, w in enumerate(words))
+    return f"<html><body>{f'<p>{para}</p>' * n}</body></html>".encode()
+
+
+def _html_entities(n: int) -> bytes:
+    body = "caf&eacute; &amp; cr&#232;me br&ucirc;l&#xE9;e " * n
+    return f"<html><body><p>{body}</p></body></html>".encode()
+
+
+def _html_nesting(n: int) -> bytes:
+    return (
+        f"<html><body>{'<div>' * n}<p>{_SENT}</p>{'</div>' * n}</body></html>"
+    ).encode()
+
+
+def _order(i: int) -> list[str]:
+    return [f"ORD-{100 + i % 900}", "acme_corp", str(1 + i % 40), "12.50"]
+
+
+_ORDER_HEADER = ["order_id", "client", "qty", "unit_price"]
+
+
+def _csv_rows(n: int) -> bytes:
+    lines = [_ORDER_HEADER] + [_order(i) for i in range(n)]
+    return "".join(",".join(cells) + "\n" for cells in lines).encode()
+
+
+def _docx_paragraphs(n: int) -> bytes:
+    from multi_format_document_extractor_spark.corpus import _W_XMLNS, _zip_bytes
+
+    para = f"<w:p><w:r><w:t>{_SENT}</w:t></w:r></w:p>"
+    body = f"<w:body>{para * n}</w:body>"
+    doc = f'<w:document xmlns:w="{_W_XMLNS}">{body}</w:document>'
+    return _zip_bytes(
+        [("[Content_Types].xml", "<Types/>"), ("word/document.xml", doc)]
+    )
+
+
+def _xlsx_rows(n: int) -> bytes:
+    from multi_format_document_extractor_spark.corpus import _X_XMLNS, _zip_bytes
+
+    rows = "".join(
+        f'<row r="{i + 1}"><c t="s"><v>0</v></c><c><v>{i}</v></c>'
+        '<c t="inlineStr"><is><t>mill</t></is></c></row>'
+        for i in range(n)
+    )
+    sheets = '<sheets><sheet name="S" sheetId="1"/></sheets>'
+    return _zip_bytes(
+        [
+            ("xl/workbook.xml", f'<workbook xmlns="{_X_XMLNS}">{sheets}</workbook>'),
+            (
+                "xl/sharedStrings.xml",
+                f'<sst xmlns="{_X_XMLNS}"><si><t>river</t></si></sst>',
+            ),
+            (
+                "xl/worksheets/sheet1.xml",
+                f'<worksheet xmlns="{_X_XMLNS}">'
+                f"<sheetData>{rows}</sheetData></worksheet>",
+            ),
+        ]
+    )
+
+
+def _pdf_content_ops(n: int) -> bytes:
+    from multi_format_document_extractor_spark.corpus import _build_pdf
+
+    ops = "".join(f"1 0 0 1 50 {720 - 14 * i} Tm (line {i}) Tj\n" for i in range(n))
+    return _build_pdf([f"BT /F1 12 Tf\n{ops}ET".encode()])
+
+
+def _lines(n: int, line: str) -> str:
+    return "\n".join([line] * n)
+
+
+# family → (payload of size n, n at 1×, expected text at size n)
+LINEAR_FAMILIES = {
+    "html_tags": (_html_tags, 400, lambda n: "\n\n".join([_SENT] * n)),
+    "html_entities": (
+        _html_entities, 2000, lambda n: ("café & crème brûlée " * n).strip()
+    ),
+    "html_nesting": (_html_nesting, 4000, lambda n: _SENT),
+    "csv": (
+        _csv_rows,
+        10_000,
+        lambda n: "\n".join(
+            " | ".join(c) for c in [_ORDER_HEADER] + [_order(i) for i in range(n)]
+        ),
+    ),
+    "docx": (_docx_paragraphs, 3000, lambda n: _lines(n, _SENT)),
+    "xlsx": (
+        _xlsx_rows,
+        1000,
+        lambda n: "\n".join(["## S"] + [f"river | {i} | mill" for i in range(n)]),
+    ),
+    "pdf_content_ops": (
+        _pdf_content_ops, 500, lambda n: "\n".join(f"line {i}" for i in range(n))
+    ),
+    "gif": (lambda n: oracle.render_gif([_CAPS] * n), 40, lambda n: _lines(n, _CAPS)),
+    "png": (
+        lambda n: oracle.render_png([_CAPS] * n, filter_types=[1, 2, 3, 4]),
+        16,
+        lambda n: _lines(n, _CAPS),
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(LINEAR_FAMILIES))
+def test_extract_cost_is_linear_per_family(family):
+    """4× the size must cost under 8× the time of 1× (a quadratic walk
+    gives 16×), with the text the generator expects at both sizes. The
+    two sizes run interleaved and each keeps its best of 3, which absorbs
+    host noise; there is no wall-clock timeout in the data path, so this
+    is what keeps one row from holding a worker for minutes."""
+    import time
+
+    build, n, expected = LINEAR_FAMILIES[family]
+    payloads = {k: build(k) for k in (n, 4 * n)}
+    best = dict.fromkeys(payloads, float("inf"))
+    for _ in range(3):
+        for k, payload in payloads.items():
+            t0 = time.perf_counter()
+            r = oracle.extract(payload)
+            best[k] = min(best[k], time.perf_counter() - t0)
+            assert r.ok and r.text == expected(k).encode(), (family, k)
+    assert best[4 * n] < 8 * best[n], (family, best)
+
+
 def test_pdf_escapes():
     from multi_format_document_extractor_spark.corpus import _build_pdf, _pdf_escape
 

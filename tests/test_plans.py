@@ -473,3 +473,49 @@ def test_media_container_roundtrips_are_stageless(spark):
         assert p.count("MapInPandas") == 2, name
         assert "Exchange" not in p, name
         assert "Join" not in p, name
+
+
+# ---------------------------------------------------------------------------
+# Guard: every per-row Python stage is a map_rows call
+# ---------------------------------------------------------------------------
+
+# The package's only ``.mapInPandas(`` calls, by the top-level function
+# that makes them, with the reason each one is allowed.
+MAP_IN_PANDAS_CALLERS = {
+    "operators/extract.py:map_rows": "the one per-row Python stage",
+    "operators/similarity.py:pq_code_table": "a numpy kernel over the whole "
+    "batch (the PQ distance grid), not a per-row function",
+}
+
+
+def _map_in_pandas_callers(rel: str, src: str) -> list[str]:
+    import ast
+
+    return [
+        f"{rel}:{top.name if isinstance(top, ast.FunctionDef) else '<module>'}"
+        for top in ast.parse(src).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    ]
+
+
+def test_every_per_row_python_stage_is_map_rows():
+    """A hand-written Arrow batch loop makes its own choices about null
+    payloads, numpy versus Python scalars and column order; ``map_rows``
+    makes them once. Any other ``.mapInPandas(`` call in the package
+    fails here."""
+    from pathlib import Path
+
+    from multi_format_document_extractor_spark.operators import extract
+
+    package = Path(extract.__file__).resolve().parent.parent
+    found = [
+        caller
+        for p in sorted(package.rglob("*.py"))
+        for caller in _map_in_pandas_callers(
+            p.relative_to(package).as_posix(), p.read_text(encoding="utf-8")
+        )
+    ]
+    assert sorted(found) == sorted(MAP_IN_PANDAS_CALLERS)
