@@ -31,6 +31,15 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def dot_sql(a: str, b: str) -> str:
+    """SQL mirror of ``dot`` over two 64-element list expressions, summed
+    left to right like the fold."""
+    return " + ".join(
+        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
+        for i in range(1, 65)
+    )
+
+
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
@@ -92,6 +101,18 @@ def sign_lsh_bucket(vec: Column, dims: tuple[int, ...] = lsh_dims(8)) -> Column:
             F.element_at(vec, d) >= 0, F.lit(1 << i)
         ).otherwise(0)
     return bucket.cast("int")
+
+
+def sign_lsh_bucket_sql(col: str) -> str:
+    """SQL mirror of ``sign_lsh_bucket`` at its default ``lsh_dims(8)``."""
+    return (
+        "("
+        + " + ".join(
+            f"CASE WHEN CAST({col}[{d}] AS DOUBLE) >= 0 THEN {1 << i} ELSE 0 END"
+            for i, d in enumerate(lsh_dims(8))
+        )
+        + ")"
+    )
 
 
 def ivf_assign(

@@ -1496,25 +1496,6 @@ def simhash_neardup(spark, sf_dir):
 # =========================================================================
 
 
-def _dot_sql(a: str, b: str, n: int = 64) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, n + 1)
-    )
-
-
-def _bucket_sql(col: str) -> str:
-    dims = (1, 9, 17, 25, 33, 41, 49, 57)
-    return (
-        "("
-        + " + ".join(
-            f"CASE WHEN CAST({col}[{d}] AS DOUBLE) >= 0 THEN {1 << i} ELSE 0 END"
-            for i, d in enumerate(dims)
-        )
-        + ")"
-    )
-
-
 def _to_double_vec(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -1525,9 +1506,9 @@ _ANN_SQL = f"""
       WHERE vec_id IN (0, 1, 2)
     ), scored AS (
       SELECT q.query_id, e.vec_id,
-             round(({_dot_sql('e.embedding', 'q.qv')})
-                   / (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                      * sqrt({_dot_sql('q.qv', 'q.qv')})), 4) AS score
+             round(({similarity.dot_sql('e.embedding', 'q.qv')})
+                   / (sqrt({similarity.dot_sql('e.embedding', 'e.embedding')})
+                      * sqrt({similarity.dot_sql('q.qv', 'q.qv')})), 4) AS score
       FROM embeddings e CROSS JOIN q
     )
     SELECT query_id, vec_id, score, CAST(rank AS INT) AS rank FROM (
@@ -1558,7 +1539,7 @@ _NEARDUP_SQL = f"""
       UNION ALL
       SELECT vec_id + 1000000, embedding FROM embeddings WHERE mod(vec_id, 50) = 0
     ), b AS (
-      SELECT vec_id, embedding, {_bucket_sql('embedding')} AS bucket FROM aug
+      SELECT vec_id, embedding, {similarity.sign_lsh_bucket_sql('embedding')} AS bucket FROM aug
     ), ok AS (
       SELECT bucket FROM b GROUP BY bucket
       HAVING count(*) > 1 AND count(*) <= {_EMBED_MAX_BUCKET}
@@ -1566,9 +1547,9 @@ _NEARDUP_SQL = f"""
       SELECT b.vec_id, b.embedding, b.bucket FROM b JOIN ok USING (bucket)
     ), pairs AS (
       SELECT l.vec_id AS a, r.vec_id AS b,
-             round(({_dot_sql('l.embedding', 'r.embedding')})
-                   / (sqrt({_dot_sql('l.embedding', 'l.embedding')})
-                      * sqrt({_dot_sql('r.embedding', 'r.embedding')})), 4) AS score
+             round(({similarity.dot_sql('l.embedding', 'r.embedding')})
+                   / (sqrt({similarity.dot_sql('l.embedding', 'l.embedding')})
+                      * sqrt({similarity.dot_sql('r.embedding', 'r.embedding')})), 4) AS score
       FROM bc l JOIN bc r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
     )
     SELECT a, b, score FROM pairs WHERE score >= 0.95

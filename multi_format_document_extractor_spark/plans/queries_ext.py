@@ -16,6 +16,7 @@ from ..functions import confidence as C
 from ..functions import normalize as N
 from ..functions.rounding import rnd
 from ..operators.extract import map_rows
+from ..operators.similarity import dot_sql
 from .queries import (
     _CONF_SQL,
     _PREDS_SQL,
@@ -1323,13 +1324,6 @@ def docling_field_conf(spark, sf_dir):
 # =========================================================================
 
 
-def _dotq(a: str, b: str, n: int = 64) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(1, n + 1)
-    )
-
-
 def _ivf_sql(nprobe: int) -> str:
     return f"""
     WITH c AS (
@@ -1339,7 +1333,7 @@ def _ivf_sql(nprobe: int) -> str:
       SELECT e.vec_id, e.embedding, c.cell,
              row_number() OVER (
                PARTITION BY e.vec_id
-               ORDER BY ({_dotq('e.embedding', 'c.cv')}) DESC, c.cell ASC
+               ORDER BY ({dot_sql('e.embedding', 'c.cv')}) DESC, c.cell ASC
              ) AS rn
       FROM embeddings e CROSS JOIN c
     ), cells AS (
@@ -1349,9 +1343,9 @@ def _ivf_sql(nprobe: int) -> str:
       FROM assigned WHERE rn <= {nprobe} AND vec_id IN (0, 1, 2)
     ), scored AS (
       SELECT q.query_id, cand.vec_id,
-             round(({_dotq('cand.embedding', 'q.qv')})
-                   / (sqrt({_dotq('cand.embedding', 'cand.embedding')})
-                      * sqrt({_dotq('q.qv', 'q.qv')})), 4) AS score
+             round(({dot_sql('cand.embedding', 'q.qv')})
+                   / (sqrt({dot_sql('cand.embedding', 'cand.embedding')})
+                      * sqrt({dot_sql('q.qv', 'q.qv')})), 4) AS score
       FROM cells cand JOIN q ON cand.cell = q.cell
     )
     SELECT query_id, vec_id, score, CAST(rank AS INT) AS rank FROM (
@@ -1417,7 +1411,7 @@ def _kmeans_sql(n_iter: int = 2, k: int = 10) -> str:
       SELECT e.vec_id, e.emb, c.cell,
              row_number() OVER (
                PARTITION BY e.vec_id
-               ORDER BY ({_dotq('e.emb', 'c.cv')}) DESC, c.cell ASC
+               ORDER BY ({dot_sql('e.emb', 'c.cv')}) DESC, c.cell ASC
              ) AS rn
       FROM e CROSS JOIN {prev} c
     ), m{i} AS (
@@ -1433,7 +1427,7 @@ def _kmeans_sql(n_iter: int = 2, k: int = 10) -> str:
       SELECT e.vec_id, e.emb, c.cell,
              row_number() OVER (
                PARTITION BY e.vec_id
-               ORDER BY ({_dotq('e.emb', 'c.cv')}) DESC, c.cell ASC
+               ORDER BY ({dot_sql('e.emb', 'c.cv')}) DESC, c.cell ASC
              ) AS rn
       FROM e CROSS JOIN {prev} c
     ), cells AS (
@@ -1443,9 +1437,9 @@ def _kmeans_sql(n_iter: int = 2, k: int = 10) -> str:
       FROM assigned WHERE rn = 1 AND vec_id IN (0, 1, 2)
     ), scored AS (
       SELECT q.query_id, cand.vec_id,
-             round(({_dotq('cand.emb', 'q.qv')})
-                   / (sqrt({_dotq('cand.emb', 'cand.emb')})
-                      * sqrt({_dotq('q.qv', 'q.qv')})), 4) AS score
+             round(({dot_sql('cand.emb', 'q.qv')})
+                   / (sqrt({dot_sql('cand.emb', 'cand.emb')})
+                      * sqrt({dot_sql('q.qv', 'q.qv')})), 4) AS score
       FROM cells cand JOIN q ON cand.cell = q.cell
     )
     SELECT query_id, vec_id, score, CAST(rank AS INT) AS rank FROM (
@@ -1561,16 +1555,16 @@ _SEMDEDUP_SQL = f"""
       SELECT a.vec_id, a.embedding, c.cell,
              row_number() OVER (
                PARTITION BY a.vec_id
-               ORDER BY ({_dotq('a.embedding', 'c.cv')}) DESC, c.cell ASC
+               ORDER BY ({dot_sql('a.embedding', 'c.cv')}) DESC, c.cell ASC
              ) AS rn
       FROM aug a CROSS JOIN c
     ), cells AS (
       SELECT vec_id, embedding, cell FROM assigned WHERE rn = 1
     ), sim AS (
       SELECT s.vec_id, s.embedding, s.cell,
-             round(({_dotq('s.embedding', 'c.cv')})
-                   / (sqrt({_dotq('s.embedding', 's.embedding')})
-                      * sqrt({_dotq('c.cv', 'c.cv')})), 4) AS c_sim
+             round(({dot_sql('s.embedding', 'c.cv')})
+                   / (sqrt({dot_sql('s.embedding', 's.embedding')})
+                      * sqrt({dot_sql('c.cv', 'c.cv')})), 4) AS c_sim
       FROM cells s JOIN c USING (cell)
     ), okc AS (
       SELECT cell FROM sim GROUP BY cell HAVING count(*) <= 4096
@@ -1580,9 +1574,9 @@ _SEMDEDUP_SQL = f"""
       SELECT DISTINCT x.vec_id
       FROM capped x JOIN capped y
         ON x.cell = y.cell AND x.vec_id <> y.vec_id
-      WHERE round(({_dotq('x.embedding', 'y.embedding')})
-                  / (sqrt({_dotq('x.embedding', 'x.embedding')})
-                     * sqrt({_dotq('y.embedding', 'y.embedding')})), 4) >= 0.9
+      WHERE round(({dot_sql('x.embedding', 'y.embedding')})
+                  / (sqrt({dot_sql('x.embedding', 'x.embedding')})
+                     * sqrt({dot_sql('y.embedding', 'y.embedding')})), 4) >= 0.9
         AND (y.c_sim < x.c_sim
              OR (y.c_sim = x.c_sim AND y.vec_id < x.vec_id))
     )
@@ -1739,7 +1733,7 @@ _PQ_ADC_SQL = f"""
                    / (sqrt({" + ".join(
                        f"r.recon[{g}] * r.recon[{g}]" for g in range(1, 65)
                    )})
-                      * sqrt({_dotq("q.qv", "q.qv")})), 4) AS score
+                      * sqrt({dot_sql("q.qv", "q.qv")})), 4) AS score
       FROM r CROSS JOIN q
     )
     SELECT query_id, vec_id, score, CAST(rank AS INT) AS rank FROM (
@@ -1839,7 +1833,7 @@ _PQ_RERANK_SQL = f"""
                    / (sqrt({" + ".join(
                        f"r.recon[{g}] * r.recon[{g}]" for g in range(1, 65)
                    )})
-                      * sqrt({_dotq("q.qv", "q.qv")})), 4) AS score
+                      * sqrt({dot_sql("q.qv", "q.qv")})), 4) AS score
       FROM r CROSS JOIN q
     ), short AS (
       SELECT query_id, vec_id FROM (
@@ -1848,9 +1842,9 @@ _PQ_RERANK_SQL = f"""
         FROM adc) WHERE rk <= 50
     ), ex AS (
       SELECT s.query_id, e.vec_id,
-             round(({_dotq("e.embedding", "q.qv")})
-                   / (sqrt({_dotq("e.embedding", "e.embedding")})
-                      * sqrt({_dotq("q.qv", "q.qv")})), 4) AS score
+             round(({dot_sql("e.embedding", "q.qv")})
+                   / (sqrt({dot_sql("e.embedding", "e.embedding")})
+                      * sqrt({dot_sql("q.qv", "q.qv")})), 4) AS score
       FROM short s
       JOIN embeddings e ON e.vec_id = s.vec_id
       JOIN q ON q.query_id = s.query_id

@@ -60,14 +60,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
-from .operators.extract import extract_pages
+from .operators.extract import EXTRACT_DDL, extract_pages
 
-RESULT_DDL = (
-    "url string, warc_ts timestamp, lang string, format string, "
-    "text_out binary, n_blocks int, ok boolean, error string, "
-    "in_bytes long, checksum long, truncated boolean, encoding string, "
-    "day string"
-)
+RESULT_DDL = EXTRACT_DDL + ", day string"
 
 LINEAGE_DDL = (
     "run_id string, day string, format string, doc_count long, "
@@ -120,18 +115,29 @@ class Warehouse:
         except FileNotFoundError:
             return None
 
-    def commits(self) -> list[dict]:
-        """Committed snapshots in commit order (data runs AND seal
-        markers). When a retention checkpoint exists it REPLACES every
-        marker at or before its seq — visibility resolves from the
-        checkpoint alone, so ``expire``'s marker/file garbage collection
-        can lag (or crash and re-run) without readers ever seeing a
-        half-expired log."""
-        ckpt = self._read_checkpoint()
-        out: list[dict] = [ckpt] if ckpt else []
-        for name in sorted(os.listdir(self.commits_dir)):
+    def _markers(self) -> list[tuple[int, str]]:
+        """(seq, file name) of every commit marker, in seq order — by the
+        parsed integer, since ``:06d`` names stop sorting past 999,999."""
+        out: list[tuple[int, str]] = []
+        for name in os.listdir(self.commits_dir):
             if not name.endswith(".json"):
                 continue
+            try:
+                out.append((int(name.split("-", 1)[0]), name))
+            except ValueError:
+                continue
+        return sorted(out)
+
+    def commits(self) -> list[dict]:
+        """Committed snapshots in commit order (data runs and
+        compactions, behind the retention checkpoint if there is one).
+        The checkpoint REPLACES every marker at or before its seq —
+        visibility resolves from the checkpoint alone, so ``expire``'s
+        marker/file garbage collection can lag (or crash and re-run)
+        without readers ever seeing a half-expired log."""
+        ckpt = self._read_checkpoint()
+        out: list[dict] = [ckpt] if ckpt else []
+        for _, name in self._markers():
             with open(os.path.join(self.commits_dir, name)) as f:
                 rec = json.load(f)
             if ckpt is not None and rec["seq"] <= ckpt["seq"]:
@@ -140,11 +146,17 @@ class Warehouse:
         return out
 
     @staticmethod
+    def _next_seq(commits: list[dict]) -> int:
+        # last seq + 1, not len(commits): after ``expire`` the list starts
+        # with one checkpoint standing for the whole expired prefix
+        return commits[-1]["seq"] + 1 if commits else 0
+
+    @staticmethod
     def _data_run_ids(commits: list[dict]) -> list[str]:
-        # seal markers carry no data dir; runs replaced by a later
-        # compaction commit are superseded — readers must skip both; a
-        # retention checkpoint contributes the runs visible at its
-        # horizon (later compactions can still replace them)
+        # runs replaced by a later compaction commit are superseded —
+        # readers must skip them; a retention checkpoint contributes the
+        # runs visible at its horizon (later compactions can still
+        # replace them)
         replaced: set[str] = set()
         for c in commits:
             replaced.update(c.get("replaces", []))
@@ -154,7 +166,7 @@ class Warehouse:
                 out.extend(
                     r for r in c.get("base_runs", []) if r not in replaced
                 )
-            elif c.get("kind") != "seal" and c["run_id"] not in replaced:
+            elif c["run_id"] not in replaced:
                 out.append(c["run_id"])
         return out
 
@@ -168,29 +180,13 @@ class Warehouse:
             days.update(c.get("complete_days", []))
         return days
 
-    @staticmethod
-    def _marker_days(commits: list[dict]) -> set[str]:
-        """Days sealed by WATERMARK POLICY (kind='seal' markers) only —
-        excludes days sealed by batch data commits. The distinction matters
-        when batch and streaming share a warehouse: a batch run's
-        seal_days=True asserts "I drained everything pending today", which
-        says nothing about rows still within a streaming lateness horizon;
-        only marker days carry the beyond-horizon-may-drop contract."""
-        days: set[str] = set()
-        for c in commits:
-            if c.get("kind") == "seal":
-                days.update(c.get("complete_days", []))
-            elif c.get("kind") == "checkpoint":
-                days.update(c.get("marker_days", []))
-        return days
-
     def complete_days(self) -> set[str]:
         """Days fully drained by some committed run (the high-watermark set).
 
         Valid under append-by-crawl-day arrival (Common-Crawl semantics): a
         day's rows only grow while it is the frontier; a committed run that
-        processed ALL pending rows of a day seals it. Streaming callers seal
-        via ``seal_watermark`` instead (lateness-horizon policy).
+        processed ALL pending rows of a day seals it. A run that does not
+        seal (a stream's micro-batch) adds no day.
         """
         return self._complete_days(self.commits())
 
@@ -259,9 +255,8 @@ class Warehouse:
         restart sees them: sealed days drop with a pushdown-able filter
         before the url anti-join, so the join's build side is only the
         frontier (SURVEY.md §4.4). The anti-join itself is the
-        always-correct path — ``run(prune_days=False)`` keeps it alone
-        when the input may contain LATE rows for days already sealed (day
-        pruning would silently drop them).
+        always-correct path — ``run(seal_days=False)`` prunes no day and
+        keeps it alone, so LATE rows for days already sealed still land.
         """
         commits = self.commits()
         return self._pending(pages, commits, self._complete_days(commits))
@@ -279,43 +274,12 @@ class Warehouse:
                 F.col("warc_ts").isNull()
                 | ~_day(F.col("warc_ts")).isin(sealed)
             )
-        if not self._data_run_ids(commits):
-            return pages  # only seal markers: nothing to anti-join against
         committed = self.read_extracted(
             pages.sparkSession, _commits=commits
         ).select("url")
         return pages.join(committed, "url", "left_anti")
 
-    def seal_watermark(self, days: set[str]) -> dict | None:
-        """Seal crawl days by POLICY (streaming watermark): the caller
-        asserts rows for these days that have not arrived yet are late
-        beyond the allowed horizon and may be skipped on future resumes —
-        the standard watermark contract, which is what bounds the resume
-        anti-join's build side for an unbounded stream. Writes a data-less
-        seal-marker commit; returns its record (None if nothing new)."""
-        commits = self.commits()
-        # Diff against MARKER days, not all sealed days: a day sealed only
-        # by a batch data commit still needs its watermark marker, or runs
-        # that do not seal (which prune marker days only) would anti-join
-        # it forever (and never apply the beyond-horizon drop contract).
-        new = {d for d in days if d is not None} - self._marker_days(commits)
-        if not new:
-            return None
-        record = {
-            "run_id": f"seal_{uuid.uuid4().hex[:12]}",
-            "kind": "seal",
-            "seq": len(commits),
-            "n_docs": 0,
-            "n_bytes": 0,
-            # Markers accumulate WATERMARK-sealed days only (not days sealed
-            # by batch data commits) so runs that do not seal see exactly
-            # the beyond-horizon set.
-            "complete_days": sorted(new | self._marker_days(commits)),
-            "committed_at": time.time(),
-        }
-        return self._commit_marker(record)
-
-    # -- commit protocol (shared by run / compact / seal) --------------------
+    # -- commit protocol (shared by run / compact) ---------------------------
 
     def _append(
         self, spark: SparkSession, df: DataFrame, run_id: str
@@ -443,7 +407,7 @@ class Warehouse:
             "run_id": run_id,
             "kind": "compact",
             "replaces": ids,
-            "seq": len(commits),
+            "seq": self._next_seq(commits),
             "n_docs": int(sum(r["doc_count"] for r in lrows)),
             "n_bytes": int(sum(r["byte_count"] for r in lrows)),
             # re-layout only: sealed days carry through unchanged
@@ -499,7 +463,7 @@ class Warehouse:
         for c in prefix:
             if c.get("kind") == "checkpoint":
                 prefix_runs.update(c.get("base_runs", []))
-            elif c.get("kind") != "seal":
+            else:
                 prefix_runs.add(c["run_id"])
         record = {
             "run_id": f"ckpt_{uuid.uuid4().hex[:12]}",
@@ -508,7 +472,6 @@ class Warehouse:
             "base_runs": base_runs,
             "expired_runs": sorted(prefix_runs - set(base_runs)),
             "complete_days": sorted(self._complete_days(prefix)),
-            "marker_days": sorted(self._marker_days(prefix)),
             "committed_at": time.time(),
         }
         path = os.path.join(self.root, "expired.json")
@@ -526,13 +489,7 @@ class Warehouse:
         re-run any time (e.g. after a crash between swap and GC)."""
         import shutil
 
-        for name in list(os.listdir(self.commits_dir)):
-            if not name.endswith(".json"):
-                continue
-            try:
-                seq = int(name.split("-", 1)[0])
-            except ValueError:
-                continue
+        for seq, name in self._markers():
             if seq <= ckpt["seq"]:
                 os.remove(os.path.join(self.commits_dir, name))
         for rid in ckpt.get("expired_runs", []):
@@ -564,7 +521,6 @@ class Warehouse:
         salt_partitions: int | None = None,
         fail_before_commit: bool = False,
         seal_days: bool = True,
-        prune_days: bool | None = None,
     ) -> dict:
         """One resumable extraction job: pending → extract → append → commit.
 
@@ -574,16 +530,9 @@ class Warehouse:
         job re-reads the whole input table). Pass False when feeding a
         partial slice of a day (e.g. a micro-batch or sampled sub-corpus);
         the anti-join then remains the sole — always correct — dedup
-        mechanism.
-
-        ``prune_days`` (default: follows ``seal_days``): whether the run
-        may skip sealed days before the anti-join. Which days follows
-        ``seal_days``: a run that seals (a whole-table batch restart)
-        skips every sealed day; one that does not (a stream's micro-batch)
-        skips only days sealed by watermark policy — a day a batch data
-        commit sealed may still be within the stream's lateness horizon,
-        so its late rows go through the anti-join. A caller whose input
-        can contain LATE rows it must not drop keeps this False.
+        mechanism. Pruning follows sealing: a run that seals skips every
+        sealed day before the anti-join; one that does not skips none, so
+        its LATE rows for a sealed day still land.
 
         ``fail_before_commit`` aborts after the data write but before the
         snapshot marker — the crash injection used by the resume tests (T3).
@@ -591,10 +540,7 @@ class Warehouse:
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         commits = self.commits()  # one snapshot listing per job
-        prune: set[str] = set()
-        if seal_days if prune_days is None else prune_days:
-            seals = self._complete_days if seal_days else self._marker_days
-            prune = seals(commits)
+        prune = self._complete_days(commits) if seal_days else set()
         todo = self._pending(pages, commits, prune)
         lrows = self._append(
             spark, self._to_write(todo, salt_partitions), run_id
@@ -603,7 +549,7 @@ class Warehouse:
         # pending rows), so all of them seal — plus days sealed previously.
         record = {
             "run_id": run_id,
-            "seq": len(commits),
+            "seq": self._next_seq(commits),
             "n_docs": int(sum(r["doc_count"] for r in lrows)),
             "n_bytes": int(sum(r["byte_count"] for r in lrows)),
             "complete_days": sorted(

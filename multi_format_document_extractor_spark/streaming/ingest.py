@@ -229,7 +229,6 @@ def streaming_extract(
     warehouse_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    watermark_lateness_days: int | None = None,
 ) -> list[dict]:
     """Continuous-crawl ingestion: file-stream over a growing pages
     directory → per-micro-batch extraction committed through the idempotent
@@ -242,19 +241,14 @@ def streaming_extract(
     guarantee the batch job has, extended to an unbounded input. A real
     deployment swaps the file source for Kafka and keeps everything else.
 
+    A micro-batch is a partial slice of its days, so it never seals a
+    day and never prunes one: each batch commits as
+    ``Warehouse.run(seal_days=False)``, and the resume anti-join against
+    every committed url is the dedup. A late row for a day a batch run
+    sealed therefore still lands.
+
     Drains with availableNow (processes what exists, then stops — the
     restart-friendly trigger) and returns the commit records.
-
-    ``watermark_lateness_days``: the stream's sealing policy. Streaming
-    commits never seal days themselves (a micro-batch is a partial
-    slice), so without sealing the resume anti-join's build side grows
-    with the whole committed history. With a lateness horizon L, after
-    each drain every committed day older than (frontier − L) is sealed by
-    a data-less marker: future drains day-prune those instead of
-    anti-joining them, bounding the build side to ~L days — and, by the
-    standard watermark contract, rows arriving later than L days behind
-    the frontier are dropped on resume. None (default) = never seal,
-    never drop, unbounded anti-join: correct for bounded backfills.
     """
     from ..sinks import Warehouse
     from ..sources.pages import PAGES_DDL
@@ -268,26 +262,16 @@ def streaming_extract(
     stream = reader.parquet(pages_dir)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # seal_days=False: a micro-batch is a partial slice of its days, so
-        # the anti-join (not day pruning) is the dedup mechanism. The run id
-        # gets a fresh per-attempt suffix: a crash-replayed batch must NOT
-        # collide with its dead attempt's uncommitted data dir (uncommitted
-        # runs are invisible to readers; the anti-join dedups any rows the
-        # dead attempt DID commit).
+        # The run id gets a fresh per-attempt suffix: a crash-replayed batch
+        # must NOT collide with its dead attempt's uncommitted data dir
+        # (uncommitted runs are invisible to readers; the anti-join dedups
+        # any rows the dead attempt DID commit).
         records.append(
             wh.run(
                 batch_df.sparkSession,
                 batch_df,
                 run_id=f"stream_{batch_id:08d}_{uuid.uuid4().hex[:6]}",
                 seal_days=False,
-                # With a watermark, WATERMARK-sealed days are beyond the
-                # horizon, so pruning them IS the lateness policy — and a
-                # run that does not seal prunes only kind='seal' marker
-                # days: a day sealed by a batch data commit in a shared
-                # warehouse may still be within this stream's horizon, and
-                # its late rows must keep flowing through the anti-join,
-                # not be silently dropped. Without a watermark, never prune.
-                prune_days=watermark_lateness_days is not None,
             )
         )
 
@@ -298,24 +282,4 @@ def streaming_extract(
         .start()
     )
     query.awaitTermination()
-
-    if watermark_lateness_days is not None:
-        import datetime as _dt
-
-        days = {
-            r["day"]
-            for r in wh.read_lineage(spark)
-            .select("day")
-            .distinct()
-            .collect()
-            if r["day"] is not None
-        }
-        if days:
-            frontier = _dt.date.fromisoformat(max(days))
-            horizon = frontier - _dt.timedelta(days=watermark_lateness_days)
-            sealed = wh.seal_watermark(
-                {d for d in days if _dt.date.fromisoformat(d) < horizon}
-            )
-            if sealed is not None:
-                records.append(sealed)
     return records

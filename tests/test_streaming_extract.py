@@ -117,10 +117,9 @@ def test_streaming_multi_microbatch_one_drain(spark, tmp_path):
         str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
     )
-    data_recs = [r for r in recs if r.get("kind") != "seal"]
-    assert len(data_recs) == 2
-    assert sorted(r["seq"] for r in data_recs) == [0, 1]
-    assert sum(r["n_docs"] for r in data_recs) == 15  # dupes absorbed
+    assert len(recs) == 2
+    assert sorted(r["seq"] for r in recs) == [0, 1]
+    assert sum(r["n_docs"] for r in recs) == 15  # dupes absorbed
 
     from multi_format_document_extractor_spark.sinks import Warehouse
 
@@ -131,8 +130,9 @@ def test_streaming_multi_microbatch_one_drain(spark, tmp_path):
 
 def test_late_rows_for_batch_sealed_day_still_land(spark, tmp_path):
     """A batch run seals its days; a later streaming drop carries a NEW url
-    on a sealed day. Day pruning must not silently drop it (the streaming
-    path passes prune_days=False when no watermark is set)."""
+    on a sealed day. Day pruning must not silently drop it: a micro-batch
+    commits as run(seal_days=False), which prunes no day, so the anti-join
+    alone decides."""
     import datetime as dt
 
     from multi_format_document_extractor_spark.sinks import Warehouse
@@ -162,51 +162,6 @@ def test_late_rows_for_batch_sealed_day_still_land(spark, tmp_path):
     assert sum(r["n_docs"] for r in recs) == 1
     urls = {r.url for r in wh.read_extracted(spark).select("url").collect()}
     assert "s://late-arrival" in urls
-
-
-def test_watermark_does_not_prune_batch_sealed_days_in_horizon(spark, tmp_path):
-    """Shared batch+streaming warehouse (ADVICE round 1): a batch run seals
-    its days, then a WATERMARKING stream receives a within-horizon late row
-    for one of those batch-sealed days. Only kind='seal' marker days may be
-    pruned — the late row must flow through the anti-join and land."""
-    import datetime as dt
-
-    from multi_format_document_extractor_spark.sinks import Warehouse
-
-    tz = dt.timezone.utc
-    d = lambda s: dt.datetime.fromisoformat(s).replace(tzinfo=tz)  # noqa: E731
-    wh_dir = str(tmp_path / "wh")
-    wh = Warehouse(wh_dir)
-
-    batch_file = tmp_path / "batch.parquet"
-    _page_file(
-        batch_file,
-        [
-            ("s://b1", d("2026-07-04"), b"batch text one"),
-            ("s://b2", d("2026-07-05"), b"batch text two"),
-        ],
-    )
-    from multi_format_document_extractor_spark.sources.pages import read_pages
-
-    wh.run(spark, read_pages(spark, str(batch_file)), run_id="batch1")
-    assert wh.complete_days() == {"2026-07-04", "2026-07-05"}
-
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    _page_file(
-        incoming / "late.parquet",
-        [("s://late-in-horizon", d("2026-07-04"), b"late but in horizon")],
-    )
-    recs = streaming_extract(
-        spark,
-        str(incoming),
-        wh_dir,
-        str(tmp_path / "ckpt"),
-        watermark_lateness_days=3,
-    )
-    assert sum(r["n_docs"] for r in recs if r.get("kind") != "seal") == 1
-    urls = {r.url for r in wh.read_extracted(spark).select("url").collect()}
-    assert "s://late-in-horizon" in urls
 
 
 def test_sessionize_flags_out_of_order_cross_batch_events(spark, tmp_path):
@@ -295,52 +250,3 @@ def test_sessionize_flags_out_of_order_cross_batch_events(spark, tmp_path):
     )
     assert last["n_events"] == 3
     assert last["out_of_order_events"] == 1
-
-
-def test_watermark_seals_old_days_and_drops_beyond_horizon(spark, tmp_path):
-    """With a lateness horizon, days older than frontier-L seal after the
-    drain; a subsequent drop older than the horizon is dropped BY POLICY,
-    while within-horizon rows land."""
-    import datetime as dt
-
-    from multi_format_document_extractor_spark.sinks import Warehouse
-
-    tz = dt.timezone.utc
-    d = lambda s: dt.datetime.fromisoformat(s).replace(tzinfo=tz)  # noqa: E731
-    incoming = tmp_path / "incoming"
-    incoming.mkdir()
-    _page_file(
-        incoming / "a.parquet",
-        [
-            ("s://old", d("2026-07-01"), b"old text"),
-            ("s://mid", d("2026-07-03"), b"mid text"),
-            ("s://new", d("2026-07-05"), b"new text"),
-        ],
-    )
-    wh_dir = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
-    recs = streaming_extract(
-        spark, str(incoming), wh_dir, ckpt, watermark_lateness_days=2
-    )
-    seals = [r for r in recs if r.get("kind") == "seal"]
-    assert len(seals) == 1
-    # frontier 07-05, horizon 07-03: only 07-01 is strictly older
-    assert seals[0]["complete_days"] == ["2026-07-01"]
-
-    _page_file(
-        incoming / "b.parquet",
-        [
-            ("s://too-late", d("2026-07-01"), b"beyond horizon"),
-            ("s://in-horizon", d("2026-07-04"), b"within horizon"),
-        ],
-    )
-    recs2 = streaming_extract(
-        spark, str(incoming), wh_dir, ckpt, watermark_lateness_days=2
-    )
-    assert sum(r["n_docs"] for r in recs2 if r.get("kind") != "seal") == 1
-    urls = {
-        r.url
-        for r in Warehouse(wh_dir).read_extracted(spark).select("url").collect()
-    }
-    assert "s://in-horizon" in urls
-    assert "s://too-late" not in urls  # dropped by the watermark contract

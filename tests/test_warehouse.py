@@ -369,6 +369,7 @@ def test_expire_retention(spark, pages, tmp_path):
     assert wh.pending(pages).count() == 0
     rec5 = wh.run(spark, pages, run_id="run5")
     assert rec5["n_docs"] == 0
+    assert rec5["seq"] == 5  # last seq + 1, not the checkpointed length
 
     # second expire crosses the compaction: horizon becomes seq 3 (c1),
     # so run0..run2 — superseded by c1 INSIDE the expired prefix — are
@@ -381,6 +382,7 @@ def test_expire_retention(spark, pages, tmp_path):
             os.path.join(wh.runs_dir, f"run_id={rid}")
         ), rid
     assert os.path.exists(os.path.join(wh.runs_dir, "run_id=c1"))
+    assert "run5" in wh.committed_run_ids()
     assert _collect_texts(wh.read_at(spark, 3)) == snaps[3]
     assert _collect_texts(wh.read_extracted(spark)) == snaps[4]
     with _pytest.raises(ValueError, match="EXPIRED"):
