@@ -50,7 +50,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-    out = extract_pages(pages, salt_partitions=8)
+    out = extract_pages(pages)
     return out.select(
         "url",
         "format",

@@ -134,22 +134,12 @@ def main() -> None:
     # worker spawn + package import — amortized to noise on a real cluster):
     # a wide UDF stage touches every worker and imports the package in each.
     pages = read_pages(spark, corpus_dir + "/pages.parquet")
-    _run(
-        extract_pages(
-            pages.limit(512), salt_partitions=int(CPUS) * 2
-        )
-    )
-    # Headline = split-balanced plan (zero-shuffle production path); the
-    # salted plan (full-payload shuffle, skew-adversarial path) is timed as
-    # a secondary entry. See operators/extract.py for the tradeoff.
+    _run(extract_pages(pages.limit(512)))
     # Headline gets best-of-3 (the shared host's contention windows can
     # poison any single sample 3-10×; see BENCH.md protocol).
     extract_sec = _timed(lambda: extract_pages(pages), reps=3)
     times["extract_pages"] = round(extract_sec, 3)
     docs_per_sec = N_DOCS / extract_sec
-    times["extract_pages_salted"] = round(
-        _timed(lambda: extract_pages(pages, salt_partitions=int(CPUS) * 4)), 3
-    )
 
     # -- registry queries at the driver's sf dir -----------------------------
     from multi_format_document_extractor_spark.plans.queries import QUERIES

@@ -12,7 +12,8 @@ plain text, ~5% DOCX + ~5% XLSX (real PK-zip containers), ~4% binary
 image (decodable PBM/PNG/GIF/JPEG + noise payloads on the error path),
 ~3% empty/null payload (error path), ~2%
 oversized (≥1 MB, skew path). Host
-distribution is Zipf-like (host0 ≈ 30% of urls) to exercise salting (T4).
+distribution is Zipf-like (host0 ≈ 30% of urls), the host-level skew a
+crawl carries.
 All randomness flows from one seed.
 """
 

@@ -14,29 +14,12 @@ a ``map_rows`` call too (tests/test_plans.py).
 Scale design (north rule):
 - **No per-row Python dispatch**: one UDF invocation per Arrow batch; the
   per-document loop lives inside the vectorized batch (``map_rows``).
-- **One balancing option**, ``salt_partitions``:
-  (a) *Split-based balance* (the default, ``salt_partitions=None``): the
-  scan's byte-ranged file splits (``spark.sql.files.maxPartitionBytes``)
-  already hand every task ~equal input bytes regardless of which host's
-  pages land where — zero shuffle. At 100 TB, shuffling raw payloads for
-  balance means moving the whole corpus through the network; the scan
-  split does it for free. Residual risks: single rows larger than a split
-  are atomic (``max_bytes`` caps what one row costs inside the UDF), and
-  compute skew — bytes are not cost; the decoders measure a ~52× per-byte
-  spread across formats (BENCH.md §"Per-format compute cost"), which
-  matters only where a layout packs the costly formats into whole splits.
-  (b) **Salted repartition** on ``pmod(xxhash64(url), S)``
-  (``salt_partitions=S``) is for input clustered by host or by format: it
-  breaks that layout *by construction* before the UDF — AQE only sees
-  skew after a stage has straggled, and it cannot split a UDF stage's
-  input rows. It costs a full-payload shuffle, so it pays only when the
-  layout is adversarially clustered or per-doc cost dwarfs per-byte
-  shuffle cost (heavy parsers, ML models). The evidence for keeping the
-  split plan as the default is perfbench's ``extract.clustered_*`` rows
-  (perfbench/METRICS.md): they time it on the same rows sorted by format,
-  and its straggler ratio there stays near 1.1-1.2 on a 4-CPU box. The
-  salted bucket bound is tested in
-  tests/test_warehouse.py::test_salt_bounds_partition_bytes.
+- **Split-based balance, zero shuffle**: the scan's byte-ranged file
+  splits (``spark.sql.files.maxPartitionBytes``) hand every task ~equal
+  input bytes regardless of which host's pages land where; a row larger
+  than a split is atomic, and ``max_bytes`` bounds what it costs inside
+  the UDF. perfbench's ``extract.clustered_*`` rows time the same rows
+  sorted by format (perfbench/METRICS.md).
 - **Column pruning**: only (url, warc_ts, html, lang) enter the UDF; the
   noisy ``text`` column is never shipped through Arrow.
 - **Small Arrow batches** (session.py) bound batch bytes when rows carry
@@ -65,9 +48,6 @@ EXTRACT_DDL = (
     "text_out binary, n_blocks int, ok boolean, error string, "
     "in_bytes long, checksum long, truncated boolean, encoding string"
 )
-
-SALT_BUCKETS = 4096  # >> max executor count; cheap modulo key
-
 
 def escalation_key(
     fmt: str,
@@ -112,25 +92,19 @@ def _extract_row(max_bytes: int | None, escalate: frozenset | None):
     return rows_of
 
 
-def salt_key(url_col: Column) -> Column:
-    """Skew-breaking shuffle key: uniform over url hash, independent of host."""
-    return F.pmod(F.xxhash64(url_col), F.lit(SALT_BUCKETS))
-
-
 def extract_pages(
     pages: DataFrame,
-    salt_partitions: int | None = None,
     max_bytes: int | None = None,
     escalate: frozenset | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted table.
 
     ``max_bytes`` caps per-document payload size INSIDE the UDF: a single
-    multi-GB page is atomic to any partitioning scheme (neither scan splits
-    nor salting can divide one row), so at 100 TB the cap is what bounds
-    worst-case task time. Truncation is recorded as data in the
-    ``truncated`` column (and thus in warehouse lineage), never silent;
-    default None = byte-identity contract intact.
+    multi-GB page is atomic to any partitioning scheme (no scan split
+    divides one row), so at 100 TB the cap is what bounds worst-case task
+    time. Truncation is recorded as data in the ``truncated`` column (and
+    thus in warehouse lineage), never silent; default None = byte-identity
+    contract intact.
 
     ``escalate``: the hybrid pipeline's escalation table
     (``api.escalation_table``). A row whose ``escalation_key`` is in it is
@@ -140,11 +114,8 @@ def extract_pages(
     every row under the "default" profile, the byte-identity contract.
     """
     cols = ["url", "warc_ts", "html", "lang"]
-    df = pages.select(*cols)
-    if salt_partitions:
-        df = df.repartition(salt_partitions, salt_key(F.col("url")))
     ddl = EXTRACT_DDL if escalate is None else EXTRACT_DDL + ", mode string"
-    return map_rows(df, cols, _extract_row(max_bytes, escalate), ddl)
+    return map_rows(pages, cols, _extract_row(max_bytes, escalate), ddl)
 
 
 def map_rows(df: DataFrame, cols: list[str], rows_of, ddl: str) -> DataFrame:

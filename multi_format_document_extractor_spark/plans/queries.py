@@ -1912,7 +1912,7 @@ def extract_pages_q(spark, sf_dir):
     from ..sources.pages import read_pages
 
     pages = read_pages(spark, _corpus_dir() + "/pages.parquet")
-    return extract_pages(pages, salt_partitions=16).select(
+    return extract_pages(pages).select(
         "url", "format", "n_blocks", "ok", "checksum"
     )
 

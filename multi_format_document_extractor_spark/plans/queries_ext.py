@@ -1061,7 +1061,7 @@ def surrogate_ids(spark, sf_dir):
     is a nondeterminism hazard; the engine's surrogate is
     ORD-{run_date}-{pmod(xxhash64(url),900)+100} — deterministic per url and
     run. Registered rows-only because xxhash64 deliberately stays
-    Spark-native (it is the same hash the salt key uses); the id-shape
+    Spark-native (DuckDB has no xxhash64); the id-shape
     invariant is pinned in tests/test_queries_oracle.py::
     test_surrogate_ids_shape — registry queries build plans, they never
     run driver actions (round-2 VERDICT #4)."""

@@ -25,13 +25,30 @@ from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
-# Arrow batches are bounded BOTH ways: 512 records (≈+12% extraction
-# throughput vs 128 — fewer per-batch Python/Arrow round-trips) AND 32 MB
-# (spark.sql.execution.arrow.maxBytesPerBatch), so a run of multi-MB pages
-# can never assemble a multi-GB batch. The byte bound is what makes the
-# higher record cap safe at 100 TB.
-ARROW_MAX_RECORDS_PER_BATCH = 512
-ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024
+# The semantic configs every engine session carries, whoever builds it
+# (get_spark here, scripts/run_job.py under spark-submit). Cluster sizing —
+# master, executors, memory, shuffle partitions — stays with the launcher.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Arrow batches are bounded BOTH ways: 512 records (≈+12% extraction
+    # throughput vs 128 — fewer per-batch Python/Arrow round-trips) AND
+    # 32 MB, so a run of multi-MB pages can never assemble a multi-GB
+    # batch. The byte bound is what makes the higher record cap safe at
+    # 100 TB.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(32 * 1024 * 1024),
+    # Partition dir values (day=yyyy-MM-dd) stay strings on read-back;
+    # inference would retype them DATE and break fixed-schema reads.
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+    # Binary-payload scans: smaller splits give the extraction UDF stage
+    # its parallelism without a shuffle (split-based balance; see
+    # operators/extract.py).
+    "spark.sql.files.maxPartitionBytes": "16m",
+}
 
 
 _PYFILES_BUILT: dict[str | None, str] = {}  # out_path → zip built by this process
@@ -103,7 +120,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build (or fetch) a SparkSession with ``ENGINE_CONF``, plus the
+    master, shuffle partitions, UI and driver memory of a local run;
+    ``extra_conf`` overrides any of them.
 
     ``cores`` may be an int (local[N]) or "*" — on a real cluster pass
     ``None`` and launch via spark-submit with master/executors configured
@@ -116,37 +135,16 @@ def get_spark(
         n = os.cpu_count() or 8 if cores == "*" else int(cores)
         shuffle_partitions = max(8, int(n))
 
-    builder = (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            str(ARROW_MAX_BYTES_PER_BATCH),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # Partition dir values (day=yyyy-MM-dd) stay strings on read-back;
-        # inference would retype them DATE and break fixed-schema reads.
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # Binary-payload scans: smaller splits give the extraction UDF stage
-        # its parallelism without a shuffle (split-based balance; see
-        # operators/extract.py).
-        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config(map={**ENGINE_CONF, **(extra_conf or {})})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     # Ship the package to Python workers so UDFs unpickle anywhere —
     # the local-mode equivalent of spark-submit --py-files.
     spark.sparkContext.addPyFile(make_pyfiles_zip())

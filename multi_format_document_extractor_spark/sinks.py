@@ -186,7 +186,7 @@ class Warehouse:
         Valid under append-by-crawl-day arrival (Common-Crawl semantics): a
         day's rows only grow while it is the frontier; a committed run that
         processed ALL pending rows of a day seals it. A run that does not
-        seal (a stream's micro-batch) adds no day.
+        seal (``run(seal_days=False)`` over a partial slice) adds no day.
         """
         return self._complete_days(self.commits())
 
@@ -215,14 +215,13 @@ class Warehouse:
         the table exactly as a reader saw it right after commit ``seq``.
         Visibility resolves from the commit-log PREFIX alone — a later
         compaction's ``replaces`` list cannot retroactively rewrite
-        history, and replaced run files stay on disk (nothing in this
-        warehouse deletes data; retention/GC would be a separate explicit
-        pass) — so audits, reproductions, and incremental consumers
-        re-read any historical snapshot deterministically. Raises on an
-        unknown ``seq``: silently reading the nearest prefix would mask a
-        caller bug. A seq behind the retention horizon (``expire``) raises
-        an EXPIRED error naming the horizon — distinguishable from a seq
-        that never existed."""
+        history, and replaced run files stay on disk until ``expire``
+        deletes them — so audits, reproductions, and incremental consumers
+        re-read any historical snapshot inside the retention horizon
+        deterministically. Raises on an unknown ``seq``: silently reading
+        the nearest prefix would mask a caller bug. A seq behind the
+        retention horizon (``expire``) raises an EXPIRED error naming the
+        horizon — distinguishable from a seq that never existed."""
         all_commits = self.commits()
         commits = [c for c in all_commits if c["seq"] <= seq]
         if not commits or commits[-1]["seq"] != seq:
@@ -385,9 +384,9 @@ class Warehouse:
         before the marker leaves the compacted files as invisible orphans
         and every old run still visible (no data-loss window).
 
-        Operationally necessary at 10¹² docs: every restart/micro-batch
-        adds a run directory, and the resume union's file listing (plus
-        downstream scan planning) degrades linearly with run count;
+        Operationally necessary at 10¹² docs: every restart or partial
+        slice adds a run directory, and the resume union's file listing
+        (plus downstream scan planning) degrades linearly with run count;
         compaction restores O(days) files. Content-preserving by
         construction — the rewrite is a pure re-layout, and the lineage
         read-back re-derives per-(day, format) doc/byte/checksum rows that
@@ -505,12 +504,10 @@ class Warehouse:
     # -- the job -----------------------------------------------------------
 
     @staticmethod
-    def _to_write(
-        todo: DataFrame, salt_partitions: int | None = None
-    ) -> DataFrame:
+    def _to_write(todo: DataFrame) -> DataFrame:
         """The frame ``run`` hands to the writer: the pending rows
         extracted, with their ``day``, in the ``_day_sorted`` layout."""
-        extracted = extract_pages(todo, salt_partitions=salt_partitions)
+        extracted = extract_pages(todo)
         return _day_sorted(extracted.withColumn("day", _day(F.col("warc_ts"))))
 
     def run(
@@ -518,7 +515,6 @@ class Warehouse:
         spark: SparkSession,
         pages: DataFrame,
         run_id: str | None = None,
-        salt_partitions: int | None = None,
         fail_before_commit: bool = False,
         seal_days: bool = True,
     ) -> dict:
@@ -528,7 +524,7 @@ class Warehouse:
         drained, enabling day-pruned resume. Only valid when ``pages`` holds
         ALL rows of each day it contains (the normal restart pattern — the
         job re-reads the whole input table). Pass False when feeding a
-        partial slice of a day (e.g. a micro-batch or sampled sub-corpus);
+        partial slice of a day (e.g. a late drop or sampled sub-corpus);
         the anti-join then remains the sole — always correct — dedup
         mechanism. Pruning follows sealing: a run that seals skips every
         sealed day before the anti-join; one that does not skips none, so
@@ -542,9 +538,7 @@ class Warehouse:
         commits = self.commits()  # one snapshot listing per job
         prune = self._complete_days(commits) if seal_days else set()
         todo = self._pending(pages, commits, prune)
-        lrows = self._append(
-            spark, self._to_write(todo, salt_partitions), run_id
-        )
+        lrows = self._append(spark, self._to_write(todo), run_id)
         # Every day this run touched was fully drained (run processes ALL
         # pending rows), so all of them seal — plus days sealed previously.
         record = {

@@ -140,8 +140,7 @@ def parse_warc(blob: bytes) -> list[tuple[str, datetime, bytes, str]]:
 
 
 def _shard_rows(blob: bytes) -> list[tuple]:
-    """One WARC shard blob → its pages rows (shared by the batch and
-    streaming readers)."""
+    """One WARC shard blob → its pages rows."""
     return [
         (url, ts, payload, "", lang)
         for url, ts, payload, lang in parse_warc(bytes(blob))
@@ -155,30 +154,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     gzip-member constraint every WARC consumer shares)."""
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .load(path)
-    )
-    return map_rows(files, ["content"], _shard_rows, PAGES_DDL)
-
-
-_BINARYFILE_DDL = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
-def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Structured-Streaming variant: a LANDING-ZONE tail — each new WARC
-    shard dropped into the directory becomes one micro-batch unit, parsed
-    by the same flat-map as the batch reader. The file source tracks seen
-    files in the checkpoint, so with a checkpointed sink each shard is
-    ingested exactly once across restarts — this is how a crawler's
-    rolling output feeds the warehouse continuously instead of by nightly
-    batch. The binaryFile stream needs its schema pinned explicitly
-    (streaming sources cannot infer); shards remain the parallelism unit
-    and record-splitting stays sequential per shard, identical to batch."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARYFILE_DDL)
         .option("pathGlobFilter", "*.warc*")
         .load(path)
     )

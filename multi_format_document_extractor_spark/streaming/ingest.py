@@ -221,65 +221,3 @@ def streaming_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     query.awaitTermination()
     return spark.table(name)
-
-
-def streaming_extract(
-    spark: SparkSession,
-    pages_dir: str,
-    warehouse_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> list[dict]:
-    """Continuous-crawl ingestion: file-stream over a growing pages
-    directory → per-micro-batch extraction committed through the idempotent
-    Warehouse (one batch = one resumable run; SURVEY.md §2.9).
-
-    Exactly-once is layered: the checkpoint makes the SOURCE
-    exactly-once (each file enters one micro-batch, replayed after a
-    crash), and the warehouse anti-join makes the SINK idempotent (a
-    replayed batch re-extracts nothing already committed) — same
-    guarantee the batch job has, extended to an unbounded input. A real
-    deployment swaps the file source for Kafka and keeps everything else.
-
-    A micro-batch is a partial slice of its days, so it never seals a
-    day and never prunes one: each batch commits as
-    ``Warehouse.run(seal_days=False)``, and the resume anti-join against
-    every committed url is the dedup. A late row for a day a batch run
-    sealed therefore still lands.
-
-    Drains with availableNow (processes what exists, then stops — the
-    restart-friendly trigger) and returns the commit records.
-    """
-    from ..sinks import Warehouse
-    from ..sources.pages import PAGES_DDL
-
-    wh = Warehouse(warehouse_dir)
-    records: list[dict] = []
-
-    reader = spark.readStream.schema(PAGES_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pages_dir)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # The run id gets a fresh per-attempt suffix: a crash-replayed batch
-        # must NOT collide with its dead attempt's uncommitted data dir
-        # (uncommitted runs are invisible to readers; the anti-join dedups
-        # any rows the dead attempt DID commit).
-        records.append(
-            wh.run(
-                batch_df.sparkSession,
-                batch_df,
-                run_id=f"stream_{batch_id:08d}_{uuid.uuid4().hex[:6]}",
-                seal_days=False,
-            )
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return records

@@ -9,7 +9,7 @@ Cluster launch:
     # <digest> a hash of the package sources
     spark-submit --py-files /tmp/multi_format_document_extractor_spark-<digest>-pyfiles.zip \\
         scripts/run_job.py --input s3://crawl/pages --warehouse s3://out/wh \\
-        [--run-id RID] [--salt-partitions S] [--no-seal-days]
+        [--run-id RID] [--no-seal-days]
 
 Local smoke (what the sandbox CI runs):
 
@@ -20,7 +20,8 @@ The job is a thin composition of library pieces — read pages, resume-filter
 against the warehouse, extract, append + lineage + snapshot commit — so a
 killed run restarts idempotently (see sinks.Warehouse). All cluster sizing
 (master, executor count/memory) comes from spark-submit; the session here
-only sets semantic configs (UTC, Arrow batches, split sizes).
+only sets the engine's semantic configs, ``session.ENGINE_CONF`` (AQE, UTC,
+Arrow batch bounds, split sizes) — the same ones ``get_spark`` sets.
 """
 
 from __future__ import annotations
@@ -50,13 +51,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--warehouse", required=True, help="warehouse root dir")
     ap.add_argument("--run-id", default=None)
     ap.add_argument(
-        "--salt-partitions",
-        type=int,
-        default=None,
-        help="enable the salted-repartition plan with S shuffle partitions "
-        "(default: zero-shuffle split-balanced plan)",
-    )
-    ap.add_argument(
         "--no-seal-days",
         action="store_true",
         help="input is a partial slice of some day; disable day sealing",
@@ -72,7 +66,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from multi_format_document_extractor_spark.session import (
-        ARROW_MAX_RECORDS_PER_BATCH,
+        ENGINE_CONF,
         make_pyfiles_zip,
     )
     from multi_format_document_extractor_spark.sinks import Warehouse
@@ -90,17 +84,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     spark = (
         SparkSession.builder.appName("mfde-extract")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-        )
-        .config("spark.sql.files.maxPartitionBytes", "16m")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
     try:
@@ -119,11 +103,7 @@ def main(argv: list[str] | None = None) -> None:
         pages = read_pages(spark, args.input)
     wh = Warehouse(args.warehouse)
     record = wh.run(
-        spark,
-        pages,
-        run_id=args.run_id,
-        salt_partitions=args.salt_partitions,
-        seal_days=not args.no_seal_days,
+        spark, pages, run_id=args.run_id, seal_days=not args.no_seal_days
     )
     print(json.dumps(record))
     if args.compact:

@@ -13,7 +13,7 @@ from multi_format_document_extractor_spark.sources.pages import read_pages
 
 def test_spark_extraction_byte_identical(spark, corpus_dir, corpus_rows):
     pages = read_pages(spark, corpus_dir + "/pages.parquet")
-    out = extract_pages(pages, salt_partitions=8)
+    out = extract_pages(pages)
     got = {r["url"]: r for r in out.collect()}
     assert len(got) == len(corpus_rows)
     for row in corpus_rows:

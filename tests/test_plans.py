@@ -47,11 +47,6 @@ def test_extract_prunes_columns(pages):
     assert "text" not in read.replace("text_out", "")
 
 
-def test_extract_salted_plan_has_one_shuffle(pages):
-    p = plan(extract_pages(pages, salt_partitions=8))
-    assert p.count("Exchange") == 1
-
-
 def test_multisheet_join_broadcasts_dimensions(spark):
     df = entry_mod.queries()["multisheet_join"](spark, SF_DIR)
     p = plan(df)
@@ -147,7 +142,7 @@ def test_warehouse_write_frame_sorts_once(spark, pages, tmp_path):
     """The frame Warehouse.run hands to the writer: scan → UDF → one Sort
     on (day, format) within each task, no shuffle. That order satisfies
     the partitionBy("day") writer, so the executed write adds no second
-    sort. The salted frame keeps its one shuffle."""
+    sort."""
     import re
 
     from multi_format_document_extractor_spark.sinks import Warehouse
@@ -160,9 +155,6 @@ def test_warehouse_write_frame_sorts_once(spark, pages, tmp_path):
     assert re.fullmatch(
         r"day#\d+ ASC NULLS FIRST, format#\d+ ASC NULLS FIRST", sorts[0]
     )
-    salted = plan(Warehouse._to_write(pages, salt_partitions=8))
-    assert salted.count("Exchange") == 1
-    assert salted.count("Sort [") == 1
 
     # the executed write, as Spark's SQL status store recorded it
     Warehouse(str(tmp_path / "wh")).run(spark, pages, run_id="sort_pin")

@@ -183,51 +183,6 @@ def test_parse_warc_gzip_valid_prefix_kept(tmp_path):
     assert len(parse_warc(broken)) == n_full
 
 
-def test_warc_stream_exactly_once_across_triggers(spark, tmp_path):
-    """Landing-zone tail: trigger 1 ingests the initial shards; dropping
-    a NEW shard and re-triggering with the same checkpoint ingests only
-    the new file's records — file-source exactly-once per shard."""
-    import os
-
-    d = str(tmp_path / "zone")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-    rows1 = write_warc(d, 40, seed=17, shard_docs=40, gzip_records=True)
-    from multi_format_document_extractor_spark.sources.warc import (
-        read_warc_stream,
-    )
-
-    def drain():
-        q = (
-            read_warc_stream(spark, d)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain()
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == len([r for r in rows1 if r.html is not None])
-
-    # second crawl batch lands as a new shard file (different seed → new
-    # urls; filename offset avoids collision with batch 1's shards)
-    rows2 = write_warc(str(tmp_path / "stage"), 25, seed=18, shard_docs=25,
-                       gzip_records=True)
-    os.rename(
-        os.path.join(str(tmp_path / "stage"), "crawl-00000.warc.gz"),
-        os.path.join(d, "crawl-99999.warc.gz"),
-    )
-    drain()
-    out = spark.read.parquet(sink)
-    n2 = out.count()
-    assert n2 == n1 + len([r for r in rows2 if r.html is not None])
-    # no url ingested twice more than it appears across the two batches
-    assert out.select("url").distinct().count() >= n2 - len(rows1)
-
-
 def test_parse_warc_negative_content_length_terminates():
     """A large negative Content-Length must not send the scan cursor
     backwards (bytes.find clamps negative starts to 0 → infinite loop);

@@ -1,10 +1,9 @@
-"""T3 (idempotent resume) + T4 (skew bounding) for the warehouse sink.
+"""T3 (idempotent resume) for the warehouse sink.
 
 T3: a run killed after its data write but before its snapshot marker must be
 invisible; the next run reprocesses its rows; the final table equals a
-single-shot run exactly (no duplicate urls, byte-identical text). T4: the
-salted repartition must bound per-partition input bytes even when one host
-dominates the corpus (FIXTURES.md: host0 owns ~30% of urls).
+single-shot run exactly (no duplicate urls, byte-identical text); late rows
+for a sealed day land through an unsealed run.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from multi_format_document_extractor_spark.operators.extract import salt_key
 from multi_format_document_extractor_spark.sinks import Warehouse
 from multi_format_document_extractor_spark.sources.pages import read_pages
 
@@ -142,60 +140,34 @@ def test_lineage_accounts_for_every_byte(spark, pages, tmp_path):
     assert lin.select("format").distinct().count() >= 2
 
 
-def test_salt_bounds_partition_bytes(spark, pages):
-    """T4: host0 owns ~30% of input bytes, but after the salted repartition
-    no partition holds more than a few percent of them."""
-    by_host = (
-        pages.groupBy(F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("h"))
-        .agg(F.count("*").alias("n"), F.sum(F.length("html")).alias("b"))
-        .collect()
-    )
-    n_total = sum(r["n"] for r in by_host)
-    total = sum(r["b"] for r in by_host if r["b"] is not None)
-    top_host = max(by_host, key=lambda r: r["n"])
-    # The skew is real in the fixture: one host owns >20% of all urls, so a
-    # partition-by-host layout would hand one executor >20% of the work.
-    assert top_host["n"] / n_total > 0.2
+def test_unsealed_run_lands_late_rows_on_sealed_day(spark, tmp_path):
+    """A sealing run seals its days; a later ``run(seal_days=False)`` over
+    the same pages plus a NEW url on a sealed day must not drop it: an
+    unsealed run prunes no day, so the anti-join alone decides."""
+    import datetime as dt
 
-    n_parts = 32
-    oversized = 100_000  # the ~600 KB oversized-html class; each ~8% of bytes
-    salted = pages.repartition(n_parts, salt_key(F.col("url")))
-    per_part = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(
-            F.sum(F.length("html")).alias("b"),
-            F.sum(
-                F.when(F.length("html") > oversized, F.length("html"))
-                .otherwise(F.lit(0))
-            ).alias("big_b"),
-            F.sum(
-                F.when(F.length("html") > oversized, 1).otherwise(F.lit(0))
-            ).alias("big_n"),
-        )
-        .collect()
+    from multi_format_document_extractor_spark.corpus import write_corpus
+    from multi_format_document_extractor_spark.sources.pages import PAGES_DDL
+
+    gen = str(tmp_path / "gen")
+    write_corpus(gen, 50, seed=13)
+    pages_50 = read_pages(spark, gen + "/pages.parquet")
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.run(spark, pages_50, run_id="batch1")
+    sealed = wh.complete_days()
+    assert sealed, "a sealing run should seal its days"
+
+    day = dt.datetime.fromisoformat(min(sealed)).replace(tzinfo=dt.timezone.utc)
+    late = spark.createDataFrame(
+        [("s://late-arrival", day, b"late text", None, "en")], PAGES_DDL
     )
-    # Perfect uniformity would be 1/32 ≈ 3.1%. Single documents are ATOMIC
-    # to any partitioner — a bucket that draws k ~600 KB oversized docs is
-    # the hash behaving uniformly over atomic units, not host skew (which
-    # corpus seed places 2 vs 3 of the nine oversized docs together is
-    # luck) — so the bound discounts the max bucket's own oversized docs
-    # and requires the SPLITTABLE mass under 15% of total, then separately
-    # asserts the oversized docs spread across buckets the way a
-    # host-partitioned layout never would.
-    top = max((r for r in per_part if r["b"] is not None), key=lambda r: r["b"])
-    adj = (top["b"] - top["big_b"]) / total
-    assert adj < 0.15, (
-        f"max partition holds {top['b']/total:.1%} "
-        f"({adj:.1%} beyond its atomic oversized docs)"
+    rec = wh.run(
+        spark, pages_50.unionByName(late), run_id="late", seal_days=False
     )
-    big_parts = [r for r in per_part if r["big_n"]]
-    n_big = sum(r["big_n"] for r in big_parts)
-    if n_big >= 5:
-        assert len(big_parts) >= min(5, n_big - 2), (
-            f"{n_big} oversized docs clustered into {len(big_parts)} buckets"
-        )
-    assert max((r["big_n"] for r in big_parts), default=0) <= 4
+    assert rec["n_docs"] == 1
+    urls = {r.url for r in wh.read_extracted(spark).select("url").collect()}
+    assert "s://late-arrival" in urls
 
 
 def test_compaction_preserves_content_and_lineage(spark, pages, tmp_path):
